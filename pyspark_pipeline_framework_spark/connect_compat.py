@@ -59,24 +59,47 @@ def session_parallelism(spark: SparkSession, default: int = 200) -> int:
 
 
 def scan_partitions(df: DataFrame) -> int | None:
-    """Best-effort count of the DataFrame's input split count.
+    """Best-effort count of the DataFrame's output partitions, from plan
+    metadata only — no job runs.
 
-    Classic: exact plan metadata (``df.rdd.getNumPartitions()`` — no
-    job runs). Connect: the client cannot see partitioning, so fall
-    back to ``inputFiles()`` (Connect-supported) as a LOWER BOUND —
-    files over ``maxPartitionBytes`` split further, so this
-    under-counts large files and the caller may repartition a scan
-    that was already wide enough (one extra keyed exchange, never a
-    correctness issue). ``None`` when nothing can be determined
-    (non-file source over Connect): callers should leave the plan
-    unchanged."""
-    try:
-        return df.rdd.getNumPartitions()
-    except Exception:  # Spark Connect: no .rdd
+    Classic, adaptive plan (AQE on and the plan has an exchange): the
+    count is decided at run time, and asking the RDD for it
+    (``df.rdd.getNumPartitions()``) executes every shuffle-map stage
+    of the input — one extra upstream job per call. Instead apply
+    AQE's own coalescing rule to the optimizer's size estimate: with
+    ``parallelismFirst`` AQE coalesces below the target parallelism
+    only when the shuffled data is under target ×
+    ``coalescePartitions.minPartitionSize``, so
+    ``ceil(sizeInBytes / minPartitionSize)`` compares with the target
+    the way the final partition count would. It is an estimate: with
+    coalescing off, or a plan whose output is not a shuffle, a small
+    input may be spread that was already wide enough (one extra
+    keyed exchange, never a correctness issue).
+
+    Classic, non-adaptive plan: the RDD's partition count — a scan's
+    splits or a shuffle's width, metadata both (a non-adaptive
+    broadcast join still builds its broadcast here).
+
+    Connect: the client cannot see partitioning, so fall back to
+    ``inputFiles()`` (Connect-supported) as a LOWER BOUND — files over
+    ``maxPartitionBytes`` split further, so this under-counts large
+    files and the caller may repartition a scan that was already wide
+    enough. ``None`` when nothing can be determined (non-file source
+    over Connect): callers should leave the plan unchanged."""
+    if is_connect(df.sparkSession):
         try:
             return len(df.inputFiles()) or 1
         except Exception:
             return None
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() != "AdaptiveSparkPlan":
+        return df.rdd.getNumPartitions()
+    spark = df.sparkSession
+    min_size = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
+    )
+    size = int(qe.optimizedPlan().stats().sizeInBytes())
+    return max(1, -(-size // max(1, min_size)))
 
 
 def reliable_checkpoint(df: DataFrame, checkpoint_dir: str, eager: bool = False) -> DataFrame:

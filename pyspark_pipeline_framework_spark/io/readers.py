@@ -190,11 +190,16 @@ class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._datasets: dict[str, DataFrame] = {}
+        self._views: dict[str, DataFrame] = {}
 
     def put(self, name: str, df: DataFrame, register_view: bool = True) -> DataFrame:
+        """Store ``df`` under ``name``; a DataFrame already registered
+        as that view by this catalog is not registered again (registry
+        ops put their output and the runner puts it once more)."""
         self._datasets[name] = df
-        if register_view:
+        if register_view and self._views.get(name) is not df:
             df.createOrReplaceTempView(name)
+            self._views[name] = df
         return df
 
     def get(self, name: str) -> DataFrame:

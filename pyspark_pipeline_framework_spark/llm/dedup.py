@@ -2,9 +2,18 @@
 
 100 TB design rules: candidate generation is always a *band/bucket
 equi-join* (shuffle bounded by bucket sizes), never an all-pairs cross
-join; every hash is a JVM built-in (``xxhash64``/``sha2``/``md5``) so
-no Python enters the hot path and results are deterministic across
-executors, sessions, and retries.
+join; hashes are JVM built-ins (``xxhash64``/``sha2``/``md5``) so
+results are deterministic across executors, sessions, and retries.
+The one Python stage is the md5 MinHash signature
+(``hash_fn="md5"``): its per-group digests and mins run in an Arrow
+``mapInPandas`` stage over JVM-computed base hashes (see
+:func:`_md5_signature_arrow`); the xxhash64 family and every other
+operator here stay in the JVM.
+
+Wide per-column projections (the signature's ``num_hashes`` mins, the
+band hashes) are built as parsed SQL expression strings, not one
+Column builder per column: each builder call is several py4j
+round-trips, thousands per plan.
 """
 
 from __future__ import annotations
@@ -216,8 +225,13 @@ def minhash_signature(
     )
     if hash_fn == "xxhash64":
         hashed = exploded.select(F.col(id_col), F.xxhash64("__s").alias("__h"))
-        perms = [F.min(F.xxhash64("__h", F.lit(i))).alias(f"__m{i}") for i in range(num_hashes)]
-    elif hash_fn == "md5":
+        # the num_hashes mins and the array over them are ONE parsed
+        # expression string (as in simhash): built from Column ops they
+        # cost ~3k py4j round-trips per call; CollapseProject folds
+        # the array into the aggregate either way, so the plan is the same
+        mins = ", ".join(f"min(xxhash64(__h, {i}))" for i in range(num_hashes))
+        return hashed.groupBy(id_col).agg(F.expr(f"array({mins})").alias("signature"))
+    if hash_fn == "md5":
         # r7: base md5 JVM-side, group digests + mins in one Arrow
         # stage — see _md5_signature_arrow for why pure SQL loses here
         # (string-min SortAggregate fallback) and why the output is
@@ -228,11 +242,7 @@ def minhash_signature(
         # offsets let one dominant shingle win whole bands: 7×
         # candidate blowup measured at sf0.01).
         return _md5_signature_arrow(exploded, id_col, num_hashes)
-    else:
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    mins = hashed.groupBy(id_col).agg(*perms)
-    sig = F.array(*[F.col(f"__m{i}") for i in range(num_hashes)])
-    return mins.select(F.col(id_col), sig.alias("signature"))
+    raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
 
 
 #: distinct-digest cache cap per python worker for the arrow md5
@@ -266,6 +276,14 @@ def _md5_signature_arrow(exploded, id_col: str, num_hashes: int):
     r13 rewrite of the per-batch body (frombuffer + reduceat replacing
     per-word int() parses + pandas groupby-min) another 4.7× on the
     Python time, bit-identical output.
+
+    Rejected again (ROADMAP 4a): a pure-SQL signature that computes
+    the group digests per shingle occurrence and parses each word
+    with ``conv`` to keep long buffers lost end-to-end — 3.51 s vs
+    2.66 s for the ``verified`` component of the curation benchmark
+    (4-core host). Do not judge such a variant with a ``.count()``
+    microbenchmark: column pruning drops the unused 64 aggregates
+    from a count's plan, so it times the shingle scan only.
 
     Bit-exactness: tokenization, shingling and the base ``md5(shingle)``
     stay JVM-side, so Python only ever sees 32-hex ASCII digests — no
@@ -347,15 +365,15 @@ def _md5_signature_arrow(exploded, id_col: str, num_hashes: int):
             W.insert(0, id_field.name, ids[starts])
             yield W
 
-    partial = base.mapInPandas(compute, out_schema)
-    mins = partial.groupBy(id_col).agg(
-        *[F.min(c).alias(c) for c in cols]  # long buffers → HashAggregate
-    )
+    # min over the long partials (long buffers → HashAggregate), then
     # lower(lpad(hex)) restores the exact 8-hex word a string min would
     # have produced — the signature (and every downstream band hash /
-    # oracle) is bit-identical to the pre-r7 pure-JVM form
-    sig = F.array(*[F.lower(F.lpad(F.hex(F.col(c)), 8, "0")) for c in cols])
-    return mins.select(F.col(id_col), sig.alias("signature"))
+    # oracle) is bit-identical to the pre-r7 pure-JVM form. One parsed
+    # expression string, not num_hashes Column builders (~1.9k py4j
+    # round-trips per call)
+    words = ", ".join(f"lower(lpad(hex(min({c})), 8, '0'))" for c in cols)
+    partial = base.mapInPandas(compute, out_schema)
+    return partial.groupBy(id_col).agg(F.expr(f"array({words})").alias("signature"))
 
 
 def minhash_candidate_pairs(
@@ -419,20 +437,19 @@ def minhash_bands(
         raise ValueError("num_hashes must divide evenly into bands")
     rows_per_band = num_hashes // bands
     sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_k, hash_fn)
-
-    def band_hash(b: int):
-        sliced = F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band)
-        if hash_fn == "md5":
-            return F.md5(F.concat_ws(",", sliced))
-        return F.xxhash64(
-            F.concat_ws(",", F.transform(sliced, lambda v: v.cast("string")))
-        )
-
+    if hash_fn == "md5":
+        band = "md5(concat_ws(',', slice(signature, {start}, {n})))"
+    else:
+        band = ("xxhash64(concat_ws(',', transform(slice(signature, {start}, {n}), "
+                "v -> CAST(v AS STRING))))")
+    # one parsed expression string for all band hashes (see
+    # minhash_signature)
+    hashes = ", ".join(
+        band.format(start=b * rows_per_band + 1, n=rows_per_band) for b in range(bands)
+    )
     return sigs.select(
         F.col(id_col).alias("id"),
-        F.posexplode(F.array(*[band_hash(b) for b in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
+        F.expr(f"posexplode(array({hashes}))").alias("band_idx", "band_hash"),
     )
 
 

@@ -288,13 +288,12 @@ def pq_distance_tables(
             "__qvec"
         ),
     )
+    # the m_sub slices as one parsed expression string, not a Column
+    # builder per subspace (py4j round-trips, see llm/dedup.minhash_bands)
+    slices = ", ".join(f"slice(__qvec, {s * dsub + 1}, {dsub})" for s in range(m_sub))
     subs = q.select(
         query_id_col,
-        F.posexplode(
-            F.array(
-                *[F.slice(F.col("__qvec"), s * dsub + 1, dsub) for s in range(m_sub)]
-            )
-        ).alias("s", "__qsub"),
+        F.expr(f"posexplode(array({slices}))").alias("s", "__qsub"),
     )
     cb = queries.sparkSession.createDataFrame(
         [

@@ -40,8 +40,9 @@ def ensure_parallelism(
     )
 
     target = min_partitions or session_parallelism(df.sparkSession)
-    # classic: exact plan metadata (no job); Connect: inputFiles lower
-    # bound, or None for a non-file source — leave those plans alone
+    # plan metadata only, no job (an adaptive input is sized by AQE's
+    # coalescing rule); Connect: inputFiles lower bound, or None for a
+    # non-file source — leave those plans alone
     current = scan_partitions(df)
     if current is not None and current < target:
         if key is not None:

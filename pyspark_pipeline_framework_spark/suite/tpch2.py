@@ -436,7 +436,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("l_orderkey", "__ok")
     )
     top1 = F.col("__top2")[0]
-    top2 = F.element_at("__top2", 2)  # NULL when the order has 1 supplier
+    top2 = F.try_element_at("__top2", F.lit(2))  # NULL when the order has 1 supplier
     other_max = F.when(
         F.col("l_suppkey") == top1["l_suppkey"], top2["__smax"]
     ).otherwise(top1["__smax"])

@@ -3,6 +3,8 @@ pruning, broadcast, no cartesian products, top-N without global sort)
 asserted on ``explain`` output so regressions that stay correct but
 break the plan shape still fail CI."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -124,11 +126,24 @@ def test_tpch_q21_single_lineitem_pass(spark, sf_dir):
     # both lineitem branches end at an Exchange over the identical
     # semi-joined scan — the precondition for AQE stage reuse; the
     # repartition must not be planned as a broadcast
-    import re
-
-    lineitem_scans = re.findall(r"Scan parquet.*\n.*lineitem", p)
-    assert len(lineitem_scans) <= 2  # probe + aggregate branch copies
+    # exactly two lineitem scan detail blocks: the probe and aggregate
+    # branch copies
+    blocks = [b.strip() for b in p.split("\n\n")]
+    scans = [b for b in blocks if re.match(r"\(\d+\) Scan parquet", b)]
+    assert len(scans) >= 4  # the split found the detail blocks at all
+    assert sum("lineitem.parquet" in b for b in scans) == 2
     assert "LeftSemi" in p  # orders 'F' prune below the shared exchange
+
+
+def test_tpch_q21_second_supplier_lookup_cannot_throw(spark, sf_dir):
+    """The second-supplier lookup on a one-supplier order must yield
+    NULL whatever order Spark evaluates the join condition in:
+    ``try_element_at`` (``failOnError=false``), never ANSI
+    ``element_at``, which throws when evaluated before the
+    ``__n_supp >= 2`` filter."""
+    p = plan(spark, sf_dir, "q_tpch_q21")
+    lookups = re.findall(r"element_at\(__top2#\d+, 2, None, (true|false)\)", p)
+    assert lookups and set(lookups) == {"false"}
 
 
 def test_tpch_q22_scalar_subquery_is_single_row_broadcast(spark, sf_dir):
