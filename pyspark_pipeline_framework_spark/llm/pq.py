@@ -22,12 +22,13 @@ Spark-first design:
 - ENCODING is one ``pandas_udf`` over the corpus: argmin exact-integer
   L2 per subspace. No shuffle; a filter for corrupt vectors adds no
   exchange.
-- ADC SEARCH is pure relational algebra: the per-query distance tables
-  (``n_query × m_sub × ksub`` rows — model-sized, broadcast) join the
-  posexploded codes map-side, and one partial-aggregated ``groupBy
-  (query_id, vec_id)`` sums the table lookups. The only wide operation
-  is that aggregate, whose input was already combined map-side from
-  ``m_sub`` rows per (query, vector) pair.
+- ADC SEARCH scores every candidate code with ONE generated
+  expression: each query's ``m_sub × ksub`` lookup table is computed
+  once (an Arrow UDF over the queries, broadcast keyed by query), and
+  a candidate's score is the unrolled sum ``__dt[0·ksub + codes[0]] +
+  … + __dt[(m_sub-1)·ksub + codes[m_sub-1]]`` — no posexplode of the
+  codes, no join per code entry, no aggregate. The only wide
+  operation is the per-query top-k window.
 
 Reference parity: the reference repo has no vector-search surface at
 all (SURVEY.md §2.8 is beyond-ref); public FAISS semantics are the
@@ -39,7 +40,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -47,6 +48,7 @@ from pyspark.sql.window import Window
 from pyspark_pipeline_framework_spark.llm.similarity import (
     _DOT_SCALE,
     _MEAN_SCALE,
+    _dot14_np,
     drop_corrupt_vectors,
 )
 from pyspark_pipeline_framework_spark.operators.partitioning import ensure_parallelism
@@ -73,34 +75,11 @@ def _check_geometry(dim: int, m_sub: int, ksub: int) -> int:
     return dim // m_sub
 
 
-def _doti_long(a: Column, b: Column) -> Column:
-    """Integer fixed-point dot (the long sum itself, no rescale) —
-    the Spark twin of the oracle's ``_o_doti`` fragment: per-element
-    ``floor(x·y·1e14)`` as long, integer sum. Order-independent, so
-    partitioning cannot perturb it."""
-    prods = F.zip_with(
-        a,
-        b,
-        lambda x, y: F.floor(x.cast("double") * y.cast("double") * F.lit(_DOT_SCALE)),
-    )
-    return F.aggregate(prods, F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-
-def _unit_normalize_col(v: Column) -> Column:
+def _normalize_rows_np(X: np.ndarray) -> np.ndarray:
     """Fixed-point unit normalization (cosine-mode preprocessing):
     ``x / sqrt(doti(x,x)/1e14)`` with the zero-norm guard (norm 0 →
     divide by 1) shared with the IVF trainer — never NaN, any input
-    magnitude, bit-portable to SQL."""
-    sq = _doti_long(v, v)
-    nrm = F.when(sq == 0, F.lit(1.0)).otherwise(
-        F.sqrt(sq.cast("double") / F.lit(_DOT_SCALE))
-    )
-    return F.transform(v, lambda x: x.cast("double") / nrm)
-
-
-def _normalize_rows_np(X: np.ndarray) -> np.ndarray:
-    """numpy twin of :func:`_unit_normalize_col` (same fixed-point
-    norm, same zero-norm guard)."""
+    magnitude, bit-portable to SQL (the oracle replays it)."""
     sq = np.floor(X * X * _DOT_SCALE).astype("int64").sum(axis=1)
     norms = np.sqrt(sq.astype("float64") / _DOT_SCALE)
     norms[norms == 0.0] = 1.0
@@ -267,47 +246,66 @@ def pq_encode(
     return embeddings.select(*cols)
 
 
-def pq_distance_tables(
-    queries: DataFrame,
-    codebooks,
-    dim: int,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    normalize: bool = True,
-) -> DataFrame:
-    """Per-query ADC lookup tables: one row per (query, subspace,
-    codeword) holding the integer fixed-point inner product of the
-    query subvector with that codeword — ``n_query · m_sub · ksub``
-    rows, model-×-query-sized, the broadcast side of the search."""
-    B = _as_codebook_matrix(codebooks)
+def _adc_table_udf(B: np.ndarray, normalize: bool = True):
+    """Arrow-batched query side of ADC search: each query vector
+    (unit-normalized in cosine mode) → its flattened ``m_sub·ksub``
+    lookup table, entry ``s·ksub + j`` holding the integer fixed-point
+    inner product of query subvector ``s`` with codeword ``(s, j)``
+    (``_dot14_np``, the twin of the oracle's ``doti``). One row per
+    query — ``n_query · m_sub · ksub · 8`` bytes in all, the broadcast
+    side of the search."""
     m_sub, ksub, dsub = B.shape
-    queries = drop_corrupt_vectors(queries, vec_col, dim, drop_zero_norm=True)
-    q = queries.select(
-        F.col(query_id_col),
-        (_unit_normalize_col(F.col(vec_col)) if normalize else F.col(vec_col)).alias(
-            "__qvec"
-        ),
+
+    @F.pandas_udf("array<bigint>")
+    def table(v: pd.Series) -> pd.Series:
+        M = np.stack(v.values).astype("float64")
+        if normalize:
+            M = _normalize_rows_np(M)
+        out = np.concatenate(
+            [_dot14_np(M[:, s * dsub : (s + 1) * dsub], B[s]) for s in range(m_sub)],
+            axis=1,
+        )
+        return pd.Series(list(out))
+
+    return table
+
+
+def _adc_topk(
+    pairs: DataFrame, m_sub: int, ksub: int, k: int, query_id_col: str, id_col: str
+) -> DataFrame:
+    """Scores (query, candidate) pairs that carry the query's table
+    ``__dt`` and the candidate's ``codes``, then keeps the per-query
+    top-k. The ADC score is one unrolled, code-generated sum of
+    ``m_sub`` table lookups; a ``sequence``/``aggregate`` lambda over
+    the subspaces is interpreted and measured ~2× slower. Ranking
+    compares the integer sums (engine-exact).
+
+    A malformed code row — NULL, not exactly ``m_sub`` entries, or an
+    entry outside ``[0, ksub)`` — scores NULL and is dropped: the guard
+    uses only functions that cannot raise (``size``, ``array_min``,
+    ``array_max``), and the lookups run only in the CASE branch it
+    admits, so ANSI mode on or off gives the same rows. A NULL entry
+    in a well-sized array makes its lookup, and so the sum, NULL. The
+    NULL filter sits after the window (NULLs rank last there), so the
+    optimizer cannot push a second copy of the sum below the join."""
+    lookups = " + ".join(f"__dt[{s * ksub} + codes[{s}]]" for s in range(m_sub))
+    adc = (
+        f"CASE WHEN size(codes) = {m_sub} AND array_min(codes) >= 0 "
+        f"AND array_max(codes) < {ksub} THEN {lookups} END"
     )
-    # the m_sub slices as one parsed expression string, not a Column
-    # builder per subspace (py4j round-trips, see llm/dedup.minhash_bands)
-    slices = ", ".join(f"slice(__qvec, {s * dsub + 1}, {dsub})" for s in range(m_sub))
-    subs = q.select(
-        query_id_col,
-        F.expr(f"posexplode(array({slices}))").alias("s", "__qsub"),
+    scored = pairs.select(query_id_col, id_col, F.expr(adc).alias("__adc_int"))
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("__adc_int").desc(), F.col(id_col).asc()
     )
-    cb = queries.sparkSession.createDataFrame(
-        [
-            (int(s), int(j), [float(x) for x in B[s, j]])
-            for s in range(m_sub)
-            for j in range(ksub)
-        ],
-        PQ_CODEBOOK_SCHEMA,
-    )
-    return subs.join(F.broadcast(cb), "s").select(
-        query_id_col,
-        "s",
-        "j",
-        _doti_long(F.col("__qsub"), F.col("c")).alias("dt"),
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter((F.col("rank") <= k) & F.col("__adc_int").isNotNull())
+        .select(
+            query_id_col,
+            id_col,
+            (F.col("__adc_int").cast("double") / F.lit(_DOT_SCALE)).alias("adc_dot"),
+            "rank",
+        )
     )
 
 
@@ -322,44 +320,31 @@ def pq_search_adc(
     query_id_col: str = "query_id",
     normalize: bool = True,
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over a PQ code store: the raw
-    query subvectors score against the codebooks once (distance
-    tables, broadcast), then every stored code is ranked by the SUM of
-    its ``m_sub`` table lookups — the corpus is scanned as codes only,
-    never as raw vectors.
+    """Asymmetric-distance (ADC) top-k over a PQ code store: each query
+    scores against the codebooks once (its lookup table, broadcast),
+    then every stored code is ranked by the SUM of its ``m_sub`` table
+    lookups — the corpus is scanned as codes only, never as raw
+    vectors.
 
-    Plan shape: posexplode(codes) → broadcast-hash-join the distance
-    tables (map-side) → partial-aggregated ``groupBy(query_id,
-    vec_id)`` → per-query top-k window. One wide exchange total.
-    Ranking compares the integer sums (engine-exact); ``adc_dot`` is
-    the rescaled approximate inner product (≈ cosine in normalize
-    mode, both sides unit-normalized)."""
-    dtab = pq_distance_tables(
-        queries, codebooks, dim, query_id_col=query_id_col, vec_col=vec_col,
-        normalize=normalize,
+    Plan shape: the code store broadcast-nested-loop-joins the query
+    tables (every code against every query but itself), one generated
+    projection sums the lookups, then the per-query top-k window — the
+    only exchange. ``adc_dot`` is the rescaled approximate inner
+    product (≈ cosine in normalize mode, both sides unit-normalized).
+
+    Malformed codes are dropped, with ANSI mode on or off: a code row
+    whose array is NULL, is not exactly ``m_sub`` long, or holds an
+    entry outside ``[0, ksub)`` (or NULL) is never scored."""
+    B = _as_codebook_matrix(codebooks)
+    m_sub, ksub, _ = B.shape
+    q = drop_corrupt_vectors(queries, vec_col, dim, drop_zero_norm=True)
+    tables = q.select(
+        F.col(query_id_col), _adc_table_udf(B, normalize)(F.col(vec_col)).alias("__dt")
     )
-    exploded = ensure_parallelism(codes).select(
-        F.col(id_col), F.posexplode("codes").alias("s", "j")
+    pairs = ensure_parallelism(codes).join(
+        F.broadcast(tables), F.col(query_id_col) != F.col(id_col)
     )
-    scored = (
-        exploded.join(F.broadcast(dtab), ["s", "j"])
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("dt").alias("__adc_int"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__adc_int").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            (F.col("__adc_int").cast("double") / F.lit(_DOT_SCALE)).alias("adc_dot"),
-            "rank",
-        )
-    )
+    return _adc_topk(pairs, m_sub, ksub, k, query_id_col, id_col)
 
 
 def pq_index(
@@ -506,20 +491,28 @@ def ivfpq_search(
     """ADC top-k over an IVFPQ store: queries probe their ``nprobe``
     closest cells (bounding candidates exactly like
     ``ivf_search``), then ONLY the candidates' codes are scored by
-    distance-table lookups — the two FAISS levers composed, never an
+    lookup-table sums — the two FAISS levers composed, never an
     exhaustive scan and never a raw-vector read.
 
     Plan: broadcast (query, cell) probe pairs equi-join the store on
     ``cell`` (statically partition-pruned under ``prune_cells=True``
-    on a cell-partitioned store), posexplode the surviving codes,
-    map-side broadcast-join the distance tables, one wide aggregate,
-    per-query top-k window."""
+    on a cell-partitioned store), each candidate picks up its query's
+    lookup table from a second broadcast keyed by ``query_id`` (one
+    table per query, not per probed cell), one generated projection
+    sums the lookups, and the per-query top-k window is the only
+    exchange.
+
+    Malformed codes are dropped, with ANSI mode on or off: a store row
+    whose ``codes`` is NULL, is not exactly ``m_sub`` long, or holds an
+    entry outside ``[0, ksub)`` (or NULL) is never scored."""
     from pyspark_pipeline_framework_spark.llm.similarity import (
         _as_centroid_matrix,
         ivf_cells_exact_udf,
     )
 
     C = _as_centroid_matrix(centroids)
+    B = _as_codebook_matrix(codebooks)
+    m_sub, ksub, _ = B.shape
     q = drop_corrupt_vectors(queries, vec_col, dim, drop_zero_norm=True)
     probe = ivf_cells_exact_udf(C, nprobe)
     qcells = q.select(
@@ -544,34 +537,16 @@ def ivfpq_search(
             store = store.where(F.lit(False))
         else:
             store = store.where(F.col("cell").isin(probed))
-    dtab = pq_distance_tables(
-        q, codebooks, dim, query_id_col=query_id_col, vec_col=vec_col
+    tables = q.select(
+        F.col(query_id_col), _adc_table_udf(B)(F.col(vec_col)).alias("__dt")
     )
-    cand = (
+    pairs = (
         ensure_parallelism(store)
         .join(F.broadcast(qcells), "cell")
         .filter(F.col(query_id_col) != F.col(id_col))
-        .select(query_id_col, id_col, "codes")
+        .join(F.broadcast(tables), query_id_col)
     )
-    scored = (
-        cand.select(query_id_col, id_col, F.posexplode("codes").alias("s", "j"))
-        .join(F.broadcast(dtab), [query_id_col, "s", "j"])
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("dt").alias("__adc_int"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__adc_int").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            (F.col("__adc_int").cast("double") / F.lit(_DOT_SCALE)).alias("adc_dot"),
-            "rank",
-        )
-    )
+    return _adc_topk(pairs, m_sub, ksub, k, query_id_col, id_col)
 
 
 def cosine_topk_ivfpq(

@@ -29,30 +29,49 @@ from pyspark_pipeline_framework_spark.operators.partitioning import ensure_paral
 _DOT_SCALE = 1e14
 
 
-def _dot_decimal(a: Column, b: Column) -> Column:
-    """Exact, order-independent dot product: per-element double product
-    (IEEE-deterministic), quantized via floor(p·1e14) to a long, summed
-    as integers, rescaled once. A DuckDB oracle doing literally the same
-    (FLOOR to BIGINT, list_sum, /1e14) matches bit-for-bit — floor is
-    used because CAST(double AS BIGINT) truncates in Spark but rounds
-    in DuckDB."""
-    prods = F.zip_with(
-        a,
-        b,
-        lambda x, y: F.floor(x.cast("double") * y.cast("double") * F.lit(_DOT_SCALE)),
-    )
-    total = F.aggregate(prods, F.lit(0).cast("long"), lambda acc, v: acc + v)
-    return total.cast("double") / F.lit(_DOT_SCALE)
+#: the per-element fixed-point product and the integer fold of
+#: ``_dot_decimal``, as SQL lambdas
+_PROD_SQL = f"(x, y) -> floor(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * {_DOT_SCALE!r}D)"
+_FOLD_SQL = "(acc, v) -> acc + v"
 
 
-def _norm(v: Column) -> Column:
-    return F.sqrt(_dot_decimal(v, v))
+def _dot_sql(a: str, b: str) -> str:
+    """SQL of :func:`_dot_decimal` over two array expressions."""
+    prods = f"zip_with({a}, {b}, {_PROD_SQL})"
+    return f"CAST(aggregate({prods}, 0L, {_FOLD_SQL}) AS DOUBLE) / {_DOT_SCALE!r}D"
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dot_decimal(a: str, b: str) -> Column:
+    """Exact, order-independent dot product of two array columns
+    (given by name): per-element double product (IEEE-deterministic),
+    quantized via floor(p·1e14) to a long, summed as integers, rescaled
+    once. A DuckDB oracle doing literally the same (FLOOR to BIGINT,
+    list_sum, /1e14) matches bit-for-bit — floor is used because
+    CAST(double AS BIGINT) truncates in Spark but rounds in DuckDB.
+    Built as one parsed SQL string: a Column builder with Python
+    lambdas costs dozens of py4j round-trips per call."""
+    return F.expr(_dot_sql(_quote(a), _quote(b)))
+
+
+def _norm(v: str) -> Column:
+    q = _quote(v)
+    return F.expr(f"sqrt({_dot_sql(q, q)})")
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Exact fixed-point cosine of two vector columns (decimal dot /
     norms) — bit-identical across engines, see ``_dot_decimal``."""
-    return _dot_decimal(a, b) / (_norm(a) * _norm(b))
+
+    def dot(x: Column, y: Column) -> Column:
+        prods = F.call_function("zip_with", x, y, F.expr(_PROD_SQL))
+        total = F.call_function("aggregate", prods, F.expr("0L"), F.expr(_FOLD_SQL))
+        return total.cast("double") / F.expr(f"{_DOT_SCALE!r}D")
+
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def drop_corrupt_vectors(
@@ -81,7 +100,7 @@ def drop_corrupt_vectors(
     if dim is not None:
         cond = cond & (F.size(vec_col) == dim)
     if drop_zero_norm:
-        cond = cond & (_dot_decimal(F.col(vec_col), F.col(vec_col)) > 0)
+        cond = cond & (_dot_decimal(vec_col, vec_col) > 0)
     return df.filter(cond)
 
 
@@ -111,16 +130,16 @@ def cosine_topk_bruteforce(
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("__qvec"),
-        _norm(F.col(vec_col)).alias("__qn"),
+        _norm(vec_col).alias("__qn"),
     )
     c = ensure_parallelism(corpus).select(
-        F.col(id_col), F.col(vec_col).alias("__cvec"), _norm(F.col(vec_col)).alias("__cn")
+        F.col(id_col), F.col(vec_col).alias("__cvec"), _norm(vec_col).alias("__cn")
     )
     scored = c.join(F.broadcast(q), F.col(query_id_col) != F.col(id_col)).select(
         query_id_col,
         id_col,
         (
-            _dot_decimal(F.col("__qvec"), F.col("__cvec")) / (F.col("__qn") * F.col("__cn"))
+            _dot_decimal("__qvec", "__cvec") / (F.col("__qn") * F.col("__cn"))
         ).alias("cos_sim"),
     )
     w = Window.partitionBy(query_id_col).orderBy(
@@ -163,7 +182,7 @@ def embedding_dedup_pairs(
     normed = ensure_parallelism(corpus).select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
-        _norm(F.col(vec_col)).alias("__n"),
+        _norm(vec_col).alias("__n"),
         *([F.col(block_col).alias("__blk")] if block_col else []),
     )
     a = normed.select(
@@ -181,7 +200,7 @@ def embedding_dedup_pairs(
             "id_a",
             "id_b",
             (
-                _dot_decimal(F.col("__va"), F.col("__vb"))
+                _dot_decimal("__va", "__vb")
                 / (F.col("__na") * F.col("__nb"))
             ).alias("cos_sim"),
         )
@@ -345,7 +364,7 @@ def cosine_topk_lsh(
             staged = df.select(
                 F.col(idc),
                 F.col(vec_col).alias(vec_alias),
-                _norm(F.col(vec_col)).alias(norm_alias),
+                _norm(vec_col).alias(norm_alias),
                 rademacher_quantize_col(vec_col).alias("__vq"),
             )
             return staged.select(
@@ -360,7 +379,7 @@ def cosine_topk_lsh(
         return df.select(
             F.col(idc),
             F.col(vec_col).alias(vec_alias),
-            _norm(F.col(vec_col)).alias(norm_alias),
+            _norm(vec_col).alias(norm_alias),
             F.posexplode(bucketer(F.col(vec_col))).alias("__t", "__b"),
         )
 
@@ -376,7 +395,7 @@ def cosine_topk_lsh(
         query_id_col,
         id_col,
         (
-            _dot_decimal(F.col("__qvec"), F.col("__cvec")) / (F.col("__qn") * F.col("__cn"))
+            _dot_decimal("__qvec", "__cvec") / (F.col("__qn") * F.col("__cn"))
         ).alias("cos_sim"),
     )
     w = Window.partitionBy(query_id_col).orderBy(
@@ -667,7 +686,7 @@ def ivf_add(
     return embeddings.select(
         F.col(id_col),
         F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("norm"),
+        _norm(vec_col).alias("norm"),
         assign1(F.col(vec_col)).getItem(0).alias("cell"),
     ).filter(F.col("norm") > 0)
 
@@ -710,7 +729,7 @@ def ivf_search(
     qb = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("__qvec"),
-        _norm(F.col(vec_col)).alias("__qn"),
+        _norm(vec_col).alias("__qn"),
         F.explode(probe(F.col(vec_col))).alias("cell"),
     ).filter(F.col("__qn") > 0)
     if prune_cells:
@@ -740,7 +759,7 @@ def ivf_search(
             query_id_col,
             id_col,
             (
-                _dot_decimal(F.col("__qvec"), F.col("vec"))
+                _dot_decimal("__qvec", "vec")
                 / (F.col("__qn") * F.col("norm"))
             ).alias("cos_sim"),
         )
@@ -1101,8 +1120,8 @@ def semantic_dedup_pairs(
             "id_a",
             "id_b",
             (
-                _dot_decimal(F.col("va"), F.col("vb"))
-                / (_norm(F.col("va")) * _norm(F.col("vb")))
+                _dot_decimal("va", "vb")
+                / (_norm("va") * _norm("vb"))
             ).alias("cos_sim"),
             "cell",
         )

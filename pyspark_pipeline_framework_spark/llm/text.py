@@ -104,6 +104,11 @@ def quality_filter(
     )
 
 
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def language_id(
     df: DataFrame,
     text_col: str = "text",
@@ -115,22 +120,18 @@ def language_id(
     lexicographic tiebreak. Pure column expressions (array_intersect
     over the token array) — no UDF, no shuffle."""
     markers = markers or LANG_MARKERS
-    words = F.array_distinct(F.split(F.lower(F.col(text_col)), r"\s+"))
-    scored = F.array(
-        *[
-            F.struct(
-                F.size(F.array_intersect(words, F.array(*[F.lit(w) for w in ws]))).alias("score"),
-                F.lit(lang).alias("lang"),
-            )
-            for lang, ws in sorted(markers.items())
-        ]
-    )
-    # deterministic argmax: max score, tie broken by smallest lang code
-    max_score = F.array_max(F.transform(scored, lambda s: s["score"]))
-    winner = F.array_min(
-        F.transform(
-            F.filter(scored, lambda s: s["score"] == max_score), lambda s: s["lang"]
-        )
+    text = "`" + text_col.replace("`", "``") + "`"
+    words = "array_distinct(split(lower({}), {}))".format(text, _sql_string(r"\s+"))
+    scored = "array({})".format(", ".join(
+        f"named_struct('score', size(array_intersect({words}, "
+        f"array({', '.join(map(_sql_string, ws))}))), 'lang', {_sql_string(lang)})"
+        for lang, ws in sorted(markers.items())
+    ))
+    # deterministic argmax: max score, tie broken by smallest lang code;
+    # one parsed expression, not a py4j round-trip per marker literal
+    winner = F.expr(
+        f"array_min(transform(filter({scored}, "
+        f"p -> p.score = array_max(transform({scored}, t -> t.score))), p -> p.lang))"
     )
     return df.withColumn(out_col, winner)
 

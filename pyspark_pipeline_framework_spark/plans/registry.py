@@ -552,8 +552,8 @@ def op_pq_search(
     dim: int,
     **params,
 ) -> DataFrame:
-    """ADC top-k over a PQ code store (broadcast distance tables,
-    one wide aggregate) -- llm.pq.pq_search_adc."""
+    """ADC top-k over a PQ code store (broadcast per-query lookup
+    tables, one generated lookup sum per code) -- llm.pq.pq_search_adc."""
     from pyspark_pipeline_framework_spark.llm.pq import pq_search_adc
 
     return catalog.put(

@@ -98,6 +98,18 @@ def test_language_id_total(degen_df):
     assert out[2] == sorted(["en", "de", "fr", "es", "zh"])[0]
 
 
+def test_language_id_markers_with_quotes_and_backslashes(spark):
+    """Marker words and language codes are user config that becomes SQL
+    string literals: quotes and backslashes must match verbatim."""
+    df = spark.createDataFrame(
+        [(1, "l'été est beau"), (2, "a \\d b"), (3, "plain words")],
+        "doc_id int, text string",
+    )
+    markers = {"fr": ["l'été", "est"], "x\\y": ["\\d"], "en": ["words"]}
+    out = {r.doc_id: r.lang_pred for r in language_id(df, markers=markers).collect()}
+    assert out == {1: "fr", 2: "x\\y", 3: "en"}
+
+
 def test_stats_and_vocab_never_raise(degen_df):
     # one row per distinct source (all 8 sources unique)
     assert corpus_stats(degen_df, by="source").count() == 8

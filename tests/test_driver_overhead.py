@@ -14,6 +14,8 @@ from pyspark_pipeline_framework_spark.llm.dedup import (
     minhash_bands,
     minhash_candidate_pairs,
 )
+from pyspark_pipeline_framework_spark.llm.similarity import drop_corrupt_vectors
+from pyspark_pipeline_framework_spark.llm.text import language_id
 from pyspark_pipeline_framework_spark.operators.partitioning import ensure_parallelism
 from pyspark_pipeline_framework_spark.plans.config import ComponentConfig, PipelineConfig
 from pyspark_pipeline_framework_spark.plans.result import PipelineStatus
@@ -83,6 +85,64 @@ def test_minhash_plans_build_in_few_py4j_calls(spark, sf_dir):
     with _py4j_calls() as calls:
         minhash_bands(docs)
     assert calls[0] < PLAN_BUILD_CALLS
+
+
+def test_vector_screen_and_language_id_build_in_few_py4j_calls(spark, sf_dir):
+    """The fixed-point dot of the zero-norm screen (run on every stream
+    batch's add and search) and the marker-word scores of language_id
+    are each one parsed expression. As Column builders they took 251
+    (a Python lambda per zip_with/aggregate) and 492 (a literal per
+    marker word) round-trips."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    with _py4j_calls() as calls:
+        drop_corrupt_vectors(emb, "embedding", 64, drop_zero_norm=True)
+    assert calls[0] < 150
+    with _py4j_calls() as calls:
+        language_id(docs)
+    assert calls[0] < 60
+
+
+def _jobs_run_by(sc, group: str, action) -> int:
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: Spark jobs one ``ivfpq_search(...).collect()`` may run: the two
+#: broadcasts (probe cells, lookup tables), the top-k shuffle and the
+#: result stage, plus one for ``ensure_parallelism``'s spread. The
+#: posexplode/join/aggregate plan ran 7, one of them rebuilding the
+#: codebook table from a Python list.
+IVFPQ_SEARCH_JOBS = 5
+
+
+def test_ivfpq_search_runs_few_jobs(spark, sf_dir, tmp_path):
+    from pyspark_pipeline_framework_spark.llm.pq import (
+        ivfpq_add,
+        ivfpq_search,
+        pq_train_codebooks_exact,
+    )
+    from pyspark_pipeline_framework_spark.llm.similarity import (
+        ivf_train_centroids_exact,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    C = ivf_train_centroids_exact(emb, 64, nlist=8, train_sample=128)
+    B = pq_train_codebooks_exact(emb, 64, m_sub=16, ksub=16, train_sample=128)
+    ivfpq_add(emb, C, B, 64).write.parquet(str(tmp_path / "store"))
+    store = spark.read.parquet(str(tmp_path / "store"))
+
+    def search():
+        assert len(ivfpq_search(store, C, B, q, 64, k=5, nprobe=3).collect()) == 25
+
+    assert _jobs_run_by(spark.sparkContext, "ivfpq-search-jobs", search) <= IVFPQ_SEARCH_JOBS
 
 
 def test_ensure_parallelism_runs_no_job_on_an_adaptive_input(spark):

@@ -331,12 +331,31 @@ def test_incremental_spans_plan(spark, sf_dir):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
+def _assert_adc_lookup_plan(p: str) -> None:
+    """ADC search scores a candidate with one generated sum of table
+    lookups: no Generate over the codes, no aggregate keyed by
+    (query_id, vec_id), no codebook table rebuilt from a Python list
+    (``Scan ExistingRDD``), and the top-k window's hash exchange on
+    query_id is the only shuffle besides ``ensure_parallelism``'s
+    round-robin spread."""
+    generates = re.findall(r"\(\d+\) Generate\nInput .*\nArguments: (.*)", p)
+    assert not [g for g in generates if "codes" in g], generates
+    keys = re.findall(r"\(\d+\) \w*Aggregate\nInput .*\nKeys \[\d+\]: (.*)", p)
+    assert not [k for k in keys if "query_id" in k and "vec_id" in k], keys
+    assert "ExistingRDD" not in p
+    shuffles = re.findall(r"\(\d+\) Exchange\nInput .*\nArguments: (\w+)\((\w+)", p)
+    assert shuffles, "no Exchange details found in the formatted plan"
+    hashed = [s for s in shuffles if s[0] != "RoundRobinPartitioning"]
+    assert hashed == [("hashpartitioning", "query_id")], shuffles
+    assert "CartesianProduct" not in p
+
+
 def test_pq_adc_search_plan(spark, sf_dir):
-    """PQ-ADC search: distance tables broadcast (never shuffled against
-    the code store), no cartesian product, lookup-sum as a real
-    partial+final hash aggregate. (Built on the raw operator — the
-    suite case memoizes through a localCheckpoint, which truncates the
-    plan to an ExistingRDD scan.)"""
+    """PQ-ADC search: the query lookup tables are broadcast (never
+    shuffled against the code store) and every code is scored by one
+    generated lookup sum. (Built on the raw operator — the suite case
+    memoizes through a localCheckpoint, which truncates the plan to an
+    ExistingRDD scan.)"""
     from pyspark.sql import functions as F
 
     from pyspark_pipeline_framework_spark.llm.pq import cosine_topk_pq
@@ -347,14 +366,16 @@ def test_pq_adc_search_plan(spark, sf_dir):
     )
     p = _raw_plan(cosine_topk_pq(emb, q, dim=64, k=5, m_sub=16, ksub=16,
                                  train_sample=128))
-    assert "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
-    assert "HashAggregate" in p
+    assert "BroadcastNestedLoopJoin" in p and "BroadcastExchange" in p
+    assert "codes#" in p and "__dt#" in p
+    _assert_adc_lookup_plan(p)
 
 
 def test_ivfpq_search_plan(spark, sf_dir):
-    """IVFPQ search: the cell probe AND the distance tables ride
-    broadcast joins; candidates never go through a cartesian product."""
+    """IVFPQ search: the cell probe and the per-query lookup tables
+    ride two broadcast hash joins (tables keyed by query, not copied
+    per probed cell); candidates are scored by one generated lookup
+    sum."""
     from pyspark.sql import functions as F
 
     from pyspark_pipeline_framework_spark.llm.pq import cosine_topk_ivfpq
@@ -365,6 +386,6 @@ def test_ivfpq_search_plan(spark, sf_dir):
     )
     p = _raw_plan(cosine_topk_ivfpq(emb, q, dim=64, k=5, nlist=8, nprobe=3,
                                     m_sub=16, ksub=16, train_sample=128))
-    assert "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
-    assert "HashAggregate" in p
+    assert p.count("BroadcastHashJoin") >= 2 and "BroadcastNestedLoopJoin" not in p
+    assert "codes#" in p and "__dt#" in p
+    _assert_adc_lookup_plan(p)

@@ -249,6 +249,53 @@ def test_ivfpq_store_is_map_only(spark, sf_dir):
     assert "Exchange" not in plan
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_malformed_codes_are_dropped_with_ansi_on_and_off(spark, sf_dir, ansi):
+    """A code row that is NULL, not exactly m_sub long, or holds an
+    entry outside [0, ksub) or a NULL entry is never scored, by either
+    search, and searching never raises: the result equals the search of
+    the well-formed rows alone. (The posexplode/join plan scored such
+    rows from the lookups it found.)"""
+    from pyspark_pipeline_framework_spark.llm.pq import ivfpq_add, ivfpq_search
+    from pyspark_pipeline_framework_spark.llm.similarity import (
+        ivf_train_centroids_exact,
+    )
+
+    emb = _emb(spark, sf_dir)
+    q = _queries(emb)
+    C = ivf_train_centroids_exact(emb, DIM, nlist=4, train_sample=128)
+    B = pq_train_codebooks_exact(emb, DIM, m_sub=M_SUB, ksub=KSUB, train_sample=128)
+    good = [
+        (r.vec_id, r.cell, list(r.codes))
+        for r in ivfpq_add(emb.where(F.col("vec_id") < 40), C, B, DIM).collect()
+    ]
+    cell, codes = good[-1][1], good[-1][2]
+    bad = [
+        (10_001, cell, codes[:-1]),
+        (10_002, cell, codes + [0]),
+        (10_003, cell, [KSUB] + codes[1:]),
+        (10_004, cell, codes[:-1] + [-1]),
+        (10_005, cell, [None] + codes[1:]),
+        (10_006, cell, None),
+    ]
+    schema = "vec_id bigint, cell int, codes array<int>"
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, ansi)
+    try:
+        store = spark.createDataFrame(good + bad, schema)
+        clean = spark.createDataFrame(good, schema)
+        for search in (
+            lambda s: pq_search_adc(s.select("vec_id", "codes"), B, q, DIM, k=50),
+            lambda s: ivfpq_search(s, C, B, q, DIM, k=50, nprobe=4),
+        ):
+            got = sorted(map(tuple, search(store).collect()))
+            assert got == sorted(map(tuple, search(clean).collect()))
+            assert len(got) > 0
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_int8_knn_recall_and_zero_exclusion(spark, sf_dir):
     """Quantized-search quality: int8 cosine ranking is near-lossless
     (measured recall@5 = 1.00 at sf0.001/0.01/0.1); zero vectors are
