@@ -19,13 +19,11 @@ round-trips, thousands per plan.
 from __future__ import annotations
 
 import logging
-import os
-import posixpath as _posixpath
-from urllib.parse import urlparse as _urlparse
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyspark_pipeline_framework_spark.connect_compat import truncate_lineage
 from pyspark_pipeline_framework_spark.llm.text import normalize_text
 from pyspark_pipeline_framework_spark.operators.partitioning import ensure_parallelism
 
@@ -36,9 +34,15 @@ def exact_text_dedup(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Exact dedup on normalized text: keep the row with the smallest
-    id per sha256(normalized text). One shuffle on the 256-bit hash —
-    never on the text payload itself (the scale-critical trick: at
-    100 TB you shuffle 32-byte keys, not documents)."""
+    id per sha256(normalized text).
+
+    One shuffle, partitioned by the hex sha256 key: the exchange
+    (``hashpartitioning(__h)``) carries every input column, the text
+    payload included. What keeps it from moving every document is the
+    partial ``WindowGroupLimit`` before it, which keeps only each
+    input partition's smallest-id row per hash, so exact duplicates
+    within one partition are dropped map-side and the rest cross the
+    shuffle as whole rows."""
     # NULL text gets a per-row key: sha2(NULL) is NULL, which would
     # lump every failed-extraction row into ONE dedup group and
     # silently drop all but one — at corpus scale that deletes data on
@@ -65,68 +69,6 @@ def exact_text_dedup(
     return hashed.withColumn("__rn", F.row_number().over(w)).filter(
         F.col("__rn") == 1
     ).drop("__h", "__rn")
-
-
-def _truncate(df: DataFrame, checkpoint_dir: str | None, eager: bool = False) -> DataFrame:
-    """Lineage truncation for iterative loops.
-
-    Default (``checkpoint_dir=None``): ``localCheckpoint`` — blocks
-    live on executors, no extra I/O, but an executor loss mid-loop
-    kills the job because truncated lineage cannot be recomputed.
-
-    With ``checkpoint_dir``: reliable ``checkpoint()`` into that
-    fault-tolerant path (HDFS/S3/DBFS on a real cluster) — every
-    round's state survives executor loss and preemption, the right
-    tradeoff for 100 TB runs where a multi-hour contraction must not
-    restart from zero. Costs one write+read of the (tiny: two longs
-    per edge) loop state per round."""
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
-    try:
-        sc = df.sparkSession.sparkContext
-    except Exception:
-        # Spark Connect: no client-side SparkContext / setCheckpointDir.
-        # The server honors the spark.checkpoint.dir conf (Spark 4);
-        # reliable_checkpoint sets-or-verifies it and raises a typed
-        # ConnectUnsupportedError with the server-side fix otherwise
-        # (r9 VERDICT item 1; reference runtime/session/wrapper.py:99-115)
-        from pyspark_pipeline_framework_spark.connect_compat import (
-            reliable_checkpoint,
-        )
-
-        return reliable_checkpoint(df, checkpoint_dir, eager=eager)
-    try:
-        current = sc.getCheckpointDir()
-    except Exception:
-        current = None
-    # setCheckpointDir creates a fresh random SUBDIR under the given
-    # path and getCheckpointDir returns that subdir (often with a
-    # file:/ scheme) — compare the subdir's PARENT path components
-    # against the requested root (a substring test would false-match
-    # /data/ck against /data/ck-old or /data/ck2/..., silently landing
-    # checkpoints in the wrong directory), or every round would spawn a
-    # new directory tree. Note: setCheckpointDir is global SparkContext
-    # state — callers sharing a context share the checkpoint root.
-    if current is None or not _same_checkpoint_root(current, checkpoint_dir):
-        sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint(eager=eager)
-
-
-def _same_checkpoint_root(current_subdir: str, requested: str) -> bool:
-    """True when ``current_subdir`` (the random subdir returned by
-    ``getCheckpointDir``, possibly ``file:/``-schemed) lives DIRECTLY
-    under the ``requested`` checkpoint root — exact path-component
-    comparison of the subdir's parent, never substring matching."""
-    cur = _urlparse(current_subdir)
-    req = _urlparse(requested)
-    cur_parent = _posixpath.dirname(cur.path.rstrip("/"))
-    req_path = req.path.rstrip("/") or "/"
-    if req.scheme in ("", "file"):
-        return cur.scheme in ("", "file") and os.path.abspath(
-            cur_parent
-        ) == os.path.abspath(req_path)
-    # remote FS (hdfs/s3a/...): scheme + authority + exact parent path
-    return (cur.scheme, cur.netloc, cur_parent) == (req.scheme, req.netloc, req_path)
 
 
 def _word_array(text_col: str) -> Column:
@@ -283,7 +225,19 @@ def _md5_signature_arrow(exploded, id_col: str, num_hashes: int):
     2.66 s for the ``verified`` component of the curation benchmark
     (4-core host). Do not judge such a variant with a ``.count()``
     microbenchmark: column pruning drops the unused 64 aggregates
-    from a count's plan, so it times the shingle scan only.
+    from a count's plan, so it times the shingle scan only. A per-row
+    SQL form (``transform(shingles, md5)``, ``array_min`` of the
+    substrings, one ``conv`` per document) gave bit-identical
+    signatures but lost on curation seed 1 (2 pairs): ``cpu_s``
+    20.1-21.1 → 24.4-26.5 s, ``wall_s`` 6.6-6.8 → 8.9-9.9 s. Nor can
+    hashing only distinct base hashes across the whole input (ROADMAP
+    4a) save much: on curation seed 1, 95,938 of the 106,727 shingle
+    occurrences in ``docs_exact`` are distinct base hashes, so at most
+    10% of the digests could be skipped. The loop itself formats the
+    ``g:`` prefixes once, not per digest: the same bytes are hashed
+    in ~25% less time (50k hashes × 16 groups, 0.86-1.06 s →
+    0.64-0.81 s). CPython's private ``_md5`` module takes about half
+    that (0.35-0.37 s), but it is not a public API.
 
     Bit-exactness: tokenization, shingling and the base ``md5(shingle)``
     stay JVM-side, so Python only ever sees 32-hex ASCII digests — no
@@ -316,7 +270,8 @@ def _md5_signature_arrow(exploded, id_col: str, num_hashes: int):
         import pandas as pd
 
         md5 = hashlib.md5
-        groups = list(range(n_groups))
+        # the "g:" prefixes, formatted once, not once per digest
+        pre = [b"%d:" % g for g in range(n_groups)]
         cache: dict = {}
         mat = np.empty((1024, num_hashes), dtype=np.int64)
         for pdf in batches:
@@ -343,9 +298,7 @@ def _md5_signature_arrow(exploded, id_col: str, num_hashes: int):
                     # realistic 280k-row/28k-distinct task batch,
                     # bit-identical partial mins)
                     hb = h.encode()
-                    buf = b"".join(
-                        md5(b"%d:%s" % (g, hb)).digest() for g in groups
-                    )
+                    buf = b"".join(md5(p + hb).digest() for p in pre)
                     mat[pos] = np.frombuffer(buf, dtype=">u4")[:num_hashes]
                     cache[h] = pos
                     pos += 1
@@ -670,12 +623,12 @@ def jaccard_verify(
     exactly once; candidates are bounded by construction (that is the
     point of LSH), so the checkpointed footprint is two longs per
     pair. ``checkpoint_dir`` upgrades it to a reliable ``checkpoint()``
-    (see :func:`_truncate`)."""
+    (see ``connect_compat.truncate_lineage``)."""
     cand = candidates.select(
         F.col("id_a").cast("long").alias("id_a"), F.col("id_b").cast("long").alias("id_b")
     ).distinct()
     if materialize_candidates:
-        cand = _truncate(cand, checkpoint_dir, eager=True)
+        cand = truncate_lineage(cand, checkpoint_dir, eager=True)
     touched = (
         cand.select(F.col("id_a").alias("id"))
         .union(cand.select(F.col("id_b").alias("id")))
@@ -911,7 +864,7 @@ def _star_components(
             .where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.least(F.col("u"), F.col("mn")).alias("v"))
         )
-        large = _truncate(large, checkpoint_dir)
+        large = truncate_lineage(large, checkpoint_dir)
         # small-star on the oriented output: for each hub u, attach u
         # and all its (smaller) neighbors to their minimum
         mins = large.groupBy("u").agg(F.min("v").alias("m"))
@@ -922,7 +875,7 @@ def _star_components(
             .union(mins.select("u", F.col("m").alias("v")))
             .distinct()
         )
-        small = _truncate(small, checkpoint_dir)
+        small = truncate_lineage(small, checkpoint_dir)
         stats = small.agg(
             F.count(F.lit(1)),
             F.sum(F.col("u").cast("decimal(38,0)")),
@@ -973,7 +926,7 @@ def connected_components(
     pass ``checkpoint_dir`` (a fault-tolerant path — HDFS/S3 on a
     cluster) to switch every per-round truncation to a RELIABLE
     ``checkpoint()`` that survives executor loss — see
-    :func:`_truncate` for the tradeoff.
+    ``connect_compat.truncate_lineage`` for the tradeoff.
 
     ``algorithm="star"`` is two-phase large-star/small-star contraction
     (Kiveris et al.) — O(log² n) rounds on ANY graph shape, the escape
@@ -988,7 +941,7 @@ def connected_components(
         raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
     e1 = pairs.select(F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v"))
     if algorithm == "star":
-        oriented = _truncate(
+        oriented = truncate_lineage(
             e1.where(F.col("u") != F.col("v"))
             .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct(),
@@ -1003,7 +956,7 @@ def connected_components(
             nodes.join(parents, "u", "left")
             .select(F.col("u").alias("id"), F.coalesce("root", F.col("u")).alias("cluster_id"))
         )
-    edges = _truncate(
+    edges = truncate_lineage(
         e1.union(e1.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),
         checkpoint_dir,
     )
@@ -1012,7 +965,7 @@ def connected_components(
     # the edge list instead of a join round. Seeding prev_sum with the
     # init labels' sum lets near-clique dedup graphs (diameter ≤ 2)
     # terminate after a single join round instead of three.
-    labels = _truncate(
+    labels = truncate_lineage(
         edges.groupBy("u")
         .agg(F.min("v").alias("__mn"))
         .select(F.col("u").alias("id"), F.least("u", "__mn").alias("label")),
@@ -1025,7 +978,7 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("label").alias("nbr_min"))
         )
-        labels = _truncate(
+        labels = truncate_lineage(
             labels.join(nbr_min, labels.id == nbr_min.u, "left")
             .select(
                 "id",

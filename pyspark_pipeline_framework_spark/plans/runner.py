@@ -9,7 +9,23 @@ continue, and dry-run validation. Deliberately sequential
 (docs/scope.rst:156-177) — parallelism belongs to Spark, not the
 orchestrator; because operators stay lazy, a chain of components
 composes into ONE Catalyst plan per sink exactly like the reference's
-temp-view fusion (SURVEY.md §4)."""
+temp-view fusion (SURVEY.md §4).
+
+The one exception is a shared dataset, SURVEY §4's declared fan-out
+point (:func:`shared_datasets`): the output of a non-source component
+that two or more enabled components name in their params. Lazily,
+every Spark action that reads it recomputes it — on the curation
+benchmark ``docs_exact`` was computed six times per run. The runner
+materializes it once, eagerly and with its lineage cut, right after
+its producer returns (``connect_compat.truncate_lineage``:
+``localCheckpoint``, or a reliable ``checkpoint()`` under
+``spark.checkpoint.dir`` when the session sets it), so its cost lands
+on its producer. Sources stay lazy (a copy of the whole input would
+defeat each consumer's column pruning and pushdown), and so do
+streaming DataFrames. An eager ``df.persist()`` in its place lost
+on ``cpu_s`` in 5 of 5 curation benchmark pairs (medians 20.3 →
+25.2 s; ``wall_s`` 7.1 → 7.4 s, peak RSS +5%): cached plans stay
+full size and every query pays the cache lookups."""
 
 from __future__ import annotations
 
@@ -18,6 +34,7 @@ from typing import Callable, Iterable
 
 from pyspark.sql import SparkSession
 
+from pyspark_pipeline_framework_spark.connect_compat import truncate_lineage
 from pyspark_pipeline_framework_spark.io.readers import Catalog
 from pyspark_pipeline_framework_spark.observability.hooks import NoOpHooks, PipelineHooks
 from pyspark_pipeline_framework_spark.plans.config import ComponentConfig, PipelineConfig
@@ -56,6 +73,33 @@ class SchemaContractError(RuntimeError):
             f"schema contract violated for component {component!r} on dataset "
             f"{dataset!r}: " + "; ".join(f"{i.field}: {i.message}" for i in issues)
         )
+
+
+def shared_datasets(config: PipelineConfig) -> frozenset[str]:
+    """Outputs of non-source components that at least two OTHER enabled
+    components read. A component reads a dataset when one of its param
+    values, or an element of a list param, is the dataset's name
+    (non-string values such as dict params are skipped). ``sql`` text
+    is not parsed, so a view read only from SQL does not count."""
+    named = {
+        c.name: {
+            x
+            for v in c.params.values()
+            for x in (v if isinstance(v, list) else [v])
+            if isinstance(x, str)
+        }
+        for c in config.components
+    }
+    return frozenset(
+        p.output
+        for p in config.components
+        if p.component_type != "source" and p.op != "read"
+        and sum(
+            p.output in named[c.name]
+            for c in config.components
+            if c is not p and c.enabled
+        ) >= 2
+    )
 
 
 class PipelineRunner:
@@ -97,6 +141,7 @@ class PipelineRunner:
         self._clock = clock
         self._sleep = sleep
         self.catalog = Catalog(spark)
+        self._shared = shared_datasets(config)
         self._breaker = (
             CircuitBreaker(
                 failure_threshold=resilience.failure_threshold,
@@ -304,6 +349,12 @@ class PipelineRunner:
                 kwargs.setdefault("output", comp.output)
             out = fn(self.spark, self.catalog, **kwargs)
             if out is not None and comp.output:
+                if comp.output in self._shared and not out.isStreaming:
+                    out = truncate_lineage(
+                        out,
+                        self.spark.conf.get("spark.checkpoint.dir", None),
+                        eager=True,
+                    )
                 self.catalog.put(comp.output, out)
             return out
 

@@ -150,14 +150,14 @@ def test_reliable_checkpoint_typed_error(connectish, sf_dir, tmp_path):
     never an AttributeError from a SparkContext touch."""
     from pyspark_pipeline_framework_spark.connect_compat import (
         ConnectUnsupportedError,
+        truncate_lineage,
     )
-    from pyspark_pipeline_framework_spark.llm.dedup import _truncate
 
     df = connectish.read.parquet(f"{sf_dir}/region.parquet")
     # default path: localCheckpoint, no SparkContext needed
-    assert _truncate(df, None).count() == df.count()
+    assert truncate_lineage(df, None).count() == df.count()
     with pytest.raises(ConnectUnsupportedError, match="spark.checkpoint.dir"):
-        _truncate(df, str(tmp_path / "ck"))
+        truncate_lineage(df, str(tmp_path / "ck"))
 
 
 def test_reliable_checkpoint_configured_server():

@@ -777,10 +777,10 @@ def test_probe_media_custom_id_col(spark):
 
 
 def test_same_checkpoint_root_exact_components(tmp_path):
-    """_truncate's already-set check compares exact path components
+    """truncate_lineage's already-set check compares exact path components
     (ADVICE r5: the old substring test false-matched /data/ck against
     /data/ck-old and /data/ck2/sub)."""
-    from pyspark_pipeline_framework_spark.llm.dedup import _same_checkpoint_root
+    from pyspark_pipeline_framework_spark.connect_compat import _same_checkpoint_root
 
     # getCheckpointDir returns the random SUBDIR, often file:/-schemed
     assert _same_checkpoint_root("file:/data/ck/abc-123", "/data/ck")
@@ -796,21 +796,21 @@ def test_same_checkpoint_root_exact_components(tmp_path):
 
 
 def test_truncate_reuses_requested_dir(spark, tmp_path):
-    """Two _truncate calls with the same requested dir must not re-set
+    """Two truncate_lineage calls with the same requested dir must not re-set
     the context checkpoint dir (which would spawn a second random
     subtree); a DIFFERENT requested dir must re-set it."""
     import os
 
-    from pyspark_pipeline_framework_spark.llm.dedup import _truncate
+    from pyspark_pipeline_framework_spark.connect_compat import truncate_lineage
 
     df = spark.range(10)
     a = str(tmp_path / "ck_a")
     b = str(tmp_path / "ck_b")
-    _truncate(df, a, eager=True)
+    truncate_lineage(df, a, eager=True)
     first = spark.sparkContext.getCheckpointDir()
-    _truncate(df, a, eager=True)
+    truncate_lineage(df, a, eager=True)
     assert spark.sparkContext.getCheckpointDir() == first
-    _truncate(df, b, eager=True)
+    truncate_lineage(df, b, eager=True)
     assert spark.sparkContext.getCheckpointDir() != first
     assert os.listdir(b), "new dir must receive checkpoint state"
 

@@ -8,6 +8,7 @@ import os
 import pytest
 from hypothesis import given, strategies as st
 
+from pyspark_pipeline_framework_spark.observability.hooks import NoOpHooks
 from pyspark_pipeline_framework_spark.plans.checkpoint import (
     CheckpointState,
     LocalCheckpointStore,
@@ -19,7 +20,7 @@ from pyspark_pipeline_framework_spark.plans.config import (
     PipelineValidationError,
 )
 from pyspark_pipeline_framework_spark.plans.result import ComponentStatus, PipelineStatus
-from pyspark_pipeline_framework_spark.plans.runner import PipelineRunner
+from pyspark_pipeline_framework_spark.plans.runner import PipelineRunner, shared_datasets
 from pyspark_pipeline_framework_spark.resilience.presets import NO_RETRY
 from pyspark_pipeline_framework_spark.schema.model import DataType, SchemaDefinition, SchemaField
 from pyspark_pipeline_framework_spark.schema.converter import from_struct_type, to_struct_type
@@ -1092,3 +1093,160 @@ def test_range_frame_registry_op(spark, sf_dir):
     got = runner.catalog.get("rf")
     assert (sorted(map(tuple, got.select("o_orderkey", "n_within_1k").collect()))
             == sorted(map(tuple, want.select("o_orderkey", "n_within_1k").collect())))
+
+
+# ------------------------------------------------------- shared datasets
+
+class _JobGroupPerComponent(NoOpHooks):
+    """Hooks that run each component's Spark jobs under a job group
+    named after it, so a test can count the jobs a component ran."""
+
+    def __init__(self, sc, prefix):
+        self.sc, self.prefix = sc, prefix
+
+    def on_component_start(self, pipeline, component):
+        self.sc.setJobGroup(self.prefix + component, component)
+
+    def on_component_end(self, pipeline, component, status, duration_s):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def jobs(self, component):
+        return len(self.sc.statusTracker().getJobIdsForGroup(self.prefix + component))
+
+
+def _fan_out_pipeline(spark, out_dir, n_rows):
+    """``src`` (a source) feeds ``mid`` and ``other``; ``mid`` feeds two
+    sinks, ``other`` one. ``mid`` counts the rows it computes in the
+    returned accumulator."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from pyspark_pipeline_framework_spark.plans.registry import (
+        OperatorRegistry,
+        default_registry,
+    )
+
+    computed = spark.sparkContext.accumulator(0)
+
+    def count_row(x):
+        computed.add(1)
+        return x
+
+    counting = F.udf(count_row, LongType()).asNondeterministic()
+    reg = OperatorRegistry()
+    for op in ("write", "transform"):
+        reg.register(op, default_registry.get(op))
+
+    @reg.register("range")
+    def _range(spark_, catalog, *, output, **_):
+        return catalog.put(output, spark_.range(n_rows))
+
+    @reg.register("counted")
+    def _counted(spark_, catalog, *, output, input, **_):
+        return catalog.put(output, catalog.get(input).select(counting("id").alias("id")))
+
+    def sink(name, dep, ds):
+        return comp(name, deps=[dep], op="write", component_type="sink",
+                    params={"input": ds, "format": "parquet", "mode": "overwrite",
+                            "path": os.path.join(out_dir, name)})
+
+    cfg = PipelineConfig("fan-out", [
+        comp("src", op="range", component_type="source", output="sd_src"),
+        comp("mid", deps=["src"], op="counted", output="sd_mid",
+             params={"input": "sd_src"}),
+        comp("other", deps=["src"], op="transform", output="sd_other",
+             params={"input": "sd_src", "filter": "id % 2 = 0"}),
+        sink("save_a", "mid", "sd_mid"),
+        sink("save_b", "mid", "sd_mid"),
+        sink("save_c", "other", "sd_other"),
+    ])
+    return cfg, reg, computed
+
+
+def test_shared_dataset_is_computed_once_per_run(spark, tmp_path):
+    """A non-source dataset two sinks read is computed once, at its
+    producer; a source read twice and a dataset read once stay lazy."""
+    import uuid
+
+    cfg, reg, computed = _fan_out_pipeline(spark, str(tmp_path), 50)
+    assert shared_datasets(cfg) == {"sd_mid"}
+    hooks = _JobGroupPerComponent(spark.sparkContext, f"shared-{uuid.uuid4().hex}-")
+    result = PipelineRunner(cfg, spark, registry=reg, hooks=hooks,
+                            resilience=NO_RETRY).run()
+    assert result.status == PipelineStatus.SUCCESS
+    assert computed.value == 50  # lazily, each sink recomputed it: 100
+    assert hooks.jobs("mid") >= 1
+    assert hooks.jobs("src") == 0 and hooks.jobs("other") == 0
+    for name, n in (("save_a", 50), ("save_b", 50), ("save_c", 25)):
+        assert spark.read.parquet(str(tmp_path / name)).count() == n
+
+
+def test_shared_dataset_lands_under_the_session_checkpoint_dir(spark, tmp_path):
+    """With ``spark.checkpoint.dir`` set, the shared dataset is a
+    reliable checkpoint under it, not an executor-local one."""
+    ck = str(tmp_path / "ck")
+    cfg, reg, computed = _fan_out_pipeline(spark, str(tmp_path), 20)
+    # a deployment sets spark.checkpoint.dir when it builds the session;
+    # the shared test session can only take it at run time, which Spark
+    # allows for core confs behind this legacy switch
+    legacy = "spark.sql.legacy.setCommandRejectsSparkCoreConfs"
+    spark.conf.set(legacy, "false")
+    spark.conf.set("spark.checkpoint.dir", ck)
+    try:
+        result = PipelineRunner(cfg, spark, registry=reg, resilience=NO_RETRY).run()
+    finally:
+        spark.conf.unset("spark.checkpoint.dir")
+        spark.conf.unset(legacy)
+    assert result.status == PipelineStatus.SUCCESS
+    assert computed.value == 20
+    assert [f for _, _, fs in os.walk(ck) for f in fs], "no checkpoint under the dir"
+
+
+def test_shared_datasets_skip_dict_params_sources_and_sql_text():
+    """Read counts walk string params and string list elements; dict
+    params and dicts inside lists are skipped, sources are never
+    shared, ``sql`` text is not parsed and disabled readers do not
+    count."""
+    cfg = PipelineConfig("counts", [
+        comp("load", op="read", output="raw", params={"format": "parquet", "path": "/x"}),
+        comp("clean", deps=["load"], op="transform", output="clean",
+             params={"input": "raw", "select": ["id", "text"]}),
+        comp("split", deps=["clean"], op="split_by_hash", output="split",
+             params={"input": "clean", "fractions": {"train": 0.9, "test": 0.1}}),
+        comp("agg", deps=["clean"], op="transform", output="agg",
+             params={"input": "raw", "with_columns": [{"n": "1"}], "also": ["clean"]}),
+        comp("by_sql", deps=["split"], op="sql", output="by_sql",
+             params={"sql": "SELECT * FROM split JOIN split USING (id)"}),
+        comp("off1", deps=["split"], op="transform", enabled=False, output="off1",
+             params={"input": "split"}),
+        comp("off2", deps=["split"], op="transform", enabled=False, output="off2",
+             params={"input": "split"}),
+    ])
+    assert shared_datasets(cfg) == {"clean"}
+
+
+def test_streaming_shared_dataset_stays_lazy(spark):
+    """A streaming DataFrame cannot be checkpointed in batch: the runner
+    leaves a shared streaming dataset lazy."""
+    from pyspark_pipeline_framework_spark.plans.registry import OperatorRegistry
+
+    reg = OperatorRegistry()
+
+    @reg.register("rate")
+    def _rate(spark_, catalog, *, output, **_):
+        return catalog.put(output, spark_.readStream.format("rate").load())
+
+    @reg.register("project")
+    def _project(spark_, catalog, *, output, input, **_):
+        return catalog.put(output, catalog.get(input).select("value"))
+
+    cfg = PipelineConfig("stream-fan-out", [
+        comp("src", op="rate", component_type="source", output="st_src"),
+        comp("mid", deps=["src"], op="project", output="st_mid", params={"input": "st_src"}),
+        comp("a", deps=["mid"], op="project", output="st_a", params={"input": "st_mid"}),
+        comp("b", deps=["mid"], op="project", output="st_b", params={"input": "st_mid"}),
+    ])
+    assert shared_datasets(cfg) == {"st_mid"}
+    runner = PipelineRunner(cfg, spark, registry=reg, resilience=NO_RETRY)
+    assert runner.run().status == PipelineStatus.SUCCESS
+    assert runner.catalog.get("st_mid").isStreaming

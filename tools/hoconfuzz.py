@@ -15,7 +15,9 @@ validation — with randomized MALFORMED input:
    :class:`PipelineConfig` comes back, or
    :class:`PipelineValidationError` is raised — never a dataclass
    TypeError or a deep AttributeError traceback, and never a silent
-   misparse of a scalar where a list belongs.
+   misparse of a scalar where a list belongs. Every accepted config
+   also goes through the runner's shared-dataset read count
+   (``plans.runner.shared_datasets``), which walks all its params.
 
 Usage: python tools/hoconfuzz.py [--n 1200] [--seed 42] [--dump]
 Exit 0 iff zero uncontrolled exceptions and zero hangs. No Spark.
@@ -40,6 +42,7 @@ from pyspark_pipeline_framework_spark.plans.config import (  # noqa: E402
     PipelineValidationError,
 )
 from pyspark_pipeline_framework_spark.plans.hocon import HoconError, loads  # noqa: E402
+from pyspark_pipeline_framework_spark.plans.runner import shared_datasets  # noqa: E402
 
 #: junk fragments biased toward HOCON syntax elements — mutations that
 #: stay NEAR the grammar probe deeper parser states than pure noise
@@ -184,6 +187,7 @@ def main() -> int:
         try:
             cfg = PipelineConfig.from_dict(src_d)
             assert isinstance(cfg, PipelineConfig)
+            shared_datasets(cfg)
             v_ok += 1
         except PipelineValidationError:
             v_err += 1
