@@ -193,9 +193,11 @@ class Catalog:
         self._views: dict[str, DataFrame] = {}
 
     def put(self, name: str, df: DataFrame, register_view: bool = True) -> DataFrame:
-        """Store ``df`` under ``name``; a DataFrame already registered
-        as that view by this catalog is not registered again (registry
-        ops put their output and the runner puts it once more)."""
+        """Store ``df`` under ``name`` and, unless ``register_view`` is
+        off, register it as that temp view. A DataFrame already
+        registered under ``name`` by this catalog is not registered
+        again (a user op may put its output before returning it, and
+        the runner puts what every op returns)."""
         self._datasets[name] = df
         if register_view and self._views.get(name) is not df:
             df.createOrReplaceTempView(name)

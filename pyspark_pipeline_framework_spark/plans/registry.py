@@ -1,13 +1,25 @@
 """Operator registry: names → callables ``(spark, catalog, **params) ->
 DataFrame | None``. Replaces the reference's importlib class-path
 loading (runtime/loader.py:15-137) as the primary lookup; the dotted
-``class_path`` escape hatch is kept for user extensions."""
+``class_path`` escape hatch is kept for user extensions.
+
+The op contract: an op reads its inputs from the catalog and RETURNS
+its output DataFrame (``None`` for a sink); ``PipelineRunner`` alone
+stores it under the component's ``output``. Only a secondary output
+(``substring_grams``' ``counts_output``) is put by the op itself.
+
+Most built-in ops are a library function applied to catalog datasets.
+Those are rows of :data:`LIFTS` — the op name, the dotted target
+(imported at call time), the params that name catalog inputs (passed
+positionally, in order) and fixed keyword defaults; every other param
+goes to the target by keyword. Ops with logic of their own are written
+out below the table."""
 
 from __future__ import annotations
 
 import importlib
 import logging
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -107,23 +119,96 @@ def load_class_path(path: str) -> Any:
 default_registry = OperatorRegistry()
 
 
+class Lift(NamedTuple):
+    """One op that applies ``pyspark_pipeline_framework_spark.<target>``
+    to the catalog datasets its ``inputs`` params name."""
+
+    name: str
+    target: str
+    inputs: tuple[str, ...] = ("input",)
+    defaults: dict[str, Any] = {}
+
+    def resolve(self) -> Callable[..., DataFrame]:
+        return load_class_path(f"pyspark_pipeline_framework_spark.{self.target}")
+
+
+def _lift(row: Lift) -> None:
+    def op(spark: SparkSession, catalog: Catalog, **params) -> DataFrame:
+        missing = [k for k in row.inputs if k not in params]
+        if missing:
+            raise TypeError(f"op {row.name} needs catalog input param(s) {missing}")
+        dfs = [catalog.get(params.pop(k)) for k in row.inputs]
+        return row.resolve()(*dfs, **{**row.defaults, **params})
+
+    op.__name__ = op.__qualname__ = f"op_{row.name}"
+    op.__doc__ = f"{row.target} over catalog input(s) {', '.join(row.inputs)}."
+    op.lift = row  # type: ignore[attr-defined]
+    default_registry.register(row.name, op)
+
+
+#: config-declarable library functions (SURVEY §2.8 LLM-data operators,
+#: ANN stores, retrieval, event analytics)
+LIFTS = [
+    Lift("quality_filter", "llm.text.quality_filter"),
+    Lift("language_id", "llm.text.language_id"),
+    Lift("dedup_exact", "llm.dedup.exact_text_dedup"),
+    Lift("dedup_minhash_pairs", "llm.dedup.minhash_candidate_pairs"),
+    Lift("minhash_bands", "llm.dedup.minhash_bands"),
+    Lift("dedup_incremental_pairs", "llm.dedup.incremental_candidate_pairs",
+         ("new_bands", "corpus_bands")),
+    Lift("jaccard_verify", "llm.dedup.jaccard_verify", ("input", "candidates")),
+    Lift("dedup_clusters", "llm.dedup.dedup_clusters", ("input", "pairs")),
+    Lift("duplicated_spans", "llm.dedup.duplicated_spans"),
+    Lift("cut_spans", "llm.dedup.cut_spans", ("input", "spans")),
+    Lift("decontaminate", "llm.dedup.decontaminate", ("input", "eval_set")),
+    Lift("bloom_decontaminate", "llm.dedup.bloom_decontaminate", ("input", "eval_set")),
+    Lift("global_shuffle", "llm.packing.global_shuffle"),
+    Lift("token_budget_sample", "llm.packing.sample_to_token_budget"),
+    Lift("sample_stratified", "llm.packing.stratified_sample"),
+    Lift("sample_domain_mix", "llm.packing.domain_mix_sample"),
+    Lift("sample_weighted", "llm.packing.weighted_sample"),
+    Lift("split_by_hash", "llm.packing.split_by_hash"),
+    Lift("pack_sequences", "llm.packing.pack_sequences"),
+    Lift("chunk_documents", "llm.packing.chunk_documents"),
+    Lift("media_probe", "llm.multimodal.probe_media"),
+    Lift("ivf_add", "llm.similarity.ivf_add", ("input", "centroids")),
+    Lift("ivf_search", "llm.similarity.ivf_search", ("assigned", "centroids", "queries")),
+    Lift("quantize_embeddings", "llm.similarity.quantize_embeddings"),
+    Lift("semantic_dedup_pairs", "llm.similarity.semantic_dedup_pairs"),
+    Lift("pq_encode", "llm.pq.pq_encode", ("input", "codebooks")),
+    Lift("pq_search", "llm.pq.pq_search_adc", ("codes", "codebooks", "queries")),
+    Lift("ivfpq_add", "llm.pq.ivfpq_add", ("input", "centroids", "codebooks")),
+    Lift("ivfpq_search", "llm.pq.ivfpq_search",
+         ("store", "centroids", "codebooks", "queries")),
+    # pipelines default to the classic Robertson idf; the library's
+    # 'rational' default is the variant that matches DuckDB exactly
+    Lift("bm25_topk", "llm.retrieval.bm25_topk", ("input", "queries"), {"idf_mode": "ln"}),
+    Lift("tfidf_terms", "llm.retrieval.tfidf_topk_terms", defaults={"idf_mode": "ln"}),
+    Lift("robust_outliers", "operators.events.robust_outliers"),
+    Lift("funnel", "operators.events.funnel_counts"),
+    Lift("retention", "operators.events.cohort_retention"),
+    Lift("range_frame", "operators.windows.global_range_frame"),
+]
+for _row in LIFTS:
+    _lift(_row)
+
+
 @default_registry.register("read")
-def op_read(spark: SparkSession, catalog: Catalog, *, output: str, **params) -> DataFrame:
-    """Read a source (parquet/csv/json/orc/delta/iceberg/table) into the catalog."""
-    df = read_source(spark, SourceConfig(**params))
-    return catalog.put(output, df)
+def op_read(spark: SparkSession, catalog: Catalog, **params) -> DataFrame:
+    """Read a source (parquet/csv/json/orc/delta/iceberg/table)."""
+    return read_source(spark, SourceConfig(**params))
 
 
 @default_registry.register("sql")
-def op_sql(spark: SparkSession, catalog: Catalog, *, output: str, sql: str, **_) -> DataFrame:
+def op_sql(spark: SparkSession, catalog: Catalog, *, sql: str, **_) -> DataFrame:
     """SqlTransform parity: SQL over registered datasets; stays lazy so
     chained SQL stages fuse into one Catalyst plan."""
-    return catalog.put(output, catalog.sql(sql))
+    return catalog.sql(sql)
 
 
 @default_registry.register("transform")
 def op_transform(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str,
+    spark: SparkSession, catalog: Catalog, *, input: str,
     filter: str | None = None, select: list[str] | None = None,
     with_columns: dict[str, str] | None = None, **_,
 ) -> DataFrame:
@@ -137,7 +222,7 @@ def op_transform(
         df = df.withColumn(name, F.expr(expr))
     if select:
         df = df.selectExpr(*select)
-    return catalog.put(output, df)
+    return df
 
 
 @default_registry.register("write")
@@ -147,76 +232,9 @@ def op_write(spark: SparkSession, catalog: Catalog, *, input: str, **params) -> 
     return None
 
 
-# -- config-declarable LLM-data operators (SURVEY §2.8) ---------------------
-
-
-@default_registry.register("quality_filter")
-def op_quality_filter(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Length/symbol/uniqueness text-quality gate -- llm.text.quality_filter."""
-    from pyspark_pipeline_framework_spark.llm.text import quality_filter
-
-    return catalog.put(output, quality_filter(catalog.get(input), **params))
-
-
-@default_registry.register("dedup_exact")
-def op_dedup_exact(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Exact text dedup by sha256 content key -- llm.dedup.exact_text_dedup."""
-    from pyspark_pipeline_framework_spark.llm.dedup import exact_text_dedup
-
-    return catalog.put(output, exact_text_dedup(catalog.get(input), **params))
-
-
-@default_registry.register("dedup_minhash_pairs")
-def op_dedup_minhash_pairs(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """MinHash-LSH near-dup candidate pairs -- llm.dedup.minhash_candidate_pairs."""
-    from pyspark_pipeline_framework_spark.llm.dedup import minhash_candidate_pairs
-
-    return catalog.put(output, minhash_candidate_pairs(catalog.get(input), **params))
-
-
-@default_registry.register("minhash_bands")
-def op_minhash_bands(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """The persistable LSH band store — pair with ``op: write``
-    (bucketed by band_hash) to keep it between incremental runs."""
-    from pyspark_pipeline_framework_spark.llm.dedup import minhash_bands
-
-    return catalog.put(output, minhash_bands(catalog.get(input), **params))
-
-
-@default_registry.register("dedup_incremental_pairs")
-def op_dedup_incremental_pairs(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    new_bands: str,
-    corpus_bands: str,
-    **params,
-) -> DataFrame:
-    """Incremental MinHash-LSH: new-batch bands (``minhash_bands``
-    output) vs the persisted corpus band store — candidate pairs that
-    touch the new batch, never corpus×corpus."""
-    from pyspark_pipeline_framework_spark.llm.dedup import incremental_candidate_pairs
-
-    return catalog.put(
-        output,
-        incremental_candidate_pairs(
-            catalog.get(new_bands), catalog.get(corpus_bands), **params
-        ),
-    )
-
-
 @default_registry.register("dedup_ngram_pairs")
 def op_dedup_ngram_pairs(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
+    spark: SparkSession, catalog: Catalog, *, input: str, **params
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via inverted index -- llm.dedup.ngram_jaccard_pairs.
 
@@ -245,93 +263,27 @@ def op_dedup_ngram_pairs(
             "UNCAPPED quadratic inverted index; acceptable only on "
             "small corpora or pre-filtered candidates"
         )
-    return catalog.put(output, ngram_jaccard_pairs(catalog.get(input), **params))
-
-
-@default_registry.register("jaccard_verify")
-def op_jaccard_verify(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    candidates: str,
-    **params,
-) -> DataFrame:
-    """The scale composition's verify stage: exact Jaccard over the
-    candidate pairs from ``dedup_minhash_pairs`` /
-    ``dedup_incremental_pairs``."""
-    from pyspark_pipeline_framework_spark.llm.dedup import jaccard_verify
-
-    return catalog.put(
-        output,
-        jaccard_verify(catalog.get(input), catalog.get(candidates), **params),
-    )
-
-
-@default_registry.register("dedup_clusters")
-def op_dedup_clusters(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    pairs: str,
-    **params,
-) -> DataFrame:
-    """Near-dup canonicalization: connected components over the pair
-    edge list, keep the smallest id per cluster."""
-    from pyspark_pipeline_framework_spark.llm.dedup import dedup_clusters
-
-    return catalog.put(
-        output, dedup_clusters(catalog.get(input), catalog.get(pairs), **params)
-    )
-
-
-@default_registry.register("duplicated_spans")
-def op_duplicated_spans(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params,
-) -> DataFrame:
-    """Exact-substring span dedup (maximal token spans whose every
-    min_tokens-gram occurs >= 2x corpus-wide) --
-    llm.dedup.duplicated_spans; cut the spans, keep the remainder."""
-    from pyspark_pipeline_framework_spark.llm.dedup import duplicated_spans
-
-    return catalog.put(output, duplicated_spans(catalog.get(input), **params))
-
-
-@default_registry.register("cut_spans")
-def op_cut_spans(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str,
-    spans: str, **params,
-) -> DataFrame:
-    """Apply a duplicated-span table: drop covered tokens, rebuild
-    clean_text from the unique remainder -- llm.dedup.cut_spans."""
-    from pyspark_pipeline_framework_spark.llm.dedup import cut_spans
-
-    return catalog.put(
-        output, cut_spans(catalog.get(input), catalog.get(spans), **params)
-    )
+    return ngram_jaccard_pairs(catalog.get(input), **params)
 
 
 @default_registry.register("substring_grams")
 def op_substring_grams(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params,
+    spark: SparkSession, catalog: Catalog, *, input: str,
+    counts_output: str | None = None, **params,
 ) -> DataFrame:
     """The persistable gram-position store behind incremental
     exact-substring dedup: (id, p, gh) per overlapping min_tokens-gram
     -- llm.dedup.substring_gram_stream. Pass counts_output to also
-    emit the mergeable partial-count store (gh, cnt)."""
+    put the mergeable partial-count store (gh, cnt) in the catalog."""
     from pyspark_pipeline_framework_spark.llm.dedup import (
         substring_count_partials,
         substring_gram_stream,
     )
 
-    counts_output = params.pop("counts_output", None)
     grams = substring_gram_stream(catalog.get(input), **params)
     if counts_output is not None:
         catalog.put(counts_output, substring_count_partials(grams))
-    return catalog.put(output, grams)
+    return grams
 
 
 @default_registry.register("dedup_incremental_spans")
@@ -339,7 +291,6 @@ def op_dedup_incremental_spans(
     spark: SparkSession,
     catalog: Catalog,
     *,
-    output: str,
     new_grams: str,
     corpus_grams: str,
     corpus_counts: str | None = None,
@@ -368,74 +319,13 @@ def op_dedup_incremental_spans(
             catalog.get(prior_spans), upd,
             id_col=params.get("id_col", "doc_id"),
         )
-    return catalog.put(output, upd)
-
-
-@default_registry.register("decontaminate")
-def op_decontaminate(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    eval_set: str,
-    **params,
-) -> DataFrame:
-    """Drop training docs sharing shingles with a (broadcast) eval set."""
-    from pyspark_pipeline_framework_spark.llm.dedup import decontaminate
-
-    return catalog.put(
-        output, decontaminate(catalog.get(input), catalog.get(eval_set), **params)
-    )
-
-
-@default_registry.register("global_shuffle")
-def op_global_shuffle(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Deterministic global shuffle into (shard, pos) training order --
-    llm.packing.global_shuffle."""
-    from pyspark_pipeline_framework_spark.llm.packing import global_shuffle
-
-    return catalog.put(output, global_shuffle(catalog.get(input), **params))
-
-
-@default_registry.register("token_budget_sample")
-def op_token_budget_sample(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str,
-    budget_tokens: int, **params,
-) -> DataFrame:
-    """Deterministic ~N-token subsample (per-shard prefix sums) --
-    llm.packing.sample_to_token_budget."""
-    from pyspark_pipeline_framework_spark.llm.packing import sample_to_token_budget
-
-    return catalog.put(
-        output, sample_to_token_budget(catalog.get(input), budget_tokens, **params)
-    )
-
-
-@default_registry.register("bloom_decontaminate")
-def op_bloom_decontaminate(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    eval_set: str,
-    **params,
-) -> DataFrame:
-    """Bounded-memory bloom-filter decontamination --
-    llm.dedup.bloom_decontaminate (one-sided: no false negatives)."""
-    from pyspark_pipeline_framework_spark.llm.dedup import bloom_decontaminate
-
-    return catalog.put(
-        output, bloom_decontaminate(catalog.get(input), catalog.get(eval_set), **params)
-    )
+    return upd
 
 
 @default_registry.register("ivf_train")
 def op_ivf_train(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, dim: int, **params
+    spark: SparkSession, catalog: Catalog, *, input: str, dim: int,
+    mode: str = "fast", **params,
 ) -> DataFrame:
     """Train the IVF coarse quantizer once; persist the (nlist-row)
     centroid table and grow the index forever with ``op: ivf_add``."""
@@ -446,63 +336,15 @@ def op_ivf_train(
         ivf_train_centroids_exact,
     )
 
-    mode = params.pop("mode", "fast")
     trainer = ivf_train_centroids_exact if mode == "exact" else ivf_train_centroids
     vec_col = params.get("vec_col", "embedding")
     corpus = drop_corrupt_vectors(catalog.get(input), vec_col, dim)
-    return catalog.put(output, centroids_to_df(spark, trainer(corpus, dim, **params)))
-
-
-@default_registry.register("ivf_add")
-def op_ivf_add(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    centroids: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """Map-only assignment of an embedding batch under the frozen
-    quantizer — append the result to the assigned store."""
-    from pyspark_pipeline_framework_spark.llm.similarity import ivf_add
-
-    return catalog.put(
-        output, ivf_add(catalog.get(input), catalog.get(centroids), dim, **params)
-    )
-
-
-@default_registry.register("ivf_search")
-def op_ivf_search(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    assigned: str,
-    centroids: str,
-    queries: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """Top-k cosine search over the assigned IVF store."""
-    from pyspark_pipeline_framework_spark.llm.similarity import ivf_search
-
-    return catalog.put(
-        output,
-        ivf_search(
-            catalog.get(assigned),
-            catalog.get(centroids),
-            catalog.get(queries),
-            dim,
-            **params,
-        ),
-    )
+    return centroids_to_df(spark, trainer(corpus, dim, **params))
 
 
 @default_registry.register("pq_train")
 def op_pq_train(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, dim: int, **params
+    spark: SparkSession, catalog: Catalog, *, input: str, dim: int, **params
 ) -> DataFrame:
     """Train PQ codebooks once (exact-integer Lloyd per subspace);
     persist the (m_sub*ksub)-row codebook table and encode batches
@@ -515,206 +357,14 @@ def op_pq_train(
 
     vec_col = params.get("vec_col", "embedding")
     corpus = drop_corrupt_vectors(catalog.get(input), vec_col, dim)
-    return catalog.put(
-        output, codebooks_to_df(spark, pq_train_codebooks_exact(corpus, dim, **params))
-    )
-
-
-@default_registry.register("pq_encode")
-def op_pq_encode(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    codebooks: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """Map-only PQ encoding of an embedding batch under frozen
-    codebooks -- append the (id, codes) result to the code store."""
-    from pyspark_pipeline_framework_spark.llm.pq import pq_encode
-
-    return catalog.put(
-        output, pq_encode(catalog.get(input), catalog.get(codebooks), dim, **params)
-    )
-
-
-@default_registry.register("pq_search")
-def op_pq_search(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    codes: str,
-    codebooks: str,
-    queries: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """ADC top-k over a PQ code store (broadcast per-query lookup
-    tables, one generated lookup sum per code) -- llm.pq.pq_search_adc."""
-    from pyspark_pipeline_framework_spark.llm.pq import pq_search_adc
-
-    return catalog.put(
-        output,
-        pq_search_adc(
-            catalog.get(codes),
-            catalog.get(codebooks),
-            catalog.get(queries),
-            dim,
-            **params,
-        ),
-    )
-
-
-@default_registry.register("ivfpq_add")
-def op_ivfpq_add(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    centroids: str,
-    codebooks: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """One map-only pass assigning + PQ-encoding an embedding batch
-    under a frozen quantizer pair (train via op: ivf_train mode=exact
-    + op: pq_train) -- append the (id, cell, codes) rows to the IVFPQ
-    store; no raw vector is stored."""
-    from pyspark_pipeline_framework_spark.llm.pq import ivfpq_add
-
-    return catalog.put(
-        output,
-        ivfpq_add(
-            catalog.get(input), catalog.get(centroids), catalog.get(codebooks),
-            dim, **params,
-        ),
-    )
-
-
-@default_registry.register("ivfpq_search")
-def op_ivfpq_search(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    store: str,
-    centroids: str,
-    codebooks: str,
-    queries: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """Cell-pruned ADC top-k over an IVFPQ store --
-    llm.pq.ivfpq_search."""
-    from pyspark_pipeline_framework_spark.llm.pq import ivfpq_search
-
-    return catalog.put(
-        output,
-        ivfpq_search(
-            catalog.get(store),
-            catalog.get(centroids),
-            catalog.get(codebooks),
-            catalog.get(queries),
-            dim,
-            **params,
-        ),
-    )
-
-
-@default_registry.register("sample_stratified")
-def op_sample_stratified(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Deterministic md5-keyed sampling (keep iff hash(id) < rate) --
-    llm.packing.stratified_sample."""
-    from pyspark_pipeline_framework_spark.llm.packing import stratified_sample
-
-    return catalog.put(output, stratified_sample(catalog.get(input), **params))
-
-
-@default_registry.register("sample_domain_mix")
-def op_sample_domain_mix(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Temperature-reweighted per-domain sampling (p_d proportional to
-    n_d^alpha) -- llm.packing.domain_mix_sample."""
-    from pyspark_pipeline_framework_spark.llm.packing import domain_mix_sample
-
-    return catalog.put(output, domain_mix_sample(catalog.get(input), **params))
-
-
-@default_registry.register("sample_weighted")
-def op_sample_weighted(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Per-row importance sampling (keep probability proportional to a
-    weight column, expected fraction pinned) --
-    llm.packing.weighted_sample."""
-    from pyspark_pipeline_framework_spark.llm.packing import weighted_sample
-
-    return catalog.put(output, weighted_sample(catalog.get(input), **params))
-
-
-@default_registry.register("language_id")
-def op_language_id(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """N-gram-marker language identification -- llm.text.language_id."""
-    from pyspark_pipeline_framework_spark.llm.text import language_id
-
-    return catalog.put(output, language_id(catalog.get(input), **params))
-
-
-@default_registry.register("split_by_hash")
-def op_split_by_hash(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Deterministic train/valid/test split -- llm.packing.split_by_hash."""
-    from pyspark_pipeline_framework_spark.llm.packing import split_by_hash
-
-    return catalog.put(output, split_by_hash(catalog.get(input), **params))
-
-
-@default_registry.register("pack_sequences")
-def op_pack_sequences(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Greedy sequence packing into token budgets -- llm.packing.pack_sequences."""
-    from pyspark_pipeline_framework_spark.llm.packing import pack_sequences
-
-    return catalog.put(output, pack_sequences(catalog.get(input), **params))
-
-
-@default_registry.register("chunk_documents")
-def op_chunk_documents(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Overlapping token-window chunking -- llm.packing.chunk_documents."""
-    from pyspark_pipeline_framework_spark.llm.packing import chunk_documents
-
-    return catalog.put(output, chunk_documents(catalog.get(input), **params))
-
-
-@default_registry.register("media_probe")
-def op_media_probe(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Magic-byte media probing over a binary `payload` column
-    (format + dimensions/duration) — see llm/multimodal.py."""
-    from pyspark_pipeline_framework_spark.llm.multimodal import probe_media
-
-    return catalog.put(output, probe_media(catalog.get(input), **params))
+    return codebooks_to_df(spark, pq_train_codebooks_exact(corpus, dim, **params))
 
 
 @default_registry.register("compact_store")
 def op_compact_store(
     spark: SparkSession, catalog: Catalog, *, store: str, out: str,
-    output: str | None = None, remove_ids_input: str | None = None, **params,
-) -> DataFrame | None:
+    remove_ids_input: str | None = None, **params,
+) -> DataFrame:
     """Fold a batch_id-per-micro-batch incremental store (MinHash band
     store, IVF vector store) into one baseline partition at a NEW path
     — the small-files fix; see io.compaction.compact_batch_store.
@@ -733,103 +383,7 @@ def op_compact_store(
                 "remove_ids_input (a catalog name), not both"
             )
         params["remove_ids"] = catalog.get(remove_ids_input)
-    df = compact_batch_store(spark, store, out, **params)
-    return catalog.put(output, df) if output else None
-
-
-@default_registry.register("quantize_embeddings")
-def op_quantize_embeddings(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Symmetric int8 embedding quantization -- llm.similarity.quantize_embeddings."""
-    from pyspark_pipeline_framework_spark.llm.similarity import quantize_embeddings
-
-    return catalog.put(output, quantize_embeddings(catalog.get(input), **params))
-
-
-@default_registry.register("semantic_dedup_pairs")
-def op_semantic_dedup_pairs(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, dim: int, **params
-) -> DataFrame:
-    """SemDeDup-style within-cluster cosine pairs --
-    llm.similarity.semantic_dedup_pairs (feed into dedup_clusters)."""
-    from pyspark_pipeline_framework_spark.llm.similarity import semantic_dedup_pairs
-
-    return catalog.put(output, semantic_dedup_pairs(catalog.get(input), dim, **params))
-
-
-@default_registry.register("bm25_topk")
-def op_bm25_topk(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    queries: str,
-    **params,
-) -> DataFrame:
-    """Top-k BM25 keyword search (queries = small catalog frame) --
-    llm.retrieval.bm25_topk. Default idf_mode='ln' (classic
-    Robertson); 'rational' is the cross-engine-exact variant."""
-    from pyspark_pipeline_framework_spark.llm.retrieval import bm25_topk
-
-    params.setdefault("idf_mode", "ln")
-    return catalog.put(
-        output, bm25_topk(catalog.get(input), catalog.get(queries), **params)
-    )
-
-
-@default_registry.register("tfidf_terms")
-def op_tfidf_terms(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Top-n characteristic terms per doc -- llm.retrieval.tfidf_topk_terms."""
-    from pyspark_pipeline_framework_spark.llm.retrieval import tfidf_topk_terms
-
-    params.setdefault("idf_mode", "ln")
-    return catalog.put(output, tfidf_topk_terms(catalog.get(input), **params))
-
-
-@default_registry.register("robust_outliers")
-def op_robust_outliers(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Median/MAD robust outlier screen (|x - med| > k*MAD, discrete
-    quantiles) -- operators.events.robust_outliers."""
-    from pyspark_pipeline_framework_spark.operators.events import robust_outliers
-
-    return catalog.put(output, robust_outliers(catalog.get(input), **params))
-
-
-@default_registry.register("funnel")
-def op_funnel(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Ordered event-funnel step counts -- operators.events.funnel_counts."""
-    from pyspark_pipeline_framework_spark.operators.events import funnel_counts
-
-    return catalog.put(output, funnel_counts(catalog.get(input), **params))
-
-
-@default_registry.register("retention")
-def op_retention(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Cohort retention matrix -- operators.events.cohort_retention."""
-    from pyspark_pipeline_framework_spark.operators.events import cohort_retention
-
-    return catalog.put(output, cohort_retention(catalog.get(input), **params))
-
-
-@default_registry.register("range_frame")
-def op_range_frame(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Scale-safe global value-range window frame --
-    operators.windows.global_range_frame (no single-partition sort)."""
-    from pyspark_pipeline_framework_spark.operators.windows import global_range_frame
-
-    return catalog.put(output, global_range_frame(catalog.get(input), **params))
+    return compact_batch_store(spark, store, out, **params)
 
 
 @default_registry.register("stream")
@@ -840,6 +394,5 @@ def op_stream(spark: SparkSession, catalog: Catalog, **params) -> None:
     run). See streaming/config.py."""
     from pyspark_pipeline_framework_spark.streaming.config import run_stream_component
 
-    params.pop("output", None)
     run_stream_component(spark, **params)
     return None

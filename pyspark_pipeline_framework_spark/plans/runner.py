@@ -32,12 +32,17 @@ from __future__ import annotations
 import time
 from typing import Callable, Iterable
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 from pyspark_pipeline_framework_spark.connect_compat import truncate_lineage
 from pyspark_pipeline_framework_spark.io.readers import Catalog
 from pyspark_pipeline_framework_spark.observability.hooks import NoOpHooks, PipelineHooks
-from pyspark_pipeline_framework_spark.plans.config import ComponentConfig, PipelineConfig
+from pyspark_pipeline_framework_spark.plans.config import (
+    ComponentConfig,
+    PipelineConfig,
+    PipelineValidationError,
+)
 from pyspark_pipeline_framework_spark.plans.registry import (
     OperatorRegistry,
     default_registry,
@@ -159,7 +164,17 @@ class PipelineRunner:
             if (override := c.resilience_override()) and override.circuit_breaker
         }
         for k, v in config.spark_conf.items():
-            spark.conf.set(k, v)
+            value = str(v).lower() if isinstance(v, bool) else str(v)
+            held = spark.conf.get(k, None)
+            if held == value:
+                continue  # e.g. already applied at session build
+            try:
+                spark.conf.set(k, value)
+            except PySparkException as exc:  # a static or core conf refuses
+                raise PipelineValidationError(
+                    f"spark_conf {k!r}: the session holds {held!r} and cannot "
+                    f"change it to {value!r} at run time ({exc})"
+                ) from exc
 
     # -- validation / dry run -------------------------------------------------
     def validate(self) -> list[str]:
@@ -347,6 +362,7 @@ class PipelineRunner:
                 accepts_output = False
             if accepts_output:
                 kwargs.setdefault("output", comp.output)
+            # an op returns its output; storing it is the runner's job alone
             out = fn(self.spark, self.catalog, **kwargs)
             if out is not None and comp.output:
                 if comp.output in self._shared and not out.isStreaming:

@@ -30,6 +30,7 @@ from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -48,12 +49,19 @@ class StoreLayoutError(ValueError):
 def _store_sub_layout(spark, store_path: str) -> list[str] | None:
     """Partition keys nested BENEATH the ``batch_id=N`` level of an
     existing store, in path order — ``[]`` for a flat store, ``None``
-    when the store doesn't exist yet. Derived from the file paths Spark
-    itself resolved (works on any Hadoop-visible FS and on Connect —
-    no SparkContext / JVM access)."""
+    when the store doesn't exist yet (or is a directory without data
+    files). Derived from the file paths Spark itself resolved (works on
+    any Hadoop-visible FS and on Connect — no SparkContext / JVM
+    access). Any other read error — a corrupt footer, a permission or
+    transient FS failure — raises: skipping the check on an existing
+    store would let a mismatched writer corrupt its layout."""
     try:
         files = spark.read.parquet(store_path).inputFiles()
     except Exception as ex:
+        if isinstance(ex, AnalysisException) and ex.getCondition() in (
+            "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA",
+        ):
+            return None  # fresh store: nothing to mirror yet
         if "onflicting directory structures" in str(ex):
             raise StoreLayoutError(
                 f"store {store_path!r} already MIXES flat and nested "
@@ -63,7 +71,7 @@ def _store_sub_layout(spark, store_path: str) -> list[str] | None:
                 "compact_batch_store to a single layout before "
                 "resuming the stream."
             ) from ex
-        return None  # fresh store (or transient): nothing to mirror yet
+        raise
     for f in files:
         parts = f.split("/")
         try:

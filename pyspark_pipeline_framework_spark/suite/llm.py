@@ -46,7 +46,7 @@ from pyspark_pipeline_framework_spark.llm.text import (
     token_count_ws,
 )
 from pyspark_pipeline_framework_spark.suite import case
-from pyspark_pipeline_framework_spark.suite._util import shared_df, shared_obj
+from pyspark_pipeline_framework_spark.suite._util import shared_df
 
 
 @case(
@@ -2471,7 +2471,7 @@ def _ivfpq_artifacts(spark: SparkSession, sf_dir: str):
     from pyspark_pipeline_framework_spark.llm.pq import ivfpq_index
 
     emb = table(spark, sf_dir, "embeddings")
-    return shared_obj(
+    return shared_df(
         spark,
         ("ivfpq_artifacts", sf_dir, 64, 8, 32, 32, 256),
         lambda: ivfpq_index(

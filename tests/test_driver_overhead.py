@@ -213,3 +213,24 @@ def test_runner_registers_each_output_view_once(spark, monkeypatch):
     assert result.status == PipelineStatus.SUCCESS
     assert names == ["ppfs_a", "ppfs_b"]
     assert spark.table("ppfs_b").first().y == 2
+
+    # a shared dataset made by a lifted op: the runner puts its
+    # checkpointed copy, and nothing else registers the view
+    names.clear()
+    read_twice = [
+        ComponentConfig(name=f"c{i}", op="transform", output=f"ppfs_c{i}",
+                        depends_on=["exact"], params={"input": "ppfs_exact"})
+        for i in (1, 2)
+    ]
+    cfg = PipelineConfig("shared-view-once", [
+        ComponentConfig(name="docs", op="sql", output="ppfs_docs", params={
+            "sql": "SELECT * FROM VALUES (1, 'a b c'), (2, 'a b c'), (3, 'x y')"
+                   " AS t(doc_id, text)"}),
+        ComponentConfig(name="exact", op="dedup_exact", output="ppfs_exact",
+                        depends_on=["docs"], params={"input": "ppfs_docs"}),
+        *read_twice,
+    ])
+    result = PipelineRunner(cfg, spark, resilience=NO_RETRY).run()
+    assert result.status == PipelineStatus.SUCCESS
+    assert names == ["ppfs_docs", "ppfs_exact", "ppfs_c1", "ppfs_c2"]
+    assert spark.table("ppfs_c2").count() == 2

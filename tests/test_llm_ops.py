@@ -1080,8 +1080,6 @@ def test_clear_shared_releases_pinned_blocks(spark):
         shared_df,
     )
 
-    from pyspark_pipeline_framework_spark.suite._util import shared_obj
-
     pre = {i for i, _ in _persistent_rdds(spark)}
     foreign = spark.range(50).persist()  # not memo-owned
     foreign.count()
@@ -1093,8 +1091,8 @@ def test_clear_shared_releases_pinned_blocks(spark):
     def build_pair():
         calls.append(1)
         return (spark.range(10), spark.range(20))
-    a, b = shared_obj(spark, ("t_clear", "pair"), build_pair)
-    a2, b2 = shared_obj(spark, ("t_clear", "pair"), build_pair)
+    a, b = shared_df(spark, ("t_clear", "pair"), build_pair)
+    a2, b2 = shared_df(spark, ("t_clear", "pair"), build_pair)
     assert len(calls) == 1 and a is a2 and b is b2
     assert a.storageLevel.useMemory and b.storageLevel.useMemory
     pinned = {i for i, _ in _persistent_rdds(spark)} - pre - foreign_ids

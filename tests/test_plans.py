@@ -19,6 +19,7 @@ from pyspark_pipeline_framework_spark.plans.config import (
     PipelineConfig,
     PipelineValidationError,
 )
+from pyspark_pipeline_framework_spark.plans.registry import LIFTS, default_registry
 from pyspark_pipeline_framework_spark.plans.result import ComponentStatus, PipelineStatus
 from pyspark_pipeline_framework_spark.plans.runner import PipelineRunner, shared_datasets
 from pyspark_pipeline_framework_spark.resilience.presets import NO_RETRY
@@ -763,6 +764,32 @@ def test_spark_block_dynamic_allocation_mapping():
     assert sc.extra_conf["spark.sql.shuffle.partitions"] == "64"
 
 
+def test_pipeline_spark_conf_skips_held_values_and_names_refused_keys(spark):
+    """The pipeline-level spark_conf is also merged into the session
+    build, so a static key the session already holds with the same
+    value is skipped; a different value it cannot take fails with a
+    config error naming the key before any component runs."""
+    from pyspark_pipeline_framework_spark.plans.registry import OperatorRegistry
+
+    key = "spark.sql.codegen.cache.maxEntries"  # static: fixed at session build
+    held = spark.conf.get(key)
+    ran = []
+    reg = OperatorRegistry()
+    reg.register("mark", lambda spark_, catalog, **_: ran.append(1))
+
+    def runner(value):
+        cfg = PipelineConfig("p", [comp("a", op="mark")], spark_conf={key: value})
+        return PipelineRunner(cfg, spark, registry=reg, resilience=NO_RETRY)
+
+    for value in (held, int(held)):
+        assert runner(value).run().status == PipelineStatus.SUCCESS
+    assert ran == [1, 1]
+    with pytest.raises(PipelineValidationError, match=key.replace(".", r"\.")):
+        runner(int(held) + 1).run()
+    assert ran == [1, 1]
+    assert spark.conf.get(key) == held
+
+
 def test_pipeline_metadata_validation():
     with pytest.raises(PipelineValidationError, match="environment"):
         PipelineConfig("p", [comp("a")], environment="qa")
@@ -1093,6 +1120,23 @@ def test_range_frame_registry_op(spark, sf_dir):
     got = runner.catalog.get("rf")
     assert (sorted(map(tuple, got.select("o_orderkey", "n_within_1k").collect()))
             == sorted(map(tuple, want.select("o_orderkey", "n_within_1k").collect())))
+
+
+@pytest.mark.parametrize("row", LIFTS, ids=lambda row: row.name)
+def test_lift_row_binds_to_its_target(row):
+    """Each lifted op imports its target lazily, so a typo in the table
+    would only fail when a pipeline runs that op: the target must
+    import, take the catalog inputs positionally (none of them landing
+    on a param typed as something else than a DataFrame, such as
+    ``dim: int``) and accept every fixed keyword default."""
+    import inspect
+
+    sig = inspect.signature(row.resolve())
+    bound = sig.bind_partial(*row.inputs, **row.defaults)
+    for name in list(bound.arguments)[: len(row.inputs)]:
+        ann = sig.parameters[name].annotation
+        assert ann is inspect.Parameter.empty or "DataFrame" in str(ann), name
+    assert default_registry.get(row.name).lift is row
 
 
 # ------------------------------------------------------- shared datasets

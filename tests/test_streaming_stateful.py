@@ -3,6 +3,8 @@ bounded-state dedup."""
 
 import time
 
+import pytest
+
 from pyspark_pipeline_framework_spark.streaming import (
     FileStreamingSource,
     MemoryStreamingSink,
@@ -420,6 +422,37 @@ def test_incremental_neardup_batch_replay_idempotent(spark, tmp_path, sf_dir):
     process(b1, 1)  # replay
     assert sorted(map(tuple, spark.read.parquet(pairs).collect())) == once_pairs
     assert spark.read.parquet(store).count() == once_store
+
+
+def test_store_layout_probe_raises_on_a_corrupt_store(spark, tmp_path, sf_dir):
+    """Only a missing store (or a directory without data files) is
+    fresh: a store whose part file has a corrupt footer must fail the
+    first micro-batch's layout probe before anything is written, not
+    pass as a fresh store."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from pyspark_pipeline_framework_spark.streaming.stateful import (
+        _store_sub_layout,
+        incremental_neardup_batch,
+    )
+
+    assert _store_sub_layout(spark, str(tmp_path / "missing")) is None
+    os.makedirs(tmp_path / "empty")
+    assert _store_sub_layout(spark, str(tmp_path / "empty")) is None
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    store, pairs = str(tmp_path / "store"), str(tmp_path / "pairs")
+    incremental_neardup_batch(store, pairs)(docs.where(F.col("doc_id") % 2 == 0), 0)
+    part = sorted(glob.glob(f"{store}/batch_id=0/part-*.parquet"))[0]
+    with open(part, "r+b") as f:  # overwrite the footer length + magic
+        f.seek(-8, os.SEEK_END)
+        f.write(b"\xff\xff\xff\x7fPAR1")
+    with pytest.raises(Exception, match="(?i)parquet|footer|corrupt"):
+        incremental_neardup_batch(store, pairs)(docs.where(F.col("doc_id") % 2 == 1), 1)
+    assert not os.path.exists(f"{store}/batch_id=1")
 
 
 def test_config_declared_streaming_neardup(spark, tmp_path, sf_dir):

@@ -114,17 +114,30 @@ def main() -> int:
         "",
         "Every name registerable in a pipeline config component",
         "(`plans/registry.py` `default_registry`). Params are the",
-        "component's `params:` mapping keys.",
+        "component's `params:` mapping keys. A lifted op (a row of",
+        "`plans/registry.py` `LIFTS`) applies its library target to the",
+        "catalog datasets its input params name; every other param goes",
+        "to the target by keyword. Every op returns its output and the",
+        "runner stores it under the component's `output`.",
         "",
     ]
     for name in default_registry.names():
         fn = default_registry.get(name)
+        row = getattr(fn, "lift", None)  # a LIFTS row documents its target
+        src = row.resolve() if row else fn
         out += [
             f"### `op: {name}`",
             "",
-            f"- **source**: `{_rel(fn)}`",
-            f"- **contract**: {_first_sentence(inspect.getdoc(fn))}",
-            f"- **params**: `{_sig(fn)}`",
+            f"- **source**: `{_rel(src)}`"
+            + (f" (lifted: `{row.target}`)" if row else ""),
+            f"- **contract**: {_first_sentence(inspect.getdoc(src))}",
+        ]
+        if row:
+            out.append("- **catalog inputs**: " + ", ".join(f"`{k}`" for k in row.inputs)
+                       + ", passed positionally in this order")
+        out += [
+            f"- **params**: `{_sig(src)}`"
+            + "".join(f"; default `{k}={v!r}`" for k, v in (row.defaults if row else {}).items()),
             "",
         ]
     for modname in LIB_MODULES:
