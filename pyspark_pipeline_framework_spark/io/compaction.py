@@ -1,21 +1,27 @@
-"""Small-files compaction for ``batch_id``-partitioned incremental stores.
+"""The ``batch_id``-partitioned incremental stores: their write and
+read-back contract (:class:`BatchStore`) and their small-files
+compaction.
 
-The incremental operators keep their state as parquet stores that grow
-one ``batch_id=N`` partition per micro-batch (the MinHash band store —
-``streaming.stateful.incremental_neardup_batch`` — and the IVF vector
-store — ``streaming.stateful.streaming_ivf_add_batch``). That layout is
-what makes replays idempotent, but after months of micro-batches it is
-the classic Spark small-files pathology: tens of thousands of tiny
-partition directories, each with its own footer, open, and task — list
-and scan costs grow with batch COUNT, not data size.
+The incremental ``foreachBatch`` writers in ``streaming.stateful`` keep
+their state as parquet stores that grow one ``batch_id=N`` partition
+per micro-batch: the MinHash band and candidate-pair stores
+(``incremental_neardup_batch``), the substring gram, partial-count and
+span-update stores (``incremental_spans_batch``), the IVF vector store
+(``streaming_ivf_add_batch``) and the IVFPQ code store
+(``streaming_ivfpq_add_batch``). Every one of them writes and reads
+through :class:`BatchStore`, which is the only code that knows the
+layout. That layout is what makes replays idempotent, but after months
+of micro-batches it is the classic Spark small-files pathology: tens of
+thousands of tiny partition directories, each with its own footer,
+open, and task — list and scan costs grow with batch COUNT, not data
+size.
 
 :func:`compact_batch_store` folds the whole history into a single
 **baseline partition** ``batch_id=-1``. The choice of ``-1`` is what
 keeps every incremental contract valid after the swap:
 
-* the history filter ``batch_id < N`` (see
-  ``incremental_neardup_batch``) still includes the baseline for every
-  real micro-batch id ``N >= 0``;
+* the history filter ``batch_id < N`` (see :meth:`BatchStore.read`)
+  still includes the baseline for every real micro-batch id ``N >= 0``;
 * a replayed micro-batch still overwrites only its own ``batch_id=N``
   partition — it can never touch the baseline;
 * **restarting the stream with a FRESH checkpoint becomes safe**:
@@ -31,14 +37,13 @@ once the write succeeds, then delete the old store.
 
 ``partition_by`` changes the on-disk layout to NESTED
 (``batch_id=-1/<key>=.../``) — a stream resumed onto such a store must
-mirror it by passing the SAME ``partition_by`` to its writer
-(``incremental_neardup_batch`` / ``streaming_ivf_add_batch`` /
-the config blocks' ``partition_by``), or every subsequent read fails
-with Spark's 'conflicting directory structures' (r9 ADVICE). The
-writers probe the layout on their first micro-batch and raise
-``StoreLayoutError`` before writing a mismatched partition. The
-fresh-checkpoint-restart guarantee above holds for BOTH layouts, but
-only with a layout-matched writer.
+mirror it by passing the SAME ``partition_by`` to its writer (the
+writers' and the config blocks' ``partition_by``), or every subsequent
+read fails with Spark's 'conflicting directory structures' (r9
+ADVICE). :class:`BatchStore` probes the layout on its first write and
+raises :class:`StoreLayoutError` before writing a mismatched partition.
+The fresh-checkpoint-restart guarantee above holds for BOTH layouts,
+but only with a layout-matched writer.
 
 Run compaction with the writing stream STOPPED (it is maintenance, not
 a concurrent operator): the input file listing is fixed at scan
@@ -51,7 +56,183 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
+
+
+class StoreLayoutError(ValueError):
+    """The incremental store on disk and the stream writer disagree on
+    the sub-partition layout (r9 ADVICE): a store compacted with
+    ``partition_by=[...]`` is nested ``batch_id=-1/<key>=.../`` — a
+    writer appending FLAT ``batch_id=N`` dirs (keys as data columns)
+    next to it makes ``spark.read.parquet(store)`` fail with Spark's
+    'conflicting directory structures'. Pass the SAME ``partition_by``
+    to the stream writer as was passed to ``compact_batch_store`` (or
+    keep a partition_by-compacted store search-only)."""
+
+
+def _store_sub_layout(spark, store_path: str) -> list[str] | None:
+    """Partition keys nested BENEATH the ``batch_id=N`` level of an
+    existing store, in path order — ``[]`` for a flat store, ``None``
+    when the store doesn't exist yet (or is a directory without data
+    files). Derived from the file paths Spark itself resolved (works on
+    any Hadoop-visible FS and on Connect — no SparkContext / JVM
+    access). Any other read error — a corrupt footer, a permission or
+    transient FS failure — raises: skipping the check on an existing
+    store would let a mismatched writer corrupt its layout."""
+    try:
+        files = spark.read.parquet(store_path).inputFiles()
+    except Exception as ex:
+        if isinstance(ex, AnalysisException) and ex.getCondition() in (
+            "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA",
+        ):
+            return None  # fresh store: nothing to mirror yet
+        if "onflicting directory structures" in str(ex):
+            raise StoreLayoutError(
+                f"store {store_path!r} already MIXES flat and nested "
+                "batch partitions (Spark: conflicting directory "
+                "structures) — an earlier writer appended with the "
+                "wrong partition_by. Re-compact the store with "
+                "compact_batch_store to a single layout before "
+                "resuming the stream."
+            ) from ex
+        raise
+    for f in files:
+        parts = f.split("/")
+        try:
+            i = next(j for j, seg in enumerate(parts) if seg.startswith("batch_id="))
+        except StopIteration:
+            continue
+        return [seg.split("=", 1)[0] for seg in parts[i + 1:-1] if "=" in seg]
+    return None
+
+
+def _check_store_layout(spark, store_path: str,
+                        partition_by: list[str] | None) -> None:
+    existing = _store_sub_layout(spark, store_path)
+    want = list(partition_by or [])
+    if existing is not None and existing != want:
+        raise StoreLayoutError(
+            f"store {store_path!r} is laid out batch_id=N/"
+            f"{'/'.join(k + '=*' for k in existing) or '<flat>'} but this "
+            f"stream writer would append batch_id=N/"
+            f"{'/'.join(k + '=*' for k in want) or '<flat>'} — mixed "
+            "layouts make spark.read.parquet(store) fail with "
+            "'conflicting directory structures'. Pass partition_by="
+            f"{existing!r} to match the store (a compacted store mirrors "
+            "compact_batch_store's partition_by)."
+        )
+
+
+class BatchStore:
+    """One ``batch_id=N``-per-micro-batch parquet store — the state of
+    an incremental ``foreachBatch`` writer.
+
+    State lives in the store parquet, not the executors: an unbounded
+    corpus history costs zero state-store memory. Replays are
+    idempotent by construction: :meth:`write` overwrites
+    ``<path>/batch_id=N``, so a replayed micro-batch (foreachBatch's
+    at-least-once contract) replaces its own partition instead of
+    double-appending, and :meth:`read` takes history as ``batch_id <
+    N``, so a half-written earlier attempt of the SAME batch never
+    counts as history. At-least-once delivery becomes exactly-once on
+    the store.
+
+    ``partition_by`` nests each batch as ``batch_id=N/<key>=.../`` and
+    must mirror the layout of a store compacted with
+    ``compact_batch_store(..., partition_by=[...])``; the first
+    :meth:`write` probes the existing layout and raises
+    :class:`StoreLayoutError` on a mismatch, before writing anything.
+    """
+
+    def __init__(self, path: str, partition_by: list[str] | None = None):
+        self.path = path
+        self.partition_by = list(partition_by or [])
+        self._layout_ok = False
+        self._schema: StructType | None = None
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        """Overwrite ``<path>/batch_id=<batch_id>`` with ``df``.
+
+        File sizing is the caller's: a DataFrame that ends in a
+        cores-wide shuffle (the dedup writers' bands, grams, counts,
+        spans and pairs) comes in hinted ``rebalance`` so AQE writes
+        byte-sized files instead of one tiny file per shuffle partition
+        per batch (AQE works inside foreachBatch — verified r12); the
+        IVF/IVFPQ outputs are map-only, where a rebalance would add an
+        exchange per batch, so they come in unhinted."""
+        if not self._layout_ok:
+            _check_store_layout(df.sparkSession, self.path, self.partition_by)
+            self._layout_ok = True
+        w = df.write.mode("overwrite")
+        if self.partition_by:
+            w = w.partitionBy(*self.partition_by)
+        w.parquet(f"{self.path}/batch_id={batch_id}")
+        self._schema = df.schema
+
+    def read(self, spark: SparkSession, batch_id: int) -> tuple[DataFrame, DataFrame]:
+        """``(new, history)``: the rows of ``batch_id == N`` and of
+        ``batch_id < N``, ``batch_id`` dropped, after :meth:`write`.
+
+        Reads with the written schema plus ``batch_id int`` rather than
+        inferring it: a zero-row ``partition_by`` write emits no data
+        file, and inference over a store holding only such a partition
+        fails. Spark orders the columns as inference would (data
+        columns, then ``batch_id``, then the ``partition_by`` keys)."""
+        store = spark.read.schema(
+            StructType([*self._schema.fields, StructField("batch_id", IntegerType())])
+        ).parquet(self.path)
+        at = F.col("batch_id")
+        return (
+            store.where(at == F.lit(batch_id)).drop("batch_id"),
+            store.where(at < F.lit(batch_id)).drop("batch_id"),
+        )
+
+
+def _canon(p: str) -> str:
+    # resolve local paths so "store/" and "./store" collide loudly;
+    # URI paths (s3://, hdfs://) are compared as written — abspath
+    # would mangle the scheme
+    p = p.rstrip("/")
+    return p if "://" in p else os.path.abspath(p)
+
+
+def _read_store_to_compact(
+    spark: SparkSession, store_path: str, out_path: str, baseline_batch_id
+) -> DataFrame:
+    """The checks both compactions make before rewriting a store;
+    returns the store as read."""
+    if not isinstance(baseline_batch_id, int) or baseline_batch_id >= 0:
+        raise ValueError(
+            "baseline_batch_id must be a negative int — real micro-batch "
+            f"ids start at 0 and must stay overwritable, got {baseline_batch_id!r}"
+        )
+    out_c, store_c = _canon(out_path), _canon(store_path)
+    if out_c == store_c:
+        raise ValueError(
+            "compaction must write a NEW store directory (out_path == "
+            "store_path): an interrupted in-place rewrite would corrupt "
+            "the only copy"
+        )
+    # nesting in EITHER direction is as fatal as equality (r9 ADVICE):
+    # out INSIDE store leaves a foreign subtree that makes every later
+    # read of the original store fail or double-count; store INSIDE out
+    # means a post-swap `rm old-store` deletes the new copy too
+    if out_c.startswith(store_c + "/") or store_c.startswith(out_c + "/"):
+        raise ValueError(
+            f"out_path and store_path must not be nested (got out_path="
+            f"{out_path!r} inside/containing store_path={store_path!r}): "
+            "a compacted subtree inside the live store corrupts every "
+            "subsequent read of it"
+        )
+    df = spark.read.parquet(store_path)
+    if "batch_id" not in df.columns:
+        raise ValueError(
+            f"{store_path} is not a batch_id-partitioned store "
+            f"(columns: {df.columns})"
+        )
+    return df
 
 
 def compact_batch_store(
@@ -107,42 +288,7 @@ def compact_batch_store(
 
     Returns the compacted store read back from ``out_path``.
     """
-    if not isinstance(baseline_batch_id, int) or baseline_batch_id >= 0:
-        raise ValueError(
-            "baseline_batch_id must be a negative int — real micro-batch "
-            f"ids start at 0 and must stay overwritable, got {baseline_batch_id!r}"
-        )
-    def _canon(p: str) -> str:
-        # resolve local paths so "store/" and "./store" collide loudly;
-        # URI paths (s3://, hdfs://) are compared as written — abspath
-        # would mangle the scheme
-        p = p.rstrip("/")
-        return p if "://" in p else os.path.abspath(p)
-
-    out_c, store_c = _canon(out_path), _canon(store_path)
-    if out_c == store_c:
-        raise ValueError(
-            "compaction must write a NEW store directory (out_path == "
-            "store_path): an interrupted in-place rewrite would corrupt "
-            "the only copy"
-        )
-    # nesting in EITHER direction is as fatal as equality (r9 ADVICE):
-    # out INSIDE store leaves a foreign subtree that makes every later
-    # read of the original store fail or double-count; store INSIDE out
-    # means a post-swap `rm old-store` deletes the new copy too
-    if out_c.startswith(store_c + "/") or store_c.startswith(out_c + "/"):
-        raise ValueError(
-            f"out_path and store_path must not be nested (got out_path="
-            f"{out_path!r} inside/containing store_path={store_path!r}): "
-            "a compacted subtree inside the live store corrupts every "
-            "subsequent read of it"
-        )
-    df = spark.read.parquet(store_path)
-    if "batch_id" not in df.columns:
-        raise ValueError(
-            f"{store_path} is not a batch_id-partitioned store "
-            f"(columns: {df.columns})"
-        )
+    df = _read_store_to_compact(spark, store_path, out_path, baseline_batch_id)
     if min_batch_id is not None:
         if not isinstance(min_batch_id, int) or isinstance(min_batch_id, bool) \
                 or min_batch_id < 0:
@@ -259,36 +405,9 @@ def compact_span_store(
     restart (batch ids back at 0) can never overwrite folded history.
     Same safety contract as :func:`compact_batch_store`: writes a NEW
     directory, refuses in-place/nested rewrites."""
-    if not isinstance(baseline_batch_id, int) or baseline_batch_id >= 0:
-        raise ValueError(
-            "baseline_batch_id must be a negative int — real micro-batch "
-            f"ids start at 0 and must stay overwritable, got {baseline_batch_id!r}"
-        )
-
-    def _canon(p: str) -> str:
-        p = p.rstrip("/")
-        return p if "://" in p else os.path.abspath(p)
-
-    out_c, store_c = _canon(out_path), _canon(spans_path)
-    if out_c == store_c:
-        raise ValueError(
-            "compaction must write a NEW store directory (out_path == "
-            "spans_path): an interrupted in-place rewrite would corrupt "
-            "the only copy"
-        )
-    if out_c.startswith(store_c + "/") or store_c.startswith(out_c + "/"):
-        raise ValueError(
-            f"out_path and spans_path must not be nested (got out_path="
-            f"{out_path!r} inside/containing spans_path={spans_path!r})"
-        )
     from pyspark_pipeline_framework_spark.llm.dedup import current_span_table
 
-    df = spark.read.parquet(spans_path)
-    if "batch_id" not in df.columns:
-        raise ValueError(
-            f"{spans_path} is not a batch_id-partitioned store "
-            f"(columns: {df.columns})"
-        )
+    df = _read_store_to_compact(spark, spans_path, out_path, baseline_batch_id)
     body = current_span_table(df, id_col).withColumn(
         "batch_id", F.lit(baseline_batch_id).cast("int")
     )

@@ -365,8 +365,8 @@ def op_compact_store(
     spark: SparkSession, catalog: Catalog, *, store: str, out: str,
     remove_ids_input: str | None = None, **params,
 ) -> DataFrame:
-    """Fold a batch_id-per-micro-batch incremental store (MinHash band
-    store, IVF vector store) into one baseline partition at a NEW path
+    """Fold a batch_id-per-micro-batch incremental store (an
+    io.compaction.BatchStore) into one baseline partition at a NEW path
     — the small-files fix; see io.compaction.compact_batch_store.
     Tombstones (``remove_ids``/``remove_id_col``) and retention
     (``min_batch_id``) pass through; ``remove_ids_input`` instead

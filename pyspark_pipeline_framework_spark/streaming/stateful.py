@@ -12,15 +12,14 @@ standard stateful patterns:
   ``applyInPandasWithState`` operators: per-key state carried across
   micro-batches with timeout-driven eviction (Arrow-batched; state is
   a tuple, not a DataFrame — executors hold it in the state store).
-* :func:`incremental_neardup_batch` — streaming NEAR-dup (MinHash-LSH)
-  whose state is the parquet band store, not the state store: corpus
-  history is unbounded at zero executor memory, micro-batch replays
-  are idempotent via per-batch-id overwrite partitions.
-* :func:`streaming_ivf_add_batch` — streaming ANN-index growth under a
-  frozen IVF quantizer: same parquet-is-the-state / per-batch-id
-  idempotence recipe, map-only per batch.
+* :func:`incremental_neardup_batch`, :func:`incremental_spans_batch`,
+  :func:`streaming_ivf_add_batch` and :func:`streaming_ivfpq_add_batch`
+  — ``foreachBatch`` writers whose state is a parquet
+  :class:`~pyspark_pipeline_framework_spark.io.compaction.BatchStore`,
+  not the state store: corpus history is unbounded at zero executor
+  memory, and micro-batch replays are idempotent.
 
-Both run identically under availableNow (tests) and continuous
+All run identically under availableNow (tests) and continuous
 micro-batch triggers (production).
 """
 
@@ -30,73 +29,13 @@ from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-
-class StoreLayoutError(ValueError):
-    """The incremental store on disk and the stream writer disagree on
-    the sub-partition layout (r9 ADVICE): a store compacted with
-    ``partition_by=[...]`` is nested ``batch_id=-1/<key>=.../`` — a
-    writer appending FLAT ``batch_id=N`` dirs (keys as data columns)
-    next to it makes ``spark.read.parquet(store)`` fail with Spark's
-    'conflicting directory structures'. Pass the SAME ``partition_by``
-    to the stream writer as was passed to ``compact_batch_store`` (or
-    keep a partition_by-compacted store search-only)."""
-
-
-def _store_sub_layout(spark, store_path: str) -> list[str] | None:
-    """Partition keys nested BENEATH the ``batch_id=N`` level of an
-    existing store, in path order — ``[]`` for a flat store, ``None``
-    when the store doesn't exist yet (or is a directory without data
-    files). Derived from the file paths Spark itself resolved (works on
-    any Hadoop-visible FS and on Connect — no SparkContext / JVM
-    access). Any other read error — a corrupt footer, a permission or
-    transient FS failure — raises: skipping the check on an existing
-    store would let a mismatched writer corrupt its layout."""
-    try:
-        files = spark.read.parquet(store_path).inputFiles()
-    except Exception as ex:
-        if isinstance(ex, AnalysisException) and ex.getCondition() in (
-            "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA",
-        ):
-            return None  # fresh store: nothing to mirror yet
-        if "onflicting directory structures" in str(ex):
-            raise StoreLayoutError(
-                f"store {store_path!r} already MIXES flat and nested "
-                "batch partitions (Spark: conflicting directory "
-                "structures) — an earlier writer appended with the "
-                "wrong partition_by. Re-compact the store with "
-                "compact_batch_store to a single layout before "
-                "resuming the stream."
-            ) from ex
-        raise
-    for f in files:
-        parts = f.split("/")
-        try:
-            i = next(j for j, seg in enumerate(parts) if seg.startswith("batch_id="))
-        except StopIteration:
-            continue
-        return [seg.split("=", 1)[0] for seg in parts[i + 1:-1] if "=" in seg]
-    return None
-
-
-def _check_store_layout(spark, store_path: str,
-                        partition_by: list[str] | None) -> None:
-    existing = _store_sub_layout(spark, store_path)
-    want = list(partition_by or [])
-    if existing is not None and existing != want:
-        raise StoreLayoutError(
-            f"store {store_path!r} is laid out batch_id=N/"
-            f"{'/'.join(k + '=*' for k in existing) or '<flat>'} but this "
-            f"stream writer would append batch_id=N/"
-            f"{'/'.join(k + '=*' for k in want) or '<flat>'} — mixed "
-            "layouts make spark.read.parquet(store) fail with "
-            "'conflicting directory structures'. Pass partition_by="
-            f"{existing!r} to match the store (a compacted store mirrors "
-            "compact_batch_store's partition_by)."
-        )
+from pyspark_pipeline_framework_spark.io.compaction import (  # noqa: F401
+    BatchStore,
+    StoreLayoutError,
+)
 
 
 def streaming_dedup(
@@ -242,44 +181,30 @@ def incremental_neardup_batch(
     joined against the parquet band store accumulated from all previous
     batches (:func:`~pyspark_pipeline_framework_spark.llm.dedup.incremental_candidate_pairs`
     — new×new plus new×history, never history×history), and appended to
-    the store. State lives in the store parquet, not the executors:
-    unbounded corpus history costs zero state-store memory, and a
-    1000-executor job shuffles only (id, band_idx, band_hash) longs.
+    the store; the batch's candidate pairs land at
+    ``<pairs_path>/batch_id=N``. A 1000-executor job shuffles only
+    (id, band_idx, band_hash) longs.
 
-    Retry-idempotent by construction: each batch writes
-    ``<path>/batch_id=N`` with ``overwrite`` — a replayed micro-batch
-    (foreachBatch's at-least-once contract) overwrites its own
-    partition instead of double-appending, and the corpus read filters
-    ``batch_id < N`` so a half-written previous attempt of the SAME
-    batch never joins as history.
-
-    ``partition_by`` mirrors a compacted store's sub-partition layout
-    (r9 ADVICE): when the live store was rewritten by
-    ``compact_batch_store(..., partition_by=[...])`` its history is
-    nested ``batch_id=-1/<key>=.../`` — new batches must nest the same
-    way (``partitionBy(*partition_by)`` INSIDE ``batch_id=N``) or every
-    subsequent read of the store fails with Spark's 'conflicting
-    directory structures'. The first micro-batch probes the existing
-    store layout and raises :class:`StoreLayoutError` on a mismatch —
-    before writing anything.
+    Both stores are
+    :class:`~pyspark_pipeline_framework_spark.io.compaction.BatchStore`
+    instances, which give the durability, replay and layout-probe
+    contract.
+    ``partition_by`` nests the band store's batches (``["band_idx"]``
+    mirrors a band store compacted with
+    ``compact_batch_store(..., partition_by=["band_idx"])``).
 
     Returns ``process(batch_df, batch_id)`` for
     ``writeStream.foreachBatch`` (or ``ForeachBatchSink``).
     """
-    from pyspark.sql import functions as F
-
     from pyspark_pipeline_framework_spark.llm.dedup import (
         incremental_candidate_pairs,
         minhash_bands,
     )
 
-    layout_checked: list = []
+    store = BatchStore(store_path, partition_by)
+    pairs_store = BatchStore(pairs_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if not layout_checked:
-            _check_store_layout(spark, store_path, partition_by)
-            layout_checked.append(True)
         bands_df = minhash_bands(
             batch_df, id_col, text_col, num_hashes, bands, shingle_k, hash_fn
         )
@@ -290,34 +215,10 @@ def incremental_neardup_batch(
         # life of a continuous stream), and a mid-batch failure is
         # still safe — the retry overwrites the same partition before
         # recomputing pairs
-        new_dir = f"{store_path}/batch_id={batch_id}"
-        # REBALANCE (AQE works inside foreachBatch — verified r12): the
-        # banding pipeline ends in a cores-wide shuffle, so an unhinted
-        # write emits one tiny file per shuffle partition per
-        # micro-batch; byte-sized rebalancing keeps the store's file
-        # count proportional to DATA, not batches×cores (guide §6)
-        balanced = (
-            bands_df.hint("rebalance", *partition_by)
-            if partition_by
-            else bands_df.hint("rebalance")
-        )
-        w = balanced.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(new_dir)
-        store = spark.read.parquet(store_path)
-        new = store.where(F.col("batch_id") == F.lit(batch_id)).drop("batch_id")
-        # batch_id < N (not just != N): a half-written FUTURE partition
-        # cannot exist, but a replayed batch must not see its own prior
-        # attempt as history. Missing-store is impossible here (this
-        # batch just wrote its partition), so no exception swallowing —
-        # any read failure is a real failure and must fail the batch
-        # rather than silently dropping corpus history.
-        corpus = store.where(F.col("batch_id") < F.lit(batch_id)).drop("batch_id")
+        store.write(bands_df.hint("rebalance", *store.partition_by), batch_id)
+        new, corpus = store.read(batch_df.sparkSession, batch_id)
         pairs = incremental_candidate_pairs(new, corpus)
-        pairs.hint("rebalance").write.mode("overwrite").parquet(
-            f"{pairs_path}/batch_id={batch_id}"
-        )
+        pairs_store.write(pairs.hint("rebalance"), batch_id)
 
     return process
 
@@ -348,35 +249,32 @@ def incremental_spans_batch(
     and equals a from-scratch ``duplicated_spans`` over everything
     ingested so far.
 
-    Same durability contract as the MinHash variant: state lives in
-    store parquet (zero executor state-store memory); a replayed
-    micro-batch overwrites its own ``batch_id`` partitions and filters
-    its history with ``batch_id < N``, so at-least-once replays are
-    idempotent; the first micro-batch probes the gram store's on-disk
-    layout and raises :class:`StoreLayoutError` before writing a
-    partition that would conflict with a ``partition_by``-compacted
-    store (compact with
-    :func:`~pyspark_pipeline_framework_spark.io.compaction.compact_batch_store`;
-    union-compaction keeps the partial-count store correct because
-    partials are summable — see ``substring_count_partials``).
+    All three stores are
+    :class:`~pyspark_pipeline_framework_spark.io.compaction.BatchStore`
+    instances, which give the durability, replay and layout-probe
+    contract;
+    ``partition_by`` nests the gram store's batches. Compact the gram
+    and count stores with
+    :func:`~pyspark_pipeline_framework_spark.io.compaction.compact_batch_store`
+    (union-compaction keeps the partial-count store correct because
+    partials are summable — see ``substring_count_partials``) and the
+    span store with
+    :func:`~pyspark_pipeline_framework_spark.io.compaction.compact_span_store`.
 
     Returns ``process(batch_df, batch_id)`` for
     ``writeStream.foreachBatch`` (or ``ForeachBatchSink``)."""
-    from pyspark.sql import functions as F
-
     from pyspark_pipeline_framework_spark.llm.dedup import (
         incremental_duplicated_spans,
         substring_count_partials,
         substring_gram_stream,
     )
 
-    layout_checked: list = []
+    store = BatchStore(store_path, partition_by)
+    counts = BatchStore(counts_path)
+    spans = BatchStore(spans_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not layout_checked:
-            _check_store_layout(spark, store_path, partition_by)
-            layout_checked.append(True)
         grams = substring_gram_stream(
             batch_df, min_tokens, id_col, text_col, hash_fn
         )
@@ -385,37 +283,14 @@ def incremental_spans_batch(
         # nothing is pinned in executor storage between micro-batches,
         # and a mid-batch retry overwrites the same partitions before
         # recomputing anything downstream
-        # REBALANCE all three store writes (same §6 file-sizing rationale
-        # as the MinHash writer above; AQE works inside foreachBatch)
-        balanced = (
-            grams.hint("rebalance", *partition_by)
-            if partition_by
-            else grams.hint("rebalance")
-        )
-        w = balanced.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(f"{store_path}/batch_id={batch_id}")
-        store = spark.read.parquet(store_path)
-        new = store.where(F.col("batch_id") == F.lit(batch_id)).drop("batch_id")
-        substring_count_partials(new).hint("rebalance").write.mode(
-            "overwrite"
-        ).parquet(f"{counts_path}/batch_id={batch_id}")
-        # batch_id < N (not != N): a replayed batch must not see its
-        # own prior attempt as history (same rationale as the MinHash
-        # store above)
-        corpus = store.where(F.col("batch_id") < F.lit(batch_id)).drop("batch_id")
-        hist_counts = (
-            spark.read.parquet(counts_path)
-            .where(F.col("batch_id") < F.lit(batch_id))
-            .drop("batch_id")
-        )
+        store.write(grams.hint("rebalance", *store.partition_by), batch_id)
+        new, corpus = store.read(spark, batch_id)
+        counts.write(substring_count_partials(new).hint("rebalance"), batch_id)
+        _, hist_counts = counts.read(spark, batch_id)
         upd = incremental_duplicated_spans(
             new, corpus, hist_counts, min_tokens=min_tokens, id_col=id_col
         )
-        upd.hint("rebalance").write.mode("overwrite").parquet(
-            f"{spans_path}/batch_id={batch_id}"
-        )
+        spans.write(upd.hint("rebalance"), batch_id)
 
     return process
 
@@ -436,50 +311,40 @@ def streaming_ivf_add_batch(
     as a stream operator. Each embedding micro-batch is cell-assigned
     under the FROZEN quantizer (``ivf_add``: map-only, no shuffle, no
     retraining, the existing store untouched) and lands as
-    ``<store_path>/batch_id=N``.
-
-    Like :func:`incremental_neardup_batch`, state lives in the store
-    parquet, not the executors: an unbounded corpus history costs zero
-    state-store memory, and replay is idempotent — foreachBatch's
-    at-least-once contract becomes exactly-once on the store because a
-    replayed micro-batch overwrites its own ``batch_id`` partition.
+    ``<store_path>/batch_id=N`` of a
+    :class:`~pyspark_pipeline_framework_spark.io.compaction.BatchStore`,
+    which gives the durability, replay and layout-probe contract.
 
     ``centroids`` is a parquet path, the nlist-row centroid DataFrame,
     or the raw matrix; it is resolved ONCE on the first micro-batch and
     memoized in the closure (the collect is bounded by nlist — a model
     hyperparameter — and paid once per stream, not once per batch).
     Search any union of batches at any time with ``ivf_search`` over
-    ``spark.read.parquet(store_path)`` — the ``cell`` column survives
+    the store directory read as parquet — the ``cell`` column survives
     for pruning; pass ``partition_by=["cell"]`` to nest each batch as
     ``batch_id=N/cell=K`` for STATIC cell pruning on top of batch
     lineage. ``partition_by=["cell"]`` is REQUIRED when resuming into a
     store compacted with ``compact_batch_store(...,
-    partition_by=["cell"])`` (r9 ADVICE): mixed flat/nested batch dirs
-    make every read of the store fail with 'conflicting directory
-    structures'. The first micro-batch probes the existing layout and
-    raises :class:`StoreLayoutError` on a mismatch — before writing.
+    partition_by=["cell"])``.
     """
     from pyspark_pipeline_framework_spark.llm.similarity import (
         _as_centroid_matrix,
         ivf_add,
     )
 
+    store = BatchStore(store_path, partition_by)
     memo: list = []
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if not memo:
-            _check_store_layout(batch_df.sparkSession, store_path, partition_by)
             c = centroids
             if isinstance(c, str):
                 c = batch_df.sparkSession.read.parquet(c)
             memo.append(_as_centroid_matrix(c))
-        assigned = ivf_add(
-            batch_df, memo[0], dim, id_col=id_col, vec_col=vec_col, mode=mode
+        store.write(
+            ivf_add(batch_df, memo[0], dim, id_col=id_col, vec_col=vec_col, mode=mode),
+            batch_id,
         )
-        w = assigned.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(f"{store_path}/batch_id={batch_id}")
 
     return process
 
@@ -499,18 +364,15 @@ def streaming_ivfpq_add_batch(
     map-only pass under the FROZEN quantizer pair
     (:func:`~pyspark_pipeline_framework_spark.llm.pq.ivfpq_add`), so
     the growing store holds ``(id, cell, codes)`` — a few bytes per
-    vector, no raw floats — and lands as ``<store_path>/batch_id=N``.
+    vector, no raw floats — and lands as ``<store_path>/batch_id=N`` of
+    a :class:`~pyspark_pipeline_framework_spark.io.compaction.BatchStore`,
+    which gives the durability, replay and layout-probe contract.
 
-    Same durability contract as the IVF variant: state lives in the
-    store parquet (zero executor state), replay is idempotent (a
-    replayed micro-batch overwrites its own ``batch_id`` partition),
-    both models are resolved ONCE on the first micro-batch (each
-    collect bounded by a model hyperparameter), and the first batch
-    probes the on-disk layout, raising :class:`StoreLayoutError`
-    before writing a partition that would conflict with a
-    ``partition_by``-compacted store. Search any union of batches with
+    Both models are resolved ONCE on the first micro-batch (each
+    collect bounded by a model hyperparameter). Search any union of
+    batches with
     :func:`~pyspark_pipeline_framework_spark.llm.pq.ivfpq_search` over
-    ``spark.read.parquet(store_path)``; pass ``partition_by=["cell"]``
+    the store directory read as parquet; pass ``partition_by=["cell"]``
     to enable static cell pruning on top of batch lineage."""
     from pyspark_pipeline_framework_spark.llm.pq import (
         _as_codebook_matrix,
@@ -518,11 +380,11 @@ def streaming_ivfpq_add_batch(
     )
     from pyspark_pipeline_framework_spark.llm.similarity import _as_centroid_matrix
 
+    store = BatchStore(store_path, partition_by)
     memo: list = []
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if not memo:
-            _check_store_layout(batch_df.sparkSession, store_path, partition_by)
             c, b = centroids, codebooks
             if isinstance(c, str):
                 c = batch_df.sparkSession.read.parquet(c)
@@ -530,10 +392,8 @@ def streaming_ivfpq_add_batch(
                 b = batch_df.sparkSession.read.parquet(b)
             memo.append((_as_centroid_matrix(c), _as_codebook_matrix(b)))
         C, B = memo[0]
-        store_rows = ivfpq_add(batch_df, C, B, dim, id_col=id_col, vec_col=vec_col)
-        w = store_rows.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(f"{store_path}/batch_id={batch_id}")
+        store.write(
+            ivfpq_add(batch_df, C, B, dim, id_col=id_col, vec_col=vec_col), batch_id
+        )
 
     return process

@@ -333,17 +333,17 @@ def test_incremental_spans_stream_matches_batch(spark, tmp_path, sf_dir):
     )
 
 
-def test_incremental_spans_batch_replay_and_compaction(spark, tmp_path, sf_dir):
-    """(a) foreachBatch replay idempotence: re-running a batch_id
-    overwrites its own gram/count/span partitions, never
-    double-appends; (b) maintenance cycle: gram/count stores compacted
-    with compact_batch_store (union keeps partial counts correct —
-    partials are summable), the span UPDATE store with
-    compact_span_store (latest-wins fold — a union would strand stale
-    rows beside fresh ones at the baseline), then the stream resumes
-    with a FRESH checkpoint (batch ids restart at 0 — the restart
-    hazard the batch_id=-1 baseline exists for) and still yields
-    exactly the from-scratch span table."""
+def test_incremental_spans_batch_compaction_and_fresh_restart(
+    spark, tmp_path, sf_dir
+):
+    """Maintenance cycle: gram/count stores compacted with
+    compact_batch_store (union keeps partial counts correct — partials
+    are summable), the span UPDATE store with compact_span_store
+    (latest-wins fold — a union would strand stale rows beside fresh
+    ones at the baseline), then the stream resumes with a FRESH
+    checkpoint (batch ids restart at 0 — the restart hazard the
+    batch_id=-1 baseline exists for) and still yields exactly the
+    from-scratch span table."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -370,16 +370,6 @@ def test_incremental_spans_batch_replay_and_compaction(spark, tmp_path, sf_dir):
     thirds = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
     process(thirds[0], 0)
     process(thirds[1], 1)
-    once = sorted(
-        map(tuple, current_span_table(spark.read.parquet(spans)).collect())
-    )
-    n_grams = spark.read.parquet(store).count()
-    process(thirds[1], 1)  # replay
-    assert (
-        sorted(map(tuple, current_span_table(spark.read.parquet(spans)).collect()))
-        == once
-    )
-    assert spark.read.parquet(store).count() == n_grams
 
     # compact all three stores → swap → resume with a FRESH checkpoint
     # (batch ids restart at 0; the baselines live at -1, unreachable)
@@ -399,11 +389,87 @@ def test_incremental_spans_batch_replay_and_compaction(spark, tmp_path, sf_dir):
     assert got == want
 
 
-def test_incremental_neardup_batch_replay_idempotent(spark, tmp_path, sf_dir):
-    """foreachBatch is at-least-once: replaying a micro-batch (same
-    batch_id) must overwrite its own partition, not double-append —
-    and a replayed batch must not see its own half-written bands as
-    history."""
+def _replay_writer(kind, spark, sf_dir):
+    """``(make, stores, b0, b1)`` for one store writer: ``make(root)``
+    builds a fresh writer over stores under ``root``; ``stores`` names
+    every batch_id store it writes, outputs included."""
+    from pyspark.sql import functions as F
+
+    from pyspark_pipeline_framework_spark.streaming import stateful
+
+    if kind in ("neardup", "spans"):
+        data = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            "doc_id", "text"
+        )
+        key = "doc_id"
+    else:
+        data = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        key = "vec_id"
+    if kind == "neardup":
+        stores = ["bands", "pairs"]
+
+        def make(r):
+            return stateful.incremental_neardup_batch(f"{r}/bands", f"{r}/pairs")
+    elif kind == "spans":
+        stores = ["grams", "counts", "spans"]
+
+        def make(r):
+            return stateful.incremental_spans_batch(
+                f"{r}/grams", f"{r}/counts", f"{r}/spans"
+            )
+    elif kind == "ivf":
+        from pyspark_pipeline_framework_spark.llm.similarity import ivf_index
+
+        cdf, _ = ivf_index(data, dim=64, nlist=8, mode="exact", train_sample=256)
+        stores = ["store"]
+
+        def make(r):
+            return stateful.streaming_ivf_add_batch(
+                f"{r}/store", cdf, dim=64, mode="exact"
+            )
+    else:
+        from pyspark_pipeline_framework_spark.llm.pq import ivfpq_index
+
+        cdf, cbdf, _ = ivfpq_index(
+            data, dim=64, nlist=8, m_sub=16, ksub=16, train_sample=256
+        )
+        stores = ["store"]
+
+        def make(r):
+            return stateful.streaming_ivfpq_add_batch(f"{r}/store", cdf, cbdf, dim=64)
+    halves = [data.where(F.col(key) % 2 == i) for i in range(2)]
+    return make, stores, *halves
+
+
+@pytest.mark.parametrize("kind", ["neardup", "spans", "ivf", "ivfpq"])
+def test_store_writer_replay_equals_clean_run(kind, spark, tmp_path, sf_dir):
+    """foreachBatch is at-least-once: a first attempt of batch_id=1 that
+    wrote only half the batch, then the replay of the full batch, must
+    leave every store and output equal row for row to a clean run: the
+    replay overwrites its own partitions, so it never double-appends and
+    never reads its earlier attempt as history."""
+    from pyspark.sql import functions as F
+
+    make, stores, b0, b1 = _replay_writer(kind, spark, sf_dir)
+    replayed, clean = str(tmp_path / "replayed"), str(tmp_path / "clean")
+    process = make(replayed)
+    process(b0, 0)
+    process(b1.where(F.rand(seed=7) < 0.5), 1)  # the failed first attempt
+    process(b1, 1)
+    process = make(clean)
+    process(b0, 0)
+    process(b1, 1)
+    for name in stores:
+        want = sorted(map(tuple, spark.read.parquet(f"{clean}/{name}").collect()))
+        got = sorted(map(tuple, spark.read.parquet(f"{replayed}/{name}").collect()))
+        assert want and got == want, name
+
+
+def test_empty_first_batch_on_a_partitioned_band_store(spark, tmp_path, sf_dir):
+    """A zero-row micro-batch writes no data file under a partition_by
+    layout; the read-back must not infer the schema from the files, or
+    an empty FIRST batch fails the stream on every replay. After it, the
+    stream must find exactly the pairs of a run without the empty batch."""
     from pyspark.sql import functions as F
 
     from pyspark_pipeline_framework_spark.streaming.stateful import (
@@ -411,17 +477,21 @@ def test_incremental_neardup_batch_replay_idempotent(spark, tmp_path, sf_dir):
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    store, pairs = str(tmp_path / "store"), str(tmp_path / "pairs")
-    process = incremental_neardup_batch(store, pairs)
-    b0 = docs.where(F.col("doc_id") % 2 == 0)
-    b1 = docs.where(F.col("doc_id") % 2 == 1)
-    process(b0, 0)
-    process(b1, 1)
-    once_pairs = sorted(map(tuple, spark.read.parquet(pairs).collect()))
-    once_store = spark.read.parquet(store).count()
-    process(b1, 1)  # replay
-    assert sorted(map(tuple, spark.read.parquet(pairs).collect())) == once_pairs
-    assert spark.read.parquet(store).count() == once_store
+    halves = [docs.where(F.col("doc_id") % 2 == i) for i in range(2)]
+
+    def pairs_of(root, batches):
+        process = incremental_neardup_batch(
+            f"{root}/bands", f"{root}/pairs", partition_by=["band_idx"]
+        )
+        for i, b in enumerate(batches):
+            process(b, i)
+        return sorted(
+            map(tuple, spark.read.parquet(f"{root}/pairs").drop("batch_id").collect())
+        )
+
+    want = pairs_of(tmp_path / "clean", halves)
+    assert want
+    assert pairs_of(tmp_path / "empty_first", [docs.limit(0), *halves]) == want
 
 
 def test_store_layout_probe_raises_on_a_corrupt_store(spark, tmp_path, sf_dir):
@@ -434,8 +504,8 @@ def test_store_layout_probe_raises_on_a_corrupt_store(spark, tmp_path, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from pyspark_pipeline_framework_spark.io.compaction import _store_sub_layout
     from pyspark_pipeline_framework_spark.streaming.stateful import (
-        _store_sub_layout,
         incremental_neardup_batch,
     )
 
@@ -562,38 +632,6 @@ def test_streaming_ivf_add_matches_batch(spark, tmp_path, sf_dir):
         cdf, queries, **kw,
     ).collect()))
     assert got == want and want
-
-
-def test_streaming_ivf_add_replay_idempotent(spark, tmp_path, sf_dir):
-    """foreachBatch is at-least-once: a replayed micro-batch (same
-    batch_id) overwrites its own store partition, never double-appends
-    — and the quantizer is resolved once, not once per batch."""
-    from pyspark.sql import functions as F
-
-    from pyspark_pipeline_framework_spark.llm.similarity import ivf_index
-    from pyspark_pipeline_framework_spark.streaming.stateful import (
-        streaming_ivf_add_batch,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, _ = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
-    cpath = str(tmp_path / "centroids")
-    cdf.write.parquet(cpath)
-    store = str(tmp_path / "store")
-    process = streaming_ivf_add_batch(store, cpath, dim=64, mode="exact")
-    b0 = emb.where(F.col("vec_id") % 2 == 0)
-    b1 = emb.where(F.col("vec_id") % 2 == 1)
-    process(b0, 0)
-    process(b1, 1)
-    once = sorted(
-        (r.vec_id, r.cell, r.batch_id) for r in spark.read.parquet(store).collect()
-    )
-    process(b1, 1)  # replay
-    again = sorted(
-        (r.vec_id, r.cell, r.batch_id) for r in spark.read.parquet(store).collect()
-    )
-    assert again == once
-    assert spark.read.parquet(store).count() == emb.count()
 
 
 def test_config_declared_streaming_ivf_add(spark, tmp_path, sf_dir):

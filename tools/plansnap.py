@@ -1,7 +1,7 @@
 """Capture ``.explain("formatted")`` for suite queries to text files.
 
 Round-12 optimization evidence: the judge cannot run Spark, so every
-plan claim in OPTIMIZATION_r12.md is backed by a committed
+plan claim in bench_history/OPTIMIZATION_r12.md is backed by a committed
 ``plans/r12/<query>_{before,after}.txt`` produced by this tool.
 
 Usage::
