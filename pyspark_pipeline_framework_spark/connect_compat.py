@@ -192,3 +192,17 @@ def _same_checkpoint_root(current_subdir: str, requested: str) -> bool:
         ) == os.path.abspath(req_path)
     # remote FS (hdfs/s3a/...): scheme + authority + exact parent path
     return (cur.scheme, cur.netloc, cur_parent) == (req.scheme, req.netloc, req_path)
+
+
+def client_local_path(spark: SparkSession, path: str) -> str | None:
+    """Where Spark resolves ``path`` on this process's own filesystem,
+    or ``None`` when the client may not see what Spark sees: a Connect
+    session, a non-``file:`` URI, or a scheme-less path under a remote
+    ``fs.defaultFS`` (HDFS, S3, DBFS)."""
+    if is_connect(spark):
+        return None
+    u = urlparse(path)
+    if u.scheme:
+        return u.path if u.scheme == "file" and u.netloc in ("", "localhost") else None
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    return path if urlparse(default_fs or "file:///").scheme == "file" else None

@@ -60,6 +60,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from pyspark_pipeline_framework_spark.connect_compat import client_local_path
+
 
 class StoreLayoutError(ValueError):
     """The incremental store on disk and the stream writer disagree on
@@ -77,10 +79,18 @@ def _store_sub_layout(spark, store_path: str) -> list[str] | None:
     existing store, in path order — ``[]`` for a flat store, ``None``
     when the store doesn't exist yet (or is a directory without data
     files). Derived from the file paths Spark itself resolved (works on
-    any Hadoop-visible FS and on Connect — no SparkContext / JVM
-    access). Any other read error — a corrupt footer, a permission or
+    any Hadoop-visible FS and on Connect). Any other read error — a corrupt footer, a permission or
     transient FS failure — raises: skipping the check on an existing
-    store would let a mismatched writer corrupt its layout."""
+    store would let a mismatched writer corrupt its layout.
+
+    A store the client sees on its own filesystem
+    (:func:`client_local_path`) is tested with ``os.path`` first: the
+    read probe of a missing path makes Spark log a Java
+    ``FileNotFoundException`` trace before the error is caught. Every
+    other store keeps the read probe."""
+    local = client_local_path(spark, store_path)
+    if local is not None and not os.path.exists(local):
+        return None
     try:
         files = spark.read.parquet(store_path).inputFiles()
     except Exception as ex:

@@ -410,7 +410,6 @@ def incremental_candidate_pairs(
     new_bands: DataFrame,
     corpus_bands: DataFrame,
     validate: bool = False,
-    broadcast_new: bool = False,
 ) -> DataFrame:
     """Incremental MinHash-LSH: candidate pairs that TOUCH the new
     batch — new×new (bucket self-join) plus new×corpus (two-sided
@@ -457,23 +456,17 @@ def incremental_candidate_pairs(
         .where(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    # default: merge-hint the corpus side so BOTH joins are shuffle
+    # merge-hint the corpus side so BOTH joins are shuffle
     # joins on the same keys — the new-band subtree then sits behind
     # ONE hash exchange reused by all three references (new_new a/b +
     # new_old n; AQE's alternative of broadcasting the new side
     # re-executes the banding subtree as a separate broadcast build —
     # measured 1.5s -> 1.25s on the sf0.1 bench case). With the store
     # bucketed by the band keys the merge join is exchange-free on the
-    # big side, which is the 100 TB recipe anyway. ``broadcast_new``
-    # opts into broadcasting the new batch instead (fastest when the
-    # batch is SMALL and the store is neither bucketed nor worth
-    # shuffling — the hint is hard, so the caller asserts the batch
-    # fits in executor memory).
-    n_side = F.broadcast(new_bands) if broadcast_new else new_bands
-    c_side = corpus_bands if broadcast_new else corpus_bands.hint("merge")
+    # big side, which is the 100 TB recipe anyway.
     new_old = (
-        n_side.alias("n")
-        .join(c_side.alias("c"), on)
+        new_bands.alias("n")
+        .join(corpus_bands.hint("merge").alias("c"), on)
         .where(F.col("n.id") != F.col("c.id"))
         .select(
             F.least("n.id", "c.id").alias("id_a"),

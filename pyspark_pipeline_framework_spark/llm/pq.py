@@ -15,7 +15,7 @@ train-once/add-forever contract as :mod:`.similarity`'s IVF index.
 Spark-first design:
 
 - TRAINING is the same bounded-sample, driver-side exact Lloyd as
-  ``ivf_train_centroids_exact`` (sample bounded by a hyperparameter,
+  ``ivf_train_centroids`` (sample bounded by a hyperparameter,
   never data-sized), run independently per subspace on the subvector
   slices. Every arithmetic step is fixed-point integer — a SQL engine
   replays the trained codebooks bit-for-bit (the suite oracle does).
@@ -48,8 +48,13 @@ from pyspark.sql.window import Window
 from pyspark_pipeline_framework_spark.llm.similarity import (
     _DOT_SCALE,
     _MEAN_SCALE,
+    _as_centroid_matrix,
     _dot14_np,
+    _normalize_rows_np,
+    centroids_to_df,
     drop_corrupt_vectors,
+    ivf_cells_udf,
+    ivf_train_centroids,
 )
 from pyspark_pipeline_framework_spark.operators.partitioning import ensure_parallelism
 
@@ -73,17 +78,6 @@ def _check_geometry(dim: int, m_sub: int, ksub: int) -> int:
             "the vector into equal-width subspaces"
         )
     return dim // m_sub
-
-
-def _normalize_rows_np(X: np.ndarray) -> np.ndarray:
-    """Fixed-point unit normalization (cosine-mode preprocessing):
-    ``x / sqrt(doti(x,x)/1e14)`` with the zero-norm guard (norm 0 →
-    divide by 1) shared with the IVF trainer — never NaN, any input
-    magnitude, bit-portable to SQL (the oracle replays it)."""
-    sq = np.floor(X * X * _DOT_SCALE).astype("int64").sum(axis=1)
-    norms = np.sqrt(sq.astype("float64") / _DOT_SCALE)
-    norms[norms == 0.0] = 1.0
-    return X / norms[:, None]
 
 
 def _dist_int_np(X: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -112,7 +106,7 @@ def pq_train_codebooks_exact(
 ) -> np.ndarray:
     """ENGINE-PORTABLE PQ training — returns codebooks of shape
     ``(m_sub, ksub, dim // m_sub)``. Same bounded-sample shape as
-    ``ivf_train_centroids_exact`` (the collect is ``train_sample``
+    ``ivf_train_centroids`` (the collect is ``train_sample``
     rows, a hyperparameter, never data-sized), then an independent
     exact-integer Lloyd per subspace:
 
@@ -422,15 +416,10 @@ def ivfpq_add(
     searchable footprint of a 100 TB float corpus is cells + codes
     (a few bytes per vector). Append forever; at scale write the
     store ``partitionBy("cell")``."""
-    from pyspark_pipeline_framework_spark.llm.similarity import (
-        _as_centroid_matrix,
-        ivf_cells_exact_udf,
-    )
-
     C = _as_centroid_matrix(centroids)
     B = _as_codebook_matrix(codebooks)
     emb = drop_corrupt_vectors(embeddings, vec_col, dim, drop_zero_norm=True)
-    assign1 = ivf_cells_exact_udf(C, 1)
+    assign1 = ivf_cells_udf(C, 1)
     enc = pq_encode_udf(B)
     return emb.select(
         F.col(id_col),
@@ -453,15 +442,10 @@ def ivfpq_index(
     """Build a persistable IVFPQ index: ``(centroids, codebooks,
     store)``. Both models train on the same bounded md5-ordered
     sample discipline (each a driver-side exact Lloyd; see
-    ``ivf_train_centroids_exact`` / :func:`pq_train_codebooks_exact`),
+    ``ivf_train_centroids`` / :func:`pq_train_codebooks_exact`),
     then one map-only pass assigns + encodes every vector."""
-    from pyspark_pipeline_framework_spark.llm.similarity import (
-        centroids_to_df,
-        ivf_train_centroids_exact,
-    )
-
     corpus = drop_corrupt_vectors(corpus, vec_col, dim)
-    C = ivf_train_centroids_exact(
+    C = ivf_train_centroids(
         corpus, dim, nlist=nlist, train_iters=train_iters,
         id_col=id_col, vec_col=vec_col, train_sample=train_sample,
     )
@@ -505,16 +489,11 @@ def ivfpq_search(
     Malformed codes are dropped, with ANSI mode on or off: a store row
     whose ``codes`` is NULL, is not exactly ``m_sub`` long, or holds an
     entry outside ``[0, ksub)`` (or NULL) is never scored."""
-    from pyspark_pipeline_framework_spark.llm.similarity import (
-        _as_centroid_matrix,
-        ivf_cells_exact_udf,
-    )
-
     C = _as_centroid_matrix(centroids)
     B = _as_codebook_matrix(codebooks)
     m_sub, ksub, _ = B.shape
     q = drop_corrupt_vectors(queries, vec_col, dim, drop_zero_norm=True)
-    probe = ivf_cells_exact_udf(C, nprobe)
+    probe = ivf_cells_udf(C, nprobe)
     qcells = q.select(
         F.col(query_id_col), F.explode(probe(F.col(vec_col))).alias("cell")
     )

@@ -406,8 +406,6 @@ def cosine_topk_lsh(
         .filter(F.col("rank") <= k)
     )
 
-_IVF_SEED = 20240502
-
 #: fixed-point scale for exact centroid means (sum of floor(x·1e9)
 #: per dimension as int64, one division) — order-independent, so the
 #: trained model is identical in numpy and in a SQL replay
@@ -423,6 +421,55 @@ def _dot14_np(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     return P.astype("int64").sum(axis=2)
 
 
+def _normalize_rows_np(X: np.ndarray) -> np.ndarray:
+    """Fixed-point unit normalization: ``x / sqrt(doti(x,x)/1e14)``.
+    A row whose FIXED-POINT norm is 0 (every |element| below the 1e-7
+    resolution) is divided by 1 instead — never NaN for any input
+    magnitude, and the oracle replays the same ``CASE WHEN nrm = 0
+    THEN 1`` guard, so it stays bit-portable to SQL."""
+    sq = np.floor(X * X * _DOT_SCALE).astype("int64").sum(axis=1)
+    norms = np.sqrt(sq.astype("float64") / _DOT_SCALE)
+    norms[norms == 0.0] = 1.0
+    return X / norms[:, None]
+
+
+def _top_cells(M: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
+    """The ``n`` cells whose centroid has the largest fixed-point dot
+    with each row of ``M``, best first, ties to the lowest cell —
+    exactly ``argsort(-_dot14_np(M, C), kind="stable")[:, :n]``, so the
+    ranking is a pure function of the data that SQL replays.
+
+    Ranked by the BLAS product ``M @ C.T``; a row keeps that order only
+    when it provably equals the fixed-point order, and is otherwise
+    re-ranked with ``_dot14_np`` in row blocks (bounded temporary)."""
+    nlist, d = C.shape
+    G = M @ C.T
+    order = np.argsort(-G, axis=1, kind="stable")
+    head = np.take_along_axis(G, order[:, : min(n + 1, nlist)], axis=1)
+    # Per (row, cell), with S the _dot14_np integer, g the BLAS score,
+    # u = 2^-53 and γ_d = d·u/(1−d·u):
+    #   |g − S·1e-14| ≤ d·1e-14 + (γ_d + 2u + u²)·Σ|a_i c_i|
+    # (d floors of < 1e-14 each; two roundings per fixed-point product;
+    # γ_d for any BLAS summation order), and Σ|a_i c_i| ≤ ‖a‖·‖c‖.
+    # Within _DOT_SCALE's overflow-free range an adjacent BLAS gap over
+    # twice the bound orders the two S strictly, so a row whose top
+    # min(n+1, nlist) gaps all clear it has the fixed-point top n in
+    # BLAS order. The 1e-6 pad covers the float evaluation of the norms,
+    # the bound and the gaps (and underflow, far below d·1e-14).
+    u = 2.0**-53
+    gamma = d * u / (1.0 - d * u)
+    err = (d * 1e-14 + (gamma + 2 * u + u * u) * np.linalg.norm(M, axis=1)
+           * np.linalg.norm(C, axis=1).max()) * (1.0 + 1e-6)
+    ok = (head[:, :-1] - head[:, 1:] > 2.0 * err[:, None]).all(axis=1)
+    top = order[:, :n]
+    bad = np.flatnonzero(~ok)
+    step = max(1, (1 << 22) // (nlist * d))
+    for s in range(0, len(bad), step):
+        rows = bad[s : s + step]
+        top[rows] = np.argsort(-_dot14_np(M[rows], C), axis=1, kind="stable")[:, :n]
+    return top
+
+
 def _fallback_centroids(nlist: int, dim: int) -> "np.ndarray":
     """Deterministic unit-basis centroids for an EMPTY training corpus:
     an empty corpus is legitimate at scale (incremental run with no new
@@ -434,25 +481,32 @@ def _fallback_centroids(nlist: int, dim: int) -> "np.ndarray":
     return C
 
 
-def ivf_train_centroids_exact(
+def ivf_train_centroids(
     corpus: DataFrame,
     dim: int,
-    nlist: int = 8,
+    nlist: int = 16,
     train_iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_sample: int | None = None,
 ) -> np.ndarray:
-    """ENGINE-PORTABLE IVF training: same bounded-sample + driver-side
-    Lloyd shape as :func:`ivf_train_centroids`, but every step is exact
-    integer arithmetic that a SQL engine can replay bit-for-bit:
+    """Train an IVF coarse quantizer with ``train_iters`` Lloyd steps
+    over a bounded, deterministically-sampled training set, every step
+    in exact integer arithmetic that a SQL engine replays bit-for-bit.
 
-    - sample: the ``train_sample`` corpus rows with the smallest
-      ``md5(id)`` hex (lexicographic — identical in any engine), via
-      ``TakeOrderedAndProject`` exactly like the xxhash64 path;
+    The FAISS-style scale contract: k-means never sees the full corpus.
+    The training set is the ``train_sample`` (default
+    ``max(64·nlist, 1024)``) corpus rows with the smallest ``md5(id)``
+    hex (lexicographic — identical in any engine), a pure function of
+    the ids that needs no stored state and flows through
+    ``TakeOrderedAndProject`` (per-partition top-N, no full shuffle; at
+    100 TB the driver receives the sample, never the corpus). Lloyd
+    then runs on the driver in numpy, one Spark job total:
+
     - init: the first ``nlist`` sampled vectors, normalized by the
       fixed-point norm ``sqrt(dot14(x, x))``;
-    - assign: argmax of integer dot14 scores, ties to the lowest cell;
+    - assign: largest integer dot14 score, ties to the lowest cell
+      (:func:`_top_cells`);
     - means: per-dim sums of ``floor(x·1e9)`` as int64, one division
       ``sum / (n·1e9)`` — order-independent, so partitioning and SQL
       aggregation order can't perturb the model;
@@ -476,23 +530,10 @@ def ivf_train_centroids_exact(
     if not rows:
         return _fallback_centroids(nlist, dim)
     X = np.stack([np.asarray(r["__v"], dtype="float64") for r in rows])
-
-    def normalize(M: np.ndarray) -> np.ndarray:
-        sq = np.floor(M * M * _DOT_SCALE).astype("int64").sum(axis=1)
-        norms = np.sqrt(sq.astype("float64") / _DOT_SCALE)
-        # a row whose FIXED-POINT norm is 0 (every |element| below the
-        # 1e-7 resolution) stays unnormalized instead of dividing by
-        # zero — the old NaN centroid made downstream integer dots
-        # undefined (r8 magnitude-fuzz finding); the oracle replays the
-        # same CASE WHEN nrm = 0 THEN 1 guard, so training remains
-        # bit-portable for any input magnitude
-        norms[norms == 0.0] = 1.0
-        return M / norms[:, None]
-
-    C = normalize(X[:nlist].copy())
+    C = _normalize_rows_np(X[:nlist])
     Q = np.floor(X * _MEAN_SCALE).astype("int64")
     for _ in range(train_iters):
-        assign = np.argmax(_dot14_np(X, C), axis=1)  # ties -> lowest cell
+        assign = _top_cells(X, C, 1)[:, 0]
         M = C.copy()
         for j in range(nlist):
             members = Q[assign == j]
@@ -500,97 +541,23 @@ def ivf_train_centroids_exact(
                 M[j] = members.sum(axis=0).astype("float64") / (
                     float(len(members)) * _MEAN_SCALE
                 )
-        C = normalize(M)
+        C = _normalize_rows_np(M)
     return C
-
-
-def ivf_cells_exact_udf(centroids: np.ndarray, nprobe: int):
-    """Arrow-batched coarse quantizer on EXACT integer dot products
-    (fixed-point twin of :func:`ivf_cells_udf`): cell ranking is a pure
-    function of the data, reproducible in SQL — no BLAS sum-order or
-    near-tie ambiguity."""
-    C = centroids
-
-    @F.pandas_udf("array<int>")
-    def cells(v: pd.Series) -> pd.Series:
-        M = np.stack(v.values).astype("float64")
-        scores = _dot14_np(M, C)                       # (batch, nlist) int64
-        top = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe].astype("int32")
-        return pd.Series(list(top))
-
-    return cells
 
 
 def ivf_cells_udf(centroids: np.ndarray, nprobe: int):
     """Arrow-batched coarse quantizer: for each vector, the ``nprobe``
-    cell ids with the largest dot product against the (unit-norm,
-    broadcast-in-closure) centroid matrix, best first. Vector norm is
-    constant across cells, so dot-argmax == cosine-argmax."""
-    C = centroids.T  # (dim, nlist)
+    cells with the largest exact integer dot product against the
+    (broadcast-in-closure) centroid matrix, best first, ties to the
+    lowest cell (:func:`_top_cells`). Vector norm is constant across
+    cells, so dot order is cosine order for unit-norm centroids."""
 
     @F.pandas_udf("array<int>")
     def cells(v: pd.Series) -> pd.Series:
-        M = np.stack(v.values).astype("float64")       # (batch, dim)
-        scores = M @ C                                 # (batch, nlist)
-        top = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe].astype("int32")
-        return pd.Series(list(top))
+        M = np.stack(v.values).astype("float64")
+        return pd.Series(list(_top_cells(M, centroids, nprobe).astype("int32")))
 
     return cells
-
-
-def ivf_train_centroids(
-    corpus: DataFrame,
-    dim: int,
-    nlist: int = 16,
-    train_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_sample: int | None = None,
-) -> np.ndarray:
-    """Train an IVF coarse quantizer with ``train_iters`` Lloyd steps
-    over a bounded, deterministically-sampled training set.
-
-    The FAISS-style scale contract: k-means never sees the full corpus.
-    The training set is the ``train_sample`` (default
-    ``max(64·nlist, 1024)``) corpus vectors with the smallest
-    ``xxhash64(id, seed)`` — a seeded uniform sample that is a pure
-    function of the ids, so it is independent of partitioning, needs no
-    stored state, and flows through ``TakeOrderedAndProject`` (per-
-    partition top-N, no full shuffle; at 100 TB the driver receives the
-    sample, never the corpus). Lloyd then runs on the driver in numpy:
-    single-threaded fixed-order reductions, so the model — the
-    ``nlist × dim`` array that must be broadcast anyway — is
-    bit-identical across runs and partitionings. One Spark job total,
-    versus one distributed assign+mean pass per iteration.
-
-    Seeding matches the sample order: the first ``nlist`` sampled
-    vectors (smallest hashes) are the initial centroids. Empty cells
-    keep their previous centroid."""
-    n_train = train_sample or max(64 * nlist, 1024)
-    rows = (
-        corpus.select(
-            F.col(vec_col).alias("__v"),
-            F.xxhash64(F.col(id_col).cast("string"), F.lit(_IVF_SEED)).alias("__h"),
-            F.col(id_col).alias("__id"),
-        )
-        .orderBy("__h", "__id")
-        .limit(n_train)
-        .collect()
-    )
-    if not rows:
-        return _fallback_centroids(nlist, dim)
-    X = np.stack([np.asarray(r["__v"], dtype="float64") for r in rows])
-    C = X[:nlist].copy()
-    C /= np.linalg.norm(C, axis=1, keepdims=True) + 1e-12
-
-    for _ in range(train_iters):
-        assign = np.argmax(X @ C.T, axis=1)
-        for j in range(nlist):
-            members = X[assign == j]
-            if len(members):
-                C[j] = members.mean(axis=0)
-        C /= np.linalg.norm(C, axis=1, keepdims=True) + 1e-12
-    return C
 
 
 IVF_CENTROID_SCHEMA = "cell int, centroid array<double>"
@@ -625,7 +592,6 @@ def ivf_index(
     train_iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "fast",
     train_sample: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Build a PERSISTABLE IVF index: returns ``(centroids, assigned)``
@@ -642,21 +608,12 @@ def ivf_index(
     retraining, no touch of the existing store) and append. Search
     any union of stores with :func:`ivf_search`."""
     corpus = drop_corrupt_vectors(corpus, vec_col, dim)
-    if mode == "exact":
-        C = ivf_train_centroids_exact(
-            corpus, dim, nlist=nlist, train_iters=train_iters,
-            id_col=id_col, vec_col=vec_col, train_sample=train_sample,
-        )
-    elif mode == "fast":
-        C = ivf_train_centroids(
-            corpus, dim, nlist=nlist, train_iters=train_iters,
-            id_col=id_col, vec_col=vec_col, train_sample=train_sample,
-        )
-    else:
-        raise ValueError(f"mode must be 'fast' or 'exact', got {mode!r}")
+    C = ivf_train_centroids(
+        corpus, dim, nlist=nlist, train_iters=train_iters,
+        id_col=id_col, vec_col=vec_col, train_sample=train_sample,
+    )
     return centroids_to_df(corpus.sparkSession, C), ivf_add(
-        corpus, C, dim, id_col=id_col, vec_col=vec_col, mode=mode,
-        _pre_validated=True,
+        corpus, C, dim, id_col=id_col, vec_col=vec_col, _pre_validated=True,
     )
 
 
@@ -666,7 +623,6 @@ def ivf_add(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "fast",
     _pre_validated: bool = False,
 ) -> DataFrame:
     """Assign a (new) embedding batch to the FROZEN quantizer — the
@@ -677,7 +633,7 @@ def ivf_add(
     if not _pre_validated:
         embeddings = drop_corrupt_vectors(embeddings, vec_col, dim)
     C = _as_centroid_matrix(centroids)
-    assign1 = (ivf_cells_exact_udf if mode == "exact" else ivf_cells_udf)(C, 1)
+    assign1 = ivf_cells_udf(C, 1)
     # zero-fixed-point-norm vectors never enter the store: they have
     # no direction to search by, and their 0/0 cosine is
     # engine-divergent (see drop_corrupt_vectors). Mirrored by the
@@ -701,7 +657,6 @@ def ivf_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    mode: str = "fast",
     prune_cells: bool = False,
 ) -> DataFrame:
     """Top-k cosine search over an assigned IVF store (from
@@ -722,7 +677,7 @@ def ivf_search(
     store is partitioned."""
     queries = drop_corrupt_vectors(queries, vec_col, dim)
     C = _as_centroid_matrix(centroids)
-    probe = (ivf_cells_exact_udf if mode == "exact" else ivf_cells_udf)(C, nprobe)
+    probe = ivf_cells_udf(C, nprobe)
     # __qn > 0: a zero-fixed-point-norm query has no direction — its
     # NULL cosines would fill the top-k with arbitrary ids (and the
     # oracle's NaN would rank them first); mirrored by the probe CTE
@@ -784,7 +739,6 @@ def cosine_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    mode: str = "fast",
     train_sample: int | None = None,
 ) -> DataFrame:
     """IVF-Flat approximate top-k: corpus vectors live in exactly one
@@ -798,36 +752,27 @@ def cosine_topk_ivf(
     window. The trained model concentrates candidates where density
     is, which beats data-oblivious hyperplanes on clustered corpora.
 
-    ``mode``: ``"fast"`` = xxhash64 sample + float BLAS Lloyd/assign;
-    ``"exact"`` = md5-ordered sample + fixed-point Lloyd/assign —
-    every stage (including training) replayable in SQL.
+    Every stage, training included, is exact integer arithmetic that
+    SQL replays bit-for-bit.
 
     This is the one-shot composition of the incremental primitives:
-    train (:func:`ivf_train_centroids`/``_exact``) → assign
+    train (:func:`ivf_train_centroids`) → assign
     (:func:`ivf_add`) → probe (:func:`ivf_search`) — batch and
     incremental paths share the assignment and search code, so an
     index built once and grown with :func:`ivf_add` returns exactly
     what this returns over the same vectors."""
     corpus = drop_corrupt_vectors(corpus, vec_col, dim)
-    if mode == "exact":
-        C = ivf_train_centroids_exact(
-            corpus, dim, nlist=nlist, train_iters=train_iters,
-            id_col=id_col, vec_col=vec_col, train_sample=train_sample,
-        )
-    elif mode == "fast":
-        C = ivf_train_centroids(
-            corpus, dim, nlist=nlist, train_iters=train_iters,
-            id_col=id_col, vec_col=vec_col, train_sample=train_sample,
-        )
-    else:
-        raise ValueError(f"mode must be 'fast' or 'exact', got {mode!r}")
+    C = ivf_train_centroids(
+        corpus, dim, nlist=nlist, train_iters=train_iters,
+        id_col=id_col, vec_col=vec_col, train_sample=train_sample,
+    )
     assigned = ivf_add(
         ensure_parallelism(corpus), C, dim,
-        id_col=id_col, vec_col=vec_col, mode=mode, _pre_validated=True,
+        id_col=id_col, vec_col=vec_col, _pre_validated=True,
     )
     return ivf_search(
         assigned, C, queries, dim, k=k, nprobe=nprobe,
-        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col, mode=mode,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
 
 
@@ -978,7 +923,6 @@ def semantic_dedup_pairs(
     nlist: int = 64,
     train_iters: int = 2,
     train_sample: int | None = None,
-    mode: str = "exact",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -987,12 +931,12 @@ def semantic_dedup_pairs(
     quantizer, then compare embeddings PAIRWISE ONLY WITHIN a cluster
     and keep pairs with cosine ≥ ``threshold``. Same
     train-once/assign-map-only machinery as the ANN index
-    (:func:`ivf_train_centroids_exact` / :func:`ivf_add`), so an
+    (:func:`ivf_train_centroids` / :func:`ivf_add`), so an
     existing IVF store doubles as the semantic-dedup partitioning.
 
     Returns ``(id_a, id_b, cos_sim, cell)`` with ``id_a < id_b``;
-    ids are emitted as ``long`` in both modes (numeric-id contract —
-    the per-cell Arrow scorer sorts and indexes them as int64).
+    ids are emitted as ``long`` (numeric-id contract — the per-cell
+    Arrow scorer sorts and indexes them as int64).
     Feed into ``dedup_clusters`` (llm/dedup.py) for keep/drop
     decisions, exactly like the MinHash candidate flow.
 
@@ -1007,35 +951,31 @@ def semantic_dedup_pairs(
     twice (build + probe), mirroring the measured rationale in
     ``minhash_candidate_pairs``.
 
-    ``mode="exact"`` (default): md5-ordered training sample +
-    fixed-point Lloyd + integer-dot assignment + decimal-exact cosine
-    — the ENTIRE pipeline including the trained model replays
-    bit-for-bit in SQL (suite case ``q_dedup_semantic``).
-    ``mode="fast"``: xxhash64 sample + float BLAS training, and the
-    within-cell scoring runs as ONE Arrow ``applyInPandas`` matmul per
-    cell (each cell's vectors arrive as a single pandas group; the
-    N_cell × N_cell upper triangle is a BLAS gram matrix instead of
-    ~N_cell²/2 interpreted 64-element expression folds — the 100 TB
-    hot path; cell size is already bounded by the nlist contract, so
-    the per-group matrix fits executor memory by construction). Same
-    shape, no cross-engine oracle.
+    The md5-ordered training sample, fixed-point Lloyd, integer-dot
+    assignment and decimal-exact cosine make the ENTIRE pipeline,
+    trained model included, replay bit-for-bit in SQL (suite case
+    ``q_dedup_semantic``). The within-cell scoring runs as ONE Arrow
+    ``applyInPandas`` matmul per cell (each cell's vectors arrive as a
+    single pandas group; the N_cell × N_cell upper triangle is a BLAS
+    gram matrix instead of ~N_cell²/2 interpreted 64-element expression
+    folds — cell size is already bounded by the nlist contract, so the
+    per-group matrix fits executor memory by construction).
 
-    Exact mode uses the SAME per-cell gram matmul as a PREFILTER with
-    a PER-PAIR safety margin derived from the vectors' actual norms:
-    ``_dot_decimal`` quantizes per-element products at absolute 1e-14,
-    so the fixed-point-vs-float cosine gap is bounded by
-    d·1e-14·(1/(‖a‖‖b‖) + 1/(2‖a‖²) + 1/(2‖b‖²)) — tiny for unit-ish
-    vectors but material for small-magnitude embeddings (a FIXED 1e-6
-    margin silently dropped true pairs once elements fell below ~1e-4;
-    r7 ADVICE finding). The bound is doubled and padded with 1e-9 for
-    the float64 matmul's own d·ε error, then candidates are rescored
-    with the decimal-exact cosine and the threshold applied on THAT —
-    the published values and the >= decision are bit-identical to the
-    naive exact join, measured ~2× faster at sf0.1 and widening with
-    cell size.
+    That gram matmul is a PREFILTER with a PER-PAIR safety margin
+    derived from the vectors' actual norms: ``_dot_decimal`` quantizes
+    per-element products at absolute 1e-14, so the fixed-point-vs-float
+    cosine gap is bounded by d·1e-14·(1/(‖a‖‖b‖) + 1/(2‖a‖²) +
+    1/(2‖b‖²)) — tiny for unit-ish vectors but material for
+    small-magnitude embeddings (a FIXED 1e-6 margin silently dropped
+    true pairs once elements fell below ~1e-4; r7 ADVICE finding). The
+    bound is doubled and padded with 1e-9 for the float64 matmul's own
+    d·ε error, then candidates are rescored with the decimal-exact
+    cosine and the threshold applied on THAT — the published values and
+    the >= decision are bit-identical to the naive exact join, measured
+    ~2× faster at sf0.1 and widening with cell size.
 
     Zero-norm vectors (fixed-point norm 0, i.e. every |element| <
-    1e-7): excluded from pair scoring in BOTH modes and in the oracle.
+    1e-7): excluded from pair scoring here and in the oracle.
     They carry no geometry at the engine's resolution, and the exact
     cosine's 0/0 is engine-divergent (Spark double 0/0 is NULL, which
     the >= filter drops; DuckDB yields NaN, which its total order
@@ -1043,75 +983,59 @@ def semantic_dedup_pairs(
     semantics both engines can agree on. Training is unaffected: a
     zero vector's assignment (all-zero dots, tie-broken by cell id)
     and its contribution to means replay exactly in SQL either way."""
-    if mode not in ("exact", "fast"):
-        raise ValueError(f"mode must be 'exact' or 'fast', got {mode!r}")
     corpus = drop_corrupt_vectors(corpus, vec_col, dim)
-    trainer = ivf_train_centroids_exact if mode == "exact" else ivf_train_centroids
-    C = trainer(
+    C = ivf_train_centroids(
         corpus, dim, nlist=nlist, train_iters=train_iters,
         id_col=id_col, vec_col=vec_col, train_sample=train_sample,
     )
     assigned = ivf_add(
         ensure_parallelism(corpus), C, dim,
-        id_col=id_col, vec_col=vec_col, mode=mode, _pre_validated=True,
+        id_col=id_col, vec_col=vec_col, _pre_validated=True,
     )
-    # both modes score cells as one Arrow gram matmul per group (ids
-    # emitted as long — numeric id contract); exact mode additionally
-    # carries the surviving pair's vectors out so the decimal-exact
-    # cosine + threshold decide the published result
-    exact = mode == "exact"
-    out_schema = "id_a long, id_b long, cos_sim double, cell int"
-    if exact:
-        out_schema += ", va array<double>, vb array<double>"
 
     def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = {"id_a": pd.Series(dtype="int64"),
-                 "id_b": pd.Series(dtype="int64"),
-                 "cos_sim": pd.Series(dtype="float64"),
-                 "cell": pd.Series(dtype="int32")}
-        if exact:
-            empty["va"] = pd.Series(dtype="object")
-            empty["vb"] = pd.Series(dtype="object")
         n = len(pdf)
         if n < 2:
-            return pd.DataFrame(empty)
+            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
+                                 "id_b": pd.Series(dtype="int64"),
+                                 "cell": pd.Series(dtype="int32"),
+                                 "va": pd.Series(dtype="object"),
+                                 "vb": pd.Series(dtype="object")})
         pdf = pdf.sort_values("__sd_id").reset_index(drop=True)
         M = np.stack(pdf["vec"].values).astype("float64")
         nrm = np.linalg.norm(M, axis=1)
         nrm[nrm == 0.0] = 1.0  # defensive; zero-norm rows are filtered upstream
         G = (M / nrm[:, None]) @ (M / nrm[:, None]).T
         iu, ju = np.triu_indices(n, k=1)
-        if exact:
-            # per-pair prefilter margin: fixed-point quantization error
-            # on the exact cosine is < d·1e-14·(1/(na·nb) + 1/(2na²)
-            # + 1/(2nb²)); ×2 headroom + 1e-9 float-matmul slack keeps
-            # the prefilter lossless for ANY vector magnitude
-            inv = 1.0 / nrm
-            qerr = 2.0 * M.shape[1] * 1e-14
-            margin = qerr * (inv[iu] * inv[ju]
-                             + 0.5 * inv[iu] ** 2 + 0.5 * inv[ju] ** 2) + 1e-9
-            keep = G[iu, ju] >= (threshold - margin)
-        else:
-            keep = G[iu, ju] >= threshold
+        # per-pair prefilter margin: fixed-point quantization error
+        # on the exact cosine is < d·1e-14·(1/(na·nb) + 1/(2na²)
+        # + 1/(2nb²)); ×2 headroom + 1e-9 float-matmul slack keeps
+        # the prefilter lossless for ANY vector magnitude
+        inv = 1.0 / nrm
+        qerr = 2.0 * M.shape[1] * 1e-14
+        margin = qerr * (inv[iu] * inv[ju]
+                         + 0.5 * inv[iu] ** 2 + 0.5 * inv[ju] ** 2) + 1e-9
+        keep = G[iu, ju] >= (threshold - margin)
         ids = pdf["__sd_id"].to_numpy()
         ia, ib = iu[keep], ju[keep]
-        out = {"id_a": ids[ia], "id_b": ids[ib], "cos_sim": G[iu, ju][keep],
-               "cell": np.full(len(ia), int(pdf["cell"].iloc[0]), dtype="int32")}
-        if exact:
-            # plain python lists: pyarrow's NumPyConverter refuses
-            # ndarray cells for list<double> columns
-            out["va"] = pd.Series([M[i].tolist() for i in ia], dtype="object")
-            out["vb"] = pd.Series([M[j].tolist() for j in ib], dtype="object")
-        return pd.DataFrame(out)
+        # plain python lists: pyarrow's NumPyConverter refuses ndarray
+        # cells for list<double> columns
+        return pd.DataFrame({
+            "id_a": ids[ia], "id_b": ids[ib],
+            "cell": np.full(len(ia), int(pdf["cell"].iloc[0]), dtype="int32"),
+            "va": pd.Series([M[i].tolist() for i in ia], dtype="object"),
+            "vb": pd.Series([M[j].tolist() for j in ib], dtype="object"),
+        })
 
     # fixed-point norm 0 ⟺ every |element| < 1e-7: no geometry at the
     # engine's resolution, and 0/0 is engine-divergent (see docstring)
     prepared = assigned.filter(F.col("norm") > 0).select(
         F.col(id_col).cast("long").alias("__sd_id"), "vec", "cell"
     )
-    cand = prepared.groupBy("cell").applyInPandas(score_cell, schema=out_schema)
-    if not exact:
-        return cand.select("id_a", "id_b", "cos_sim", "cell")
+    cand = prepared.groupBy("cell").applyInPandas(
+        score_cell,
+        schema="id_a long, id_b long, cell int, va array<double>, vb array<double>",
+    )
     # decimal-exact rescore of the (few) prefiltered candidates — the
     # float->double vectors round-trip Arrow bit-exactly, so this is
     # the same value the naive exact join computes

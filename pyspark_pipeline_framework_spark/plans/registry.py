@@ -324,22 +324,20 @@ def op_dedup_incremental_spans(
 
 @default_registry.register("ivf_train")
 def op_ivf_train(
-    spark: SparkSession, catalog: Catalog, *, input: str, dim: int,
-    mode: str = "fast", **params,
+    spark: SparkSession, catalog: Catalog, *, input: str, dim: int, **params
 ) -> DataFrame:
-    """Train the IVF coarse quantizer once; persist the (nlist-row)
-    centroid table and grow the index forever with ``op: ivf_add``."""
+    """Train the IVF coarse quantizer once (exact-integer Lloyd); persist
+    the (nlist-row) centroid table and grow the index forever with
+    ``op: ivf_add`` -- llm.similarity.ivf_train_centroids."""
     from pyspark_pipeline_framework_spark.llm.similarity import (
         centroids_to_df,
         drop_corrupt_vectors,
         ivf_train_centroids,
-        ivf_train_centroids_exact,
     )
 
-    trainer = ivf_train_centroids_exact if mode == "exact" else ivf_train_centroids
     vec_col = params.get("vec_col", "embedding")
     corpus = drop_corrupt_vectors(catalog.get(input), vec_col, dim)
-    return centroids_to_df(spark, trainer(corpus, dim, **params))
+    return centroids_to_df(spark, ivf_train_centroids(corpus, dim, **params))
 
 
 @default_registry.register("pq_train")

@@ -170,7 +170,7 @@ def _check_neardup(nd: Any, *, has_sink: bool, checkpoint: Any) -> None:
 
 
 _IVF_ADD_REQUIRED = {"store", "centroids", "dim"}
-_IVF_ADD_OPTIONAL = {"id_col", "vec_col", "mode", "partition_by", "codebooks"}
+_IVF_ADD_OPTIONAL = {"id_col", "vec_col", "partition_by", "codebooks"}
 
 
 def _check_ivf_add(blk: Any, *, has_sink: bool, has_neardup: bool,
@@ -199,20 +199,14 @@ def _check_ivf_add(blk: Any, *, has_sink: bool, has_neardup: bool,
         )
     _check_partition_by(blk, "ivf_add")
     # optional `codebooks` switches the block to IVFPQ growth (assign +
-    # PQ-encode in one map-only pass); that path is always exact-integer,
-    # so a `mode` field would be silently ignored — reject it loudly
-    if "codebooks" in blk:
-        if not isinstance(blk["codebooks"], str) or not blk["codebooks"]:
-            raise StreamingConfigError(
-                "ivf_add codebooks must be a parquet path string, "
-                f"got {blk['codebooks']!r}"
-            )
-        if "mode" in blk:
-            raise StreamingConfigError(
-                "ivf_add with codebooks (IVFPQ growth) does not take "
-                "'mode' — assignment and encoding are always the "
-                "exact-integer path"
-            )
+    # PQ-encode in one map-only pass)
+    if "codebooks" in blk and (
+        not isinstance(blk["codebooks"], str) or not blk["codebooks"]
+    ):
+        raise StreamingConfigError(
+            "ivf_add codebooks must be a parquet path string, "
+            f"got {blk['codebooks']!r}"
+        )
     if has_sink or has_neardup:
         raise StreamingConfigError(
             "ivf_add is mutually exclusive with sink/neardup — the "

@@ -301,7 +301,6 @@ def streaming_ivf_add_batch(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "fast",
     partition_by: list[str] | None = None,
 ):
     """``foreachBatch`` factory: streaming ANN-index growth — the
@@ -342,7 +341,7 @@ def streaming_ivf_add_batch(
                 c = batch_df.sparkSession.read.parquet(c)
             memo.append(_as_centroid_matrix(c))
         store.write(
-            ivf_add(batch_df, memo[0], dim, id_col=id_col, vec_col=vec_col, mode=mode),
+            ivf_add(batch_df, memo[0], dim, id_col=id_col, vec_col=vec_col),
             batch_id,
         )
 

@@ -4,12 +4,11 @@ Exact operators (text stats, quality filter, lang-ID, fingerprints,
 exact dedup, n-gram Jaccard, brute-force kNN) are oracle-checked, as
 are the md5-portable hash operators (splits, packing via a
 recursive-CTE greedy oracle, md5-MinHash-LSH candidates, md5-SimHash)
-AND the approximate ANN paths in their portable modes: md5-Rademacher
-LSH (full pipeline replayed in SQL) and exact-mode IVF (the oracle
-replays TRAINING — sample, Lloyd iterations, assignment — not just the
-search). Only the xxhash64-native variants (MinHash, SimHash, LSH-kNN,
-IVF fast mode) and HLL stay rows-only, recall-tested in
-``tests/test_llm_ops.py``.
+AND the approximate ANN paths: md5-Rademacher LSH (full pipeline
+replayed in SQL), IVF and IVFPQ (the oracle replays TRAINING — sample,
+Lloyd iterations, assignment — not just the search). Only the
+xxhash64-native variants (MinHash, SimHash, LSH-kNN) and HLL stay
+rows-only, recall-tested in ``tests/test_llm_ops.py``.
 """
 
 from __future__ import annotations
@@ -804,34 +803,25 @@ def q_sim_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @case("q_sim_knn_ivf_recall", oracle=_RECALL_GATE_ORACLE.format(metric="ivf_recall_at_5"))
 def q_sim_knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall gate for fast-mode IVF ANN (numpy Lloyd, no SQL twin):
-    recall@5 vs exact brute force must clear 0.4 (nprobe 3 of 8)."""
+    """Recall gate for IVF ANN: recall@5 vs exact brute force must
+    clear 0.4 (nprobe 3 of 8)."""
     exact = _knn_exact(spark, sf_dir).select("query_id", "vec_id")
     approx = _knn_ivf(spark, sf_dir).select("query_id", "vec_id")
     return _recall_gate(approx, exact, "ivf_recall_at_5", 0.4)
 
 
-@case("q_sim_knn_ivf", oracle=None)  # rows-only; gated by q_sim_knn_ivf_recall
-def q_sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat ANN: trained coarse quantizer (deterministic seed + 2
-    decimal-exact Lloyd steps), nprobe-cell probing. Rows-only check:
-    the returned neighbor set depends on the trained cells."""
-    return _knn_ivf(spark, sf_dir).select("query_id", "vec_id", "cos_sim", "rank")
-
-
 def _ivf_model_ctes(
     dim: int, nlist: int, train_iters: int, n_train: int
 ) -> tuple[list[str], str]:
-    """The SQL replay of exact-mode IVF TRAINING + corpus cell
+    """The SQL replay of IVF TRAINING + corpus cell
     assignment (md5-ordered sample, init centroids, each Lloyd
     iteration — exact-integer assign + fixed-point means + renormalize
     — then every corpus vector's argmax cell). Shared by the IVF ANN
     oracle and the semantic-dedup oracle; every arithmetic step mirrors
-    ``ivf_train_centroids_exact`` / ``ivf_cells_exact_udf``
-    bit-for-bit, so a TRAINING bug (not just a search bug) breaks the
+    ``ivf_train_centroids`` / ``ivf_cells_udf`` bit-for-bit, so a TRAINING bug (not just a search bug) breaks the
     hash match. Returns (ctes ending in ``corpuscell``, final centroid
     CTE name)."""
-    # zero-guard mirrors ivf_train_centroids_exact.normalize: a row
+    # zero-guard mirrors similarity._normalize_rows_np: a row
     # whose fixed-point norm is 0 stays unnormalized (divide by 1) —
     # never a NaN centroid (r8 magnitude-fuzz finding)
     norm_of = lambda arr: (  # noqa: E731
@@ -934,18 +924,26 @@ def _ivf_exact_oracle(
     """
 
 
+@case("q_sim_knn_ivf", oracle=_ivf_exact_oracle(n_train=1024))
+def q_sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-Flat ANN at the trainer's default sample (1024 rows at
+    nlist 8), nprobe-cell probing; the oracle replays training and
+    search."""
+    return _knn_ivf(spark, sf_dir).select("query_id", "vec_id", "cos_sim", "rank")
+
+
 @case("q_sim_knn_ivf_exact", oracle=_ivf_exact_oracle())
 def q_sim_knn_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-mode IVF-Flat ANN: md5-ordered training sample +
+    """IVF-Flat ANN on a 256-row sample: md5-ordered training sample +
     fixed-point Lloyd + integer-dot cell assignment. The oracle
-    replays training AND search in SQL — the one trained-model
-    operator in the suite whose model itself is hash-gated."""
+    replays training AND search in SQL, so the trained model itself
+    is hash-gated."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return cosine_topk_ivf(
-        emb, queries, dim=64, k=5, nlist=8, nprobe=3, mode="exact", train_sample=256
+        emb, queries, dim=64, k=5, nlist=8, nprobe=3, train_sample=256
     ).select("query_id", "vec_id", "cos_sim", "rank")
 
 
@@ -975,20 +973,20 @@ def q_sim_knn_ivf_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # still pays train+assign, bench's best-of-2 reports the search.
     cdf = shared_df(
         spark,
-        ("ivf_centroids", sf_dir, 64, 8, "exact", 256),
-        lambda: ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)[0],
+        ("ivf_centroids", sf_dir, 64, 8, 256),
+        lambda: ivf_index(emb, dim=64, nlist=8, train_sample=256)[0],
     )
     store = shared_df(
         spark,
-        ("ivf_store_incr", sf_dir, 64, 8, "exact", 256),
+        ("ivf_store_incr", sf_dir, 64, 8, 256),
         lambda: ivf_add(
-            emb.where(F.col("vec_id") % 2 == 0), cdf, dim=64, mode="exact"
+            emb.where(F.col("vec_id") % 2 == 0), cdf, dim=64
         ).union(
-            ivf_add(emb.where(F.col("vec_id") % 2 == 1), cdf, dim=64, mode="exact")
+            ivf_add(emb.where(F.col("vec_id") % 2 == 1), cdf, dim=64)
         ),
     )
     return ivf_search(
-        store, cdf, queries, dim=64, k=5, nprobe=3, mode="exact"
+        store, cdf, queries, dim=64, k=5, nprobe=3
     ).select("query_id", "vec_id", "cos_sim", "rank")
 
 
@@ -1024,16 +1022,16 @@ def q_sim_knn_ivf_del(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cdf = shared_df(
         spark,
-        ("ivf_centroids", sf_dir, 64, 8, "exact", 256),
-        lambda: ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)[0],
+        ("ivf_centroids", sf_dir, 64, 8, 256),
+        lambda: ivf_index(emb, dim=64, nlist=8, train_sample=256)[0],
     )
     # assigned store: pinned fixture under the frozen quantizer (the
     # persisted artifact of train-once/add-forever); the TIMED work is
     # the store write + tombstone compaction + pruned search
     assigned = shared_df(
         spark,
-        ("ivf_store_full", sf_dir, 64, 8, "exact", 256),
-        lambda: ivf_add(emb, cdf, dim=64, mode="exact"),
+        ("ivf_store_full", sf_dir, 64, 8, 256),
+        lambda: ivf_add(emb, cdf, dim=64),
     )
     store = _scratch(sf_dir, "ivf_store_del")
     # REBALANCE: r12 §6 file sizing (see q_dedup_minhash_del_md5)
@@ -1047,7 +1045,7 @@ def q_sim_knn_ivf_del(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ivf_search(
         baseline.drop("batch_id"), cdf, queries, dim=64, k=5, nprobe=3,
-        mode="exact", prune_cells=True,
+        prune_cells=True,
     ).select("query_id", "vec_id", "cos_sim", "rank")
 
 
@@ -2038,7 +2036,7 @@ def _semantic_dedup_oracle(
 
 @case("q_dedup_semantic", oracle=_semantic_dedup_oracle(), category="llm")
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic near-dup pairs (exact mode): IVF
+    """SemDeDup-style semantic near-dup pairs: IVF
     kmeans clustering (64 cells, the scale knob — cells must grow
     with the corpus), within-cell pairwise decimal-exact cosine,
     threshold 0.4 (data-dependent: this synthetic corpus has no true
@@ -2048,7 +2046,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     return semantic_dedup_pairs(
-        emb, dim=64, threshold=0.4, nlist=64, train_sample=256, mode="exact"
+        emb, dim=64, threshold=0.4, nlist=64, train_sample=256
     )
 
 
@@ -2358,7 +2356,7 @@ def q_sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression at one byte per code), searched by summing broadcast
     distance-table lookups. The oracle replays TRAINING (md5 sample, normalization,
     per-subspace integer Lloyd), ENCODING and the ADC SEARCH in SQL —
-    the whole model is hash-gated, like the exact-mode IVF case."""
+    the whole model is hash-gated, like the IVF cases."""
     return _knn_pq(spark, sf_dir).select("query_id", "vec_id", "adc_dot", "rank")
 
 

@@ -173,9 +173,9 @@ def test_compacted_ivf_store_search_and_cell_pruning(spark, tmp_path, sf_dir):
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, _ = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, _ = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     store = str(tmp_path / "ivf")
-    process = streaming_ivf_add_batch(store, cdf, dim=64, mode="exact")
+    process = streaming_ivf_add_batch(store, cdf, dim=64)
     process(emb.where(F.col("vec_id") % 2 == 0), 0)
     process(emb.where(F.col("vec_id") % 2 == 1), 1)
 
@@ -186,7 +186,7 @@ def test_compacted_ivf_store_search_and_cell_pruning(spark, tmp_path, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(dim=64, k=5, nprobe=2, mode="exact")
+    kw = dict(dim=64, k=5, nprobe=2)
     want = sorted(map(tuple, ivf_search(
         spark.read.parquet(store).drop("batch_id"), cdf, queries, **kw
     ).collect()))
@@ -212,48 +212,50 @@ def test_resume_stream_into_partitioned_compacted_store(spark, tmp_path, sf_dir)
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, _ = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, _ = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     store = str(tmp_path / "ivf")
-    streaming_ivf_add_batch(store, cdf, dim=64, mode="exact")(
+    streaming_ivf_add_batch(store, cdf, dim=64)(
         emb.where(F.col("vec_id") % 2 == 0), 0
     )
     compacted = str(tmp_path / "ivf_c")
     compact_batch_store(spark, store, compacted, partition_by=["cell"])
     n_history = spark.read.parquet(compacted).count()
 
-    # mismatch: flat writer onto nested store — typed error, no write
-    with pytest.raises(StoreLayoutError, match="conflicting directory"):
-        streaming_ivf_add_batch(compacted, cdf, dim=64, mode="exact")(
-            emb.where(F.col("vec_id") % 2 == 1), 0
-        )
+    # mismatch: flat writer onto nested store — typed error, no write;
+    # also when the store is named by a file: URI, which os.path cannot see
+    for path in (compacted, "file:" + compacted):
+        with pytest.raises(StoreLayoutError, match="conflicting directory"):
+            streaming_ivf_add_batch(path, cdf, dim=64)(
+                emb.where(F.col("vec_id") % 2 == 1), 0
+            )
     assert spark.read.parquet(compacted).count() == n_history
 
     # mirrored writer: fresh-checkpoint restart (batch ids reset to 0)
     # appends batch_id=0/cell=K next to the baseline — store readable,
     # searchable, counts add up
     streaming_ivf_add_batch(
-        compacted, cdf, dim=64, mode="exact", partition_by=["cell"]
+        compacted, cdf, dim=64, partition_by=["cell"]
     )(emb.where(F.col("vec_id") % 2 == 1), 0)
     grown = spark.read.parquet(compacted)
     assert grown.count() == emb.count()
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(dim=64, k=5, nprobe=2, mode="exact")
+    kw = dict(dim=64, k=5, nprobe=2)
     got = sorted(map(tuple, ivf_search(
         grown.drop("batch_id"), cdf, queries, **kw
     ).collect()))
     from pyspark_pipeline_framework_spark.llm.similarity import ivf_add
 
     want = sorted(map(tuple, ivf_search(
-        ivf_add(emb, cdf, dim=64, mode="exact"), cdf, queries, **kw
+        ivf_add(emb, cdf, dim=64), cdf, queries, **kw
     ).collect()))
     assert got == want and want  # mixed baseline+new store == full corpus
 
     # mismatch the other way: nested writer onto a FLAT store
     with pytest.raises(StoreLayoutError, match="conflicting directory"):
         streaming_ivf_add_batch(
-            store, cdf, dim=64, mode="exact", partition_by=["cell"]
+            store, cdf, dim=64, partition_by=["cell"]
         )(emb.where(F.col("vec_id") % 2 == 1), 1)
 
 
@@ -365,9 +367,9 @@ def test_compaction_tombstones_ivf_store(spark, tmp_path, sf_dir):
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, _ = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, _ = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     store = str(tmp_path / "ivf")
-    process = streaming_ivf_add_batch(store, cdf, dim=64, mode="exact")
+    process = streaming_ivf_add_batch(store, cdf, dim=64)
     process(emb.where(F.col("vec_id") % 2 == 0), 0)
     process(emb.where(F.col("vec_id") % 2 == 1), 1)
 
@@ -380,12 +382,12 @@ def test_compaction_tombstones_ivf_store(spark, tmp_path, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(dim=64, k=5, nprobe=2, mode="exact")
+    kw = dict(dim=64, k=5, nprobe=2)
     got = sorted(map(tuple, ivf_search(
         got_store.drop("batch_id"), cdf, queries, **kw
     ).collect()))
     want = sorted(map(tuple, ivf_search(
-        ivf_add(emb.where(F.col("vec_id") % 5 != 0), cdf, dim=64, mode="exact"),
+        ivf_add(emb.where(F.col("vec_id") % 5 != 0), cdf, dim=64),
         cdf, queries, **kw,
     ).collect()))
     assert got == want and want
@@ -425,23 +427,23 @@ def test_resume_stream_after_tombstone_compaction(spark, tmp_path, sf_dir):
     # ROWS at compaction time, not future ids)
 
     # --- IVF vector store
-    cdf, _ = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, _ = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     store = str(tmp_path / "ivf")
-    streaming_ivf_add_batch(store, cdf, dim=64, mode="exact")(old, 0)
+    streaming_ivf_add_batch(store, cdf, dim=64)(old, 0)
     compacted = str(tmp_path / "ivf_del")
     compact_batch_store(
         spark, store, compacted, remove_ids=tomb, remove_id_col="vec_id",
         partition_by=["cell"],
     )
     streaming_ivf_add_batch(
-        compacted, cdf, dim=64, mode="exact", partition_by=["cell"]
+        compacted, cdf, dim=64, partition_by=["cell"]
     )(new, 0)  # fresh checkpoint: batch ids restart at 0 — safe vs baseline -1
-    kw = dict(dim=64, k=5, nprobe=2, mode="exact")
+    kw = dict(dim=64, k=5, nprobe=2)
     got = sorted(map(tuple, ivf_search(
         spark.read.parquet(compacted).drop("batch_id"), cdf, queries, **kw
     ).collect()))
     rebuilt = ivf_add(
-        old.where(~dead).unionByName(new), cdf, dim=64, mode="exact"
+        old.where(~dead).unionByName(new), cdf, dim=64
     )
     want = sorted(map(tuple, ivf_search(rebuilt, cdf, queries, **kw).collect()))
     assert got == want and want

@@ -137,9 +137,9 @@ def test_compaction_connect_path(connectish, sf_dir, tmp_path):
     from pyspark_pipeline_framework_spark.llm.similarity import ivf_index
 
     emb = connectish.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, _ = ivf_index(emb, dim=64, nlist=4, mode="exact", train_sample=128)
+    cdf, _ = ivf_index(emb, dim=64, nlist=4, train_sample=128)
     store = str(tmp_path / "ivf")
-    streaming_ivf_add_batch(store, cdf, dim=64, mode="exact")(emb, 0)
+    streaming_ivf_add_batch(store, cdf, dim=64)(emb, 0)
     got = compact_batch_store(connectish, store, str(tmp_path / "ivf_c"))
     assert got.count() == emb.count()
 

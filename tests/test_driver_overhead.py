@@ -131,15 +131,13 @@ def test_ivfpq_search_runs_few_jobs(spark, sf_dir, tmp_path):
         ivfpq_search,
         pq_train_codebooks_exact,
     )
-    from pyspark_pipeline_framework_spark.llm.similarity import (
-        ivf_train_centroids_exact,
-    )
+    from pyspark_pipeline_framework_spark.llm.similarity import ivf_train_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    C = ivf_train_centroids_exact(emb, 64, nlist=8, train_sample=128)
+    C = ivf_train_centroids(emb, 64, nlist=8, train_sample=128)
     B = pq_train_codebooks_exact(emb, 64, m_sub=16, ksub=16, train_sample=128)
     ivfpq_add(emb, C, B, 64).write.parquet(str(tmp_path / "store"))
     store = spark.read.parquet(str(tmp_path / "store"))

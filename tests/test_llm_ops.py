@@ -139,7 +139,7 @@ def test_lsh_knn_recall_vs_bruteforce(spark, sf_dir):
 def test_ivf_empty_corpus_degrades_to_empty(spark, sf_dir):
     """An empty corpus (incremental run with no new embeddings) must
     yield an empty ANN result, not crash np.stack in centroid training
-    (regression, r6 empty-input sweep) — both trainer modes."""
+    (regression, r6 empty-input sweep)."""
     from pyspark_pipeline_framework_spark.llm.similarity import cosine_topk_ivf
 
     emb = table(spark, sf_dir, "embeddings")
@@ -147,10 +147,52 @@ def test_ivf_empty_corpus_degrades_to_empty(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    for mode in ("fast", "exact"):
-        out = cosine_topk_ivf(empty, queries, dim=64, k=3, nlist=8,
-                              nprobe=3, mode=mode)
-        assert out.count() == 0, mode
+    out = cosine_topk_ivf(empty, queries, dim=64, k=3, nlist=8, nprobe=3)
+    assert out.count() == 0
+
+
+@pytest.mark.parametrize("nlist", [8, 16, 64])
+def test_top_cells_equals_fixed_point_stable_argsort(nlist, monkeypatch):
+    """_top_cells ranks by the BLAS product but must return exactly the
+    stable argsort of the _dot14_np integers (ties to the lowest cell)
+    on adversarial inputs; the Gaussian set must keep BLAS order for
+    every row, and duplicate centroids must send rows to the fallback."""
+    import numpy as np
+
+    from pyspark_pipeline_framework_spark.llm import similarity as sim
+
+    dot14 = sim._dot14_np
+    fallback_rows = []
+    monkeypatch.setattr(
+        sim, "_dot14_np", lambda A, B: fallback_rows.append(len(A)) or dot14(A, B)
+    )
+    rng = np.random.default_rng(nlist)
+    C = rng.standard_normal((nlist, 64))
+    C /= np.linalg.norm(C, axis=1, keepdims=True)
+    M = rng.standard_normal((400, 64))
+    zero = M.copy()
+    zero[::7] = 0.0
+    dup = C.copy()
+    dup[1::2] = C[: nlist // 2]
+    pairs = rng.integers(0, nlist, (400, 2))
+    sets = {
+        "gauss": (M, C),
+        "scaled_1e-6": (M * 1e-6, C),
+        "scaled_1e3": (M * 1e3, C),
+        "rounded_2dp": (np.round(M, 2), np.round(C, 2)),
+        "zero_rows": (zero, C),
+        "midpoints": ((C[pairs[:, 0]] + C[pairs[:, 1]]) / 2, C),
+        "dup_centroids": (M, dup),
+    }
+    for name, (X, Cs) in sets.items():
+        fallback_rows.clear()
+        for n in (1, 3, nlist):
+            want = np.argsort(-dot14(X, Cs), axis=1, kind="stable")[:, :n]
+            assert np.array_equal(sim._top_cells(X, Cs, n), want), (name, n)
+        if name == "gauss":
+            assert not fallback_rows, "Gaussian rows fell back"
+        if name == "dup_centroids":
+            assert sum(fallback_rows) > 0, "duplicate centroids never fell back"
 
 
 def test_ivf_knn_recall_vs_bruteforce(spark, sf_dir):
@@ -199,14 +241,14 @@ def test_lsh_md5_recall_and_sign_portability(spark, sf_dir):
 
 
 def test_ivf_exact_mode_recall_and_model_determinism(spark, sf_dir):
-    """Exact-mode IVF: recall sanity, and the fixed-point Lloyd model is
+    """IVF: recall sanity, and the fixed-point Lloyd model is
     bit-identical across partitionings (the property the SQL oracle
     replay depends on)."""
     import numpy as np
 
     from pyspark_pipeline_framework_spark.llm.similarity import (
         cosine_topk_ivf,
-        ivf_train_centroids_exact,
+        ivf_train_centroids,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -215,13 +257,13 @@ def test_ivf_exact_mode_recall_and_model_determinism(spark, sf_dir):
     )
     exact = cosine_topk_bruteforce(emb, queries, k=3)
     approx = cosine_topk_ivf(
-        emb, queries, dim=64, k=3, nlist=8, nprobe=3, mode="exact", train_sample=256
+        emb, queries, dim=64, k=3, nlist=8, nprobe=3, train_sample=256
     )
     e = {(r.query_id, r.vec_id) for r in exact.collect()}
     a = {(r.query_id, r.vec_id) for r in approx.collect()}
     assert len(a & e) / len(e) >= 0.5
-    c1 = ivf_train_centroids_exact(emb, dim=64, nlist=8, train_iters=2, train_sample=256)
-    c2 = ivf_train_centroids_exact(
+    c1 = ivf_train_centroids(emb, dim=64, nlist=8, train_iters=2, train_sample=256)
+    c2 = ivf_train_centroids(
         emb.repartition(7), dim=64, nlist=8, train_iters=2, train_sample=256
     )
     assert np.array_equal(c1, c2)
@@ -263,18 +305,6 @@ def test_repetition_stats_known_values(spark):
     assert out[2].top1_frac == 1.0 and out[2].top2_frac == 0.0
     assert abs(out[3].top1_frac - 2 / 4) < 1e-12
     assert abs(out[3].top2_frac - 2 / 3) < 1e-12   # "p q" twice of 3 grams
-
-
-def test_ivf_training_deterministic(spark, sf_dir):
-    from pyspark_pipeline_framework_spark.llm.similarity import ivf_train_centroids
-
-    emb = table(spark, sf_dir, "embeddings")
-    c1 = ivf_train_centroids(emb, dim=64, nlist=8, train_iters=2)
-    c2 = ivf_train_centroids(emb.repartition(7), dim=64, nlist=8, train_iters=2)
-    import numpy as np
-
-    # decimal-exact Lloyd sums -> bit-identical model across partitionings
-    assert np.array_equal(c1, c2)
 
 
 def test_multimodal_plumbing(spark, docs):
@@ -951,7 +981,7 @@ def test_ivf_index_parquet_roundtrip_matches_oneshot(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(dim=64, nlist=8, mode="exact", train_sample=256)
+    kw = dict(dim=64, nlist=8, train_sample=256)
     cdf, assigned = ivf_index(emb, **kw)
     cdir, adir = str(tmp_path / "centroids"), str(tmp_path / "assigned")
     cdf.write.parquet(cdir)
@@ -963,7 +993,7 @@ def test_ivf_index_parquet_roundtrip_matches_oneshot(spark, sf_dir, tmp_path):
                 spark.read.parquet(adir),
                 spark.read.parquet(cdir),
                 queries,
-                dim=64, k=5, nprobe=3, mode="exact",
+                dim=64, k=5, nprobe=3,
             ).collect(),
         )
     )
@@ -971,8 +1001,7 @@ def test_ivf_index_parquet_roundtrip_matches_oneshot(spark, sf_dir, tmp_path):
         map(
             tuple,
             cosine_topk_ivf(
-                emb, queries, dim=64, k=5, nlist=8, nprobe=3,
-                mode="exact", train_sample=256,
+                emb, queries, dim=64, k=5, nlist=8, nprobe=3, train_sample=256,
             ).collect(),
         )
     )
@@ -994,25 +1023,24 @@ def test_ivf_add_incremental_equals_batch_assignment(spark, sf_dir, tmp_path):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     day0 = emb.where(F.col("vec_id") % 2 == 0)
     day1 = emb.where(F.col("vec_id") % 2 == 1)
-    cdf, assigned0 = ivf_index(day0, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, assigned0 = ivf_index(day0, dim=64, nlist=8, train_sample=256)
     store = str(tmp_path / "store")
     cdir = str(tmp_path / "centroids")
     cdf.write.parquet(cdir)
     assigned0.write.parquet(store)
     # the incremental step reads the persisted quantizer — no retrain
     frozen = spark.read.parquet(cdir)
-    ivf_add(day1, frozen, dim=64, mode="exact").write.mode("append").parquet(store)
+    ivf_add(day1, frozen, dim=64).write.mode("append").parquet(store)
 
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     got = sorted(map(tuple, ivf_search(
         spark.read.parquet(store), frozen, queries, dim=64, k=5, nprobe=3,
-        mode="exact",
     ).collect()))
     want = sorted(map(tuple, ivf_search(
-        ivf_add(emb, centroids_from_df(cdf), dim=64, mode="exact"),
-        cdf, queries, dim=64, k=5, nprobe=3, mode="exact",
+        ivf_add(emb, centroids_from_df(cdf), dim=64),
+        cdf, queries, dim=64, k=5, nprobe=3,
     ).collect()))
     assert got == want and want
 
@@ -1024,13 +1052,13 @@ def test_ivf_search_prune_cells_static_partition_pruning(spark, sf_dir, tmp_path
     from pyspark_pipeline_framework_spark.llm.similarity import ivf_index, ivf_search
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, assigned = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, assigned = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     store = str(tmp_path / "store")
     assigned.write.partitionBy("cell").parquet(store)
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(dim=64, k=5, nprobe=2, mode="exact")
+    kw = dict(dim=64, k=5, nprobe=2)
     pruned = ivf_search(spark.read.parquet(store), cdf, queries, prune_cells=True, **kw)
     plain = ivf_search(spark.read.parquet(store), cdf, queries, **kw)
     assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, plain.collect()))
@@ -1164,7 +1192,7 @@ def test_ivf_search_prune_cells_repeated_calls_no_accumulation(spark, sf_dir, tm
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cdf, assigned = ivf_index(emb, dim=64, nlist=8, mode="fast", train_sample=256)
+    cdf, assigned = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     cdir, adir = str(tmp_path / "centroids"), str(tmp_path / "assigned")
     cdf.write.parquet(cdir)
     assigned.write.partitionBy("cell").parquet(adir)

@@ -1,7 +1,7 @@
-"""Uniform equivalence gates for the 5 permanent no-oracle suite rows
+"""Uniform equivalence gates for the 4 permanent no-oracle suite rows
 (VERDICT r7 item 4).
 
-Five registered queries have no DuckDB twin by design (xxhash64 /
+Four registered queries have no DuckDB twin by design (xxhash64 /
 HLL-sketch internals DuckDB cannot replay). Each one here is tested
 against its ORACLE-GATED companion at the DECISION level — the output
 a user acts on — using the REGISTERED suite case functions themselves,
@@ -12,7 +12,6 @@ so the gate covers exactly what the driver runs rows-only:
 | q_dedup_minhash         | q_dedup_ngram_jaccard        | verified pairs == exact truth |
 | q_dedup_simhash         | q_dedup_simhash_md5          | exact-dup pairs flagged by both |
 | q_sim_knn_lsh           | q_sim_knn (+_lsh_recall)     | recall@5 >= 0.5, bit-equal cosines |
-| q_sim_knn_ivf           | q_sim_knn (+_ivf_recall)     | recall@5 >= 0.4, bit-equal cosines |
 | q_agg_approx_distinct   | q_agg_approx_distinct_bound  | HLL within 3x rsd of exact |
 
 COVERAGE.md names each test next to its row.
@@ -83,29 +82,19 @@ def test_twin_q_dedup_simhash(spark, sf_dir, cases):
         assert all(got[p] == 0 for p in dup_pairs), hash_fn
 
 
-def _knn_twin(spark, sf_dir, cases, approx_name, recall_floor):
-    exact = cases["q_sim_knn"].spark_fn(spark, sf_dir)
-    approx = cases[approx_name].spark_fn(spark, sf_dir)
-    e = {(r.query_id, r.vec_id): r.cos_sim for r in exact.collect()}
-    a = {(r.query_id, r.vec_id): r.cos_sim for r in approx.collect()}
-    assert len(set(a) & set(e)) / len(e) >= recall_floor
-    # every common hit must carry the identical fixed-point cosine the
-    # oracle-gated exact case publishes — bit-equal, not approx-equal
-    for k in set(a) & set(e):
-        assert a[k] == e[k], k
-
-
 def test_twin_q_sim_knn_lsh(spark, sf_dir, cases):
     """Random-hyperplane LSH vs the oracle-gated exact brute force:
     recall@5 >= 0.5 (the same floor q_sim_knn_lsh_recall gates in the
     driver run) and bit-equal scores on common hits."""
-    _knn_twin(spark, sf_dir, cases, "q_sim_knn_lsh", 0.5)
-
-
-def test_twin_q_sim_knn_ivf(spark, sf_dir, cases):
-    """Fast-mode IVF vs the oracle-gated exact brute force: recall@5
-    >= 0.4 (the q_sim_knn_ivf_recall floor) and bit-equal scores."""
-    _knn_twin(spark, sf_dir, cases, "q_sim_knn_ivf", 0.4)
+    exact = cases["q_sim_knn"].spark_fn(spark, sf_dir)
+    approx = cases["q_sim_knn_lsh"].spark_fn(spark, sf_dir)
+    e = {(r.query_id, r.vec_id): r.cos_sim for r in exact.collect()}
+    a = {(r.query_id, r.vec_id): r.cos_sim for r in approx.collect()}
+    assert len(set(a) & set(e)) / len(e) >= 0.5
+    # every common hit must carry the identical fixed-point cosine the
+    # oracle-gated exact case publishes — bit-equal, not approx-equal
+    for k in set(a) & set(e):
+        assert a[k] == e[k], k
 
 
 def test_twin_q_agg_approx_distinct(spark, sf_dir, cases):

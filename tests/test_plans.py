@@ -931,17 +931,15 @@ def test_ivf_registry_ops(spark, sf_dir):
                            "WHERE vec_id < 5"}},
         {"name": "train", "op": "ivf_train", "output": "centroids",
          "depends_on": ["emb"],
-         "params": {"input": "emb", "dim": 64, "nlist": 8, "mode": "exact",
+         "params": {"input": "emb", "dim": 64, "nlist": 8,
                     "train_sample": 256}},
         {"name": "index", "op": "ivf_add", "output": "assigned",
          "depends_on": ["train"],
-         "params": {"input": "emb", "centroids": "centroids", "dim": 64,
-                    "mode": "exact"}},
+         "params": {"input": "emb", "centroids": "centroids", "dim": 64}},
         {"name": "search", "op": "ivf_search", "output": "knn",
          "depends_on": ["index", "queries"],
          "params": {"assigned": "assigned", "centroids": "centroids",
-                    "queries": "queries", "dim": 64, "k": 5, "nprobe": 3,
-                    "mode": "exact"}},
+                    "queries": "queries", "dim": 64, "k": 5, "nprobe": 3}},
     ]
     cfg = PipelineConfig.from_dict({"name": "ivf_ops", "components": comps})
     runner = PipelineRunner(cfg, spark, resilience=NO_RETRY)
@@ -949,7 +947,7 @@ def test_ivf_registry_ops(spark, sf_dir):
     emb = rtable(spark, sf_dir, "embeddings")
     queries = emb.filter(emb.vec_id < 5).selectExpr("vec_id AS query_id", "embedding")
     want = sorted(map(tuple, cosine_topk_ivf(
-        emb, queries, dim=64, k=5, nlist=8, nprobe=3, mode="exact",
+        emb, queries, dim=64, k=5, nlist=8, nprobe=3,
         train_sample=256,
     ).collect()))
     assert sorted(map(tuple, runner.catalog.get("knn").collect())) == want

@@ -198,8 +198,8 @@ def test_prune_cells_empty_probe_short_circuits(spark, sf_dir):
     out = ivfpq_search(store, cent, cb, dead, DIM, k=5, prune_cells=True)
     assert out.count() == 0
     assert out.columns == ["query_id", "vec_id", "adc_dot", "rank"]
-    cdf, assigned = ivf_index(emb, dim=DIM, nlist=8, mode="exact", train_sample=128)
-    out2 = ivf_search(assigned, cdf, dead, dim=DIM, k=5, mode="exact", prune_cells=True)
+    cdf, assigned = ivf_index(emb, dim=DIM, nlist=8, train_sample=128)
+    out2 = ivf_search(assigned, cdf, dead, dim=DIM, k=5, prune_cells=True)
     assert out2.count() == 0
 
 
@@ -209,7 +209,7 @@ def test_ivfpq_candidates_bounded_by_probe(spark, sf_dir):
     from pyspark_pipeline_framework_spark.llm.pq import ivfpq_index, ivfpq_search
     from pyspark_pipeline_framework_spark.llm.similarity import (
         centroids_from_df,
-        ivf_cells_exact_udf,
+        ivf_cells_udf,
     )
 
     emb = _emb(spark, sf_dir)
@@ -219,7 +219,7 @@ def test_ivfpq_candidates_bounded_by_probe(spark, sf_dir):
     )
     out = ivfpq_search(store, cent, cb, q, DIM, k=5, nprobe=2)
     C = centroids_from_df(cent)
-    probe = ivf_cells_exact_udf(C, 2)
+    probe = ivf_cells_udf(C, 2)
     qcells = {
         (r["query_id"], c)
         for r in q.select("query_id", probe(F.col("embedding")).alias("cells")).collect()
@@ -235,12 +235,10 @@ def test_ivfpq_store_is_map_only(spark, sf_dir):
         ivfpq_add,
         pq_train_codebooks_exact,
     )
-    from pyspark_pipeline_framework_spark.llm.similarity import (
-        ivf_train_centroids_exact,
-    )
+    from pyspark_pipeline_framework_spark.llm.similarity import ivf_train_centroids
 
     emb = _emb(spark, sf_dir)
-    C = ivf_train_centroids_exact(emb, DIM, nlist=8, train_sample=128)
+    C = ivf_train_centroids(emb, DIM, nlist=8, train_sample=128)
     B = pq_train_codebooks_exact(emb, DIM, m_sub=M_SUB, ksub=KSUB, train_sample=128)
     df = ivfpq_add(emb, C, B, DIM)
     plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
@@ -257,13 +255,11 @@ def test_malformed_codes_are_dropped_with_ansi_on_and_off(spark, sf_dir, ansi):
     the well-formed rows alone. (The posexplode/join plan scored such
     rows from the lookups it found.)"""
     from pyspark_pipeline_framework_spark.llm.pq import ivfpq_add, ivfpq_search
-    from pyspark_pipeline_framework_spark.llm.similarity import (
-        ivf_train_centroids_exact,
-    )
+    from pyspark_pipeline_framework_spark.llm.similarity import ivf_train_centroids
 
     emb = _emb(spark, sf_dir)
     q = _queries(emb)
-    C = ivf_train_centroids_exact(emb, DIM, nlist=4, train_sample=128)
+    C = ivf_train_centroids(emb, DIM, nlist=4, train_sample=128)
     B = pq_train_codebooks_exact(emb, DIM, m_sub=M_SUB, ksub=KSUB, train_sample=128)
     good = [
         (r.vec_id, r.cell, list(r.codes))

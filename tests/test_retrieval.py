@@ -182,12 +182,11 @@ def test_semantic_dedup_finds_planted_near_dup(spark):
     # plant: vec 100 = vec 0 + tiny noise -> cosine ~1, same cell
     rows.append((100, [float(x) for x in base[0] + 0.01 * rng.standard_normal(16)]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for mode in ("exact", "fast"):
-        pairs = semantic_dedup_pairs(
-            emb, dim=16, threshold=0.95, nlist=4, train_sample=32, mode=mode
-        ).collect()
-        assert [(p.id_a, p.id_b) for p in pairs] == [(0, 100)], mode
-        assert pairs[0].cos_sim > 0.99
+    pairs = semantic_dedup_pairs(
+        emb, dim=16, threshold=0.95, nlist=4, train_sample=32
+    ).collect()
+    assert [(p.id_a, p.id_b) for p in pairs] == [(0, 100)]
+    assert pairs[0].cos_sim > 0.99
 
 
 def test_semantic_dedup_pairs_feed_dedup_clusters(spark):
@@ -236,14 +235,14 @@ def test_semantic_dedup_small_magnitude_prefilter_lossless(spark):
         "vec_id long, embedding array<double>",
     )
     pairs = semantic_dedup_pairs(
-        emb, dim=16, threshold=thr, nlist=1, train_sample=2, mode="exact"
+        emb, dim=16, threshold=thr, nlist=1, train_sample=2
     ).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(0, 1)]
     assert pairs[0].cos_sim == fp_cos(a, b)
 
 
 def test_semantic_dedup_exact_equals_naive_join_small_vectors(spark):
-    # exact mode's prefilter+rescore must be bit-identical to the
+    # the prefilter+rescore must be bit-identical to the
     # naive all-pairs decimal-exact join at ANY vector magnitude
     import numpy as np
 
@@ -259,7 +258,7 @@ def test_semantic_dedup_exact_equals_naive_join_small_vectors(spark):
     got = {
         (p.id_a, p.id_b): p.cos_sim
         for p in semantic_dedup_pairs(
-            emb, dim=8, threshold=thr, nlist=1, train_sample=40, mode="exact"
+            emb, dim=8, threshold=thr, nlist=1, train_sample=40
         ).collect()
     }
     a, b = emb.alias("a"), emb.alias("b")
@@ -278,7 +277,7 @@ def test_semantic_dedup_exact_equals_naive_join_small_vectors(spark):
 
 def test_semantic_dedup_zero_norm_vectors_excluded(spark):
     # all-zero AND sub-resolution (|x| < 1e-7 -> fixed-point norm 0)
-    # vectors must be excluded from pair scoring in both modes: 0/0 is
+    # vectors must be excluded from pair scoring: 0/0 is
     # NULL in Spark but NaN (> any threshold) in DuckDB, so filtering
     # is the only portable semantic (r7 ADVICE)
     from pyspark_pipeline_framework_spark.llm.similarity import semantic_dedup_pairs
@@ -288,12 +287,10 @@ def test_semantic_dedup_zero_norm_vectors_excluded(spark):
         [(1, v), (2, v), (3, [0.0] * 8), (4, [1e-8] * 8)],
         "vec_id long, embedding array<double>",
     )
-    for mode in ("exact", "fast"):
-        pairs = semantic_dedup_pairs(
-            emb, dim=8, threshold=-1.0, nlist=1, train_sample=4, mode=mode
-        ).collect()
-        ids = {i for p in pairs for i in (p.id_a, p.id_b)}
-        assert ids == {1, 2}, mode
+    pairs = semantic_dedup_pairs(
+        emb, dim=8, threshold=-1.0, nlist=1, train_sample=4
+    ).collect()
+    assert {i for p in pairs for i in (p.id_a, p.id_b)} == {1, 2}
 
 
 def test_ivf_exact_trainer_zero_norm_rows_no_nan(spark):
@@ -304,27 +301,23 @@ def test_ivf_exact_trainer_zero_norm_rows_no_nan(spark):
     # and the model must still replay deterministically.
     import numpy as np
 
-    from pyspark_pipeline_framework_spark.llm.similarity import (
-        ivf_train_centroids_exact,
-    )
+    from pyspark_pipeline_framework_spark.llm.similarity import ivf_train_centroids
 
     rows = [(i, [1e-8 * ((i + j) % 3) for j in range(8)]) for i in range(16)]
     # mix in a few above-resolution vectors (the mixed regime)
     rows += [(100 + i, [0.1 * ((i + j) % 5) for j in range(8)]) for i in range(8)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    C1 = ivf_train_centroids_exact(emb, dim=8, nlist=4, train_iters=2, train_sample=24)
-    C2 = ivf_train_centroids_exact(emb, dim=8, nlist=4, train_iters=2, train_sample=24)
+    C1 = ivf_train_centroids(emb, dim=8, nlist=4, train_iters=2, train_sample=24)
+    C2 = ivf_train_centroids(emb, dim=8, nlist=4, train_iters=2, train_sample=24)
     assert np.isfinite(C1).all()
     assert (C1 == C2).all()
 
 
-def test_semantic_dedup_empty_and_bad_mode(spark):
+def test_semantic_dedup_empty_corpus(spark):
     from pyspark_pipeline_framework_spark.llm.similarity import semantic_dedup_pairs
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert semantic_dedup_pairs(empty, dim=8, nlist=2).count() == 0
-    with pytest.raises(ValueError, match="mode"):
-        semantic_dedup_pairs(empty, dim=8, mode="gpu")
 
 
 # ------------------------------------------------- bloom decontamination
@@ -371,35 +364,6 @@ def test_bloom_decontaminate_param_validation(spark):
         bloom_decontaminate(d, d, k_hashes=0)
     with pytest.raises(ValueError, match="m_bits"):
         bloom_decontaminate(d, d, m_bits=1)
-
-
-def test_semantic_dedup_fast_matches_exact_pair_set(spark, sf_dir):
-    # same trained-quantizer shape, different scoring engines: the
-    # BLAS applyInPandas fast path must produce the same pair SET as
-    # the decimal-exact join at a threshold away from float edges
-    # (training differs fast-vs-exact, so pin the centroids by using
-    # exact training for both via mode comparison on pair keys only
-    # when thresholds are not knife-edge)
-    from pyspark_pipeline_framework_spark.llm.similarity import semantic_dedup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact = semantic_dedup_pairs(
-        emb, dim=64, threshold=0.35, nlist=8, train_sample=128, mode="exact"
-    )
-    fast = semantic_dedup_pairs(
-        emb, dim=64, threshold=0.35, nlist=8, train_sample=128, mode="fast"
-    )
-    e = {(r.id_a, r.id_b): r.cos_sim for r in exact.collect()}
-    f = {(r.id_a, r.id_b): r.cos_sim for r in fast.collect()}
-    # training differs (md5 vs xxhash64 sample) so cells may differ;
-    # assert the fast path's own invariants + overlap sanity instead
-    # of set equality: ordered ids, cos within [-1, 1+eps], and every
-    # common pair agrees on cos to float tolerance
-    assert all(a < b for a, b in f)
-    assert all(-1.0 - 1e-9 <= c <= 1.0 + 1e-9 for c in f.values())
-    common = set(e) & set(f)
-    for k in common:
-        assert abs(e[k] - f[k]) < 1e-9
 
 
 def test_doc_postings_single_exchange(spark, sf_dir):

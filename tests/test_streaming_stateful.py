@@ -420,12 +420,12 @@ def _replay_writer(kind, spark, sf_dir):
     elif kind == "ivf":
         from pyspark_pipeline_framework_spark.llm.similarity import ivf_index
 
-        cdf, _ = ivf_index(data, dim=64, nlist=8, mode="exact", train_sample=256)
+        cdf, _ = ivf_index(data, dim=64, nlist=8, train_sample=256)
         stores = ["store"]
 
         def make(r):
             return stateful.streaming_ivf_add_batch(
-                f"{r}/store", cdf, dim=64, mode="exact"
+                f"{r}/store", cdf, dim=64
             )
     else:
         from pyspark_pipeline_framework_spark.llm.pq import ivfpq_index
@@ -525,6 +525,41 @@ def test_store_layout_probe_raises_on_a_corrupt_store(spark, tmp_path, sf_dir):
     assert not os.path.exists(f"{store}/batch_id=1")
 
 
+def test_store_layout_probe_reads_unless_the_client_sees_the_store(tmp_path):
+    """A missing store on the client's own filesystem is fresh without
+    a Spark read, whose failure logs a Java FileNotFoundException
+    trace. Where the client cannot see what Spark sees — a URI path, a
+    non-local fs.defaultFS, a Connect session — the read probe stays,
+    even though the path is missing locally."""
+    from types import SimpleNamespace
+
+    from pyspark_pipeline_framework_spark.io.compaction import _store_sub_layout
+
+    class Session:
+        def __init__(self, default_fs=None):
+            if default_fs is not None:  # classic; without it, Connect-like
+                conf = SimpleNamespace(get=lambda key: default_fs)
+                self.sparkContext = SimpleNamespace(
+                    _jsc=SimpleNamespace(hadoopConfiguration=lambda: conf)
+                )
+
+        @property
+        def read(self):
+            raise AssertionError("probed with a Spark read")
+
+    missing = str(tmp_path / "missing")
+    for path in (missing, "file:" + missing, "file://" + missing):
+        assert _store_sub_layout(Session("file:///"), path) is None
+    for spark, path in (
+        (Session("file:///"), "s3a://bucket/missing"),
+        (Session("file:///"), "dbfs:/missing"),
+        (Session("hdfs://nn:8020"), missing),
+        (Session(), missing),
+    ):
+        with pytest.raises(AssertionError, match="Spark read"):
+            _store_sub_layout(spark, path)
+
+
 def test_config_declared_streaming_neardup(spark, tmp_path, sf_dir):
     """The declarative path: op:stream with a neardup block (no sink)
     must run the incremental MinHash foreachBatch operator and land
@@ -585,7 +620,7 @@ def test_streaming_ivf_add_matches_batch(spark, tmp_path, sf_dir):
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, _ = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, _ = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     cpath = str(tmp_path / "centroids")
     cdf.write.parquet(cpath)
 
@@ -603,7 +638,7 @@ def test_streaming_ivf_add_matches_batch(spark, tmp_path, sf_dir):
             options={"maxFilesPerTrigger": "1"},
         ),
         sink=ForeachBatchSink(
-            streaming_ivf_add_batch(store, cpath, dim=64, mode="exact")
+            streaming_ivf_add_batch(store, cpath, dim=64)
         ),
         trigger=Trigger(TriggerType.AVAILABLE_NOW),
         checkpoint_location=ckpt,
@@ -613,7 +648,7 @@ def test_streaming_ivf_add_matches_batch(spark, tmp_path, sf_dir):
     # the quantizer is frozen, so streamed assignment == batch assignment
     want_assign = sorted(
         (r.vec_id, r.cell)
-        for r in ivf_add(emb, centroids_from_df(cdf), dim=64, mode="exact")
+        for r in ivf_add(emb, centroids_from_df(cdf), dim=64)
         .collect()
     )
     got_assign = sorted((r.vec_id, r.cell) for r in streamed.collect())
@@ -623,12 +658,12 @@ def test_streaming_ivf_add_matches_batch(spark, tmp_path, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(dim=64, k=5, nprobe=3, mode="exact")
+    kw = dict(dim=64, k=5, nprobe=3)
     got = sorted(map(tuple, ivf_search(
         streamed.drop("batch_id"), cdf, queries, **kw
     ).collect()))
     want = sorted(map(tuple, ivf_search(
-        ivf_add(emb, centroids_from_df(cdf), dim=64, mode="exact"),
+        ivf_add(emb, centroids_from_df(cdf), dim=64),
         cdf, queries, **kw,
     ).collect()))
     assert got == want and want
@@ -653,7 +688,7 @@ def test_config_declared_streaming_ivf_add(spark, tmp_path, sf_dir):
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, _ = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, _ = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     cpath = str(tmp_path / "centroids")
     cdf.write.parquet(cpath)
     src = str(tmp_path / "in")
@@ -666,8 +701,7 @@ def test_config_declared_streaming_ivf_add(spark, tmp_path, sf_dir):
         "source": {"type": "file", "path": src, "file_format": "parquet",
                    "schema": "vec_id BIGINT, embedding ARRAY<DOUBLE>",
                    "options": {"maxFilesPerTrigger": "1"}},
-        "ivf_add": {"store": store, "centroids": cpath, "dim": 64,
-                    "mode": "exact"},
+        "ivf_add": {"store": store, "centroids": cpath, "dim": 64},
         "trigger": "available_now",
         "checkpoint": str(tmp_path / "ck"),
         "timeout_s": 120,
@@ -696,7 +730,7 @@ def test_config_declared_streaming_ivf_add(spark, tmp_path, sf_dir):
     )
     want = sorted(
         (r.vec_id, r.cell)
-        for r in ivf_add(emb, centroids_from_df(cdf), dim=64, mode="exact").collect()
+        for r in ivf_add(emb, centroids_from_df(cdf), dim=64).collect()
     )
     assert got == want and want
 
@@ -713,9 +747,9 @@ def test_streaming_ivf_add_empty_micro_batch(spark, tmp_path, sf_dir):
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf, _ = ivf_index(emb, dim=64, nlist=8, mode="exact", train_sample=256)
+    cdf, _ = ivf_index(emb, dim=64, nlist=8, train_sample=256)
     store = str(tmp_path / "store")
-    process = streaming_ivf_add_batch(store, cdf, dim=64, mode="exact")
+    process = streaming_ivf_add_batch(store, cdf, dim=64)
     process(emb.where(F.col("vec_id") % 2 == 0), 0)
     process(emb.limit(0), 1)  # empty micro-batch
     got = spark.read.parquet(store)
@@ -793,8 +827,8 @@ def test_streaming_ivfpq_add_matches_batch(spark, tmp_path, sf_dir):
 
 def test_ivf_add_block_codebooks_validation():
     """The ivf_add stream block's IVFPQ switch: codebooks must be a
-    path string and excludes 'mode' (the IVFPQ path is always
-    exact-integer)."""
+    path string. A leftover 'mode' field (IVF has one exact-integer
+    path) fails as an unknown field, with or without codebooks."""
     import pytest as _pytest
 
     from pyspark_pipeline_framework_spark.streaming.config import (
@@ -813,8 +847,9 @@ def test_ivf_add_block_codebooks_validation():
         validate_stream_params(
             {**base, "ivf_add": {**base["ivf_add"], "codebooks": 7}}
         )
-    with _pytest.raises(StreamingConfigError, match="mode"):
-        validate_stream_params(
-            {**base, "ivf_add": {**base["ivf_add"], "codebooks": "/tmp/b",
-                                 "mode": "exact"}}
-        )
+    for extra in ({}, {"codebooks": "/tmp/b"}):
+        with _pytest.raises(StreamingConfigError,
+                            match=r"unknown ivf_add fields \['mode'\]"):
+            validate_stream_params(
+                {**base, "ivf_add": {**base["ivf_add"], **extra, "mode": "exact"}}
+            )

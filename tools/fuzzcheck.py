@@ -2276,7 +2276,7 @@ def to_spark(spec: dict, spark, sf_dir: str, base_df=None):
             )
         return semantic_dedup_pairs(
             emb, dim=64, threshold=spec["threshold"], nlist=spec["nlist"],
-            train_sample=spec["n_train"], mode="exact",
+            train_sample=spec["n_train"],
         )
     if spec.get("kind") == "ivf":
         from pyspark_pipeline_framework_spark.llm.similarity import (
@@ -2297,17 +2297,17 @@ def to_spark(spec: dict, spark, sf_dir: str, base_df=None):
         queries = emb.filter(F.col("vec_id") < spec["n_query"]).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        kw = dict(dim=64, mode="exact", train_sample=spec["n_train"])
+        kw = dict(dim=64, train_sample=spec["n_train"])
         if spec["incremental"]:
             cdf, _ = ivf_index(emb, nlist=spec["nlist"], **kw)
             store = ivf_add(
-                emb.where(F.col("vec_id") % 2 == 0), cdf, dim=64, mode="exact"
+                emb.where(F.col("vec_id") % 2 == 0), cdf, dim=64
             ).union(
-                ivf_add(emb.where(F.col("vec_id") % 2 == 1), cdf, dim=64, mode="exact")
+                ivf_add(emb.where(F.col("vec_id") % 2 == 1), cdf, dim=64)
             )
             out = ivf_search(
                 store, cdf, queries, dim=64, k=spec["k"],
-                nprobe=spec["nprobe"], mode="exact",
+                nprobe=spec["nprobe"],
             )
         else:
             out = cosine_topk_ivf(

@@ -398,7 +398,7 @@ def run_battery(spark: SparkSession, docs_path: str, emb_path: str, meter: Stage
         "semantic_dedup",
         lambda: semantic_dedup_pairs(
             emb, dim=64, threshold=0.5, nlist=sd_nlist,
-            train_sample=max(256, 4 * sd_nlist), mode="fast",
+            train_sample=max(256, 4 * sd_nlist),
         ).count(),
     )
 

@@ -195,9 +195,9 @@ def run_stress(spark: SparkSession, base_dir: str, rep: int, tmp: str) -> dict:
     # --- hot IVF cell: uniform twin then planted (same frozen nlist)
     eu, es = spark.read.parquet(emb_u), spark.read.parquet(emb_s)
     dim = 64
-    cdf_u, store_u = ivf_index(eu, dim=dim, nlist=64, mode="fast",
+    cdf_u, store_u = ivf_index(eu, dim=dim, nlist=64,
                                train_sample=512)
-    cdf_s, store_s = ivf_index(es, dim=dim, nlist=64, mode="fast",
+    cdf_s, store_s = ivf_index(es, dim=dim, nlist=64,
                                train_sample=512)
     # queries: 5 base vectors + 3 from inside the planted cluster, so
     # the hot cell is actually probed
@@ -209,7 +209,7 @@ def run_stress(spark: SparkSession, base_dir: str, rep: int, tmp: str) -> dict:
     qu = eu.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    kw = dict(dim=dim, k=5, nprobe=4, mode="fast")
+    kw = dict(dim=dim, k=5, nprobe=4)
     timed("ivf_search_uniform", lambda: ivf_search(store_u, cdf_u, qu, **kw).count())
     search_s = ivf_search(store_s, cdf_s, qs, **kw)
     timed("ivf_search_skew", lambda: search_s.count())
@@ -403,13 +403,13 @@ def run_fuzz(spark: SparkSession, sf_dir: str, n: int, seed: int, tmp: str) -> i
                     map(tuple, minhash_candidate_pairs(docs).collect())
                 )
                 emb = spark.read.parquet(emb_p)
-                cdf, store = ivf_index(emb, dim=64, nlist=8, mode="exact",
+                cdf, store = ivf_index(emb, dim=64, nlist=8,
                                        train_sample=256)
                 qs = emb.where(
                     F.col("vec_id").isin([0, 1, 200 * ID_STRIDE])
                 ).select(F.col("vec_id").alias("query_id"), "embedding")
                 knn = sorted(map(tuple, ivf_search(
-                    store, cdf, qs, dim=64, k=5, nprobe=2, mode="exact"
+                    store, cdf, qs, dim=64, k=5, nprobe=2
                 ).collect()))
                 return pairs, knn
             finally:

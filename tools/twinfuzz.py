@@ -1,8 +1,8 @@
-"""Randomized twin-agreement fuzz for the 5 permanent no-oracle rows
-(r8 VERDICT item 3).
+"""Randomized twin-agreement fuzz for the permanent no-oracle rows
+(r8 VERDICT item 3), plus the IVF full-probe identity.
 
 ``tests/test_no_oracle_twins.py`` gates the production (xxhash64 / HLL
-/ float-LSH / fast-IVF) variants against their oracle-exact twins at
+/ float-LSH) variants against their oracle-exact twins at
 ONE fixed hyperparameter point each. This tool randomizes the
 hyperparameters per pipeline and asserts the decision-level agreement
 every time, with bounds derived from the parameters themselves rather
@@ -24,7 +24,7 @@ than constants tuned to one configuration:
   (per-neighbor hyperplane collision probability from its own angle)
   minus 3σ and a +2 absolute slack.
 - **ivf** (family 3): random nlist/k/train_iters. With nprobe=nlist
-  every cell is probed, so fast-mode IVF must EQUAL the exact brute
+  every cell is probed, so IVF must EQUAL the exact brute
   force — same (query, vec, cos_sim, rank) set, bit-for-bit. A second
   run at random nprobe<nlist gates bit-equal scores on common hits.
 - **hll** (family 4): random rsd/measure column/group column. Gate:
