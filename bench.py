@@ -461,7 +461,7 @@ def _fill_line_queries(line_obj: dict, timings: dict, pinned: list,
     not chosen by this run's timings: the old slowest-first fill made two
     driver runs emit different sets whenever relative timings jittered, and
     the driver's cross-round differ read the difference as dropped/new
-    queries (r12 VERDICT item 2: six false dropped_from_bench). All 165
+    queries (r12 VERDICT item 2: six false dropped_from_bench). All 164
     names cannot fit — the driver keeps only the last 2000 bytes of output —
     so the line carries the pinned profile-relevant set at 2-decimal
     precision plus an explicit "omitted" count; every query's timing is in

@@ -483,7 +483,6 @@ def ngram_jaccard_pairs(
     shingle_k: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    log_dropped: bool = False,
     broadcast_sizes: bool = True,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via an inverted index:
@@ -498,8 +497,6 @@ def ngram_jaccard_pairs(
     from BOTH the index and the per-doc sizes, so the Jaccard stays a
     true set similarity over the kept shingle universe. Pair count per
     shingle is then ≤ max_doc_freq²/2 — deterministic worst-case work.
-    ``log_dropped`` runs one extra count job to report how many shingle
-    keys the cap removed.
 
     Without a cap this is exact over all shingles (oracle-checkable;
     hash-collision risk ~|shingles|²/2^64) but quadratic in
@@ -513,14 +510,6 @@ def ngram_jaccard_pairs(
     if max_doc_freq is not None:
         freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
         hot = freq.filter(F.col("df") > max_doc_freq).select("sh")
-        # hot.count() is a full extra Spark job — only pay for it when
-        # the log line would actually be emitted.
-        if log_dropped and logger.isEnabledFor(logging.INFO):
-            logger.info(
-                "ngram_jaccard_pairs: max_doc_freq=%d dropped %d hot shingles",
-                max_doc_freq,
-                hot.count(),
-            )
         sh = sh.join(F.broadcast(hot), "sh", "left_anti")
     # one inverted-index aggregation feeds BOTH the pair stream and the
     # per-doc sizes: sizes re-derived by exploding the (hot-capped, so
@@ -587,8 +576,6 @@ def jaccard_verify(
     text_col: str = "text",
     shingle_k: int = 3,
     threshold: float = 0.5,
-    method: str = "array",
-    materialize_candidates: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs (id_a, id_b): the
@@ -600,28 +587,24 @@ def jaccard_verify(
     at/above ``threshold`` — same schema and semantics as
     :func:`ngram_jaccard_pairs`, restricted to candidates.
 
-    ``method="array"`` (default): each side's distinct shingle-hash
-    set travels as one ``array<bigint>`` row; two equi-joins, then
-    ``array_intersect`` per pair — no explode, no per-shingle shuffle.
-    Right when document length is bounded (the normal case after a
-    length-capped quality filter). ``method="join"``: per-shingle
-    explode + (doc, hash) equi-join + count — rows stay tiny no matter
-    how long one document is; use when lengths are unbounded.
+    Each side's distinct shingle-hash set travels as one
+    ``array<bigint>`` row; two equi-joins, then ``array_intersect`` per
+    pair — no explode, no per-shingle shuffle. That suits the bounded
+    document lengths a length-capped quality filter leaves.
 
-    ``materialize_candidates``: the candidate DataFrame feeds three
-    branches of the plan (the touched-id semi-join prune on each side
-    and the pair join itself); without materialization Spark recomputes
-    the whole candidate-generation DAG — typically a full MinHash-LSH
-    pass — once per branch. An eager ``localCheckpoint`` computes it
-    exactly once; candidates are bounded by construction (that is the
-    point of LSH), so the checkpointed footprint is two longs per
-    pair. ``checkpoint_dir`` upgrades it to a reliable ``checkpoint()``
-    (see ``connect_compat.truncate_lineage``)."""
+    The candidate DataFrame feeds three branches of the plan (the
+    touched-id semi-join prune on each side and the pair join itself);
+    unmaterialized, Spark would recompute the whole candidate-generation
+    DAG — typically a full MinHash-LSH pass — once per branch. An eager
+    ``localCheckpoint`` computes it exactly once; candidates are
+    bounded by construction (that is the point of LSH), so the
+    checkpointed footprint is two longs per pair. ``checkpoint_dir``
+    upgrades it to a reliable ``checkpoint()`` (see
+    ``connect_compat.truncate_lineage``)."""
     cand = candidates.select(
         F.col("id_a").cast("long").alias("id_a"), F.col("id_b").cast("long").alias("id_b")
     ).distinct()
-    if materialize_candidates:
-        cand = truncate_lineage(cand, checkpoint_dir, eager=True)
+    cand = truncate_lineage(cand, checkpoint_dir, eager=True)
     touched = (
         cand.select(F.col("id_a").alias("id"))
         .union(cand.select(F.col("id_b").alias("id")))
@@ -632,55 +615,28 @@ def jaccard_verify(
         .select(F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("__t"))
         .join(touched, "id", "left_semi")
     )
-    if method == "array":
-        sets = pruned.withColumn("__words", _word_array("__t")).select(
-            "id",
-            F.array_distinct(
-                F.transform(
-                    _shingles_from_words(F.col("__words"), shingle_k),
-                    lambda s: F.xxhash64(s),
-                )
-            ).alias("__set"),
-        )
-        return (
-            cand.join(sets.select(F.col("id").alias("id_a"), F.col("__set").alias("__sa")), "id_a")
-            .join(sets.select(F.col("id").alias("id_b"), F.col("__set").alias("__sb")), "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("__sa", "__sb")).cast("long").alias("n_common"),
-                F.size("__sa").alias("__za"),
-                F.size("__sb").alias("__zb"),
+    sets = pruned.withColumn("__words", _word_array("__t")).select(
+        "id",
+        F.array_distinct(
+            F.transform(
+                _shingles_from_words(F.col("__words"), shingle_k),
+                lambda s: F.xxhash64(s),
             )
-            .withColumn(
-                "jaccard",
-                F.col("n_common") / (F.col("__za") + F.col("__zb") - F.col("n_common")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "n_common", "jaccard")
-        )
-    if method != "join":
-        raise ValueError(f"method must be 'array' or 'join', got {method!r}")
-    sh = _exploded_shingles(pruned, ["id"], "__t", shingle_k, alias="shingle").select(
-        "id", F.xxhash64("shingle").alias("sh")
+        ).alias("__set"),
     )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    sh_a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("id").alias("__idb"), F.col("sh").alias("sh_b"))
-    inter = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, (F.col("id_b") == F.col("__idb")) & (F.col("sh_a") == F.col("sh_b")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        cand.join(sets.select(F.col("id").alias("id_a"), F.col("__set").alias("__sa")), "id_a")
+        .join(sets.select(F.col("id").alias("id_b"), F.col("__set").alias("__sb")), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("__sa", "__sb")).cast("long").alias("n_common"),
+            F.size("__sa").alias("__za"),
+            F.size("__sb").alias("__zb"),
+        )
         .withColumn(
             "jaccard",
-            F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")),
+            F.col("n_common") / (F.col("__za") + F.col("__zb") - F.col("n_common")),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "n_common", "jaccard")
@@ -983,6 +939,13 @@ def connected_components(
         if prev_sum is not None and cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        logger.warning(
+            "label propagation did not reach a fixpoint within max_iters=%d "
+            "rounds; cluster assignments may be incomplete — raise max_iters "
+            "or use algorithm='star'",
+            max_iters,
+        )
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 

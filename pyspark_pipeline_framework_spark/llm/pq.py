@@ -102,7 +102,6 @@ def pq_train_codebooks_exact(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_sample: int | None = None,
-    normalize: bool = True,
 ) -> np.ndarray:
     """ENGINE-PORTABLE PQ training — returns codebooks of shape
     ``(m_sub, ksub, dim // m_sub)``. Same bounded-sample shape as
@@ -112,7 +111,7 @@ def pq_train_codebooks_exact(
 
     - sample: the ``train_sample`` rows with the smallest
       ``md5(id)`` hex (engine-agnostic order);
-    - normalize (cosine mode): fixed-point unit norm, zero-norm guard;
+    - normalize: fixed-point unit norm, zero-norm guard;
     - init: the first ``ksub`` sampled subvectors per subspace;
     - assign: argmin of ``doti(c,c) - 2·doti(x,c)`` (integer L2
       surrogate), ties to the lowest codeword;
@@ -139,9 +138,7 @@ def pq_train_codebooks_exact(
         B = np.zeros((m_sub, ksub, dsub), dtype="float64")
         B[:, np.arange(ksub), np.arange(ksub) % dsub] = 1.0
         return B
-    X = np.stack([np.asarray(r["__v"], dtype="float64") for r in rows])
-    if normalize:
-        X = _normalize_rows_np(X)
+    X = _normalize_rows_np(np.stack([np.asarray(r["__v"], dtype="float64") for r in rows]))
     B = np.zeros((m_sub, ksub, dsub), dtype="float64")
     for s in range(m_sub):
         Xs = X[:, s * dsub : (s + 1) * dsub]
@@ -196,18 +193,16 @@ def _as_codebook_matrix(codebooks) -> np.ndarray:
     return np.asarray(codebooks, dtype="float64")
 
 
-def pq_encode_udf(B: np.ndarray, normalize: bool = True):
-    """Arrow-batched PQ encoder: each vector (unit-normalized in
-    cosine mode) → ``array<int>`` of its per-subspace nearest-codeword
-    ids under the exact-integer L2 surrogate. Pure per-row function of
-    the frozen codebooks — map-only, reproducible in SQL."""
+def pq_encode_udf(B: np.ndarray):
+    """Arrow-batched PQ encoder: each vector (unit-normalized) →
+    ``array<int>`` of its per-subspace nearest-codeword ids under the
+    exact-integer L2 surrogate. Pure per-row function of the frozen
+    codebooks — map-only, reproducible in SQL."""
     m_sub, ksub, dsub = B.shape
 
     @F.pandas_udf("array<int>")
     def codes(v: pd.Series) -> pd.Series:
-        M = np.stack(v.values).astype("float64")  # (batch, dim)
-        if normalize:
-            M = _normalize_rows_np(M)
+        M = _normalize_rows_np(np.stack(v.values).astype("float64"))  # (batch, dim)
         out = np.empty((len(M), m_sub), dtype="int32")
         for s in range(m_sub):
             Xs = M[:, s * dsub : (s + 1) * dsub]
@@ -223,8 +218,6 @@ def pq_encode(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    normalize: bool = True,
-    keep_vec: bool = False,
 ) -> DataFrame:
     """Encode an embedding batch under FROZEN codebooks — the map-only
     incremental step of the PQ store (append forever, no retraining,
@@ -233,28 +226,22 @@ def pq_encode(
     direction; engine-divergent 0/0 cosine)."""
     B = _as_codebook_matrix(codebooks)
     embeddings = drop_corrupt_vectors(embeddings, vec_col, dim, drop_zero_norm=True)
-    enc = pq_encode_udf(B, normalize=normalize)
-    cols = [F.col(id_col), enc(F.col(vec_col)).alias("codes")]
-    if keep_vec:
-        cols.append(F.col(vec_col).alias("vec"))
-    return embeddings.select(*cols)
+    return embeddings.select(F.col(id_col), pq_encode_udf(B)(F.col(vec_col)).alias("codes"))
 
 
-def _adc_table_udf(B: np.ndarray, normalize: bool = True):
+def _adc_table_udf(B: np.ndarray):
     """Arrow-batched query side of ADC search: each query vector
-    (unit-normalized in cosine mode) → its flattened ``m_sub·ksub``
-    lookup table, entry ``s·ksub + j`` holding the integer fixed-point
-    inner product of query subvector ``s`` with codeword ``(s, j)``
-    (``_dot14_np``, the twin of the oracle's ``doti``). One row per
-    query — ``n_query · m_sub · ksub · 8`` bytes in all, the broadcast
-    side of the search."""
+    (unit-normalized) → its flattened ``m_sub·ksub`` lookup table,
+    entry ``s·ksub + j`` holding the integer fixed-point inner product
+    of query subvector ``s`` with codeword ``(s, j)`` (``_dot14_np``,
+    the twin of the oracle's ``doti``). One row per query —
+    ``n_query · m_sub · ksub · 8`` bytes in all, the broadcast side of
+    the search."""
     m_sub, ksub, dsub = B.shape
 
     @F.pandas_udf("array<bigint>")
     def table(v: pd.Series) -> pd.Series:
-        M = np.stack(v.values).astype("float64")
-        if normalize:
-            M = _normalize_rows_np(M)
+        M = _normalize_rows_np(np.stack(v.values).astype("float64"))
         out = np.concatenate(
             [_dot14_np(M[:, s * dsub : (s + 1) * dsub], B[s]) for s in range(m_sub)],
             axis=1,
@@ -312,7 +299,6 @@ def pq_search_adc(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    normalize: bool = True,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over a PQ code store: each query
     scores against the codebooks once (its lookup table, broadcast),
@@ -324,7 +310,7 @@ def pq_search_adc(
     tables (every code against every query but itself), one generated
     projection sums the lookups, then the per-query top-k window — the
     only exchange. ``adc_dot`` is the rescaled approximate inner
-    product (≈ cosine in normalize mode, both sides unit-normalized).
+    product (≈ cosine, both sides unit-normalized).
 
     Malformed codes are dropped, with ANSI mode on or off: a code row
     whose array is NULL, is not exactly ``m_sub`` long, or holds an
@@ -333,7 +319,7 @@ def pq_search_adc(
     m_sub, ksub, _ = B.shape
     q = drop_corrupt_vectors(queries, vec_col, dim, drop_zero_norm=True)
     tables = q.select(
-        F.col(query_id_col), _adc_table_udf(B, normalize)(F.col(vec_col)).alias("__dt")
+        F.col(query_id_col), _adc_table_udf(B)(F.col(vec_col)).alias("__dt")
     )
     pairs = ensure_parallelism(codes).join(
         F.broadcast(tables), F.col(query_id_col) != F.col(id_col)
@@ -350,7 +336,6 @@ def pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_sample: int | None = None,
-    normalize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Build a persistable PQ index: ``(codebooks, codes)`` — write
     both to parquet, then encode each new batch with
@@ -360,11 +345,10 @@ def pq_index(
     B = pq_train_codebooks_exact(
         corpus, dim, m_sub=m_sub, ksub=ksub, train_iters=train_iters,
         id_col=id_col, vec_col=vec_col, train_sample=train_sample,
-        normalize=normalize,
     )
     return (
         codebooks_to_df(corpus.sparkSession, B),
-        pq_encode(corpus, B, dim, id_col=id_col, vec_col=vec_col, normalize=normalize),
+        pq_encode(corpus, B, dim, id_col=id_col, vec_col=vec_col),
     )
 
 

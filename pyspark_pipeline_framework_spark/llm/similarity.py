@@ -5,7 +5,7 @@ query set, score every corpus vector, rank-filter per query — one scan
 of the corpus, zero shuffle of the corpus rows before the final top-k.
 
 Two scale paths prune the corpus so each query only scores a candidate
-subset: :func:`cosine_topk_lsh` (random-hyperplane buckets, stateless)
+subset: :func:`cosine_topk_lsh` (md5-Rademacher sign buckets, stateless)
 and :func:`cosine_topk_ivf` (IVF-Flat: a trained coarse quantizer of
 ``nlist`` centroids; queries probe the ``nprobe`` nearest cells).
 """
@@ -208,10 +208,8 @@ def embedding_dedup_pairs(
     )
 
 
-_LSH_SEED = 20240501
-
 #: fixed-point scale for Rademacher sign-projection bits: vectors are
-#: quantized once (floor(x·1e7) as long) so every plane dot is exact
+#: quantized once (floor(x·1e7), an integer) so every plane dot is exact
 #: integer arithmetic — bit-identical in Spark, DuckDB, or plain Python
 _SIGN_SCALE = 1e7
 
@@ -241,79 +239,28 @@ def rademacher_signs(
     ]
 
 
-def rademacher_quantize_col(vec_sql: str) -> Column:
-    """The integer quantization every Rademacher plane dot shares:
-    floor(x·1e7) per element as bigint. Materialize this as a REAL
-    column and hand its name to :func:`rademacher_buckets_col` —
-    higher-order functions are interpreted (no whole-stage codegen, no
-    subexpression elimination), so a quantize transform inlined into
-    each of the n_tables·n_planes dot expressions re-runs per plane
-    (32× at the default (8, 4); hoisting it was measured 1.4s → 1.15s
-    on the sf0.1 LSH ANN case — same pattern as the materialized word
-    split in llm/dedup._shingles_from_words)."""
-    return F.expr(
-        f"transform({vec_sql}, x -> "
-        f"CAST(FLOOR(CAST(x AS DOUBLE) * {_SIGN_SCALE:.0f}.0) AS BIGINT))"
-    )
-
-
-def rademacher_buckets_col(vec_sql: str, signs: list[list[list[int]]]) -> Column:
-    """Per-table LSH bucket ids (array<long>, one per table) as pure
-    column expressions: each plane bit is the sign of an exact integer
-    dot between the quantized vector and a ±1 literal array. No Python
-    at execution time, and a SQL oracle doing FLOOR(x·1e7) + the same
-    ±1 sums matches exactly.
-
-    ``vec_sql`` should be the NAME of an already-materialized quantized
-    column from :func:`rademacher_quantize_col` (see there for why);
-    passing a raw vector expression still works — pre-quantized input
-    is recognized by the caller's contract, not sniffed here, so this
-    function simply substitutes the string into each dot.
-
-    The whole bucket array is built as ONE ``F.expr`` string parsed
-    JVM-side. The naive construction (a ``F.lit`` per ±1 sign) costs
-    n_tables·n_planes·dim py4j round-trips from Python — ~2000
-    driver→JVM calls and several seconds of pure client latency per
-    invocation at (8, 4, 64); a single parsed string is two calls."""
-    vq = vec_sql
-    tables = []
-    for planes in signs:
-        bits = []
-        for p, row in enumerate(planes):
-            sarr = "array(" + ",".join(f"{s}L" for s in row) + ")"
-            dot = (
-                f"aggregate(zip_with({vq}, {sarr}, (x, s) -> x * s), "
-                f"CAST(0 AS BIGINT), (a, v) -> a + v)"
-            )
-            bits.append(f"IF({dot} > 0, CAST({1 << p} AS BIGINT), CAST(0 AS BIGINT))")
-        tables.append(" + ".join(bits))
-    return F.expr("array(" + ", ".join(tables) + ")")
-
-
-def _hyperplanes(dim: int, n_planes: int, n_tables: int):
-    """Deterministic Gaussian hyperplanes (seeded generator — identical
-    on every executor, no stored model)."""
-    rng = np.random.default_rng(_LSH_SEED)
-    return rng.standard_normal((n_tables * n_planes, dim))
-
-
 def lsh_buckets_udf(dim: int, n_planes: int = 8, n_tables: int = 8):
-    """Vectorized bucket assignment: one Arrow-batched matmul computes
-    every table's sign-bit bucket per vector (array<long>, one element
-    per table). This is the sanctioned Python fast path — the per-row
-    expression-tree alternative costs n_tables·n_planes array folds."""
-    H = _hyperplanes(dim, n_planes, n_tables).T  # (dim, tables*planes)
+    """Per-table LSH bucket ids (array<long>, one per table) in one
+    Arrow-batched pass: quantize each vector to ``floor(x·1e7)``, one
+    matmul with the :func:`rademacher_signs` planes, plane bit p =
+    ``dot > 0`` weighted ``1 << p``, summed per table. Every step is
+    exact integer arithmetic, so a SQL oracle doing the same FLOOR, ±1
+    sums and bit sums matches bit-for-bit. The same buckets as
+    interpreted SQL lambdas (n_tables·n_planes array folds per row)
+    measured ~3× slower (``bench_history/README.md``)."""
+    S = np.asarray(rademacher_signs(dim, n_planes, n_tables), dtype="float64")
+    S = S.reshape(n_tables * n_planes, dim).T         # (dim, tables*planes)
     weights = (1 << np.arange(n_planes)).astype("int64")
 
     @F.pandas_udf("array<long>")
     def buckets(v: pd.Series) -> pd.Series:
-        M = np.stack(v.values).astype("float64")          # (batch, dim)
-        signs = (M @ H) > 0                               # (batch, tables*planes)
-        per_table = [
-            signs[:, t * n_planes : (t + 1) * n_planes] @ weights for t in range(n_tables)
-        ]
-        B = np.stack(per_table, axis=1)                   # (batch, tables)
-        return pd.Series(list(B))
+        # integer-valued doubles: while dim·max|floor(x·1e7)| < 2^53
+        # (|x| < 9e8/dim, far past _DOT_SCALE's overflow-free range)
+        # every ±1 product and partial sum is an exact integer, so the
+        # BLAS matmul equals int64 arithmetic in any summation order
+        Q = np.floor(np.stack(v.values).astype("float64") * _SIGN_SCALE)
+        bits = ((Q @ S) > 0).reshape(len(Q), n_tables, n_planes)
+        return pd.Series(list(bits @ weights))          # (batch, tables)
 
     return buckets
 
@@ -328,7 +275,6 @@ def cosine_topk_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    hash_fn: str = "numpy",
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors sharing an LSH bucket with
     the query (in ANY of ``n_tables`` independent tables — the standard
@@ -338,44 +284,19 @@ def cosine_topk_lsh(
     equi-join: candidates ≈ n_tables · corpus/2^n_planes per query —
     tune the two knobs against the recall target.
 
-    ``hash_fn``: ``"numpy"`` (default) = Gaussian hyperplanes via one
-    Arrow-batched matmul; ``"md5"`` = Rademacher ±1 planes from md5
-    parity evaluated as exact integer column expressions — slightly
-    coarser buckets, but every stage (bits, buckets, candidates,
-    scores, ranks) is recomputable in any engine with md5, so the full
-    ANN pipeline is oracle-checkable.
+    The planes are md5-Rademacher (:func:`rademacher_signs`) and the
+    buckets exact integer sign bits (:func:`lsh_buckets_udf`), so every
+    stage (bits, buckets, candidates, scores, ranks) is recomputable in
+    any engine with md5 and the whole ANN pipeline is oracle-checked.
 
     Zero-fixed-point-norm vectors are excluded on both sides (see
     :func:`drop_corrupt_vectors`)."""
     corpus = drop_corrupt_vectors(corpus, vec_col, dim, drop_zero_norm=True)
     queries = drop_corrupt_vectors(queries, vec_col, dim, drop_zero_norm=True)
-    if hash_fn == "md5":
-        signs = rademacher_signs(dim, n_planes, n_tables)
-    elif hash_fn != "numpy":
-        raise ValueError(f"hash_fn must be 'numpy' or 'md5', got {hash_fn!r}")
+    bucketer = lsh_buckets_udf(dim, n_planes, n_tables)
 
     def with_buckets(df: DataFrame, idc: str, vec_alias: str, norm_alias: str) -> DataFrame:
         # posexplode: (table idx, bucket) pairs join only within a table
-        if hash_fn == "md5":
-            # two-step select: the quantized vector is materialized as
-            # a real column so the n_tables·n_planes interpreted dot
-            # folds share ONE transform instead of re-quantizing per
-            # plane (see rademacher_quantize_col)
-            staged = df.select(
-                F.col(idc),
-                F.col(vec_col).alias(vec_alias),
-                _norm(vec_col).alias(norm_alias),
-                rademacher_quantize_col(vec_col).alias("__vq"),
-            )
-            return staged.select(
-                F.col(idc),
-                F.col(vec_alias),
-                F.col(norm_alias),
-                F.posexplode(rademacher_buckets_col("__vq", signs)).alias(
-                    "__t", "__b"
-                ),
-            )
-        bucketer = lsh_buckets_udf(dim, n_planes, n_tables)
         return df.select(
             F.col(idc),
             F.col(vec_col).alias(vec_alias),

@@ -107,7 +107,6 @@ def robust_outliers(
     group_cols: list[str] | None = None,
     k: float = 3.0,
     keep_all: bool = False,
-    broadcast_medians: bool | None = None,
 ) -> DataFrame:
     """Median/MAD robust outlier detection — the standard
     data-quality screen for metric streams (robust to the outliers it
@@ -126,20 +125,14 @@ def robust_outliers(
 
     Scale: two grouped disc-quantile aggregations shuffling only the
     group-key cardinality, each joined back; the corpus itself
-    shuffles on nothing. ``broadcast_medians`` controls the join-back
-    strategy for the grouped case: ``True`` forces a broadcast hint
-    (right when you know the group count is small), ``False`` never
-    hints, and ``None`` (default) leaves the choice to Catalyst/AQE —
-    the aggregate is tiny when groups are few and AQE broadcasts it at
+    shuffles on nothing. The grouped join-back carries no hint: the
+    aggregate is tiny when groups are few and AQE broadcasts it at
     runtime, but a high-cardinality group key degrades gracefully to a
     shuffle join instead of an oversized forced broadcast. The global
     (no-group) aggregate is provably one row and always broadcast."""
     if k < 0:
         raise ValueError(f"k must be non-negative, got {k}")
     group_cols = list(group_cols or [])
-
-    def _hint(t: DataFrame) -> DataFrame:
-        return F.broadcast(t) if broadcast_medians else t
 
     # Pre-project the value into a fixed-name column so arbitrary
     # identifiers (spaces, hyphens, dots) never reach SQL text; the
@@ -152,7 +145,7 @@ def robust_outliers(
     ).alias("med")
     if group_cols:
         meds = base.groupBy(*group_cols).agg(med_agg)
-        with_med = base.join(_hint(meds), group_cols)
+        with_med = base.join(meds, group_cols)
     else:
         with_med = base.crossJoin(F.broadcast(base.agg(med_agg)))
     dev = F.abs(F.col("__val") - F.col("med"))
@@ -162,7 +155,7 @@ def robust_outliers(
     devd = with_med.withColumn("__dev", dev)
     if group_cols:
         mads = devd.groupBy(*group_cols).agg(mad_agg)
-        scored = devd.join(_hint(mads), group_cols)
+        scored = devd.join(mads, group_cols)
     else:
         scored = devd.crossJoin(F.broadcast(devd.agg(mad_agg)))
     out = scored.withColumn(

@@ -7,8 +7,8 @@ recursive-CTE greedy oracle, md5-MinHash-LSH candidates, md5-SimHash)
 AND the approximate ANN paths: md5-Rademacher LSH (full pipeline
 replayed in SQL), IVF and IVFPQ (the oracle replays TRAINING — sample,
 Lloyd iterations, assignment — not just the search). Only the
-xxhash64-native variants (MinHash, SimHash, LSH-kNN) and HLL stay
-rows-only, recall-tested in ``tests/test_llm_ops.py``.
+xxhash64-native variants (MinHash, SimHash) and HLL stay rows-only,
+recall-tested in ``tests/test_llm_ops.py``.
 """
 
 from __future__ import annotations
@@ -691,11 +691,6 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_dedup_pairs(emb, threshold=0.4, block_col="label")
 
 
-@case("q_sim_knn_lsh", oracle=None)  # rows-only; gated by q_sim_knn_lsh_recall
-def q_sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _knn_lsh(spark, sf_dir).select("query_id", "vec_id", "cos_sim", "rank")
-
-
 def _lsh_md5_oracle(dim: int = 64, n_planes: int = 4, n_tables: int = 8, k: int = 5) -> str:
     """Full ANN-pipeline oracle for the md5-Rademacher LSH: regenerates
     the ±1 planes (inlined as literals from the same md5 parity rule),
@@ -744,19 +739,13 @@ def _lsh_md5_oracle(dim: int = 64, n_planes: int = 4, n_tables: int = 8, k: int 
     """
 
 
-@case("q_sim_knn_lsh_md5", oracle=_lsh_md5_oracle())
-def q_sim_knn_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
+@case("q_sim_knn_lsh", oracle=_lsh_md5_oracle())
+def q_sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5-Rademacher LSH ANN: the oracle replays the ENTIRE pipeline
     (plane bits -> buckets -> candidate join -> fixed-point cosine ->
     rank) in SQL, so this approximate operator is hash-gated, not just
     rows-only."""
-    emb = table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return cosine_topk_lsh(
-        emb, queries, dim=64, k=5, n_planes=4, n_tables=8, hash_fn="md5"
-    ).select("query_id", "vec_id", "cos_sim", "rank")
+    return _knn_lsh(spark, sf_dir).select("query_id", "vec_id", "cos_sim", "rank")
 
 
 def _recall_gate(
@@ -768,7 +757,7 @@ def _recall_gate(
     deterministic, so ``passed`` is a stable fact the DuckDB oracle
     asserts as a literal row — turning a rows-only approximate case
     into a hash-gated assertion. Thresholds sit well under the
-    measured recall at sf0.001/0.01/0.1 (LSH 0.60-0.72, IVF
+    measured recall at sf0.001/0.01/0.1 (LSH 0.60-0.64, IVF
     0.52-0.76) so the gate is about catching regressions, not luck."""
     hits = approx.join(exact, ["query_id", "vec_id"]).agg(
         F.count(F.lit(1)).alias("n_hit")
@@ -794,8 +783,8 @@ _RECALL_GATE_ORACLE = (
 
 @case("q_sim_knn_lsh_recall", oracle=_RECALL_GATE_ORACLE.format(metric="lsh_recall_at_5"))
 def q_sim_knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall gate for the numpy-planes LSH ANN (whose bucket pipeline
-    has no SQL twin): recall@5 vs exact brute force must clear 0.5."""
+    """Recall gate for the LSH ANN: recall@5 vs exact brute force must
+    clear 0.5."""
     exact = _knn_exact(spark, sf_dir).select("query_id", "vec_id")
     approx = _knn_lsh(spark, sf_dir).select("query_id", "vec_id")
     return _recall_gate(approx, exact, "lsh_recall_at_5", 0.5)

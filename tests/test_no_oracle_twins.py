@@ -1,7 +1,7 @@
-"""Uniform equivalence gates for the 4 permanent no-oracle suite rows
+"""Uniform equivalence gates for the 3 permanent no-oracle suite rows
 (VERDICT r7 item 4).
 
-Four registered queries have no DuckDB twin by design (xxhash64 /
+Three registered queries have no DuckDB twin by design (xxhash64 /
 HLL-sketch internals DuckDB cannot replay). Each one here is tested
 against its ORACLE-GATED companion at the DECISION level — the output
 a user acts on — using the REGISTERED suite case functions themselves,
@@ -11,7 +11,6 @@ so the gate covers exactly what the driver runs rows-only:
 |-------------------------|------------------------------|---------------|
 | q_dedup_minhash         | q_dedup_ngram_jaccard        | verified pairs == exact truth |
 | q_dedup_simhash         | q_dedup_simhash_md5          | exact-dup pairs flagged by both |
-| q_sim_knn_lsh           | q_sim_knn (+_lsh_recall)     | recall@5 >= 0.5, bit-equal cosines |
 | q_agg_approx_distinct   | q_agg_approx_distinct_bound  | HLL within 3x rsd of exact |
 
 COVERAGE.md names each test next to its row.
@@ -80,21 +79,6 @@ def test_twin_q_dedup_simhash(spark, sf_dir, cases):
         missing = dup_pairs - set(got)
         assert not missing, f"{hash_fn} missed exact-dup pairs {missing}"
         assert all(got[p] == 0 for p in dup_pairs), hash_fn
-
-
-def test_twin_q_sim_knn_lsh(spark, sf_dir, cases):
-    """Random-hyperplane LSH vs the oracle-gated exact brute force:
-    recall@5 >= 0.5 (the same floor q_sim_knn_lsh_recall gates in the
-    driver run) and bit-equal scores on common hits."""
-    exact = cases["q_sim_knn"].spark_fn(spark, sf_dir)
-    approx = cases["q_sim_knn_lsh"].spark_fn(spark, sf_dir)
-    e = {(r.query_id, r.vec_id): r.cos_sim for r in exact.collect()}
-    a = {(r.query_id, r.vec_id): r.cos_sim for r in approx.collect()}
-    assert len(set(a) & set(e)) / len(e) >= 0.5
-    # every common hit must carry the identical fixed-point cosine the
-    # oracle-gated exact case publishes — bit-equal, not approx-equal
-    for k in set(a) & set(e):
-        assert a[k] == e[k], k
 
 
 def test_twin_q_agg_approx_distinct(spark, sf_dir, cases):

@@ -1,9 +1,10 @@
 """Randomized twin-agreement fuzz for the permanent no-oracle rows
-(r8 VERDICT item 3), plus the IVF full-probe identity.
+(r8 VERDICT item 3), plus the LSH-ANN recall floor and the IVF
+full-probe identity.
 
-``tests/test_no_oracle_twins.py`` gates the production (xxhash64 / HLL
-/ float-LSH) variants against their oracle-exact twins at
-ONE fixed hyperparameter point each. This tool randomizes the
+``tests/test_no_oracle_twins.py`` gates the production (xxhash64 / HLL)
+variants against their oracle-exact twins at ONE fixed hyperparameter
+point each; the suite's oracles fix LSH and IVF at one point too. This tool randomizes the
 hyperparameters per pipeline and asserts the decision-level agreement
 every time, with bounds derived from the parameters themselves rather
 than constants tuned to one configuration:
