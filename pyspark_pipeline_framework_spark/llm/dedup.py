@@ -784,63 +784,58 @@ def _star_components(
     - **small-star**: every node (oriented hi→lo) connects its
       smaller neighbors and itself to that minimum,
 
-    until the edge set is a fixpoint — a forest of stars whose centers
-    are the component minima. Worst-case O(log² n) rounds on any graph
-    (vs O(diameter) for label propagation), each round two shuffles of
-    (long, long) edges. Input must be oriented (u > v), self-loop-free,
-    distinct. Returns (star edges as (u=node, v=root), rounds run)."""
-    prev_stats = None
-    prev_edges: DataFrame | None = None
+    until the edge set is a forest of stars whose centers are the
+    component minima. Worst-case O(log² n) rounds on any graph, each
+    round four shuffles of (long, long) edges: one per phase, the
+    small-star's distinct and the stop test. Input must be oriented
+    (u > v) and self-loop-free; duplicates are allowed. Returns (star
+    edges as (u=node, v=root), rounds run)."""
     converged = False
     rounds = 0
     for rounds in range(1, max_iters + 1):
         sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        nbr_min = sym.groupBy("u").agg(F.min("v").alias("mn"))
         # large-star: emit (v, min(Γ⁺(u))) for every neighbor v > u —
         # each undirected edge is emitted exactly once, from its
         # smaller endpoint, so the output is already hi→lo oriented.
-        # NO distinct here (r13): duplicates cannot change the round —
-        # ``mins`` is a min-aggregate (dup-insensitive, and its partial
-        # agg collapses dups map-side before the exchange) and the
-        # small-star join's dup output rows vanish in ``small``'s final
-        # distinct — so deduping large only traded one full (u, v)
-        # exchange of the edge set PER ROUND for slightly fatter join
-        # input (dup multiplicity is bounded by neighbors sharing a
-        # least(u, mn); on the long-chain graphs this algorithm is the
-        # escape hatch for, degree ≤ 2 means near-zero dups).
-        large = (
-            sym.join(nbr_min, "u")
+        # Each minimum is a window over the edges of one node: one
+        # shuffle (a group-by joined back to the edges would take two).
+        # No distinct here or on the input: duplicates cannot change
+        # the round — the minima are dup-insensitive and the duplicate
+        # rows they produce vanish in the small-star's final distinct.
+        large = truncate_lineage(
+            sym.withColumn("mn", F.min("v").over(Window.partitionBy("u")))
             .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.least(F.col("u"), F.col("mn")).alias("v"))
+            .select(F.col("v").alias("u"), F.least(F.col("u"), F.col("mn")).alias("v")),
+            checkpoint_dir,
         )
-        large = truncate_lineage(large, checkpoint_dir)
         # small-star on the oriented output: for each hub u, attach u
         # and all its (smaller) neighbors to their minimum
-        mins = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(mins, "u")
-            .where(F.col("v") != F.col("m"))
+        hub = large.withColumn("m", F.min("v").over(Window.partitionBy("u")))
+        edges = truncate_lineage(
+            hub.where(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select("u", F.col("m").alias("v")))
-            .distinct()
+            .union(hub.select("u", F.col("m").alias("v")))
+            .distinct(),
+            checkpoint_dir,
         )
-        small = truncate_lineage(small, checkpoint_dir)
-        stats = small.agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("u").cast("decimal(38,0)")),
-            F.sum(F.col("v").cast("decimal(38,0)")),
-        ).first()
-        edges = small
-        if prev_stats is not None and tuple(stats) == tuple(prev_stats):
-            # the (count, Σu, Σv) match is a cheap necessary condition;
-            # confirm the fixpoint EXACTLY before declaring convergence
-            # so a sum collision can never yield wrong clusters (counts
-            # are equal, so one-sided multiset containment suffices)
-            if prev_edges is not None and small.exceptAll(prev_edges).isEmpty():
-                converged = True
-                break
-        prev_stats = stats
-        prev_edges = small
+        # Stop at a star forest: no node is a child (u) twice, and no
+        # child is also a parent (v). Every center is then smaller than
+        # its leaves, so the forest is a fixpoint of both large-star
+        # and small-star; contraction preserves connectivity, so each
+        # star is a whole component rooted at its minimum. Testing the
+        # round's own output is exact and stops one round before a
+        # test that compares two rounds' outputs.
+        roles = edges.select(F.col("u").alias("n"), F.lit(True).alias("child")).union(
+            edges.select(F.col("v").alias("n"), F.lit(False).alias("child"))
+        )
+        if (
+            roles.groupBy("n")
+            .agg(F.count(F.lit(1)).alias("k"), F.max("child").alias("child"))
+            .where(F.col("child") & (F.col("k") > 1))
+            .isEmpty()
+        ):
+            converged = True
+            break
     if not converged:
         logger.warning(
             "star-contraction did not reach a fixpoint within max_iters=%d "
@@ -855,105 +850,54 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iters: int = 25,
-    algorithm: str = "label",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Connected components over a candidate-pair edge list.
+    """Connected components over a candidate-pair edge list, by
+    two-phase large-star/small-star contraction (Kiveris et al., see
+    :func:`_star_components`): O(log² n) rounds on any graph shape,
+    long chains included. Every component is labeled by its smallest
+    member id.
 
-    ``algorithm="label"`` (default) is min-label propagation: every
-    node starts labeled with its own id; each round takes the min of
-    its label and its neighbors' labels; fixpoint = components labeled
-    by their smallest member id.
-
-    Scale notes (the dedup use case): near-dup components are
-    near-cliques, so the diameter — and the round count — is tiny
-    (2-4); each round is one shuffle of (node, label) longs, never
-    payloads. Convergence is detected from the monotone global label
-    sum (labels only ever decrease), a one-row aggregate per round
-    instead of a change-count join. Per-round ``localCheckpoint``
-    truncates the lineage so the plan doesn't grow with iterations;
-    pass ``checkpoint_dir`` (a fault-tolerant path — HDFS/S3 on a
-    cluster) to switch every per-round truncation to a RELIABLE
-    ``checkpoint()`` that survives executor loss — see
-    ``connect_compat.truncate_lineage`` for the tradeoff.
-
-    ``algorithm="star"`` is two-phase large-star/small-star contraction
-    (Kiveris et al.) — O(log² n) rounds on ANY graph shape, the escape
-    hatch for adversarial long-chain graphs where label propagation
-    needs O(diameter) rounds. Identical output contract.
+    Scale notes (the dedup use case): each round is four shuffles of
+    (long, long) edges, never payloads; near-dup components are
+    near-cliques, which usually contract to stars in one round. Each
+    round's edges are lineage-truncated with ``localCheckpoint`` so the plan
+    doesn't grow with iterations; pass ``checkpoint_dir`` (a
+    fault-tolerant path — HDFS/S3 on a cluster) to switch every
+    truncation to a RELIABLE ``checkpoint()`` that survives executor
+    loss — see ``connect_compat.truncate_lineage`` for the tradeoff.
+    A graph that needs more than ``max_iters`` rounds logs a warning.
 
     Returns (id, cluster_id) for every node that appears in ``pairs``.
     Reference parity: the reference has no graph operators at all —
     this is [beyond-ref] plumbing required by LLM dedup (SURVEY §2.8).
     """
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
-    e1 = pairs.select(F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v"))
-    if algorithm == "star":
-        oriented = truncate_lineage(
-            e1.where(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct(),
-            checkpoint_dir,
-        )
-        stars, _ = _star_components(oriented, max_iters, checkpoint_dir)
-        nodes = (
-            e1.select("u").union(e1.select(F.col("v").alias("u"))).distinct()
-        )
-        parents = stars.groupBy("u").agg(F.min("v").alias("root"))
-        return (
-            nodes.join(parents, "u", "left")
-            .select(F.col("u").alias("id"), F.coalesce("root", F.col("u")).alias("cluster_id"))
-        )
-    edges = truncate_lineage(
-        e1.union(e1.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),
+    # truncated once: the rounds and the final labels both read the
+    # edges, and ``pairs`` may be a long lineage (verified pairs)
+    e1 = truncate_lineage(
+        pairs.select(F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v")),
         checkpoint_dir,
     )
-    # fused round 1: with labels initialized to own ids, the first
-    # propagation is just min(id, min neighbor id) — one groupBy over
-    # the edge list instead of a join round. Seeding prev_sum with the
-    # init labels' sum lets near-clique dedup graphs (diameter ≤ 2)
-    # terminate after a single join round instead of three.
-    labels = truncate_lineage(
-        edges.groupBy("u")
-        .agg(F.min("v").alias("__mn"))
-        .select(F.col("u").alias("id"), F.least("u", "__mn").alias("label")),
-        checkpoint_dir,
+    oriented = e1.where(F.col("u") != F.col("v")).select(
+        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
     )
-    prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-    for _ in range(max_iters):
-        nbr_min = (
-            edges.join(labels, edges.v == labels.id)
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        labels = truncate_lineage(
-            labels.join(nbr_min, labels.id == nbr_min.u, "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias("label"),
-            ),
-            checkpoint_dir,
-        )
-        cur_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-        if prev_sum is not None and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        logger.warning(
-            "label propagation did not reach a fixpoint within max_iters=%d "
-            "rounds; cluster assignments may be incomplete — raise max_iters "
-            "or use algorithm='star'",
-            max_iters,
-        )
-    return labels.select("id", F.col("label").alias("cluster_id"))
+    stars, _ = _star_components(oriented, max_iters, checkpoint_dir)
+    # every node labels itself, and a star leaf also its (smaller)
+    # center: one group-by yields each node's root, roots and
+    # self-loop-only nodes included
+    return (
+        e1.select(F.col("u").alias("id"), F.col("u").alias("cluster_id"))
+        .union(e1.select("v", "v"))
+        .union(stars.select("u", "v"))
+        .groupBy("id")
+        .agg(F.min("cluster_id").alias("cluster_id"))
+    )
 
 
 def dedup_clusters(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    algorithm: str = "label",
     checkpoint_dir: str | None = None,
     score_col: str | None = None,
     keep: str = "max",
@@ -976,7 +920,7 @@ def dedup_clusters(
     component labels; the corpus itself is never shuffled on anything
     but the join key. The scoring window runs over cluster MEMBERS
     only (rows that appear in ``pairs``), never the whole corpus."""
-    cc = connected_components(pairs, algorithm=algorithm, checkpoint_dir=checkpoint_dir)
+    cc = connected_components(pairs, checkpoint_dir=checkpoint_dir)
     base = (
         df.select(F.col(id_col))
         .join(cc, F.col(id_col) == cc.id, "left")

@@ -95,12 +95,24 @@ def drop_corrupt_vectors(
     DuckDB's is NaN (compares greater than every real score). Every
     cosine-ranking operator in this module enables it, and every SQL
     oracle carries the matching ``doti(v,v) > 0`` predicate (r8,
-    uniform completion of the r7 ADVICE semantic-dedup finding)."""
+    uniform completion of the r7 ADVICE semantic-dedup finding). It
+    also drops vectors that cannot be scored exactly: a NaN or
+    infinite element, or a fixed-point squared norm that does not fit
+    in a long (it would raise ``ARITHMETIC_OVERFLOW`` under ANSI, or
+    wrap without it). The norm that screens them is NULL for such a
+    vector and raises on none, so the filter does not depend on the
+    order in which its conjuncts are evaluated."""
     cond = F.col(vec_col).isNotNull()
     if dim is not None:
         cond = cond & (F.size(vec_col) == dim)
     if drop_zero_norm:
-        cond = cond & (_dot_decimal(vec_col, vec_col) > 0)
+        # a product at or past 2^63 (NaN and inf included: neither
+        # compares below it) and a partial sum past Long.MAX both
+        # turn the fold NULL
+        p = f"CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * {_DOT_SCALE!r}D"
+        fits = f"CASE WHEN {p} < {2.0**63!r}D THEN floor({p}) END"
+        norm = f"aggregate({_quote(vec_col)}, 0L, (acc, x) -> try_add(acc, {fits}))"
+        cond = cond & (F.expr(norm) > 0)
     return df.filter(cond)
 
 

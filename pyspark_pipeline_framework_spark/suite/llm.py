@@ -1391,7 +1391,7 @@ _CLUSTER_ORACLE = r"""
 
 def _cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard >= 0.8 edge list, shared (fixture memo)
-    between the label-propagation and star-contraction cluster cases."""
+    between the cluster cases."""
     return shared_df(
         spark,
         ("cluster_pairs", sf_dir, 3, 0.8),
@@ -1404,29 +1404,15 @@ def _cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @case("q_dedup_cluster", oracle=_CLUSTER_ORACLE)
 def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup canonicalization end-to-end: exact 3-gram Jaccard
-    pairs (>= 0.8) -> connected components (min-label propagation) ->
-    every doc mapped to its component's smallest id. The oracle walks
-    the same edges with a recursive CTE — transitive-closure semantics,
-    so the iterative Spark labeling is checked against an independent
-    fixpoint formulation."""
-    from pyspark_pipeline_framework_spark.llm.dedup import dedup_clusters, ngram_jaccard_pairs
+    pairs (>= 0.8) -> connected components (large-star/small-star
+    contraction) -> every doc mapped to its component's smallest id.
+    The oracle walks the same edges with a recursive CTE —
+    transitive-closure semantics, so the iterative Spark contraction is
+    checked against an independent fixpoint formulation."""
+    from pyspark_pipeline_framework_spark.llm.dedup import dedup_clusters
 
     d = table(spark, sf_dir, "documents")
     return dedup_clusters(d, _cluster_pairs(spark, sf_dir))
-
-
-@case("q_dedup_cluster_star", oracle=_CLUSTER_ORACLE)
-def q_dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same canonicalization pipeline driven through the two-phase
-    large-star/small-star contraction (Kiveris et al.) instead of label
-    propagation — the O(log² n)-round escape hatch for long-chain
-    graphs. Oracled by the identical recursive-CTE transitive closure,
-    so both algorithms are independently proven against the same
-    fixpoint."""
-    from pyspark_pipeline_framework_spark.llm.dedup import dedup_clusters, ngram_jaccard_pairs
-
-    d = table(spark, sf_dir, "documents")
-    return dedup_clusters(d, _cluster_pairs(spark, sf_dir), algorithm="star")
 
 
 def _pii_oracle() -> str:

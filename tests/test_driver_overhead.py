@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from pyspark_pipeline_framework_spark.io.readers import Catalog
 from pyspark_pipeline_framework_spark.llm.dedup import (
+    connected_components,
     minhash_bands,
     minhash_candidate_pairs,
 )
@@ -146,6 +147,35 @@ def test_ivfpq_search_runs_few_jobs(spark, sf_dir, tmp_path):
         assert len(ivfpq_search(store, C, B, q, 64, k=5, nprobe=3).collect()) == 25
 
     assert _jobs_run_by(spark.sparkContext, "ivfpq-search-jobs", search) <= IVFPQ_SEARCH_JOBS
+
+
+#: Spark jobs one ``connected_components(...).collect()`` may run on a
+#: graph of near-cliques (the shape of verified near-dup pairs), which
+#: contracts to a star forest in one round: 7 here. Confirming the
+#: fixpoint by comparing two rounds' outputs took 25, and moving labels
+#: one hop per round 21.
+CC_NEAR_CLIQUE_JOBS = 9
+
+
+def test_connected_components_on_near_cliques_runs_few_jobs(spark):
+    import random
+
+    rng = random.Random(3)
+    edges = []
+    while len(edges) < 60:
+        ids = rng.sample(range(1, 10**6), rng.randint(2, 4))
+        clique = [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+        if len(clique) > 2:
+            clique.pop(rng.randrange(len(clique)))  # diameter 2, still connected
+        edges.extend(clique)
+    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+    out = []
+
+    def run():
+        out.extend(connected_components(pairs).collect())
+
+    assert _jobs_run_by(spark.sparkContext, "cc-near-cliques", run) <= CC_NEAR_CLIQUE_JOBS
+    assert len(out) == len({i for e in edges for i in e})
 
 
 def test_ensure_parallelism_runs_no_job_on_an_adaptive_input(spark):

@@ -557,41 +557,90 @@ def test_corpus_stats_counts_and_share(spark):
     assert abs(st["s1"].mean_tokens - 2.5) < 1e-12
 
 
-def test_connected_components_star_matches_label(spark):
-    from pyspark_pipeline_framework_spark.llm.dedup import connected_components
+def _union_find_components(edges):
+    """Plain-Python reference: node -> smallest id of its component."""
+    parent = {}
 
-    pairs = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 9), (5, 6), (7, 7)], ["id_a", "id_b"]
-    )
-    star = {r.id: r.cluster_id for r in connected_components(pairs, algorithm="star").collect()}
-    label = {r.id: r.cluster_id for r in connected_components(pairs, algorithm="label").collect()}
-    assert star == label == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5, 7: 7}
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
 
 
-def test_connected_components_star_random_graph_matches_label(spark):
+def _cc_graph(name):
     import random
 
+    rng = random.Random(7)
+    if name == "random_clusters":
+        # 40 clusters of 2-8 nodes: a random spanning chain plus noise
+        # edges inside each cluster — the dedup-graph shape
+        edges = []
+        for c in range(40):
+            ids = [c * 100 + i for i in range(rng.randint(2, 8))]
+            edges.extend(zip(ids, ids[1:]))
+            edges.extend((rng.choice(ids), rng.choice(ids)) for _ in range(3))
+        return edges
+    if name.startswith("path_"):
+        ids = list(range(200))
+        if name == "path_descending":
+            ids.reverse()
+        elif name == "path_shuffled":
+            rng.shuffle(ids)
+        return list(zip(ids, ids[1:]))
+    if name == "tree_shuffled":
+        ids = list(range(1023))
+        rng.shuffle(ids)
+        return [(ids[i], ids[(i - 1) // 2]) for i in range(1, len(ids))]
+    if name == "hub_and_chains":
+        # one hub with 3,000 leaves, half of them smaller than the hub,
+        # chains hanging off some leaves, and a separate chain
+        hub = 51_500
+        edges = [(hub, leaf) for leaf in range(50_000, 53_001) if leaf != hub]
+        for c in range(5):
+            chain = [60_000 + 100 * c + i for i in range(30)]
+            edges.append((50_001 + 7 * c, chain[0]))
+            edges.extend(zip(chain, chain[1:]))
+        edges.extend((49_000 + 2 * i, 49_000 + 2 * i + 2) for i in range(40))
+        return edges
+    assert name == "loops_and_duplicates"
+    return [(2, 1), (1, 2), (2, 1), (2, 3), (3, 9), (5, 6), (6, 5), (7, 7),
+            (11, 11), (11, 12), (12, 11), (12, 12)]
+
+
+@pytest.mark.parametrize("graph", [
+    "random_clusters", "path_ascending", "path_descending", "path_shuffled",
+    "tree_shuffled", "hub_and_chains", "loops_and_duplicates",
+])
+def test_connected_components_matches_union_find(spark, graph):
     from pyspark_pipeline_framework_spark.llm.dedup import connected_components
 
-    rng = random.Random(7)
-    # 40 clusters of ~8 nodes with random intra-cluster spanning edges
-    # plus noise edges inside clusters — the dedup-graph shape
-    edges = []
-    for c in range(40):
-        ids = [c * 100 + i for i in range(rng.randint(2, 8))]
-        for a, b in zip(ids, ids[1:]):
-            edges.append((a, b))
-        for _ in range(3):
-            edges.append((rng.choice(ids), rng.choice(ids)))
+    edges = _cc_graph(graph)
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    star = {r.id: r.cluster_id for r in connected_components(pairs, algorithm="star").collect()}
-    label = {r.id: r.cluster_id for r in connected_components(pairs, algorithm="label").collect()}
-    assert star == label
+    got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
+    assert got == _union_find_components(edges)
+
+
+def test_connected_components_default_long_path_is_one_component(spark):
+    """A 61-node path is 60 hops long, more than the default max_iters:
+    the default call must still return one component."""
+    from pyspark_pipeline_framework_spark.llm.dedup import connected_components
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(60)], ["id_a", "id_b"])
+    got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
+    assert got == {i: 0 for i in range(61)}
 
 
 def test_connected_components_star_path_graph_logsq_rounds(spark):
-    """The judge-specified property: a 10k-node PATH graph — worst case
-    for label propagation (O(n) rounds) — must converge under star
+    """A 10k-node PATH graph — the worst case for anything that moves
+    a label one hop per round (O(n) rounds) — must converge under star
     contraction in O(log² n) rounds with the correct single component."""
     from pyspark.sql import functions as F
 
@@ -604,8 +653,8 @@ def test_connected_components_star_path_graph_logsq_rounds(spark):
         .localCheckpoint(eager=False)
     )
     stars, rounds = _star_components(edges, max_iters=25)
-    # ~log2(10k) ≈ 13.3 contraction rounds + 1 fixpoint-confirmation
-    # round; far below the O(n)=10k label-propagation bound
+    # ~log2(10k) ≈ 13.3 contraction rounds, the last one ending on a
+    # star forest; far below the O(n)=10k one-hop-per-round bound
     assert rounds <= 16
     roots = stars.select("v").distinct().collect()
     assert [r.v for r in roots] == [0]  # single component rooted at min id
@@ -613,8 +662,8 @@ def test_connected_components_star_path_graph_logsq_rounds(spark):
 
 
 def test_star_components_warns_on_max_iters_exhaustion(spark, caplog):
-    """Exhausting max_iters without a confirmed fixpoint must warn loudly
-    instead of silently returning possibly-wrong clusters."""
+    """Exhausting max_iters without reaching a star forest must warn
+    loudly instead of silently returning possibly-wrong clusters."""
     from pyspark.sql import functions as F
 
     from pyspark_pipeline_framework_spark.llm.dedup import _star_components
@@ -639,27 +688,27 @@ def test_star_components_warns_on_max_iters_exhaustion(spark, caplog):
 
 
 def test_label_components_warn_on_max_iters_exhaustion(spark, caplog):
-    """Label propagation moves a label one hop per round, so a path
-    longer than max_iters leaves its far end unconverged: that must
-    warn like star contraction does, and a run that converges must not."""
+    """The public connected_components labels a path longer than
+    max_iters allows with its far end cut off: that must warn, and a
+    run that converges must not warn."""
     import logging
 
     from pyspark_pipeline_framework_spark.llm.dedup import connected_components
 
-    path = spark.createDataFrame([(i, i + 1) for i in range(11)], ["id_a", "id_b"])
+    path = spark.createDataFrame([(i, i + 1) for i in range(63)], ["id_a", "id_b"])
     pkg = logging.getLogger("pyspark_pipeline_framework_spark")
     saved = pkg.propagate
     pkg.propagate = True
     try:
         with caplog.at_level("WARNING", logger="pyspark_pipeline_framework_spark.llm.dedup"):
-            cut = {r.id: r.cluster_id for r in connected_components(path, max_iters=3).collect()}
-            warned = [r for r in caplog.records if "label propagation did not reach" in r.message]
+            cut = {r.id: r.cluster_id for r in connected_components(path, max_iters=1).collect()}
+            warned = [r for r in caplog.records if "did not reach a fixpoint" in r.message]
             caplog.clear()
             full = {r.id: r.cluster_id for r in connected_components(path).collect()}
             assert not [r for r in caplog.records if "did not reach" in r.message]
     finally:
         pkg.propagate = saved
-    assert cut[11] != 0, "the far end converged: the path no longer exercises the cut"
+    assert cut[63] != 0, "the far end converged: the path no longer exercises the cut"
     assert warned
     assert set(full.values()) == {0}
 
@@ -717,13 +766,10 @@ def test_reliable_checkpoint_matches_local_and_truncates(spark, tmp_path):
     edges = [(1, 2), (2, 3), (7, 8), (10, 10), (4, 3)]
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     ckpt = str(tmp_path / "cc_ckpt")
-    for algo in ("label", "star"):
-        local = {r.id: r.cluster_id
-                 for r in connected_components(pairs, algorithm=algo).collect()}
-        reliable = {r.id: r.cluster_id
-                    for r in connected_components(
-                        pairs, algorithm=algo, checkpoint_dir=ckpt).collect()}
-        assert reliable == local
+    local = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
+    reliable = {r.id: r.cluster_id
+                for r in connected_components(pairs, checkpoint_dir=ckpt).collect()}
+    assert reliable == local
     # reliable mode must have materialized state under the dir
     found = [f for root, _, fs in os.walk(ckpt) for f in fs]
     assert found, "no checkpoint files written under checkpoint_dir"
@@ -1237,6 +1283,44 @@ def test_zero_norm_vectors_excluded_from_all_cosine_ops(spark, sf_dir):
     pairs = embedding_dedup_pairs(corpus, threshold=-1.0, block_col="label")
     pids = {i for r in pairs.collect() for i in (r.id_a, r.id_b)}
     assert not (pids & bad_ids)
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_unscorable_vectors_are_dropped_with_ansi_on_and_off(spark, sf_dir, ansi):
+    """A vector with an infinite or NaN element, or whose fixed-point
+    squared norm does not fit in a long (one 1e6 element), is dropped
+    at the cosine boundary: brute-force top-k neither raises (ANSI
+    long overflow in the norm) nor returns it, as a query or a
+    neighbor, and the clean rows' result is unchanged."""
+    from pyspark_pipeline_framework_spark.llm.similarity import cosine_topk_bruteforce
+
+    dim = 64
+    emb = table(spark, sf_dir, "embeddings").limit(30).select("vec_id", "embedding")
+    clean = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
+    tail = [0.5] * (dim - 1)
+    bad = [
+        (900001, [float("inf")] + tail),
+        (900002, [1e6] + tail),
+        (900003, [float("nan")] + tail),
+        (900004, tail + [float("-inf")]),
+    ]
+    schema = "vec_id long, embedding array<double>"
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, ansi)
+    try:
+        def knn(rows):
+            corpus = spark.createDataFrame(rows, schema)
+            queries = corpus.filter(
+                (F.col("vec_id") < 3) | (F.col("vec_id") > 900000)
+            ).withColumnRenamed("vec_id", "query_id")
+            return sorted(map(tuple, cosine_topk_bruteforce(corpus, queries, k=5, dim=dim).collect()))
+
+        got = knn(clean + bad)
+        assert got == knn(clean)
+    finally:
+        spark.conf.set(key, old)
+    assert len(got) == 15
 
 
 def test_ivf_search_prune_cells_repeated_calls_no_accumulation(spark, sf_dir, tmp_path):
