@@ -5,8 +5,9 @@ cosine), similarity search (brute-force + LSH-bucketed ANN), text
 analysis (token counts, quality features, language-ID heuristic,
 fingerprinting) and multimodal binary-column plumbing — every operator
 a shuffle-bounded DataFrame composition designed for 100 TB:
-no driver collects, no unblocked N² pairs, JVM-side hashing
-(xxhash64/md5) instead of Python UDFs wherever possible.
+no driver collects, no unblocked N² pairs, JVM-side hashing instead of
+Python UDFs wherever possible. Hashes are md5, recomputable in any SQL
+engine, except MinHash, whose ``hash_fn`` also offers xxhash64.
 """
 
 from pyspark_pipeline_framework_spark.llm.text import (

@@ -19,6 +19,7 @@ round-trips, thousands per plan.
 from __future__ import annotations
 
 import logging
+import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -432,14 +433,19 @@ def incremental_candidate_pairs(
     shingle_k, hash_fn)`` — the band schema cannot carry that, and a
     mismatch joins incompatible hash spaces, silently missing or
     fabricating pairs. ``validate=True`` adds a cheap structural check
-    (two 1-row aggregates: the stores' band counts must agree) that
+    (one aggregate over both stores: their band counts must agree) that
     catches the most common drift, a changed ``bands``; hash-scheme
     drift at equal band count is undetectable from the store — version
     your store paths.
     """
     if validate:
-        nb_new = new_bands.agg(F.max("band_idx")).first()[0]
-        nb_old = corpus_bands.agg(F.max("band_idx")).first()[0]
+        # one job for both stores' band counts: side 0 = new, 1 = corpus
+        nb = dict(
+            new_bands.select(F.lit(0).alias("side"), "band_idx")
+            .unionByName(corpus_bands.select(F.lit(1).alias("side"), "band_idx"))
+            .groupBy("side").agg(F.max("band_idx")).collect()
+        )
+        nb_new, nb_old = nb.get(0), nb.get(1)
         if nb_new is not None and nb_old is not None and nb_new != nb_old:
             raise ValueError(
                 f"band-store mismatch: new side has {nb_new + 1} bands, "
@@ -647,22 +653,15 @@ def simhash(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash signature: per word, take word-hash bits; sum ±1 per bit
-    position over all words; signature bit = sign. Near-dup docs have
-    small Hamming distance. Pure array expressions — map-only.
+    """64-bit SimHash signature: per word, take word-hash bits; sum ±1
+    per bit position over all words; signature bit = sign. Near-dup
+    docs have small Hamming distance. Pure array expressions — map-only.
 
-    ``hash_fn="md5"`` (engine-portable): word hash = first 15 hex chars
-    of md5 as a 60-bit int — the top 4 signature bits are always 0 and
-    every engine with md5 recomputes the identical signature (the SWAR
-    lane aggregation below is unchanged; an oracle can cross-check it
-    with a naive per-bit majority count)."""
-    if bits != 64:
-        raise ValueError("simhash is fixed at 64 bits (word-hash width)")
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+    The word hash is the first 15 hex chars of md5 as a 60-bit int, so
+    the top 4 signature bits are always 0 and every engine with md5
+    recomputes the identical signature (an oracle cross-checks the SWAR
+    lane aggregation below with a naive per-bit majority count)."""
     # SWAR bit-slicing: sum ((h >> j) & 0x0001000100010001) for j=0..15
     # — each of the 16 sums carries FOUR bit-position counts in its
     # 16-bit lanes (positions j, j+16, j+32, j+48), so the aggregate is
@@ -675,10 +674,7 @@ def simhash(
     # the ±1-sum > 0 rule rewritten in counts).
     lane_mask = 0x0001000100010001
     words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    if hash_fn == "md5":
-        word_hash = F.conv(F.substring(F.md5(F.col("__w")), 1, 15), 16, 10).cast("long")
-    else:
-        word_hash = F.xxhash64("__w")
+    word_hash = F.conv(F.substring(F.md5(F.col("__w")), 1, 15), 16, 10).cast("long")
     # filter the '' word (blank/NULL text reduces to ['']): otherwise
     # every blank document gets the IDENTICAL signature — one LSH block
     # bucket shared by all of them, O(m²) spurious pairs at scale (same
@@ -969,17 +965,14 @@ def passage_dedup(
     text_col: str = "text",
     window: int = 20,
     stride: int = 20,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Passage-level exact dedup (boilerplate removal): cut each
     document into ``window``-word passages every ``stride`` words,
     hash each passage, and mark every occurrence after the corpus-wide
     first (ordered by doc id, then position) as a duplicate. Returns
     (id, pos, passage_hash, is_duplicate) — callers drop flagged
-    passages or route docs with high duplicate share to review.
-
-    ``hash_fn="md5"`` is engine-portable (SQL oracles recompute it);
-    ``"xxhash64"`` is the cheaper scale default inside Spark.
+    passages or route docs with high duplicate share to review. The
+    passage hash is md5, so SQL oracles recompute it.
 
     Scale: passages are map-side column expressions (no UDF); the only
     shuffle is the window partition on the passage hash — 16-to-32-byte
@@ -987,8 +980,6 @@ def passage_dedup(
     boilerplate header) lands in one partition but carries only its
     tiny rows, and the first-occurrence rule needs exactly that
     grouping."""
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
     # words materialized as a column — see _shingles_from_words: an
     # inline split would re-run the regex once per passage inside the
     # interpreted transform()
@@ -997,15 +988,11 @@ def passage_dedup(
     starts = F.sequence(
         F.lit(1), F.greatest(n - (window - 1), F.lit(1)), F.lit(stride)
     )
-    text_of = lambda i: F.concat_ws(" ", F.slice(words, i, window))  # noqa: E731
-    if hash_fn == "md5":
-        hash_of = lambda i: F.md5(text_of(i))  # noqa: E731
-    else:
-        hash_of = lambda i: F.xxhash64(text_of(i)).cast("string")  # noqa: E731
     passages = F.transform(
         starts,
         lambda i: F.struct(
-            i.cast("long").alias("pos"), hash_of(i).alias("passage_hash")
+            i.cast("long").alias("pos"),
+            F.md5(F.concat_ws(" ", F.slice(words, i, window))).alias("passage_hash"),
         ),
     )
     ex = (
@@ -1023,7 +1010,6 @@ def duplicated_spans(
     min_tokens: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Exact-substring (span-level) dedup — the ExactSubstr shape from
     the training-data dedup literature: find every MAXIMAL token span
@@ -1052,12 +1038,11 @@ def duplicated_spans(
     each expands by ``min_tokens - 1`` tokens to the right, so starts
     separated by a gap of <= min_tokens-2 intersect) — consumers
     summing ``span_tokens`` per doc would double-count; ``cut_spans``
-    uses an exists() coverage test and is overlap-safe. ``hash_fn="md5"`` is engine-portable (the
-    suite oracle replays grams, counts and islands in SQL);
-    ``"xxhash64"`` is the cheaper in-Spark default. Hash collisions
-    conflate distinct grams with negligible probability (64-bit/128-bit
-    keyspace) — acceptable for a dedup screen, as with the rest of the
-    hash family.
+    uses an exists() coverage test and is overlap-safe. Grams hash with
+    md5, so the suite oracle replays grams, counts and islands in SQL.
+    Hash collisions conflate distinct grams with negligible probability
+    (128-bit keyspace) — acceptable for a dedup screen, as with the
+    rest of the hash family.
 
     Scale: the gram stream is one map-side explode (~one row per
     corpus token: a hash + doc id + int position, never the text); the
@@ -1069,7 +1054,7 @@ def duplicated_spans(
     Reference point: passage_dedup (above) flags fixed windows at a
     stride; this finds exact maximal duplicated REGIONS at token
     granularity."""
-    grams = substring_gram_stream(df, min_tokens, id_col, text_col, hash_fn)
+    grams = substring_gram_stream(df, min_tokens, id_col, text_col)
     dup_hashes = grams.groupBy("gh").count().where(F.col("count") >= 2).select("gh")
     # merge hint (same rationale as minhash_candidate_pairs): the dup
     # set GROWS with the corpus, so an AQE broadcast is a runtime
@@ -1086,13 +1071,12 @@ def substring_gram_stream(
     min_tokens: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """The persistable **gram-position store** behind exact-substring
     dedup: ``(id, p, gh)`` — one row per overlapping ``min_tokens``-gram
     of the ``\\s+``-split lowercased text, ``p`` the 1-based start
-    position, ``gh`` the gram hash. This is the artifact an incremental
-    span-dedup pipeline keeps BETWEEN runs (the analogue of
+    position, ``gh`` the gram's md5 hex digest. This is the artifact an
+    incremental span-dedup pipeline keeps BETWEEN runs (the analogue of
     :func:`minhash_bands`' band store): write it partitioned by
     ``batch_id`` (and ideally bucketed by ``gh``) and each day's batch
     joins against the store without re-hashing the historical corpus —
@@ -1100,8 +1084,6 @@ def substring_gram_stream(
     explode, no shuffle)."""
     if min_tokens < 2:
         raise ValueError(f"min_tokens must be >= 2, got {min_tokens}")
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
     L = int(min_tokens)
     words = F.col("__words")
     n = F.size(words)
@@ -1110,11 +1092,6 @@ def substring_gram_stream(
     starts = F.when(n >= L, F.sequence(F.lit(1), n - (L - 1))).otherwise(
         F.array().cast("array<int>")
     )
-    text_of = lambda i: F.concat_ws(" ", F.slice(words, i, L))  # noqa: E731
-    if hash_fn == "md5":
-        hash_of = lambda i: F.md5(text_of(i))  # noqa: E731
-    else:
-        hash_of = lambda i: F.xxhash64(text_of(i)).cast("string")  # noqa: E731
     return (
         ensure_parallelism(df)
         .withColumn("__words", _word_array(text_col))
@@ -1124,7 +1101,8 @@ def substring_gram_stream(
                 F.transform(
                     starts,
                     lambda i: F.struct(
-                        i.cast("long").alias("p"), hash_of(i).alias("gh")
+                        i.cast("long").alias("p"),
+                        F.md5(F.concat_ws(" ", F.slice(words, i, L))).alias("gh"),
                     ),
                 )
             ).alias("__g"),
@@ -1211,15 +1189,14 @@ def incremental_duplicated_spans(
     merge-hinted exactly like the batch path. Nothing is ever
     corpus×corpus, and no text is re-tokenized.
 
-    Both stores MUST be built with identical ``(min_tokens, hash_fn)``
-    — the schema cannot carry that, and a mismatch joins incompatible
-    hash spaces. ``validate=True`` adds a cheap structural check (two
-    1-row probes: an md5 gram hash is 32 hex chars, an xxhash64 one a
-    signed decimal string — the same drift the band-store validate
-    catches); ``min_tokens`` drift at equal hash_fn is undetectable
-    from the store — version your store paths. Document ids must be
-    unique across batches (re-ingest of an existing id would double
-    its positions; delete it from the stores first — see
+    Both stores MUST be built with the same ``min_tokens`` — the
+    schema cannot carry it, and the drift is undetectable from the
+    store: version your store paths. ``validate=True`` adds a cheap
+    structural check (one 1-row probe of the corpus store: its gram
+    hash must be a 32-char md5 hex digest), which catches a store
+    written by an older release whose gram hash was xxhash64. Document
+    ids must be unique across batches (re-ingest of an existing id
+    would double its positions; delete it from the stores first — see
     :func:`substring_count_partials` on negative partials).
 
     ``pin_intermediates`` (default True) pins the batch-proportional
@@ -1236,18 +1213,12 @@ def incremental_duplicated_spans(
     executor churn (spot/preemptible nodes, aggressive downscaling)
     where a recomputable-but-slower plan is the better trade."""
     if validate:
-        probes = [new_grams.select("gh").first(), corpus_grams.select("gh").first()]
-        # an md5 digest is exactly 32 hex chars; an xxhash64 rendered
-        # as a signed decimal string is at most 20 chars
-        kinds = [
-            None if p is None else ("md5" if len(p[0]) == 32 else "xxhash64")
-            for p in probes
-        ]
-        if None not in kinds and kinds[0] != kinds[1]:
+        probe = corpus_grams.select("gh").first()
+        if probe is not None and not re.fullmatch("[0-9a-f]{32}", probe[0] or ""):
             raise ValueError(
-                f"gram-store mismatch: new side hashes look like {kinds[0]}, "
-                f"corpus store like {kinds[1]} — both sides must be built "
-                "with identical (min_tokens, hash_fn)"
+                f"gram-store mismatch: the corpus store holds gram hash "
+                f"{probe[0]!r}, not an md5 hex digest — rebuild the gram "
+                "store with substring_gram_stream"
             )
     if corpus_counts is None:
         corpus_counts = substring_count_partials(corpus_grams)

@@ -16,27 +16,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _hash_bucket(id_col: str, salt: str, modulus: int, hash_fn: str):
-    """Deterministic non-negative bucket in [0, modulus).
-
-    ``xxhash64`` is the scale default (one JVM hash per row).
-    ``md5`` is the ENGINE-PORTABLE mode: bucket = first-8-hex-chars of
-    ``md5(id || ':' || salt)`` as a uint32 — recomputable in DuckDB
+def _hash_bucket(id_col: str, salt: str, modulus: int):
+    """Deterministic non-negative bucket in [0, modulus): the first 8
+    hex chars of ``md5(id || ':' || salt)`` as a uint32, mod
+    ``modulus`` — recomputable in DuckDB
     (``CAST('0x'||substr(md5(..),1,8) AS BIGINT)``), Python, or any
-    warehouse, so external systems can verify exactly which rows landed
-    where. Slightly costlier per row; same distribution quality."""
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(F.col(id_col), F.lit(salt)), F.lit(modulus))
-    if hash_fn == "md5":
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        return F.pmod(h, F.lit(modulus))
-    raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
+    warehouse, so external systems can verify exactly which rows
+    landed where."""
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt))), 1, 8),
+        16,
+        10,
+    ).cast("bigint")
+    return F.pmod(h, F.lit(modulus))
+
+
+def _shard_and_order(id_col: str, salt: str, num_shards: int):
+    """The ``(shard, order key)`` pair of :func:`global_shuffle` and
+    :func:`sample_to_token_budget`: shard = :func:`_hash_bucket` of
+    ``salt``, order key = ``md5(id || ':' || salt || ':pos')``."""
+    order_h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt + ":pos")))
+    return _hash_bucket(id_col, salt, num_shards).cast("int"), order_h
 
 
 def split_by_hash(
@@ -45,17 +45,15 @@ def split_by_hash(
     fractions: dict[str, float],
     salt: str = "split",
     out_col: str = "split",
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic train/valid/test split: bucket = hash(id, salt)
     mod 10_000 mapped onto cumulative fraction ranges. Stable across
-    runs, sessions, and cluster sizes — no RNG, no sampling drift.
-    ``hash_fn="md5"`` makes membership recomputable outside Spark (see
-    :func:`_hash_bucket`)."""
+    runs, sessions, and cluster sizes — no RNG, no sampling drift;
+    membership is recomputable outside Spark (see :func:`_hash_bucket`)."""
     total = sum(fractions.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    bucket = _hash_bucket(id_col, salt, 10_000, hash_fn)
+    bucket = _hash_bucket(id_col, salt, 10_000)
     expr = None
     acc = 0.0
     for name, frac in fractions.items():
@@ -80,7 +78,6 @@ def pack_sequences(
     id_col: str = "doc_id",
     tokens_col: str = "n_tokens",
     num_shards: int | str = 64,
-    hash_fn: str = "xxhash64",
     max_rows_per_shard: int | None = 2_000_000,
 ) -> DataFrame:
     """Greedy sequential packing: within each shard (deterministic hash
@@ -147,7 +144,7 @@ def pack_sequences(
 
     sharded = df.select(
         F.col(id_col).alias("doc_id"),
-        _hash_bucket(id_col, "shard", num_shards, hash_fn).cast("int").alias("shard"),
+        _hash_bucket(id_col, "shard", num_shards).cast("int").alias("shard"),
         F.col(tokens_col).cast("int").alias("n_tokens"),
     )
     return sharded.groupBy("shard").applyInPandas(pack_shard, schema=PACKED_SCHEMA)
@@ -394,7 +391,6 @@ def global_shuffle(
     id_col: str = "doc_id",
     num_shards: int = 64,
     salt: str = "shuffle",
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic GLOBAL shuffle into training order: every row gets
     a ``(shard, pos)`` address — shard by hash, position by the hash's
@@ -419,19 +415,12 @@ def global_shuffle(
     the numeric-id contract on the dedup operators). Dedup or
     synthesize a unique key first; uniqueness is NOT checked here —
     a check costs a full aggregation pass, compose
-    ``quality.checks.unique_check`` upstream when ids are untrusted.
-
-    ``hash_fn="md5"`` is the engine-portable mode (suite-oracled)."""
+    ``quality.checks.unique_check`` upstream when ids are untrusted."""
     if num_shards < 1:
         raise ValueError(f"num_shards must be >= 1, got {num_shards}")
     from pyspark.sql import Window
 
-    order_h = (
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt + ":pos")))
-        if hash_fn == "md5"
-        else F.xxhash64(F.col(id_col), F.lit(salt + ":pos"))
-    )
-    shard = _hash_bucket(id_col, salt, num_shards, hash_fn).cast("int")
+    shard, order_h = _shard_and_order(id_col, salt, num_shards)
     w = Window.partitionBy("shard").orderBy("__h", id_col)
     return (
         df.withColumn("shard", shard)
@@ -448,7 +437,6 @@ def sample_to_token_budget(
     tokens_col: str = "n_tokens",
     num_shards: int = 32,
     salt: str = "budget",
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic subsample of ~``budget_tokens`` worth of rows: a
     hash-ordered prefix of the corpus under a per-shard running token
@@ -476,22 +464,15 @@ def sample_to_token_budget(
     and the run-to-run row order within a tie is arbitrary — the
     cumulative totals, and therefore the KEPT SET, would differ
     across runs. Not checked here (a full-pass aggregation); compose
-    ``quality.checks.unique_check`` upstream when ids are untrusted.
-
-    ``hash_fn="md5"`` is the engine-portable mode (suite-oracled)."""
+    ``quality.checks.unique_check`` upstream when ids are untrusted."""
     if budget_tokens < 0:
         raise ValueError(f"budget_tokens must be >= 0, got {budget_tokens}")
     if num_shards < 1:
         raise ValueError(f"num_shards must be >= 1, got {num_shards}")
     from pyspark.sql import Window
 
-    order_h = (
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt + ":pos")))
-        if hash_fn == "md5"
-        else F.xxhash64(F.col(id_col), F.lit(salt + ":pos"))
-    )
+    shard, order_h = _shard_and_order(id_col, salt, num_shards)
     per_shard = budget_tokens // num_shards
-    shard = _hash_bucket(id_col, salt, num_shards, hash_fn).cast("int")
     w = (
         Window.partitionBy("shard")
         .orderBy("__h", id_col)

@@ -77,57 +77,6 @@ def running_counts(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
     )
 
 
-def running_counts_tws(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """Per-key running count + sum on the MODERN state API
-    (``transformWithStateInPandas``, Spark 4): typed ``ValueState``
-    via a ``StatefulProcessorHandle`` instead of the legacy
-    ``applyInPandasWithState`` tuple state. Functionally identical to
-    :func:`running_counts` (the test asserts it), plus what the new API
-    buys at scale: composable named state variables, per-state TTL, and
-    timers — the surface long-running 100 TB ingestion state machines
-    need. Requires the RocksDB state store provider (set by the test /
-    caller via ``spark.sql.streaming.stateStore.providerClass``) AND
-    the ``protobuf`` package (the state-server protocol dependency —
-    fails loudly here if absent, same gating policy as the connector
-    formats)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(pyspark's state-server protocol); install protobuf or use "
-            "running_counts (applyInPandasWithState) instead"
-        ) from e
-    import pandas as pd  # noqa: F811 (executor-side closure import)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Processor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n BIGINT, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, total = self._agg.get() if self._agg.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._agg.update((n, float(total)))
-            yield pd.DataFrame({"key": [key[0]], "n": [n], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    keyed = df.selectExpr(f"{key_col} AS key", f"{value_col} AS value")
-    return keyed.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=Processor(),
-        outputStructType=RUNNING_COUNT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 SESSION_SCHEMA = "key string, n_events bigint, session_open boolean"
 _SESSION_STATE_SCHEMA = "n bigint"
 
@@ -230,7 +179,6 @@ def incremental_spans_batch(
     min_tokens: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "xxhash64",
     partition_by: list[str] | None = None,
 ):
     """``foreachBatch`` factory: streaming exact-substring (span)
@@ -275,9 +223,7 @@ def incremental_spans_batch(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        grams = substring_gram_stream(
-            batch_df, min_tokens, id_col, text_col, hash_fn
-        )
+        grams = substring_gram_stream(batch_df, min_tokens, id_col, text_col)
         # grams land FIRST, then counts and spans derive from the
         # READ-BACK partition: the tokenize/explode pipeline runs once,
         # nothing is pinned in executor storage between micro-batches,

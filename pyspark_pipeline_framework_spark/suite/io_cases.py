@@ -8,7 +8,11 @@ the case about the connector, not float formatting."""
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,9 +25,23 @@ _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.
 from pyspark_pipeline_framework_spark.suite import case
 
 
+@functools.cache
+def _removed_at_exit(path: str) -> str:
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
+@functools.cache
+def _run_dir() -> str:
+    """This process's own directory under ``.scratch/``, removed at
+    exit: two suite runs in one checkout never share a store path."""
+    os.makedirs(_SCRATCH, exist_ok=True)
+    return _removed_at_exit(tempfile.mkdtemp(prefix=f"run-{os.getpid()}-", dir=_SCRATCH))
+
+
 def _scratch(sf_dir: str, name: str) -> str:
     tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH, tag, name)
+    path = os.path.join(_run_dir(), tag, name)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     return path
 
@@ -110,19 +128,18 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @case("q_sink_roundtrip_table", oracle="SELECT s_suppkey, s_name, s_acctbal FROM supplier")
 def q_sink_roundtrip_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WriteTable parity: saveAsTable → spark.table re-read. Table name
-    is sf-suffixed to avoid clashes across scale factors; mode=overwrite
-    makes the case idempotent."""
+    is sf- and process-suffixed to avoid clashes across scale factors
+    and across runs sharing one warehouse directory (its location is
+    removed at exit); mode=overwrite makes the case idempotent."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    name = f"rt_supplier_{tag}"
+    name = f"rt_supplier_{tag}_{os.getpid()}"
     # a previous session may have left the managed location on disk
     # without a catalog entry — clear both or CREATE fails with
     # LOCATION_ALREADY_EXISTS
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(warehouse.removeprefix("file:"), name)
+    loc = _removed_at_exit(os.path.join(warehouse.removeprefix("file:"), name))
     if os.path.isdir(loc):
-        import shutil
-
         shutil.rmtree(loc, ignore_errors=True)
     src = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
     write_sink(src, SinkConfig(format="table", table=name, mode="overwrite"))

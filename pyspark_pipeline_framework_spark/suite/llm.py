@@ -2,12 +2,12 @@
 
 Exact operators (text stats, quality filter, lang-ID, fingerprints,
 exact dedup, n-gram Jaccard, brute-force kNN) are oracle-checked, as
-are the md5-portable hash operators (splits, packing via a
-recursive-CTE greedy oracle, md5-MinHash-LSH candidates, md5-SimHash)
-AND the approximate ANN paths: md5-Rademacher LSH (full pipeline
-replayed in SQL), IVF and IVFPQ (the oracle replays TRAINING — sample,
-Lloyd iterations, assignment — not just the search). Only the
-xxhash64-native variants (MinHash, SimHash) and HLL stay rows-only,
+are the md5 hash operators (splits, packing via a recursive-CTE
+greedy oracle, shuffle, token budget, passage and span dedup, SimHash,
+md5-MinHash-LSH candidates) AND the approximate ANN paths:
+md5-Rademacher LSH (full pipeline replayed in SQL), IVF and IVFPQ (the
+oracle replays TRAINING — sample, Lloyd iterations, assignment — not
+just the search). Only xxhash64 MinHash and HLL stay rows-only,
 recall-tested in ``tests/test_llm_ops.py``.
 """
 
@@ -482,8 +482,9 @@ def q_dedup_minhash_ttl_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_block_pairs(sigs: DataFrame) -> DataFrame:
-    """Positional 16-bit-block LSH over simhash signatures (shared by
-    the xxhash64 and md5-portable cases)."""
+    """Positional 16-bit-block LSH over simhash signatures: a pair
+    within Hamming 3 must agree on at least one of the 4 blocks, which
+    bounds the self-join (no N²)."""
 
     def blocks(h, n=4):
         return F.array(*[F.shiftright(h, 16 * i).bitwiseAND(F.lit(0xFFFF)) for i in range(n)])
@@ -491,7 +492,10 @@ def _simhash_block_pairs(sigs: DataFrame) -> DataFrame:
     banded = sigs.select(
         "doc_id", "simhash", F.posexplode(blocks(F.col("simhash"))).alias("blk_i", "blk")
     )
-    # merge hint: see q_dedup_simhash — avoid broadcast double-compute
+    # the merge hint keeps AQE from broadcasting one side, which would
+    # execute the signature subtree twice (build + probe) — the hinted
+    # shuffle join's identical per-side exchanges are stage-reused
+    # instead (same measured rationale as minhash_candidate_pairs)
     a, b = banded.alias("a"), banded.hint("merge").alias("b")
     return (
         a.join(
@@ -511,7 +515,7 @@ def _simhash_block_pairs(sigs: DataFrame) -> DataFrame:
 
 
 @case(
-    "q_dedup_simhash_md5",
+    "q_dedup_simhash",
     # independent oracle formulation: naive per-bit majority count over
     # 60-bit md5 word hashes (cross-checks the engine's SWAR 16-lane
     # aggregation), then the same 16-bit-block LSH + hamming filter
@@ -543,42 +547,9 @@ def _simhash_block_pairs(sigs: DataFrame) -> DataFrame:
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
     """,
 )
-def q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    return _simhash_block_pairs(simhash(d, hash_fn="md5"))
-
-
-@case("q_dedup_simhash", oracle=None)  # rows-only; recall tested in pytest
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
-    sigs = simhash(d)
-    # positional 16-bit-block LSH bounds the self-join (no N²): a pair
-    # within Hamming 3 must agree on at least one of the 4 blocks. The
-    # merge hint keeps AQE from broadcasting one side, which would
-    # execute the signature subtree twice (build + probe) — the hinted
-    # shuffle join's identical per-side exchanges are stage-reused
-    # instead (same measured rationale as minhash_candidate_pairs).
-    def blocks(h, n=4):
-        return F.array(*[F.shiftright(h, 16 * i).bitwiseAND(F.lit(0xFFFF)) for i in range(n)])
-    banded = sigs.select(
-        "doc_id", "simhash", F.posexplode(blocks(F.col("simhash"))).alias("blk_i", "blk")
-    )
-    a, b = banded.alias("a"), banded.hint("merge").alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.blk_i") == F.col("b.blk_i"))
-            & (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 6)
-        .distinct()
-    )
+    return _simhash_block_pairs(simhash(d))
 
 
 def _o_dot(x: str, y: str) -> str:
@@ -1144,7 +1115,7 @@ def q_llm_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id", token_count_ws("text").alias("n_tokens")
     )
-    return pack_sequences(d, max_tokens=256, num_shards=8, hash_fn="md5")
+    return pack_sequences(d, max_tokens=256, num_shards=8)
 
 
 @case(
@@ -1166,7 +1137,7 @@ def q_llm_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents").select("doc_id", "lang")
     return (
-        split_by_hash(d, "doc_id", {"train": 0.8, "valid": 0.1, "test": 0.1}, hash_fn="md5")
+        split_by_hash(d, "doc_id", {"train": 0.8, "valid": 0.1, "test": 0.1})
         .groupBy("split", "lang")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1566,7 +1537,7 @@ def q_dedup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipeline_framework_spark.llm.dedup import passage_dedup
 
     d = table(spark, sf_dir, "documents")
-    return passage_dedup(d, window=20, stride=20, hash_fn="md5")
+    return passage_dedup(d, window=20, stride=20)
 
 
 @case(
@@ -1610,7 +1581,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipeline_framework_spark.llm.dedup import duplicated_spans
 
     d = table(spark, sf_dir, "documents")
-    return duplicated_spans(d, min_tokens=8, hash_fn="md5")
+    return duplicated_spans(d, min_tokens=8)
 
 
 @case(
@@ -1668,7 +1639,7 @@ def q_dedup_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents")
-    spans = duplicated_spans(d, min_tokens=8, hash_fn="md5")
+    spans = duplicated_spans(d, min_tokens=8)
     return cut_spans(d, spans).select("doc_id", "clean_text", "removed_tokens")
 
 
@@ -1727,24 +1698,20 @@ def q_dedup_substring_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = d.where(F.col("doc_id") % 5 != 1)
     corpus_grams = shared_df(
         spark,
-        ("substr_gram_store", sf_dir, 8, "md5", "mod5"),
-        lambda: substring_gram_stream(old, 8, hash_fn="md5"),
+        ("substr_gram_store", sf_dir, 8, "mod5"),
+        lambda: substring_gram_stream(old, 8),
     )
     corpus_counts = shared_df(
         spark,
-        ("substr_count_store", sf_dir, 8, "md5", "mod5"),
-        lambda: substring_count_partials(
-            substring_gram_stream(old, 8, hash_fn="md5")
-        ),
+        ("substr_count_store", sf_dir, 8, "mod5"),
+        lambda: substring_count_partials(substring_gram_stream(old, 8)),
     )
     prior = shared_df(
         spark,
-        ("substr_prior_spans", sf_dir, 8, "md5", "mod5"),
-        lambda: duplicated_spans(old, min_tokens=8, hash_fn="md5"),
+        ("substr_prior_spans", sf_dir, 8, "mod5"),
+        lambda: duplicated_spans(old, min_tokens=8),
     )
-    new_grams = substring_gram_stream(
-        d.where(F.col("doc_id") % 5 == 1), 8, hash_fn="md5"
-    )
+    new_grams = substring_gram_stream(d.where(F.col("doc_id") % 5 == 1), 8)
     upd = incremental_duplicated_spans(
         new_grams, corpus_grams, corpus_counts, min_tokens=8
     )
@@ -2130,7 +2097,7 @@ def q_llm_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_pipeline_framework_spark.llm.packing import global_shuffle
 
     d = table(spark, sf_dir, "documents")
-    return global_shuffle(d, num_shards=8, salt="shuffle", hash_fn="md5").select(
+    return global_shuffle(d, num_shards=8, salt="shuffle").select(
         "doc_id", "shard", "pos"
     )
 
@@ -2170,7 +2137,7 @@ def q_llm_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents").withColumn("n_tokens", token_count_ws("text"))
     return sample_to_token_budget(
-        d, budget_tokens=24_000, num_shards=8, salt="budget", hash_fn="md5"
+        d, budget_tokens=24_000, num_shards=8, salt="budget"
     ).select("doc_id", "shard", "cum_tokens")
 
 

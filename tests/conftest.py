@@ -18,8 +18,10 @@ _PB_VENDOR_DIRS = [
 
 
 def _ensure_protobuf() -> None:
-    """Make `google.protobuf` importable for the Spark-4
-    transformWithState parity test when a vendored copy exists.
+    """Make `google.protobuf` importable when a vendored copy exists, so
+    `test_pbvendor_shim_blast_radius_is_statemessage_only` checks the
+    version-gate shim that `tools/streamfuzz.py` family 5 runs
+    transformWithStateInPandas under.
 
     MUST run before the first SparkSession is built: python workers
     inherit PYTHONPATH through the JVM's environment, which is frozen
@@ -27,7 +29,7 @@ def _ensure_protobuf() -> None:
     relaxes protobuf's gencode/runtime minor-version gate in every
     spawned interpreter (see that module's docstring). No-op when
     protobuf is already installed or no vendored copy is found — the
-    parity test then keeps its loud skip."""
+    shim test then skips."""
     try:
         import google.protobuf  # noqa: F401
 

@@ -178,6 +178,58 @@ def test_connected_components_on_near_cliques_runs_few_jobs(spark):
     assert len(out) == len({i for e in edges for i in e})
 
 
+#: Spark jobs the ``validate=True`` probes run before the incremental
+#: operators return, over parquet stores. Candidate pairs: one
+#: aggregate of both stores' band counts (its shuffle-map stage and
+#: its result stage); a ``max(band_idx).first()`` per store ran 4.
+#: Spans: one 1-row read of the corpus store; a 1-row probe per store
+#: ran 2 (unpinned, so that the pins' own planning jobs are not counted).
+CANDIDATE_VALIDATE_JOBS = 2
+SPANS_VALIDATE_JOBS = 1
+
+
+def _store_pair(spark, sf_dir, tmp_path, build):
+    """``build`` over the new batch (doc_id % 4 = 0) and over the
+    corpus, each written to parquet and read back."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    out = []
+    for name, cond in (("new", "doc_id % 4 = 0"), ("corpus", "doc_id % 4 != 0")):
+        build(docs.where(cond)).write.parquet(str(tmp_path / name))
+        out.append(spark.read.parquet(str(tmp_path / name)))
+    return out
+
+
+def test_incremental_candidate_pairs_validate_runs_one_probe(spark, sf_dir, tmp_path):
+    from pyspark_pipeline_framework_spark.llm.dedup import incremental_candidate_pairs
+
+    new, corpus = _store_pair(
+        spark, sf_dir, tmp_path, lambda d: minhash_bands(d, num_hashes=32, bands=8)
+    )
+    jobs = _jobs_run_by(
+        spark.sparkContext, "validate-bands",
+        lambda: incremental_candidate_pairs(new, corpus, validate=True),
+    )
+    assert jobs <= CANDIDATE_VALIDATE_JOBS
+
+
+def test_incremental_spans_validate_runs_one_probe(spark, sf_dir, tmp_path):
+    from pyspark_pipeline_framework_spark.llm.dedup import (
+        incremental_duplicated_spans,
+        substring_gram_stream,
+    )
+
+    new, corpus = _store_pair(
+        spark, sf_dir, tmp_path, lambda d: substring_gram_stream(d, 8)
+    )
+    jobs = _jobs_run_by(
+        spark.sparkContext, "validate-spans",
+        lambda: incremental_duplicated_spans(
+            new, corpus, min_tokens=8, validate=True, pin_intermediates=False
+        ),
+    )
+    assert jobs <= SPANS_VALIDATE_JOBS
+
+
 def test_ensure_parallelism_runs_no_job_on_an_adaptive_input(spark):
     """An aggregated (shuffled, AQE-planned) input is sized from plan
     metadata; asking its RDD for the partition count would run the

@@ -1,7 +1,7 @@
-"""Uniform equivalence gates for the 3 permanent no-oracle suite rows
+"""Uniform equivalence gates for the 2 permanent no-oracle suite rows
 (VERDICT r7 item 4).
 
-Three registered queries have no DuckDB twin by design (xxhash64 /
+Two registered queries have no DuckDB twin by design (xxhash64 /
 HLL-sketch internals DuckDB cannot replay). Each one here is tested
 against its ORACLE-GATED companion at the DECISION level — the output
 a user acts on — using the REGISTERED suite case functions themselves,
@@ -10,10 +10,10 @@ so the gate covers exactly what the driver runs rows-only:
 | no-oracle row           | twin (oracle-gated)          | decision gate |
 |-------------------------|------------------------------|---------------|
 | q_dedup_minhash         | q_dedup_ngram_jaccard        | verified pairs == exact truth |
-| q_dedup_simhash         | q_dedup_simhash_md5          | exact-dup pairs flagged by both |
 | q_agg_approx_distinct   | q_agg_approx_distinct_bound  | HLL within 3x rsd of exact |
 
-COVERAGE.md names each test next to its row.
+COVERAGE.md names each test next to its row. ``q_dedup_simhash`` is
+oracle-gated itself; its exact-duplicate decision keeps a gate here.
 """
 
 from __future__ import annotations
@@ -57,14 +57,12 @@ def test_twin_q_dedup_minhash(spark, sf_dir, cases):
 
 
 def test_twin_q_dedup_simhash(spark, sf_dir, cases):
-    """The xxhash64 and md5 simhash spaces differ, so their borderline
-    pair sets legitimately differ; the decision both MUST agree on is
-    exact duplicates: identical text -> identical signature -> every
-    block collides -> the pair is emitted with hamming 0 in EITHER
-    space. The test corpus has no verbatim duplicates, so plant some:
-    copy 5 documents under shifted ids and run both variants' pipeline
-    (simhash -> 16-bit-block LSH -> hamming<=6) over the union. The
-    md5 side of the pipeline is oracle-gated by q_dedup_simhash_md5."""
+    """Exact duplicates: identical text -> identical signature -> every
+    block collides -> the pair is emitted with hamming 0. The test
+    corpus has no verbatim duplicates, so plant some: copy 5 documents
+    under shifted ids and run the q_dedup_simhash pipeline (simhash ->
+    16-bit-block LSH -> hamming<=6) over the union. The pipeline over
+    the unplanted corpus is oracle-gated by q_dedup_simhash itself."""
     from pyspark_pipeline_framework_spark.llm.dedup import simhash
     from pyspark_pipeline_framework_spark.suite.llm import _simhash_block_pairs
 
@@ -73,12 +71,11 @@ def test_twin_q_dedup_simhash(spark, sf_dir, cases):
     copies = base.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     dup_pairs = {(r.doc_id, r.doc_id + 1_000_000) for r in base.collect()}
     corpus = d.unionByName(copies)
-    for hash_fn in ("xxhash64", "md5"):
-        out = _simhash_block_pairs(simhash(corpus, hash_fn=hash_fn))
-        got = {(r.id_a, r.id_b): r.hamming for r in out.collect()}
-        missing = dup_pairs - set(got)
-        assert not missing, f"{hash_fn} missed exact-dup pairs {missing}"
-        assert all(got[p] == 0 for p in dup_pairs), hash_fn
+    out = _simhash_block_pairs(simhash(corpus))
+    got = {(r.id_a, r.id_b): r.hamming for r in out.collect()}
+    missing = dup_pairs - set(got)
+    assert not missing, f"missed exact-dup pairs {missing}"
+    assert all(got[p] == 0 for p in dup_pairs)
 
 
 def test_twin_q_agg_approx_distinct(spark, sf_dir, cases):

@@ -77,11 +77,12 @@ def test_stratified_sample_rate_and_determinism(spark, docs_tokens):
 
 
 def test_split_by_hash_md5_portable(spark, docs_tokens):
-    """md5 mode: same API/behavior, buckets recomputable outside Spark."""
+    """Buckets are md5-derived, so they are recomputable outside Spark;
+    the removed ``hash_fn`` selector is an unexpected keyword."""
     import hashlib
 
     split = split_by_hash(
-        docs_tokens, "doc_id", {"train": 0.8, "valid": 0.1, "test": 0.1}, hash_fn="md5"
+        docs_tokens, "doc_id", {"train": 0.8, "valid": 0.1, "test": 0.1}
     )
     rows = split.collect()
     frac_train = sum(r.split == "train" for r in rows) / len(rows)
@@ -93,7 +94,7 @@ def test_split_by_hash_md5_portable(spark, docs_tokens):
         assert r.split == expected, (r.doc_id, bucket, r.split, expected)
     import pytest
 
-    with pytest.raises(ValueError, match="hash_fn"):
+    with pytest.raises(TypeError, match="hash_fn"):
         split_by_hash(docs_tokens, "doc_id", {"a": 1.0}, hash_fn="sha1")
 
 

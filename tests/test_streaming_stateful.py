@@ -121,62 +121,6 @@ def test_running_counts_across_batches(spark, tmp_path):
     assert final["u2"] == (1, 8.0)
 
 
-def test_running_counts_transform_with_state(spark, tmp_path):
-    """Same contract on the MODERN state API (Spark 4
-    transformWithStateInPandas + ValueState + RocksDB provider):
-    results must match the legacy applyInPandasWithState operator.
-    Skipped when protobuf (pyspark's state-server protocol dependency)
-    is absent — this container ships without it; the operator itself
-    fails loudly in that case (asserted below)."""
-    import pytest as _pytest
-
-    from pyspark_pipeline_framework_spark.streaming.stateful import running_counts_tws
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        df = spark.createDataFrame([("u", 1.0)], "k string, v double")
-        with _pytest.raises(ImportError, match="protobuf"):
-            running_counts_tws(df, "k", "v")
-        _pytest.skip("protobuf not installed: transformWithState state "
-                     "server unavailable in this container")
-
-    src_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
-    spark.createDataFrame([("u1", 1.0), ("u1", 2.0)], "k string, v double") \
-        .coalesce(1).write.mode("overwrite").json(src_dir + "/f1")
-    spark.createDataFrame([("u1", 4.0), ("u2", 8.0)], "k string, v double") \
-        .coalesce(1).write.mode("overwrite").json(src_dir + "/f2")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        pipe = StreamingPipeline(
-            source=FileStreamingSource(
-                src_dir, file_format="json", schema="k STRING, v DOUBLE",
-                options={"maxFilesPerTrigger": "1", "recursiveFileLookup": "true"},
-            ),
-            sink=MemoryStreamingSink("running_tws_out"),
-            output_mode=OutputMode.UPDATE,
-            trigger=Trigger(TriggerType.AVAILABLE_NOW),
-            checkpoint_location=ckpt,
-            transform_fn=lambda df: running_counts_tws(df, "k", "v"),
-        )
-        pipe.set_spark_session(spark).run(timeout_s=120)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    final = {}
-    for r in spark.table("running_tws_out").collect():
-        final[r.key] = (r.n, r.total)
-    assert final["u1"] == (3, 7.0)
-    assert final["u2"] == (1, 8.0)
-
-
 def test_pbvendor_shim_blast_radius_is_statemessage_only():
     """The vendored-protobuf version-gate relaxation
     (tests/_pbvendor/sitecustomize.py) must fire ONLY for pyspark's

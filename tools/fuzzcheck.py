@@ -2404,13 +2404,12 @@ def to_spark(spec: dict, spark, sf_dir: str, base_df=None):
             return pack_sequences(
                 d.select("doc_id", token_count_ws("text").alias("n_tokens")),
                 max_tokens=spec["max_tokens"], num_shards=spec["num_shards"],
-                hash_fn="md5",
             )
         if spec["sub"] == "shuffle":
             from pyspark_pipeline_framework_spark.llm.packing import global_shuffle
 
             return global_shuffle(
-                d, num_shards=spec["num_shards"], salt=spec["salt"], hash_fn="md5"
+                d, num_shards=spec["num_shards"], salt=spec["salt"]
             ).select("doc_id", "shard", "pos")
         if spec["sub"] == "budget":
             from pyspark_pipeline_framework_spark.llm.packing import (
@@ -2420,7 +2419,7 @@ def to_spark(spec: dict, spark, sf_dir: str, base_df=None):
             return sample_to_token_budget(
                 d.withColumn("n_tokens", token_count_ws("text")),
                 budget_tokens=spec["budget"], num_shards=spec["num_shards"],
-                salt=spec["salt"], hash_fn="md5",
+                salt=spec["salt"],
             ).select("doc_id", "shard", "cum_tokens")
         if spec["sub"] == "chunk":
             return chunk_documents(
@@ -2431,7 +2430,7 @@ def to_spark(spec: dict, spark, sf_dir: str, base_df=None):
               "test": (100 - c2) / 100}
         return (
             split_by_hash(d.select("doc_id", "lang"), "doc_id", fr,
-                          salt=spec["salt"], hash_fn="md5")
+                          salt=spec["salt"])
             .groupBy("split", "lang")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -2452,17 +2451,17 @@ def to_spark(spec: dict, spark, sf_dir: str, base_df=None):
             m, j = spec["split"]
             old = d.where(F.col("doc_id") % m != j)
             new = d.where(F.col("doc_id") % m == j)
-            og = substring_gram_stream(old, spec["L"], hash_fn="md5")
+            og = substring_gram_stream(old, spec["L"])
             upd = incremental_duplicated_spans(
-                substring_gram_stream(new, spec["L"], hash_fn="md5"),
+                substring_gram_stream(new, spec["L"]),
                 og, substring_count_partials(og), min_tokens=spec["L"],
             )
             spans = merge_span_tables(
-                duplicated_spans(old, min_tokens=spec["L"], hash_fn="md5"),
+                duplicated_spans(old, min_tokens=spec["L"]),
                 upd,
             )
         else:
-            spans = duplicated_spans(d, min_tokens=spec["L"], hash_fn="md5")
+            spans = duplicated_spans(d, min_tokens=spec["L"])
         if not spec["cut"]:
             return spans
         return cut_spans(d, spans).select(

@@ -79,7 +79,7 @@ unsupported in streaming aggregation).
    (Family 7 is the IVFPQ sibling over the compressed code store.)
 
 8. **streaming incremental exact-substring dedup** (r12): random
-   min_tokens / hash_fn / batch count / corpus subset / batch-split
+   min_tokens / batch count / corpus subset / batch-split
    salt, ONE batch replayed mid-stream, and (on a sampled third) a
    MID-STREAM maintenance cycle compacting all three stores —
    gram/count via compact_batch_store, the span update store via
@@ -327,7 +327,7 @@ def _f5_replay(file_batches, reset_at):
 
 def _spans_family(spark, tmp: str, seed: int, n_spans: int, sf_dir: str) -> int:
     """Family 8 (r12): randomized streaming exact-substring span-dedup
-    growth. Random min_tokens / hash_fn / batch count / corpus subset /
+    growth. Random min_tokens / batch count / corpus subset /
     batch-split salt per spec; one batch replayed mid-stream
     (foreachBatch's at-least-once contract); on a sampled third a
     MID-STREAM maintenance cycle compacts all three stores (gram/count
@@ -362,7 +362,6 @@ def _spans_family(spark, tmp: str, seed: int, n_spans: int, sf_dir: str) -> int:
     failures = 0
     for i in range(n_spans):
         L = rng.choice([4, 6, 8, 12])
-        hf = rng.choice(["md5", "xxhash64"])
         nb = rng.randint(2, 4)
         m = rng.randint(1, 3)          # corpus subset (m=1 → full table)
         salt = rng.randint(0, 10**6)   # batch-split salt
@@ -371,9 +370,7 @@ def _spans_family(spark, tmp: str, seed: int, n_spans: int, sf_dir: str) -> int:
         store = os.path.join(tmp, f"spans8_{i}_g")
         counts = os.path.join(tmp, f"spans8_{i}_c")
         spans = os.path.join(tmp, f"spans8_{i}_s")
-        proc = incremental_spans_batch(
-            store, counts, spans, min_tokens=L, hash_fn=hf
-        )
+        proc = incremental_spans_batch(store, counts, spans, min_tokens=L)
         replay_at = rng.randrange(nb)
         compact_at = rng.randrange(nb - 1) if i % 3 == 0 else None
         compacted = False
@@ -395,10 +392,10 @@ def _spans_family(spark, tmp: str, seed: int, n_spans: int, sf_dir: str) -> int:
             map(tuple, current_span_table(spark.read.parquet(spans)).collect())
         )
         want = sorted(
-            map(tuple, duplicated_spans(sub, min_tokens=L, hash_fn=hf).collect())
+            map(tuple, duplicated_spans(sub, min_tokens=L).collect())
         )
         ok = got == want
-        label = (f"spans8 #{i} L={L} hash={hf} nb={nb} m={m}"
+        label = (f"spans8 #{i} L={L} nb={nb} m={m}"
                  + (" +compact" if compacted else ""))
         if not ok:
             failures += 1

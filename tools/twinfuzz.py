@@ -17,8 +17,7 @@ than constants tuned to one configuration:
   exact Jaccard — is found.
 - **simhash** (family 1): random planted verbatim duplicates + random
   hamming threshold. Identical text ⇒ identical signature ⇒ hamming 0
-  in BOTH hash spaces (xxhash64 and the oracle-gated md5), under the
-  same 16-bit-block LSH the suite runs.
+  under the same 16-bit-block LSH the oracle-gated suite case runs.
 - **lsh-ann** (family 2): random n_planes/n_tables/k. Gates: every
   common (query, vec) hit carries the bit-identical fixed-point cosine
   the exact case publishes, and observed recall ≥ analytic expectation
@@ -119,38 +118,37 @@ def run_simhash(spark, sf_dir, rng) -> tuple[str, str | None]:
     corpus = d.unionByName(copies)
     label = f"simhash n_dup={n_dup} ham<={ham_t} mod={modulus}"
     want = {(i, i + 1_000_000) for i in ids}
-    for hash_fn in ("xxhash64", "md5"):
-        sigs = simhash(corpus, hash_fn=hash_fn)
-        blocks = F.array(
-            *[F.shiftright(F.col("simhash"), 16 * i).bitwiseAND(F.lit(0xFFFF))
-              for i in range(4)]
+    sigs = simhash(corpus)
+    blocks = F.array(
+        *[F.shiftright(F.col("simhash"), 16 * i).bitwiseAND(F.lit(0xFFFF))
+          for i in range(4)]
+    )
+    banded = sigs.select(
+        "doc_id", "simhash", F.posexplode(blocks).alias("blk_i", "blk")
+    )
+    a, bb = banded.alias("a"), banded.hint("merge").alias("b")
+    pairs = (
+        a.join(
+            bb,
+            (F.col("a.blk_i") == F.col("b.blk_i"))
+            & (F.col("a.blk") == F.col("b.blk"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        banded = sigs.select(
-            "doc_id", "simhash", F.posexplode(blocks).alias("blk_i", "blk")
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            hamming_distance(F.col("a.simhash"), F.col("b.simhash")).alias("h"),
         )
-        a, bb = banded.alias("a"), banded.hint("merge").alias("b")
-        pairs = (
-            a.join(
-                bb,
-                (F.col("a.blk_i") == F.col("b.blk_i"))
-                & (F.col("a.blk") == F.col("b.blk"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b"),
-                hamming_distance(F.col("a.simhash"), F.col("b.simhash")).alias("h"),
-            )
-            .filter(F.col("h") <= ham_t)
-            .distinct()
-        )
-        got = {(row.id_a, row.id_b): row.h for row in pairs.collect()}
-        missing = want - set(got)
-        if missing:
-            return label, f"{hash_fn} missed planted exact dups {sorted(missing)[:5]}"
-        bad = [p for p in want if got[p] != 0]
-        if bad:
-            return label, f"{hash_fn} nonzero hamming on exact dups {bad[:5]}"
+        .filter(F.col("h") <= ham_t)
+        .distinct()
+    )
+    got = {(row.id_a, row.id_b): row.h for row in pairs.collect()}
+    missing = want - set(got)
+    if missing:
+        return label, f"missed planted exact dups {sorted(missing)[:5]}"
+    bad = [p for p in want if got[p] != 0]
+    if bad:
+        return label, f"nonzero hamming on exact dups {bad[:5]}"
     return label, None
 
 
