@@ -15,17 +15,9 @@ proxy session that raises on any other touch.
 
 from __future__ import annotations
 
-import os
-import posixpath
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-class ConnectUnsupportedError(RuntimeError):
-    """A capability this operator needs is genuinely unavailable over
-    Spark Connect with the current server configuration; the message
-    says what to configure server-side."""
 
 
 def is_connect(spark: SparkSession) -> bool:
@@ -106,92 +98,34 @@ def scan_partitions(df: DataFrame) -> int | None:
     return max(1, -(-size // max(1, min_size)))
 
 
-def reliable_checkpoint(df: DataFrame, checkpoint_dir: str, eager: bool = False) -> DataFrame:
-    """Connect-side reliable ``df.checkpoint()``: the server honors the
-    ``spark.checkpoint.dir`` conf (the Spark 4 alternative to
-    ``SparkContext.setCheckpointDir``). If the server already has the
-    requested root configured, checkpoint directly; otherwise attempt
-    a runtime ``conf.set`` and raise :class:`ConnectUnsupportedError`
-    with the server-side fix when Spark refuses (core confs are not
-    runtime-settable on every deployment)."""
+def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage — the package's one lineage cut: the
+    pipeline runner once per shared dataset, connected components every
+    round, ``jaccard_verify`` on its candidates and the incremental
+    span operators on their batch-sized intermediates.
+
+    Where the cut lives follows the session, never the call site.
+    Without ``spark.checkpoint.dir``: ``localCheckpoint`` — blocks live
+    on executors, no extra I/O, but an executor loss fails the job
+    because truncated lineage cannot be recomputed. With it: a reliable
+    ``checkpoint()`` under that fault-tolerant path (HDFS/S3/DBFS on a
+    real cluster), which survives executor loss and preemption for one
+    write and read of the checkpointed data.
+
+    A session built with the conf already has its SparkContext's
+    checkpoint directory (classic) or its server's (Connect). A
+    classic context without one — the conf was set after start — gets
+    it from the conf here, once; the directory is SparkContext-wide
+    from then on. ``eager=False`` defers only the final stage: building
+    the checkpointed RDD runs the plan's broadcast stages and, under
+    AQE, its shuffle stages."""
     spark = df.sparkSession
-    try:
-        current = spark.conf.get("spark.checkpoint.dir", None)
-    except Exception:
-        current = None
-    if current is not None and current.rstrip("/") == checkpoint_dir.rstrip("/"):
-        return df.checkpoint(eager=eager)
-    try:
-        spark.conf.set("spark.checkpoint.dir", checkpoint_dir)
-    except Exception as ex:
-        raise ConnectUnsupportedError(
-            "reliable checkpointing over Spark Connect needs the server "
-            f"started with spark.checkpoint.dir={checkpoint_dir!r} (the "
-            "client cannot call SparkContext.setCheckpointDir and this "
-            f"server refuses a runtime override: {ex}). Either configure "
-            "the server, or pass checkpoint_dir=None to use "
-            "localCheckpoint (executor-local, not fault-tolerant)."
-        ) from ex
-    return df.checkpoint(eager=eager)
-
-
-def truncate_lineage(df: DataFrame, checkpoint_dir: str | None, eager: bool = False) -> DataFrame:
-    """Cut ``df``'s lineage: iterative loops call it every round, and
-    the pipeline runner once per shared dataset.
-
-    Default (``checkpoint_dir=None``): ``localCheckpoint`` — blocks
-    live on executors, no extra I/O, but an executor loss kills the
-    job because truncated lineage cannot be recomputed.
-
-    With ``checkpoint_dir``: reliable ``checkpoint()`` into that
-    fault-tolerant path (HDFS/S3/DBFS on a real cluster) — every
-    round's state survives executor loss and preemption, the right
-    tradeoff for 100 TB runs where a multi-hour contraction must not
-    restart from zero. Costs one write+read of the checkpointed data
-    (for a loop's state, two longs per edge per round)."""
-    if checkpoint_dir is None:
+    root = spark.conf.get("spark.checkpoint.dir", None)
+    if root is None:
         return df.localCheckpoint(eager=eager)
-    try:
-        sc = df.sparkSession.sparkContext
-    except Exception:
-        # Spark Connect: no client-side SparkContext / setCheckpointDir.
-        # The server honors the spark.checkpoint.dir conf (Spark 4);
-        # reliable_checkpoint sets-or-verifies it and raises a typed
-        # ConnectUnsupportedError with the server-side fix otherwise
-        # (r9 VERDICT item 1; reference runtime/session/wrapper.py:99-115)
-        return reliable_checkpoint(df, checkpoint_dir, eager=eager)
-    try:
-        current = sc.getCheckpointDir()
-    except Exception:
-        current = None
-    # setCheckpointDir creates a fresh random SUBDIR under the given
-    # path and getCheckpointDir returns that subdir (often with a
-    # file:/ scheme) — compare the subdir's PARENT path components
-    # against the requested root (a substring test would false-match
-    # /data/ck against /data/ck-old or /data/ck2/..., silently landing
-    # checkpoints in the wrong directory), or every round would spawn a
-    # new directory tree. Note: setCheckpointDir is global SparkContext
-    # state — callers sharing a context share the checkpoint root.
-    if current is None or not _same_checkpoint_root(current, checkpoint_dir):
-        sc.setCheckpointDir(checkpoint_dir)
+    if not is_connect(spark) and spark.sparkContext.getCheckpointDir() is None:
+        spark.sparkContext.setCheckpointDir(root)
     return df.checkpoint(eager=eager)
-
-
-def _same_checkpoint_root(current_subdir: str, requested: str) -> bool:
-    """True when ``current_subdir`` (the random subdir returned by
-    ``getCheckpointDir``, possibly ``file:/``-schemed) lives DIRECTLY
-    under the ``requested`` checkpoint root — exact path-component
-    comparison of the subdir's parent, never substring matching."""
-    cur = urlparse(current_subdir)
-    req = urlparse(requested)
-    cur_parent = posixpath.dirname(cur.path.rstrip("/"))
-    req_path = req.path.rstrip("/") or "/"
-    if req.scheme in ("", "file"):
-        return cur.scheme in ("", "file") and os.path.abspath(
-            cur_parent
-        ) == os.path.abspath(req_path)
-    # remote FS (hdfs/s3a/...): scheme + authority + exact parent path
-    return (cur.scheme, cur.netloc, cur_parent) == (req.scheme, req.netloc, req_path)
 
 
 def client_local_path(spark: SparkSession, path: str) -> str | None:

@@ -582,7 +582,6 @@ def jaccard_verify(
     text_col: str = "text",
     shingle_k: int = 3,
     threshold: float = 0.5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs (id_a, id_b): the
     scale-correct composition is :func:`minhash_candidate_pairs` →
@@ -602,15 +601,14 @@ def jaccard_verify(
     touched-id semi-join prune on each side and the pair join itself);
     unmaterialized, Spark would recompute the whole candidate-generation
     DAG — typically a full MinHash-LSH pass — once per branch. An eager
-    ``localCheckpoint`` computes it exactly once; candidates are
-    bounded by construction (that is the point of LSH), so the
-    checkpointed footprint is two longs per pair. ``checkpoint_dir``
-    upgrades it to a reliable ``checkpoint()`` (see
-    ``connect_compat.truncate_lineage``)."""
+    lineage cut (``connect_compat.truncate_lineage``) computes it
+    exactly once; candidates are bounded by construction (that is the
+    point of LSH), so the checkpointed footprint is two longs per
+    pair."""
     cand = candidates.select(
         F.col("id_a").cast("long").alias("id_a"), F.col("id_b").cast("long").alias("id_b")
     ).distinct()
-    cand = truncate_lineage(cand, checkpoint_dir, eager=True)
+    cand = truncate_lineage(cand, eager=True)
     touched = (
         cand.select(F.col("id_a").alias("id"))
         .union(cand.select(F.col("id_b").alias("id")))
@@ -769,9 +767,7 @@ def decontaminate(
     )
 
 
-def _star_components(
-    edges: DataFrame, max_iters: int, checkpoint_dir: str | None = None
-) -> tuple[DataFrame, int]:
+def _star_components(edges: DataFrame, max_iters: int) -> tuple[DataFrame, int]:
     """Two-phase star contraction (Kiveris et al., "Connected
     Components in MapReduce and Beyond", §3): alternate
 
@@ -801,8 +797,7 @@ def _star_components(
         large = truncate_lineage(
             sym.withColumn("mn", F.min("v").over(Window.partitionBy("u")))
             .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.least(F.col("u"), F.col("mn")).alias("v")),
-            checkpoint_dir,
+            .select(F.col("v").alias("u"), F.least(F.col("u"), F.col("mn")).alias("v"))
         )
         # small-star on the oriented output: for each hub u, attach u
         # and all its (smaller) neighbors to their minimum
@@ -811,8 +806,7 @@ def _star_components(
             hub.where(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(hub.select("u", F.col("m").alias("v")))
-            .distinct(),
-            checkpoint_dir,
+            .distinct()
         )
         # Stop at a star forest: no node is a child (u) twice, and no
         # child is also a parent (v). Every center is then smaller than
@@ -846,7 +840,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iters: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over a candidate-pair edge list, by
     two-phase large-star/small-star contraction (Kiveris et al., see
@@ -857,12 +850,10 @@ def connected_components(
     Scale notes (the dedup use case): each round is four shuffles of
     (long, long) edges, never payloads; near-dup components are
     near-cliques, which usually contract to stars in one round. Each
-    round's edges are lineage-truncated with ``localCheckpoint`` so the plan
-    doesn't grow with iterations; pass ``checkpoint_dir`` (a
-    fault-tolerant path — HDFS/S3 on a cluster) to switch every
-    truncation to a RELIABLE ``checkpoint()`` that survives executor
-    loss — see ``connect_compat.truncate_lineage`` for the tradeoff.
-    A graph that needs more than ``max_iters`` rounds logs a warning.
+    round's edges are lineage-truncated
+    (``connect_compat.truncate_lineage``) so the plan doesn't grow with
+    iterations. A graph that needs more than ``max_iters`` rounds logs
+    a warning.
 
     Returns (id, cluster_id) for every node that appears in ``pairs``.
     Reference parity: the reference has no graph operators at all —
@@ -871,13 +862,12 @@ def connected_components(
     # truncated once: the rounds and the final labels both read the
     # edges, and ``pairs`` may be a long lineage (verified pairs)
     e1 = truncate_lineage(
-        pairs.select(F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v")),
-        checkpoint_dir,
+        pairs.select(F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v"))
     )
     oriented = e1.where(F.col("u") != F.col("v")).select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
     )
-    stars, _ = _star_components(oriented, max_iters, checkpoint_dir)
+    stars, _ = _star_components(oriented, max_iters)
     # every node labels itself, and a star leaf also its (smaller)
     # center: one group-by yields each node's root, roots and
     # self-loop-only nodes included
@@ -894,7 +884,6 @@ def dedup_clusters(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
     score_col: str | None = None,
     keep: str = "max",
 ) -> DataFrame:
@@ -916,7 +905,7 @@ def dedup_clusters(
     component labels; the corpus itself is never shuffled on anything
     but the join key. The scoring window runs over cluster MEMBERS
     only (rows that appear in ``pairs``), never the whole corpus."""
-    cc = connected_components(pairs, checkpoint_dir=checkpoint_dir)
+    cc = connected_components(pairs)
     base = (
         df.select(F.col(id_col))
         .join(cc, F.col(id_col) == cc.id, "left")
@@ -1152,7 +1141,6 @@ def incremental_duplicated_spans(
     min_tokens: int = 8,
     id_col: str = "doc_id",
     validate: bool = False,
-    pin_intermediates: bool = True,
 ) -> DataFrame:
     """Incremental exact-substring dedup: spans for the documents a
     new batch TOUCHES — the new documents themselves PLUS the old
@@ -1199,19 +1187,19 @@ def incremental_duplicated_spans(
     would double its positions; delete it from the stores first — see
     :func:`substring_count_partials` on negative partials).
 
-    ``pin_intermediates`` (default True) pins the batch-proportional
-    intermediates (``tot_new``, ``affected``, ``old_pos``) with lazy
-    ``localCheckpoint`` so each executes once per action instead of
-    once per downstream consumer (the gram/count subtrees are
-    referenced up to 6×). The trade: local checkpoints live in
-    executor-local storage, NOT reliable storage — on a cluster,
-    losing an executor after a pin materializes fails the job instead
-    of recomputing the lineage, and the pinned blocks anchor their
-    executors against aggressive dynamic deallocation. The pinned data
-    is bounded by the new batch's size by contract, so the default is
-    right for batch-sized ticks; pass ``False`` on deployments with
-    executor churn (spot/preemptible nodes, aggressive downscaling)
-    where a recomputable-but-slower plan is the better trade."""
+    The batch-proportional intermediates (``tot_new``, ``affected``,
+    ``old_pos``) are pinned with ``connect_compat.truncate_lineage``,
+    so downstream consumers read computed blocks instead of
+    re-executing the gram/count subtrees (referenced up to 6×). The
+    pins are NOT lazy: building a checkpointed DataFrame runs its
+    plan's broadcast stages and, under AQE (the default), its shuffle
+    stages, so this call runs Spark jobs before it returns (the
+    batch's counts, affected ids and their old positions; 8 on a
+    small corpus) and only the pins' final stages wait for an
+    action. The pinned data is bounded by the new batch's size by
+    contract. Pins follow the session's ``spark.checkpoint.dir``:
+    executor-local without it, reliable (surviving executor churn on
+    spot/preemptible nodes) with it."""
     if validate:
         probe = corpus_grams.select("gh").first()
         if probe is not None and not re.fullmatch("[0-9a-f]{32}", probe[0] or ""):
@@ -1222,8 +1210,6 @@ def incremental_duplicated_spans(
             )
     if corpus_counts is None:
         corpus_counts = substring_count_partials(corpus_grams)
-    _pin = (lambda d: d.localCheckpoint(eager=False)) if pin_intermediates \
-        else (lambda d: d)
     # new_grams is consumed twice (count partials + dup-position union)
     # but is deliberately NOT pinned (r13, measured): the gram stream is
     # the LARGEST batch-derived intermediate (one row per token, ~50 B
@@ -1241,16 +1227,19 @@ def incremental_duplicated_spans(
     # same per-gram (hist, new) pair the previous two-join formulation
     # produced, with half the references to the new-batch subtree.
     # The result is batch-vocabulary-bounded by contract, so pinning it
-    # (lazy localCheckpoint) makes every downstream consumer read the
-    # computed blocks instead of re-executing the gram/count subtrees —
-    # the DAG references tot_new twice and its ancestors up to 6 times.
+    # makes every downstream consumer read the computed blocks instead
+    # of re-executing the gram/count subtrees — the DAG references
+    # tot_new twice and its ancestors up to 6 times. The pin runs the
+    # join and aggregate shuffles now (under AQE, building a
+    # checkpointed RDD executes its plan's shuffle stages); later
+    # actions read the pinned result.
     tot_new = (
         corpus_counts.join(new_counts, "gh", "right")
         .groupBy("gh", "__n")
         .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("__h"))
         .select("gh", "__h", "__n")
     )
-    tot_new = _pin(tot_new)
+    tot_new = truncate_lineage(tot_new)
     # grams this batch flipped to duplicated: exactly one historical
     # occurrence (hist==1; with n>=1 the total is now >=2). hist==0 is
     # new-only (no old doc affected); hist>=2 was already duplicated
@@ -1262,13 +1251,13 @@ def incremental_duplicated_spans(
     # position — the broadcast is bounded by the new batch's vocabulary.
     # affected (ids only) and old_pos (the affected docs' gram
     # positions) are batch-proportional and each referenced twice —
-    # pinned for the same reason as tot_new.
-    affected = _pin(
+    # pinned for the same reason as tot_new, and also run here.
+    affected = truncate_lineage(
         corpus_grams.join(F.broadcast(newly_dup), "gh")
         .select(id_col)
         .distinct()
     )
-    old_pos = _pin(corpus_grams.join(affected, id_col, "left_semi"))
+    old_pos = truncate_lineage(corpus_grams.join(affected, id_col, "left_semi"))
     # dup grams appearing ONLY in affected docs' history: n==0 there,
     # so duplicated iff hist >= 2 — a pure store property (grams the
     # new batch also carries are covered by dup_new; union distinct)
@@ -1292,7 +1281,6 @@ def merge_span_tables(
     prior_spans: DataFrame,
     updated_spans: DataFrame,
     id_col: str = "doc_id",
-    pin_intermediates: bool = True,
 ) -> DataFrame:
     """Fold an :func:`incremental_duplicated_spans` output into the
     prior span table: every document present in ``updated_spans`` is
@@ -1302,12 +1290,11 @@ def merge_span_tables(
     over the grown corpus. One anti-join on the id + a union — the
     updated side is batch-proportional, so AQE broadcasts it. The
     updated side is referenced twice (anti-join key + union payload);
-    pinning it (lazy localCheckpoint, batch-proportional by contract)
-    runs the incremental DAG once instead of twice.
-    ``pin_intermediates=False`` skips the pin — same executor-churn
-    trade as :func:`incremental_duplicated_spans`."""
-    if pin_intermediates:
-        updated_spans = updated_spans.localCheckpoint(eager=False)
+    pinning it (``connect_compat.truncate_lineage``, batch-proportional
+    by contract) runs the incremental DAG once instead of twice. As in
+    :func:`incremental_duplicated_spans`, building the pin runs the
+    updated side's shuffle stages during this call."""
+    updated_spans = truncate_lineage(updated_spans)
     changed = updated_spans.select(id_col).distinct()
     return prior_spans.join(changed, id_col, "left_anti").unionByName(updated_spans)
 

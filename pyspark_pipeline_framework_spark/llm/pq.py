@@ -51,6 +51,7 @@ from pyspark_pipeline_framework_spark.llm.similarity import (
     _as_centroid_matrix,
     _dot14_np,
     _normalize_rows_np,
+    _prune_to_probed_cells,
     centroids_to_df,
     drop_corrupt_vectors,
     ivf_cells_udf,
@@ -482,24 +483,7 @@ def ivfpq_search(
         F.col(query_id_col), F.explode(probe(F.col(vec_col))).alias("cell")
     )
     if prune_cells:
-        # The collect returns ≤ nlist values (a model hyperparameter)
-        # no matter how many queries there are. It executes the query
-        # subtree + probe UDF once here and the candidate join executes
-        # it once more — two passes over the side this operator already
-        # assumes is the small (broadcast) one. Deliberately NOT pinned
-        # (same decision as ivf_search, similarity.py): a persist /
-        # localCheckpoint would hold storage blocks for the life of the
-        # app across repeated search-in-a-loop calls with nothing to
-        # unpersist them (regression-gated by
-        # test_ivf_search_prune_cells_repeated_calls_no_accumulation).
-        probed = sorted(r.cell for r in qcells.select("cell").distinct().collect())
-        if not probed:
-            # every query dropped by the corrupt/zero-norm screen:
-            # short-circuit the store scan instead of the fragile
-            # isin([]) edge — same empty result, no store read
-            store = store.where(F.lit(False))
-        else:
-            store = store.where(F.col("cell").isin(probed))
+        store = _prune_to_probed_cells(store, qcells)
     tables = q.select(
         F.col(query_id_col), _adc_table_udf(B)(F.col(vec_col)).alias("__dt")
     )

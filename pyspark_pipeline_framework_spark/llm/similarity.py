@@ -580,6 +580,32 @@ def ivf_add(
     ).filter(F.col("norm") > 0)
 
 
+def _prune_to_probed_cells(store: DataFrame, probes: DataFrame) -> DataFrame:
+    """``store`` kept to the cells ``probes`` names in its ``cell``
+    column, as a literal ``IN`` filter that a store written
+    ``partitionBy("cell")`` prunes statically at the scan — the
+    ``prune_cells=True`` path of :func:`ivf_search` and
+    ``pq.ivfpq_search``.
+
+    The collect returns ≤ nlist values (a model hyperparameter) no
+    matter how many queries there are. It executes the query subtree +
+    probe UDF once here and the search's join executes it once more —
+    two passes over the side the search already assumes is the small
+    (broadcast) one. Deliberately NOT pinned: a localCheckpoint would
+    hold storage blocks for the life of the app across repeated calls
+    (the incremental search-in-a-loop pattern this API encourages)
+    with nothing to unpersist them, and unpersisting a
+    localCheckpoint's RDD is unsafe (it truncates lineage, so the join
+    could no longer recompute it)."""
+    probed = sorted(r.cell for r in probes.select("cell").distinct().collect())
+    if not probed:
+        # every query dropped by the corrupt/zero-norm screen:
+        # short-circuit the store scan instead of the fragile isin([])
+        # edge — same empty result, no store read
+        return store.where(F.lit(False))
+    return store.where(F.col("cell").isin(probed))
+
+
 def ivf_search(
     assigned: DataFrame,
     centroids,
@@ -621,25 +647,7 @@ def ivf_search(
         F.explode(probe(F.col(vec_col))).alias("cell"),
     ).filter(F.col("__qn") > 0)
     if prune_cells:
-        # the collect returns ≤ nlist values (a model hyperparameter)
-        # no matter how many queries there are. It executes the query
-        # subtree + probe UDF once here and the join executes it once
-        # more — two passes over the side this operator already
-        # assumes is the small (broadcast) one. Deliberately NOT
-        # pinned: a localCheckpoint would hold storage blocks for the
-        # life of the app across repeated calls (the incremental
-        # search-in-a-loop pattern this API encourages) with nothing
-        # to unpersist them, and unpersisting a localCheckpoint's RDD
-        # is unsafe (it truncates lineage, so the join could no
-        # longer recompute it).
-        probed = sorted(r.cell for r in qb.select("cell").distinct().collect())
-        if not probed:
-            # every query dropped by the corrupt/zero-norm screen:
-            # short-circuit the store scan instead of the fragile
-            # isin([]) edge — same empty result, no store read
-            assigned = assigned.where(F.lit(False))
-        else:
-            assigned = assigned.where(F.col("cell").isin(probed))
+        assigned = _prune_to_probed_cells(assigned, qb)
     scored = (
         assigned.join(F.broadcast(qb), "cell")
         .filter(F.col(query_id_col) != F.col(id_col))

@@ -366,11 +366,7 @@ class PipelineRunner:
             out = fn(self.spark, self.catalog, **kwargs)
             if out is not None and comp.output:
                 if comp.output in self._shared and not out.isStreaming:
-                    out = truncate_lineage(
-                        out,
-                        self.spark.conf.get("spark.checkpoint.dir", None),
-                        eager=True,
-                    )
+                    out = truncate_lineage(out, eager=True)
                 self.catalog.put(comp.output, out)
             return out
 

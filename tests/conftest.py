@@ -67,3 +67,33 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+def _files_under(root: str) -> set[str]:
+    return {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs}
+
+
+@pytest.fixture(scope="session")
+def _checkpoint_root(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("checkpoint_root"))
+
+
+@pytest.fixture
+def session_checkpoint_dir(spark, _checkpoint_root):
+    """Sets ``spark.checkpoint.dir`` on the shared session for one test
+    and yields a function returning the files written under it since.
+
+    A deployment sets the conf when it builds the session; the shared
+    test session can only take it at run time, which Spark allows for
+    core confs behind a legacy switch. The root is one per test
+    session: the first reliable cut fixes the SparkContext's checkpoint
+    directory, as Spark does at start, and later tests follow it."""
+    legacy = "spark.sql.legacy.setCommandRejectsSparkCoreConfs"
+    before = _files_under(_checkpoint_root)
+    spark.conf.set(legacy, "false")
+    spark.conf.set("spark.checkpoint.dir", _checkpoint_root)
+    try:
+        yield lambda: _files_under(_checkpoint_root) - before
+    finally:
+        spark.conf.unset("spark.checkpoint.dir")
+        spark.conf.unset(legacy)

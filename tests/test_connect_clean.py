@@ -11,7 +11,7 @@ the same subset against an actual Connect session.
 
 Smoke subset per the brief: a scan + ensure_parallelism path, one
 CC/dedup case (lineage-truncation loop), one compaction, plus the
-typed-error contract for reliable checkpointing.
+lineage cut without a checkpoint directory.
 """
 
 import pytest
@@ -144,47 +144,41 @@ def test_compaction_connect_path(connectish, sf_dir, tmp_path):
     assert got.count() == emb.count()
 
 
-def test_reliable_checkpoint_typed_error(connectish, sf_dir, tmp_path):
-    """checkpoint_dir over Connect without a server-configured
-    spark.checkpoint.dir: loud ConnectUnsupportedError naming the fix,
-    never an AttributeError from a SparkContext touch."""
-    from pyspark_pipeline_framework_spark.connect_compat import (
-        ConnectUnsupportedError,
-        truncate_lineage,
-    )
+def test_reliable_checkpoint_typed_error(connectish, sf_dir):
+    """Without spark.checkpoint.dir, truncate_lineage is a
+    localCheckpoint that never touches the SparkContext."""
+    from pyspark_pipeline_framework_spark.connect_compat import truncate_lineage
 
     df = connectish.read.parquet(f"{sf_dir}/region.parquet")
-    # default path: localCheckpoint, no SparkContext needed
-    assert truncate_lineage(df, None).count() == df.count()
-    with pytest.raises(ConnectUnsupportedError, match="spark.checkpoint.dir"):
-        truncate_lineage(df, str(tmp_path / "ck"))
+    assert truncate_lineage(df).count() == df.count()
 
 
-def test_reliable_checkpoint_configured_server():
-    """When the server already has the requested root configured,
-    reliable_checkpoint goes straight to df.checkpoint (stub-driven:
-    the conf round-trip is the logic under test)."""
-    from pyspark_pipeline_framework_spark.connect_compat import reliable_checkpoint
+def test_lineage_cuts_only_in_truncate_lineage():
+    """Every ``.localCheckpoint(`` / ``.checkpoint(`` call in the
+    package is inside ``connect_compat.truncate_lineage``, so every
+    lineage cut follows the session's ``spark.checkpoint.dir``."""
+    import ast
+    import pathlib
 
-    class _Conf:
-        def get(self, key, default=None):
-            return "/ck/root" if key == "spark.checkpoint.dir" else default
+    import pyspark_pipeline_framework_spark as pkg
 
-        def set(self, key, value):  # pragma: no cover - must not be hit
-            raise AssertionError("conf.set must not run when roots match")
-
-    class _Sess:
-        conf = _Conf()
-
-    class _DF:
-        sparkSession = _Sess()
-
-        def checkpoint(self, eager=False):
-            return ("checkpointed", eager)
-
-    assert reliable_checkpoint(_DF(), "/ck/root/", eager=True) == (
-        "checkpointed", True,
-    )
+    root = pathlib.Path(pkg.__file__).parent
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path == root / "connect_compat.py":
+            fn = next(n for n in tree.body if getattr(n, "name", None) == "truncate_lineage")
+            allowed = {id(n) for n in ast.walk(fn)}
+        stray += [
+            f"{path.relative_to(root)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in ("localCheckpoint", "checkpoint")
+            and id(n) not in allowed
+        ]
+    assert stray == []
 
 
 @pytest.mark.skipif(not _grpc_available(), reason="grpcio not installed in sandbox")

@@ -182,10 +182,16 @@ def test_connected_components_on_near_cliques_runs_few_jobs(spark):
 #: operators return, over parquet stores. Candidate pairs: one
 #: aggregate of both stores' band counts (its shuffle-map stage and
 #: its result stage); a ``max(band_idx).first()`` per store ran 4.
-#: Spans: one 1-row read of the corpus store; a 1-row probe per store
-#: ran 2 (unpinned, so that the pins' own planning jobs are not counted).
+#: Spans: one 1-row read of the corpus store, counted as the call's
+#: jobs with ``validate=True`` less those without; a 1-row probe per
+#: store ran 2.
 CANDIDATE_VALIDATE_JOBS = 2
 SPANS_VALIDATE_JOBS = 1
+#: Spark jobs ``incremental_duplicated_spans`` runs before it returns,
+#: with no probe, over the stores below: 8. Building its three lineage
+#: pins runs their broadcast and (under AQE) shuffle stages, i.e. the
+#: batch's counts, affected ids and their old positions.
+SPANS_CALL_JOBS = 8
 
 
 def _store_pair(spark, sf_dir, tmp_path, build):
@@ -212,7 +218,9 @@ def test_incremental_candidate_pairs_validate_runs_one_probe(spark, sf_dir, tmp_
     assert jobs <= CANDIDATE_VALIDATE_JOBS
 
 
-def test_incremental_spans_validate_runs_one_probe(spark, sf_dir, tmp_path):
+def _spans_call_jobs(spark, sf_dir, tmp_path) -> dict[bool, int]:
+    """Jobs one ``incremental_duplicated_spans`` call runs, without and
+    with ``validate``."""
     from pyspark_pipeline_framework_spark.llm.dedup import (
         incremental_duplicated_spans,
         substring_gram_stream,
@@ -221,13 +229,26 @@ def test_incremental_spans_validate_runs_one_probe(spark, sf_dir, tmp_path):
     new, corpus = _store_pair(
         spark, sf_dir, tmp_path, lambda d: substring_gram_stream(d, 8)
     )
-    jobs = _jobs_run_by(
-        spark.sparkContext, "validate-spans",
-        lambda: incremental_duplicated_spans(
-            new, corpus, min_tokens=8, validate=True, pin_intermediates=False
-        ),
-    )
-    assert jobs <= SPANS_VALIDATE_JOBS
+    return {
+        validate: _jobs_run_by(
+            spark.sparkContext, f"spans-call-{tmp_path.name}-{validate}",
+            lambda: incremental_duplicated_spans(
+                new, corpus, min_tokens=8, validate=validate
+            ),
+        )
+        for validate in (False, True)
+    }
+
+
+def test_incremental_spans_validate_runs_one_probe(spark, sf_dir, tmp_path):
+    jobs = _spans_call_jobs(spark, sf_dir, tmp_path)
+    assert jobs[True] - jobs[False] <= SPANS_VALIDATE_JOBS
+
+
+def test_incremental_spans_call_runs_few_jobs(spark, sf_dir, tmp_path):
+    """The pins' jobs run at call time, so a caller that only builds
+    the plan already pays for them."""
+    assert _spans_call_jobs(spark, sf_dir, tmp_path)[False] <= SPANS_CALL_JOBS
 
 
 def test_ensure_parallelism_runs_no_job_on_an_adaptive_input(spark):

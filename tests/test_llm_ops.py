@@ -751,28 +751,24 @@ def test_quantize_embeddings_roundtrip_and_zero(spark):
         assert abs(orig - d) <= rows[1].q_scale + 1e-15
 
 
-def test_reliable_checkpoint_matches_local_and_truncates(spark, tmp_path):
-    """checkpoint_dir= switches every per-round lineage truncation from
-    executor-resident localCheckpoint to a reliable checkpoint() that
-    survives executor loss (VERDICT r4 design nit): results must be
-    identical and checkpoint files must actually land in the dir."""
-    import os
-
+def test_reliable_checkpoint_matches_local_and_truncates(spark, session_checkpoint_dir):
+    """With the session's spark.checkpoint.dir set, every per-round
+    lineage truncation is a reliable checkpoint() that survives
+    executor loss instead of an executor-resident localCheckpoint:
+    results must be identical and checkpoint files must land under
+    the dir."""
     from pyspark_pipeline_framework_spark.llm.dedup import connected_components
 
     edges = [(1, 2), (2, 3), (7, 8), (10, 10), (4, 3)]
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    ckpt = str(tmp_path / "cc_ckpt")
+    reliable = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
+    assert session_checkpoint_dir(), "no checkpoint files written under the dir"
+    spark.conf.unset("spark.checkpoint.dir")
     local = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
-    reliable = {r.id: r.cluster_id
-                for r in connected_components(pairs, checkpoint_dir=ckpt).collect()}
     assert reliable == local
-    # reliable mode must have materialized state under the dir
-    found = [f for root, _, fs in os.walk(ckpt) for f in fs]
-    assert found, "no checkpoint files written under checkpoint_dir"
 
 
-def test_jaccard_verify_reliable_checkpoint(spark, sf_dir, tmp_path):
+def test_jaccard_verify_reliable_checkpoint(spark, sf_dir, session_checkpoint_dir):
     from pyspark_pipeline_framework_spark.llm.dedup import (
         jaccard_verify,
         minhash_candidate_pairs,
@@ -780,11 +776,12 @@ def test_jaccard_verify_reliable_checkpoint(spark, sf_dir, tmp_path):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
     cand = minhash_candidate_pairs(docs)
+    b = {(r.id_a, r.id_b): round(r.jaccard, 9)
+         for r in jaccard_verify(docs, cand, threshold=0.3).collect()}
+    assert session_checkpoint_dir(), "no checkpoint files written under the dir"
+    spark.conf.unset("spark.checkpoint.dir")
     a = {(r.id_a, r.id_b): round(r.jaccard, 9)
          for r in jaccard_verify(docs, cand, threshold=0.3).collect()}
-    b = {(r.id_a, r.id_b): round(r.jaccard, 9)
-         for r in jaccard_verify(docs, cand, threshold=0.3,
-                                 checkpoint_dir=str(tmp_path / "jv")).collect()}
     assert a == b
 
 
@@ -909,45 +906,6 @@ def test_probe_media_custom_id_col(spark):
     assert dict(out.dtypes)["media_key"] == "string"
     got = {r.media_key: r.format for r in out.collect()}
     assert got["k1"] == "png" and got["k5"] == "wav" and got["k6"] is None
-
-
-def test_same_checkpoint_root_exact_components(tmp_path):
-    """truncate_lineage's already-set check compares exact path components
-    (ADVICE r5: the old substring test false-matched /data/ck against
-    /data/ck-old and /data/ck2/sub)."""
-    from pyspark_pipeline_framework_spark.connect_compat import _same_checkpoint_root
-
-    # getCheckpointDir returns the random SUBDIR, often file:/-schemed
-    assert _same_checkpoint_root("file:/data/ck/abc-123", "/data/ck")
-    assert _same_checkpoint_root("/data/ck/abc-123", "/data/ck/")
-    # the substring false-positives the old code had:
-    assert not _same_checkpoint_root("file:/data/ck-old/abc-123", "/data/ck")
-    assert not _same_checkpoint_root("file:/data/ck2/sub/abc-123", "/data/ck")
-    assert not _same_checkpoint_root("file:/data/ck/deeper/abc-123", "/data/ck")
-    # remote FS: scheme + authority + parent path must all match
-    assert _same_checkpoint_root("hdfs://nn:8020/ck/abc", "hdfs://nn:8020/ck")
-    assert not _same_checkpoint_root("hdfs://nn:8020/ck/abc", "hdfs://other:8020/ck")
-    assert not _same_checkpoint_root("s3a://bkt/ck/abc", "hdfs://bkt/ck")
-
-
-def test_truncate_reuses_requested_dir(spark, tmp_path):
-    """Two truncate_lineage calls with the same requested dir must not re-set
-    the context checkpoint dir (which would spawn a second random
-    subtree); a DIFFERENT requested dir must re-set it."""
-    import os
-
-    from pyspark_pipeline_framework_spark.connect_compat import truncate_lineage
-
-    df = spark.range(10)
-    a = str(tmp_path / "ck_a")
-    b = str(tmp_path / "ck_b")
-    truncate_lineage(df, a, eager=True)
-    first = spark.sparkContext.getCheckpointDir()
-    truncate_lineage(df, a, eager=True)
-    assert spark.sparkContext.getCheckpointDir() == first
-    truncate_lineage(df, b, eager=True)
-    assert spark.sparkContext.getCheckpointDir() != first
-    assert os.listdir(b), "new dir must receive checkpoint state"
 
 
 def test_incremental_pairs_match_full_batch(spark, docs):
@@ -1584,13 +1542,13 @@ def test_incremental_spans_planted(spark):
     assert incremental_duplicated_spans(ng, og, oc, min_tokens=8, validate=True).count() > 0
 
 
-def test_incremental_spans_pin_opt_out(spark, sf_dir):
-    """pin_intermediates=False removes every localCheckpoint pin (no
-    LogicalRDD scan in either the incremental or the merge plan — the
-    recomputable-lineage shape for executor-churn deployments, r12
-    VERDICT item 6) and the results are identical to the pinned path.
-    Inputs come from parquet (never createDataFrame, whose local
-    relation is itself a LogicalRDD) so the marker is unambiguous."""
+def test_incremental_spans_pins_follow_session_checkpoint_dir(
+    spark, sf_dir, session_checkpoint_dir
+):
+    """The span pins are lineage cuts like any other: with the
+    session's spark.checkpoint.dir set they are reliable checkpoints
+    under it (surviving executor churn), and the incremental spans and
+    their merge equal the executor-local pins' result."""
     from pyspark.sql import functions as F_
 
     from pyspark_pipeline_framework_spark.llm.dedup import (
@@ -1609,22 +1567,16 @@ def test_incremental_spans_pin_opt_out(spark, sf_dir):
     ng = substring_gram_stream(new_docs, 8)
     prior = duplicated_spans(old_docs, min_tokens=8)
 
-    pinned = incremental_duplicated_spans(ng, og, oc, min_tokens=8)
-    unpinned = incremental_duplicated_spans(
-        ng, og, oc, min_tokens=8, pin_intermediates=False
-    )
-    assert "LogicalRDD" in pinned._jdf.queryExecution().analyzed().toString()
-    assert "LogicalRDD" not in unpinned._jdf.queryExecution().analyzed().toString()
-    merged_unpinned = merge_span_tables(prior, unpinned, pin_intermediates=False)
-    assert "LogicalRDD" not in (
-        merged_unpinned._jdf.queryExecution().analyzed().toString()
-    )
-    assert sorted(map(tuple, unpinned.collect())) == sorted(
-        map(tuple, pinned.collect())
-    )
-    assert sorted(map(tuple, merged_unpinned.collect())) == sorted(
-        map(tuple, merge_span_tables(prior, pinned).collect())
-    )
+    def spans_and_merged():
+        upd = incremental_duplicated_spans(ng, og, oc, min_tokens=8)
+        merged = merge_span_tables(prior, upd)
+        return sorted(map(tuple, upd.collect())), sorted(map(tuple, merged.collect()))
+
+    reliable = spans_and_merged()
+    assert session_checkpoint_dir(), "no span pin written under the dir"
+    spark.conf.unset("spark.checkpoint.dir")
+    assert reliable == spans_and_merged()
+    assert reliable[0] and reliable[1]
 
 
 def test_incremental_spans_matches_batch_xxhash(spark, sf_dir):

@@ -1223,25 +1223,19 @@ def test_shared_dataset_is_computed_once_per_run(spark, tmp_path):
         assert spark.read.parquet(str(tmp_path / name)).count() == n
 
 
-def test_shared_dataset_lands_under_the_session_checkpoint_dir(spark, tmp_path):
+def test_shared_dataset_lands_under_the_session_checkpoint_dir(
+    spark, tmp_path, session_checkpoint_dir
+):
     """With ``spark.checkpoint.dir`` set, the shared dataset is a
     reliable checkpoint under it, not an executor-local one."""
-    ck = str(tmp_path / "ck")
     cfg, reg, computed = _fan_out_pipeline(spark, str(tmp_path), 20)
-    # a deployment sets spark.checkpoint.dir when it builds the session;
-    # the shared test session can only take it at run time, which Spark
-    # allows for core confs behind this legacy switch
-    legacy = "spark.sql.legacy.setCommandRejectsSparkCoreConfs"
-    spark.conf.set(legacy, "false")
-    spark.conf.set("spark.checkpoint.dir", ck)
-    try:
-        result = PipelineRunner(cfg, spark, registry=reg, resilience=NO_RETRY).run()
-    finally:
-        spark.conf.unset("spark.checkpoint.dir")
-        spark.conf.unset(legacy)
+    result = PipelineRunner(cfg, spark, registry=reg, resilience=NO_RETRY).run()
     assert result.status == PipelineStatus.SUCCESS
     assert computed.value == 20
-    assert [f for _, _, fs in os.walk(ck) for f in fs], "no checkpoint under the dir"
+    assert session_checkpoint_dir(), "no checkpoint under the dir"
+    for name in ("save_a", "save_b"):  # what the local copy gives
+        ids = [r.id for r in spark.read.parquet(str(tmp_path / name)).collect()]
+        assert sorted(ids) == list(range(20))
 
 
 def test_shared_datasets_skip_dict_params_sources_and_sql_text():
