@@ -38,13 +38,6 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="skip components completed by a previous run (requires --checkpoint-dir)",
     )
-    parser.add_argument(
-        "--max-parallel",
-        type=int,
-        default=1,
-        help="run each dependency level's independent components on up to "
-        "N threads (default 1 = reference-parity sequential)",
-    )
     args = parser.parse_args(argv)
 
     logging.basicConfig(level=args.log_level.upper(), format="%(levelname)s %(name)s: %(message)s")
@@ -89,7 +82,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"validation: {p}", file=sys.stderr)
         return 1 if problems else 0
 
-    result = runner.run(completed_components=completed, max_parallel=args.max_parallel)
+    result = runner.run(completed_components=completed)
     for c in result.components:
         print(f"{c.name}: {c.status.value} ({c.duration_s:.2f}s, attempts={c.attempts})"
               + (f" error={c.error}" if c.error else ""))

@@ -116,16 +116,19 @@ def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     checkpoint directory (classic) or its server's (Connect). A
     classic context without one — the conf was set after start — gets
     it from the conf here, once; the directory is SparkContext-wide
-    from then on. ``eager=False`` defers only the final stage: building
-    the checkpointed RDD runs the plan's broadcast stages and, under
-    AQE, its shuffle stages."""
+    from then on. ``eager=False`` applies to ``localCheckpoint`` only,
+    and defers only its final stage: building the checkpointed RDD runs
+    the plan's broadcast stages and, under AQE, its shuffle stages. A
+    reliable cut is always eager: lazily, Spark writes the files with a
+    second job after the first action, which computes the plan again
+    (a counting UDF behind a lazy reliable cut ran twice per row)."""
     spark = df.sparkSession
     root = spark.conf.get("spark.checkpoint.dir", None)
     if root is None:
         return df.localCheckpoint(eager=eager)
     if not is_connect(spark) and spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir(root)
-    return df.checkpoint(eager=eager)
+    return df.checkpoint(eager=True)
 
 
 def client_local_path(spark: SparkSession, path: str) -> str | None:

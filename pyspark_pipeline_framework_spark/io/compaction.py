@@ -209,15 +209,10 @@ def _canon(p: str) -> str:
 
 
 def _read_store_to_compact(
-    spark: SparkSession, store_path: str, out_path: str, baseline_batch_id
+    spark: SparkSession, store_path: str, out_path: str
 ) -> DataFrame:
     """The checks both compactions make before rewriting a store;
     returns the store as read."""
-    if not isinstance(baseline_batch_id, int) or baseline_batch_id >= 0:
-        raise ValueError(
-            "baseline_batch_id must be a negative int — real micro-batch "
-            f"ids start at 0 and must stay overwritable, got {baseline_batch_id!r}"
-        )
     out_c, store_c = _canon(out_path), _canon(store_path)
     if out_c == store_c:
         raise ValueError(
@@ -250,29 +245,21 @@ def compact_batch_store(
     store_path: str,
     out_path: str,
     *,
-    baseline_batch_id: int = -1,
-    target_files: int | None = None,
     partition_by: list[str] | None = None,
-    sort_within_partitions: list[str] | None = None,
     remove_ids=None,
     remove_id_col: str | None = None,
     min_batch_id: int | None = None,
 ) -> DataFrame:
     """Rewrite a ``batch_id=N``-per-micro-batch store as one baseline
-    partition ``batch_id=<baseline_batch_id>`` at ``out_path``.
+    partition ``batch_id=-1`` at ``out_path``.
 
-    ``target_files`` pins the output file count (one exchange; default
-    is a REBALANCE exchange that AQE sizes by bytes, so file count
-    tracks store size — one file for a tiny store, advisory-sized
-    files for a huge one). ``partition_by`` instead
+    The rewrite is one REBALANCE exchange that AQE sizes by bytes, so
+    file count tracks store size — one file for a tiny store,
+    advisory-sized files for a huge one. ``partition_by``
     sub-partitions the baseline by the given columns (e.g. ``["cell"]``
     for an IVF store, so searches static-prune compacted history too);
-    rows are repartitioned on those keys so each value lands in few
-    files. ``sort_within_partitions`` sorts rows inside each output
-    file (no extra exchange — a per-partition sort before the write):
-    sorting a band store by ``band_hash`` (or an IVF baseline by
-    ``cell``) turns the key columns into dictionary/RLE runs and gives
-    parquet row-group min/max statistics that scans can skip on.
+    the rebalance is then on those keys, so each value lands in few
+    files.
 
     ``remove_ids`` + ``remove_id_col`` (r9 VERDICT item 3 — tombstone
     deletes): drop every row whose ``remove_id_col`` appears in
@@ -291,14 +278,14 @@ def compact_batch_store(
     bounded-history corpus (keep the last N days of batches, age the
     rest out) at the cost of a partition-pruned filter on a compaction
     the store was due for anyway. The baseline partition
-    (``batch_id = baseline_batch_id``, i.e. previously-compacted
-    history) is always RETAINED: age-out applies to real micro-batch
-    ids only — fold history you still want BEFORE it passes the
-    cutoff, or tombstone it by id via ``remove_ids``.
+    (``batch_id = -1``, i.e. previously-compacted history) is always
+    RETAINED: age-out applies to real micro-batch ids only — fold
+    history you still want BEFORE it passes the cutoff, or tombstone it
+    by id via ``remove_ids``.
 
     Returns the compacted store read back from ``out_path``.
     """
-    df = _read_store_to_compact(spark, store_path, out_path, baseline_batch_id)
+    df = _read_store_to_compact(spark, store_path, out_path)
     if min_batch_id is not None:
         if not isinstance(min_batch_id, int) or isinstance(min_batch_id, bool) \
                 or min_batch_id < 0:
@@ -307,7 +294,7 @@ def compact_batch_store(
                 f"micro-batch id cutoff), got {min_batch_id!r}"
             )
         # partition-pruned at the scan (batch_id is the directory key);
-        # the baseline partition is negative by contract and survives
+        # the baseline partition is -1 and survives
         df = df.where(
             (F.col("batch_id") >= F.lit(min_batch_id))
             | (F.col("batch_id") < 0)
@@ -345,9 +332,7 @@ def compact_batch_store(
         # one anti-join on the id key, deduped so a repeated tombstone
         # never skews the join; Catalyst broadcasts small tombstone sets
         df = df.join(tomb.distinct(), on=remove_id_col, how="left_anti")
-    body = df.drop("batch_id").withColumn(
-        "batch_id", F.lit(baseline_batch_id).cast("int")
-    )
+    body = df.drop("batch_id").withColumn("batch_id", F.lit(-1).cast("int"))
     if partition_by:
         missing = [c for c in partition_by if c not in body.columns]
         if missing:
@@ -360,26 +345,14 @@ def compact_batch_store(
         body = body.hint("rebalance", *partition_by)
         spec = ["batch_id", *partition_by]
     else:
-        # default sizing is scale-adaptive: REBALANCE lets AQE coalesce
-        # the rewrite to ~advisory-partition-size files (one file for a
-        # small store, hundreds for a 100 TB one) instead of always
-        # emitting one file per session core — the whole point of
-        # compaction is to UNDO small-files, so the rewrite must not
-        # reintroduce them at low data volumes. An explicit
-        # ``target_files`` still pins the exact output file count.
-        body = (
-            body.repartition(target_files)
-            if target_files
-            else body.hint("rebalance")
-        )
+        # scale-adaptive sizing: REBALANCE lets AQE coalesce the rewrite
+        # to ~advisory-partition-size files (one file for a small store,
+        # hundreds for a 100 TB one) instead of always emitting one file
+        # per session core — the whole point of compaction is to UNDO
+        # small-files, so the rewrite must not reintroduce them at low
+        # data volumes
+        body = body.hint("rebalance")
         spec = ["batch_id"]
-    if sort_within_partitions:
-        missing = [c for c in sort_within_partitions if c not in body.columns]
-        if missing:
-            raise ValueError(
-                f"sort_within_partitions columns not in store: {missing}"
-            )
-        body = body.sortWithinPartitions(*sort_within_partitions)
     # errorifexists: compaction targets a fresh directory, never an
     # existing one — the swap is the caller's explicit, checkable step
     _write_advisory_sized(spark, body, out_path, spec)
@@ -397,8 +370,6 @@ def compact_span_store(
     out_path: str,
     *,
     id_col: str = "doc_id",
-    baseline_batch_id: int = -1,
-    target_files: int | None = None,
 ) -> DataFrame:
     """Compact a per-batch span UPDATE store (the ``spans_path`` side
     of ``streaming.stateful.incremental_spans_batch``) into one
@@ -409,7 +380,7 @@ def compact_span_store(
     park a doc's stale rows and its fresh rows in the same baseline
     partition where latest-wins can no longer tell them apart. The
     fold here is ``llm.dedup.current_span_table`` (latest update per
-    document) written as ``batch_id=<baseline_batch_id>`` — after the
+    document) written as ``batch_id=-1`` — after the
     swap, later updates at real batch ids ``>= 0`` override the
     baseline per doc exactly as before, and a fresh-checkpoint stream
     restart (batch ids back at 0) can never overwrite folded history.
@@ -417,12 +388,11 @@ def compact_span_store(
     directory, refuses in-place/nested rewrites."""
     from pyspark_pipeline_framework_spark.llm.dedup import current_span_table
 
-    df = _read_store_to_compact(spark, spans_path, out_path, baseline_batch_id)
+    df = _read_store_to_compact(spark, spans_path, out_path)
+    # same scale-adaptive sizing as compact_batch_store
     body = current_span_table(df, id_col).withColumn(
-        "batch_id", F.lit(baseline_batch_id).cast("int")
-    )
-    # same scale-adaptive default sizing as compact_batch_store
-    body = body.repartition(target_files) if target_files else body.hint("rebalance")
+        "batch_id", F.lit(-1).cast("int")
+    ).hint("rebalance")
     _write_advisory_sized(spark, body, out_path, ["batch_id"])
     return spark.read.schema(body.schema).parquet(out_path)
 
@@ -438,7 +408,7 @@ def _write_advisory_sized(spark, body, out_path: str, spec: list) -> None:
     to produce right-sized files, so the flag is scoped to false for
     exactly this write (the Spark tuning docs' own recommendation for
     file sizing) and restored after; query parallelism elsewhere is
-    untouched. No-op for an explicit ``repartition(target_files)``."""
+    untouched."""
     key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     try:
         saved = spark.conf.get(key, None)

@@ -281,28 +281,21 @@ class PipelineConfig:
         return None
 
     def execution_order(self) -> list[str]:
-        """Kahn topological order; insertion order breaks ties so runs
-        are reproducible."""
-        return [n for level in self.execution_levels() for n in level]
-
-    def execution_levels(self) -> list[list[str]]:
-        """Kahn waves: every component in a level depends only on
-        earlier levels, so a level's components are mutually
-        independent and safe to run concurrently (the parallel
-        runner's schedule). Insertion order within a level is
-        preserved for reproducibility."""
+        """Kahn topological order, wave by wave: every component whose
+        dependencies all ran in earlier waves, in insertion order, so
+        runs are reproducible."""
         deps = {c.name: set(c.depends_on) for c in self.components}
-        levels: list[list[str]] = []
+        order: list[str] = []
         remaining = [c.name for c in self.components]
         satisfied: set[str] = set()
         while remaining:
             ready = [n for n in remaining if deps[n] <= satisfied]
             if not ready:  # unreachable post-validation; defensive
                 raise PipelineValidationError(f"unresolvable dependencies among {remaining}")
-            levels.append(ready)
+            order.extend(ready)
             satisfied.update(ready)
             remaining = [n for n in remaining if n not in satisfied]
-        return levels
+        return order
 
     def get(self, name: str) -> ComponentConfig:
         for c in self.components:

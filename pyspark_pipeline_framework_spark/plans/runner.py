@@ -156,8 +156,8 @@ class PipelineRunner:
             else None
         )
         # per-component breakers (reference core/config/component.py:36):
-        # built eagerly so each component's failure state is isolated and
-        # the parallel runner needs no lazy-creation lock
+        # built eagerly, one per component that declares one, so each
+        # component's failure state is isolated from the others'
         self._component_breakers: dict[str, CircuitBreaker] = {
             c.name: override.circuit_breaker.build(c.name, clock)
             for c in config.components
@@ -195,20 +195,12 @@ class PipelineRunner:
         return load_class_path(c.class_path)
 
     # -- execution ------------------------------------------------------------
-    def run(
-        self, completed_components: Iterable[str] = (), max_parallel: int = 1
-    ) -> PipelineResult:
-        """Execute the pipeline. ``max_parallel=1`` (default) is the
-        reference-parity sequential executor. ``max_parallel>1`` runs
-        each Kahn level's mutually-independent components on a thread
-        pool — the right model for Spark: threads submit jobs
-        concurrently and the cluster scheduler interleaves their
-        stages (lazy chains still fuse per sink exactly as in
-        sequential mode, since intra-chain components share a level
-        only when independent). A failure under ``fail_fast`` lets the
-        current level drain, then skips all later levels; hook calls
-        may interleave across threads within a level, but results are
-        always reported in deterministic topological order."""
+    def run(self, completed_components: Iterable[str] = ()) -> PipelineResult:
+        """Execute the pipeline: one component at a time, in
+        :meth:`PipelineConfig.execution_order`. A component is skipped
+        when it is disabled, when ``completed_components`` names it
+        (resume), or, under ``fail_fast``, when an earlier component
+        failed; results are reported in that same order."""
         completed = set(completed_components)
         result = PipelineResult(self.config.name)
         t0 = self._clock()
@@ -227,52 +219,21 @@ class PipelineRunner:
             self.quality_gate.run(CheckTiming.BEFORE_PIPELINE, self._datasets())
 
         aborted = False
-        for level in self.config.execution_levels():
-            runnable: list[ComponentConfig] = []
-            placed: dict[str, ComponentResult] = {}
-            for name in level:
-                comp = self.config.get(name)
-                if aborted:
-                    placed[name] = ComponentResult(name, ComponentStatus.SKIPPED)
-                    self.hooks.on_component_skipped(self.config.name, name, "fail-fast abort")
-                elif not comp.enabled:
-                    placed[name] = ComponentResult(name, ComponentStatus.SKIPPED)
-                    self.hooks.on_component_skipped(self.config.name, name, "disabled")
-                elif name in completed:
-                    placed[name] = ComponentResult(name, ComponentStatus.SKIPPED)
-                    self.hooks.on_component_skipped(
-                        self.config.name, name, "resume: already completed"
-                    )
-                else:
-                    runnable.append(comp)
-            if runnable:
-                if max_parallel > 1 and len(runnable) > 1:
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-                        for comp, cr in zip(
-                            runnable, pool.map(self._run_component, runnable)
-                        ):
-                            placed[comp.name] = cr
-                else:
-                    for comp in runnable:
-                        placed[comp.name] = self._run_component(comp)
-                        if (
-                            placed[comp.name].status == ComponentStatus.FAILURE
-                            and self.fail_fast
-                        ):
-                            # sequential parity: abort mid-level too
-                            aborted = True
-                            break
-            for name in level:
-                if name not in placed:  # sequential mid-level abort
-                    placed[name] = ComponentResult(name, ComponentStatus.SKIPPED)
-                    self.hooks.on_component_skipped(self.config.name, name, "fail-fast abort")
-            result.components.extend(placed[n] for n in level)
-            if self.fail_fast and any(
-                placed[n].status == ComponentStatus.FAILURE for n in level
-            ):
-                aborted = True
+        for name in self.config.execution_order():
+            comp = self.config.get(name)
+            skip = (
+                "fail-fast abort" if aborted
+                else "disabled" if not comp.enabled
+                else "resume: already completed" if name in completed
+                else None
+            )
+            if skip:
+                self.hooks.on_component_skipped(self.config.name, name, skip)
+                cr = ComponentResult(name, ComponentStatus.SKIPPED)
+            else:
+                cr = self._run_component(comp)
+                aborted = self.fail_fast and cr.status == ComponentStatus.FAILURE
+            result.components.append(cr)
 
         if self.quality_gate and not aborted:
             self.quality_gate.run(CheckTiming.AFTER_PIPELINE, self._datasets())

@@ -132,7 +132,7 @@ def test_compaction_bounds_file_count(spark, tmp_path, sf_dir):
             "overwrite"
         ).parquet(f"{store}/batch_id={i}")
     compacted = str(tmp_path / "store_c")
-    compact_batch_store(spark, store, compacted, target_files=2)
+    compact_batch_store(spark, store, compacted)
     files = glob.glob(f"{compacted}/batch_id=-1/*.parquet")
     assert 0 < len(files) <= 2
     # more parquet files before than after (the point of the exercise)
@@ -154,8 +154,8 @@ def test_rebalanced_writes_are_file_sized_by_data(spark, tmp_path, sf_dir):
         assert 0 < n < max(4, parallelism // 2), (
             f"{batch_dir}: {n} files — per-batch write not rebalanced"
         )
-    # compaction default (no target_files): byte-sized output, so this
-    # tiny store must fold to a handful of files, not `parallelism`
+    # compaction: byte-sized output, so this tiny store must fold to a
+    # handful of files, not `parallelism`
     compacted = str(tmp_path / "store_c_default")
     compact_batch_store(spark, store, compacted)
     n = len(glob.glob(f"{compacted}/batch_id=-1/*.parquet"))
@@ -575,8 +575,6 @@ def test_compaction_validation_errors(spark, tmp_path, sf_dir):
         compact_batch_store(spark, store, store + "/compacted")
     with pytest.raises(ValueError, match="must not be nested"):
         compact_batch_store(spark, store + "/batch_id=0", str(tmp_path))
-    with pytest.raises(ValueError, match="negative int"):
-        compact_batch_store(spark, store, str(tmp_path / "x"), baseline_batch_id=0)
     with pytest.raises(ValueError, match="partition_by columns"):
         compact_batch_store(
             spark, store, str(tmp_path / "x"), partition_by=["nope"]
@@ -608,7 +606,7 @@ def test_compact_store_config_op(spark, tmp_path, sf_dir):
         "name": "compact-demo",
         "components": [
             {"name": "compact", "op": "compact_store", "output": "baseline",
-             "params": {"store": store, "out": out, "target_files": 2}},
+             "params": {"store": store, "out": out}},
         ],
     })
     runner = PipelineRunner(cfg, spark, resilience=NO_RETRY)
@@ -657,30 +655,6 @@ def test_compact_store_config_op_catalog_tombstones(spark, tmp_path, sf_dir):
             spark, runner.catalog,
             store=store, out=str(tmp_path / "x"),
             remove_ids_input="dead_ids", remove_ids=[1], remove_id_col="id",
-        )
-
-
-def test_compaction_sorted_within_partitions(spark, tmp_path, sf_dir):
-    """sort_within_partitions must leave each output file sorted on the
-    key (row-group statistics / RLE win) without changing the row set."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    store, _, _ = _band_store(spark, tmp_path, docs)
-    compacted = str(tmp_path / "store_c")
-    got = compact_batch_store(
-        spark, store, compacted, target_files=2,
-        sort_within_partitions=["band_hash"],
-    )
-    assert got.count() == spark.read.parquet(store).count()
-    for f in glob.glob(f"{compacted}/batch_id=-1/*.parquet"):
-        vals = pq.read_table(f, columns=["band_hash"])["band_hash"].to_pylist()
-        assert vals == sorted(vals)
-    with pytest.raises(ValueError, match="sort_within_partitions columns"):
-        compact_batch_store(
-            spark, store, str(tmp_path / "x"), sort_within_partitions=["nope"]
         )
 
 

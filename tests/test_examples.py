@@ -70,18 +70,16 @@ def test_llm_curation_example(spark):
 
 
 def test_streaming_etl_example(spark):
-    """`op: stream` declared in config next to a batch chain, run with
-    level parallelism (--max-parallel 2)."""
+    """`op: stream` declared in config next to a batch chain; every
+    trigger is `available_now`, so the streams drain before the batch
+    chain runs."""
     import shutil
 
     # a fresh stream checkpoint so repeated test runs re-drain the source
     for d in ("stream_docs_ckpt", "stream_docs",
               "stream_user_firsts_ckpt", "stream_user_firsts"):
         shutil.rmtree(os.path.join(REPO, f".scratch/examples/{d}"), ignore_errors=True)
-    assert main([
-        os.path.join(REPO, "examples", "streaming_etl.conf"),
-        "--max-parallel", "2",
-    ]) == 0
+    assert main([os.path.join(REPO, "examples", "streaming_etl.conf")]) == 0
     streamed = spark.read.parquet(os.path.join(REPO, ".scratch/examples/stream_docs"))
     assert streamed.count() > 0
     assert streamed.filter("n_chars < 200").count() == 0

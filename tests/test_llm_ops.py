@@ -768,6 +768,27 @@ def test_reliable_checkpoint_matches_local_and_truncates(spark, session_checkpoi
     assert reliable == local
 
 
+def test_lazy_reliable_cut_computes_its_plan_once(spark, session_checkpoint_dir):
+    """A reliable cut requested lazily must not compute its plan twice:
+    Spark's RDD.checkpoint() of an unpersisted RDD writes the files
+    with a second job after the first action."""
+    from pyspark.sql.types import LongType
+
+    from pyspark_pipeline_framework_spark.connect_compat import truncate_lineage
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count_row(x):
+        evaluated.add(1)
+        return x
+
+    counted = F.udf(count_row, LongType())
+    cut = truncate_lineage(spark.range(100).select(counted("id").alias("id")))
+    assert cut.count() == 100 and cut.count() == 100
+    assert session_checkpoint_dir(), "no checkpoint files written under the dir"
+    assert evaluated.value == 100
+
+
 def test_jaccard_verify_reliable_checkpoint(spark, sf_dir, session_checkpoint_dir):
     from pyspark_pipeline_framework_spark.llm.dedup import (
         jaccard_verify,

@@ -99,7 +99,6 @@ def test_cli_dry_run_and_run(tmp_path, spark):
 
     assert main([str(p), "--dry-run"]) == 0
     assert main([str(p)]) == 0
-    assert main([str(p), "--max-parallel", "4"]) == 0
     assert main([str(tmp_path / "missing.json")]) == 1
 
 

@@ -117,12 +117,15 @@ def test_runner_fail_fast_skips_downstream(spark):
         [
             comp("bad", op="sql", params={"sql": "SELECT * FROM missing_table"}),
             comp("after", op="sql", params={"sql": "SELECT 1 AS one"}, deps=["bad"]),
+            # independent of bad, so in its Kahn wave, but listed after it
+            comp("sibling", op="sql", params={"sql": "SELECT 2 AS two"}),
         ],
     )
     result = PipelineRunner(cfg, spark, resilience=NO_RETRY).run()
     by = {c.name: c.status for c in result.components}
     assert by["bad"] == ComponentStatus.FAILURE
     assert by["after"] == ComponentStatus.SKIPPED
+    assert by["sibling"] == ComponentStatus.SKIPPED
     assert result.status == PipelineStatus.FAILURE
 
 
@@ -482,7 +485,7 @@ def test_registry_scanned_operator_runs(spark, tmp_path, monkeypatch):
         del sys.modules[m]
 
 
-def test_execution_levels_partition_independents():
+def test_execution_order_runs_kahn_waves_in_insertion_order():
     cfg = PipelineConfig(
         "lv",
         [
@@ -493,58 +496,7 @@ def test_execution_levels_partition_independents():
             comp("e", deps=["c", "d"]),
         ],
     )
-    assert cfg.execution_levels() == [["a", "b"], ["c", "d"], ["e"]]
     assert cfg.execution_order() == ["a", "b", "c", "d", "e"]
-
-
-def test_runner_parallel_level_overlaps_and_matches_sequential(spark):
-    """Independent same-level components genuinely overlap on the
-    thread pool, and results come back in deterministic topo order."""
-    import threading
-    import time as _t
-
-    from pyspark_pipeline_framework_spark.plans.registry import OperatorRegistry
-
-    reg = OperatorRegistry()
-    active = {"now": 0, "peak": 0}
-    lock = threading.Lock()
-
-    @reg.register("slow")
-    def slow(spark_, catalog, **kw):
-        with lock:
-            active["now"] += 1
-            active["peak"] = max(active["peak"], active["now"])
-        _t.sleep(0.4)
-        with lock:
-            active["now"] -= 1
-        return None
-
-    cfg = PipelineConfig(
-        "par",
-        [comp("s1", op="slow"), comp("s2", op="slow"), comp("s3", op="slow", deps=["s1", "s2"])],
-    )
-    result = PipelineRunner(cfg, spark, registry=reg, resilience=NO_RETRY).run(max_parallel=4)
-    assert result.status == PipelineStatus.SUCCESS
-    assert [c.name for c in result.components] == ["s1", "s2", "s3"]
-    assert active["peak"] == 2  # s1 ∥ s2, s3 only after both
-
-
-def test_runner_parallel_fail_fast_skips_later_levels(spark):
-    cfg = PipelineConfig(
-        "pff",
-        [
-            comp("bad", op="sql", params={"sql": "SELECT * FROM missing_table"}),
-            comp("ok", op="sql", params={"sql": "SELECT 1 AS one"}),
-            comp("late", op="sql", params={"sql": "SELECT 2 AS two"}, deps=["ok"]),
-        ],
-    )
-    result = PipelineRunner(cfg, spark, resilience=NO_RETRY).run(max_parallel=2)
-    by = {c.name: c.status for c in result.components}
-    # bad and ok share a level: the level drains (ok succeeds), then
-    # everything downstream is skipped
-    assert by["bad"] == ComponentStatus.FAILURE
-    assert by["ok"] == ComponentStatus.SUCCESS
-    assert by["late"] == ComponentStatus.SKIPPED
 
 
 # ------------------------------------------- per-component resilience
